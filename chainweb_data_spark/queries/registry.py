@@ -70,17 +70,29 @@ def _t(
     if df is None:
         df = load_table(spark, sf_dir, name)
         if spread:
-            try:
-                nbytes = os.path.getsize(
-                    os.path.join(sf_dir, f"{name}.parquet")
-                )
-            except OSError:
-                nbytes = None  # multi-file/absent layouts: size-blind rail
-            df = _spread(df, spark, nbytes, spread_target)
+            df = _spread(df, spark, _table_bytes(sf_dir, name), spread_target)
         if len(_TABLE_HANDLES) > 256:  # bound: sessions leave stale keys
             _TABLE_HANDLES.clear()
         _TABLE_HANDLES[key] = df
     return df
+
+
+def _table_bytes(sf_dir: str, name: str) -> int | None:
+    """Bytes of ``<name>.parquet``: the file's size, or the sum of its
+    data files' sizes when it is a directory (a directory's own size is
+    its inode's, which would read as one tiny task).  None when absent:
+    the rail is then size-blind."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    if not os.path.isdir(path):
+        return None
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
 
 
 # Per-task input-byte target for the _spread rail below (r13, guide §2.5 +

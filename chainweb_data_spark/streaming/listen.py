@@ -29,6 +29,7 @@ probe cost is O(batch locality), not O(table history), for all six tables.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,54 +71,106 @@ def merge_plan(
       filter on the batch's distinct buckets is exact.  Probe cost scales
       with the batch's key spread (≤ the handful of blocks a micro-batch
       carries), not table history.
-    """
-    from pyspark.sql import functions as F
 
+    The probe reads only the batch's bucket DIRECTORIES (``basePath`` keeps
+    the partition column), so neither the scan nor the file listing in
+    front of it grows with the table; a batch whose buckets hold nothing
+    yet skips the probe.
+    """
     batch = df.dropDuplicates(list(pk))
     bucket_col = next(
         (c for c in ("height_bucket", "key_bucket") if c in batch.columns), None
     )
     if os.path.exists(path):
-        existing = prune_existing_to_batch(
-            spark.read.parquet(path), batch, bucket_col
-        )
-        # null-safe per-column equality: the six chainweb tables' PKs are
-        # non-null, but silver-table identities (streaming/silver.py) carry
-        # nullable components (a continuation row's code), and a plain
-        # equality anti-join would re-append every replayed row holding a
-        # NULL — exactly the duplicate the merge exists to prevent.
-        probe = existing.select(*pk)
-        cond = None
-        for c in pk:
-            eq = batch[c].eqNullSafe(probe[c])
-            cond = eq if cond is None else (cond & eq)
-        batch = batch.join(probe, on=cond, how="left_anti")
+        buckets = batch_buckets(batch, bucket_col)
+        existing = _read_bucket_dirs(spark, path, bucket_col, buckets)
+        if existing is not None:
+            existing = prune_existing_to_batch(existing, bucket_col, buckets)
+            # null-safe per-column equality: the six chainweb tables' PKs
+            # are non-null, but silver-table identities
+            # (streaming/silver.py) carry nullable components (a
+            # continuation row's code), and a plain equality anti-join
+            # would re-append every replayed row holding a NULL — exactly
+            # the duplicate the merge exists to prevent.
+            probe = existing.select(*pk)
+            cond = None
+            for c in pk:
+                eq = batch[c].eqNullSafe(probe[c])
+                cond = eq if cond is None else (cond & eq)
+            batch = batch.join(probe, on=cond, how="left_anti")
     return batch, bucket_col
 
 
-def prune_existing_to_batch(
-    existing: DataFrame, batch: DataFrame, bucket_col: str | None
-) -> DataFrame:
-    """Bound the duplicate-probe scan to the partitions the batch can
-    collide with: a [min, max] RANGE on height_bucket (the stream is
-    height-clustered), an IN-set on key_bucket (key buckets are a pure
-    function of the PK), the full table when the batch carries no bucket."""
+def batch_buckets(
+    batch: DataFrame, bucket_col: str | None
+) -> tuple | list | None:
+    """The partitions the batch can collide with: the (lo, hi) RANGE of
+    height_bucket (the stream is height-clustered; (None, None) for an
+    empty batch), the distinct key_bucket values (key buckets are a pure
+    function of the PK), or None when the batch carries no bucket.  One
+    action on ``batch``."""
     from pyspark.sql import functions as F
 
     if bucket_col == "height_bucket":
-        bounds = batch.agg(
-            F.min(bucket_col).alias("lo"), F.max(bucket_col).alias("hi")
-        ).first()
-        if bounds["lo"] is not None:
-            existing = existing.filter(
-                (F.col(bucket_col) >= bounds["lo"])
-                & (F.col(bucket_col) <= bounds["hi"])
+        return tuple(batch.agg(F.min(bucket_col), F.max(bucket_col)).first())
+    if bucket_col is not None:
+        return [r[0] for r in batch.select(bucket_col).distinct().collect()]
+    return None
+
+
+def prune_existing_to_batch(
+    existing: DataFrame, bucket_col: str | None, buckets: tuple | list | None
+) -> DataFrame:
+    """Bound the duplicate-probe scan to the partitions
+    :func:`batch_buckets` found: a [min, max] RANGE on height_bucket, an
+    IN-set on key_bucket, the full table when the batch carries no bucket
+    or no rows."""
+    from pyspark.sql import functions as F
+
+    if bucket_col == "height_bucket":
+        lo, hi = buckets
+        if lo is not None:
+            return existing.filter(
+                (F.col(bucket_col) >= lo) & (F.col(bucket_col) <= hi)
             )
-    elif bucket_col is not None:
-        vals = [r[0] for r in batch.select(bucket_col).distinct().collect()]
-        if vals:
-            existing = existing.filter(F.col(bucket_col).isin(vals))
+    elif bucket_col is not None and buckets:
+        return existing.filter(F.col(bucket_col).isin(buckets))
     return existing
+
+
+def _read_bucket_dirs(
+    spark: SparkSession,
+    path: str,
+    bucket_col: str | None,
+    buckets: tuple | list | None,
+) -> DataFrame | None:
+    """The stored table at ``path`` read from only the partition
+    directories :func:`batch_buckets` may hit (a superset: the caller
+    still applies :func:`prune_existing_to_batch`), or None when no such
+    directory exists — an empty batch hits none.  Flat tables and
+    bucket-less batches read the whole table."""
+    if bucket_col is None or _existing_layout_is_flat(path):
+        return spark.read.parquet(path)
+    if bucket_col == "height_bucket":
+        lo, hi = buckets
+
+        def hit(value: str) -> bool:
+            try:
+                return lo is not None and lo <= int(value) <= hi
+            except ValueError:
+                return False  # the NULL bucket: no range filter keeps it
+
+    else:
+        hit = {str(v) for v in buckets}.__contains__
+    prefix = f"{bucket_col}="
+    dirs = [
+        os.path.join(path, name)
+        for name in sorted(os.listdir(path))
+        if name.startswith(prefix) and hit(unquote(name[len(prefix):]))
+    ]
+    if not dirs:
+        return None
+    return spark.read.option("basePath", path).parquet(*dirs)
 
 
 def _existing_layout_is_flat(path: str) -> bool:

@@ -143,7 +143,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .listen import TABLE_PKS, _existing_layout_is_flat, prune_existing_to_batch
+from .listen import (
+    TABLE_PKS,
+    _existing_layout_is_flat,
+    batch_buckets,
+    prune_existing_to_batch,
+)
 from .logstore import InMemoryLogStore, PosixLogStore  # noqa: F401
 
 #: the txlog's storage seam (r12 — Delta's LogStore move): every
@@ -2156,12 +2161,18 @@ def _file_stats(path: str) -> dict[str, list]:
     folded across groups) — free at stage time, and what lets
     ``read_published(where=...)`` skip files without opening them.  Only
     JSON-comparable scalar types are kept; anything else is skipped."""
+    return _footer(path)[1]
+
+
+def _footer(path: str) -> tuple[int | None, dict[str, list]]:
+    """The parquet footer's row count (None when unreadable) and the
+    :func:`_file_stats` of ``path`` — one footer read for both."""
     try:
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
     except Exception:
-        return {}
+        return None, {}
     acc: dict[str, list] = {}
     skipped: set[str] = set()
     for rg in range(md.num_row_groups):
@@ -2187,7 +2198,7 @@ def _file_stats(path: str) -> dict[str, list]:
                 acc[name] = [lo, hi]
     if len(acc) > _MAX_STATS_COLUMNS:
         acc = dict(sorted(acc.items())[:_MAX_STATS_COLUMNS])
-    return acc
+    return md.num_rows, acc
 
 
 def _stage_table(
@@ -2203,6 +2214,18 @@ def _stage_table(
     into the table directory, and return the new files' relative paths and
     footer stats — on disk but in no commit until the caller commits.
 
+    Actions per table: the write alone when the table has no published
+    rows or no bucket column; else the probe-bounds action, which fills a
+    cached copy of ``df``, then the write, which reads that copy — either
+    way ``df``'s lineage (for the chainweb tables: JSON decode, explode,
+    transfers UDF) runs once.  The copy is released before returning.
+    It is of ``df``, not of the deduplicated batch: a cached plan keeps
+    its shuffle partitioning, so the write would lose AQE's coalescing
+    and land up to ``spark.sql.shuffle.partitions`` files per bucket.  No
+    emptiness check: zero survivors show up as 0-row staged files (their
+    footers are opened for stats anyway), which are dropped — no 0-row
+    file lands and, with no table staged, publish_batch burns no version.
+
     ``layout`` = (cluster_cols, sort_cols): applied AFTER the PK
     dropDuplicates/anti-join (which shuffle, so any shaping the CALLER did
     upstream is destroyed by the time rows reach the writer — r9 find: the
@@ -2210,15 +2233,21 @@ def _stage_table(
     aggregate's internal ordering).  ``repartition(cluster) →
     sortWithinPartitions(sort)`` here is the only placement that actually
     reaches the files."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    batch = df.dropDuplicates(list(pk))
     bucket_col = next(
-        (c for c in ("height_bucket", "key_bucket") if c in batch.columns), None
+        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
     )
+    cached = None
     existing = read_published(spark, out_dir, table)
+    if existing is not None and bucket_col is not None:
+        # a no-op projection is its own cache entry: releasing it never
+        # drops a cache the caller holds on ``df``.  Bounds over the input
+        # cover the deduplicated batch's buckets.
+        df = cached = df.select("*").cache()
+        existing = prune_existing_to_batch(
+            existing, bucket_col, batch_buckets(df, bucket_col)
+        )
+    batch = df.dropDuplicates(list(pk))
     if existing is not None:
-        existing = prune_existing_to_batch(existing, batch, bucket_col)
         # null-safe per-column equality, SAME rule as listen.py merge_plan:
         # silver-table PKs carry nullable components, and plain equality
         # (NULL != NULL) would re-append every NULL-keyed row on each
@@ -2229,13 +2258,6 @@ def _stage_table(
             eq = batch[c].eqNullSafe(probe[c])
             cond = eq if cond is None else (cond & eq)
         batch = batch.join(probe, on=cond, how="left_anti")
-    if batch.isEmpty():
-        # zero survivors (fully-duplicate replay, or an empty stream
-        # batch): staging would still emit a 0-row part file for
-        # unpartitioned tables, accumulating junk files — and the caller
-        # would burn a commit version on it (merge_batch guards the same
-        # case, listen.py)
-        return [], {}
 
     if layout is not None:
         cluster, sort = layout
@@ -2260,22 +2282,31 @@ def _stage_table(
     # would give readers conflicting schemas for the bucket column
     if bucket_col is not None and not _existing_layout_is_flat(tdir):
         writer = writer.partitionBy(bucket_col)
-    writer.parquet(staging)
+    try:
+        writer.parquet(staging)
+    finally:
+        if cached is not None:
+            cached.unpersist()
 
     # move data files into the table dir, preserving the partition-relative
-    # path; part file names embed a UUID so collisions can't occur
+    # path; part file names embed a UUID so collisions can't occur.  0-row
+    # files (an unpartitioned write of zero survivors still emits one)
+    # stay behind and go with the staging directory.
     moved: list[str] = []
     stats: dict[str, dict] = {}
     for root, _dirs, files in os.walk(staging):
         for fname in files:
             if fname.startswith(("_", ".")):
                 continue
-            rel = os.path.relpath(os.path.join(root, fname), staging)
+            src = os.path.join(root, fname)
+            n_rows, fs = _footer(src)
+            if n_rows == 0:
+                continue
+            rel = os.path.relpath(src, staging)
             dest = os.path.join(tdir, rel)
             os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(os.path.join(root, fname), dest)
+            os.rename(src, dest)
             moved.append(rel)
-            fs = _file_stats(dest)
             if fs:
                 stats[rel] = fs
     shutil.rmtree(staging, ignore_errors=True)

@@ -18,19 +18,22 @@ Two tables under ``<out_dir>/``:
   ``ingest/transforms.py _key_bucket``), so the endpoint lookup and the
   incremental probe both prune to one bucket.
 
-Incremental maintenance per micro-batch (``update_continuation_history``):
-frontier walk over ``batch ∪ (stored lineage pruned to the frontier's
-buckets)``.  The feed is causal (a continuation step can only reference an
-already-mined tx), so each iteration's frontier is at most the batch's
-continuation txs, and the stored-lineage probe is an IN-set of ≤ that many
-key buckets — probe cost scales with the batch, not table history, the
-same bound the six-table merge probes enforce (streaming/listen.py).
-Chains are short (cross-chain = 2 steps, defpacts ≲ 10; Queries.hs comment)
-so the loop runs a handful of bucket-pruned broadcast joins.
+Incremental maintenance per micro-batch (``update_continuation_history``)
+walks on the DRIVER: the batch's lineage projection is collected once, and
+its continuation txs form the frontier.  The feed is causal (a
+continuation step can only reference an already-mined tx), so the frontier
+never outgrows the batch's continuation txs; each depth resolves its
+parent keys from the collected batch plus ONE collect of the stored
+lineage, read from only the parents' ``key_bucket=`` directories and
+filtered to those keys — probe cost scales with the batch, not table
+history, the same bound the six-table merge probes enforce
+(streaming/listen.py).  Chains are short (cross-chain = 2 steps, defpacts
+≲ 10; Queries.hs comment), so a micro-batch costs a few small collects
+plus the two merges.
 
-At 100 TB the query-time walk (queries/chainweb.py
-``continuation_histories``) remains the backfill/bootstrap job; this module
-is the steady-state path.
+This module serves micro-batches.  At 100 TB the query-time walk
+(queries/chainweb.py ``continuation_histories``) remains the
+backfill/bootstrap job.
 """
 
 from __future__ import annotations
@@ -40,37 +43,35 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ingest.transforms import _key_bucket, _key_bucket_expr
+from ..ingest.transforms import _key_bucket
 from .listen import merge_batch
 
 LINEAGE = "tx_lineage.parquet"
 HISTORY = "cont_history.parquet"
+# stored data columns; a given schema spares each read a footer-inference job
+LINEAGE_SCHEMA = "requestkey string, pactid string, code string"
+HISTORY_SCHEMA = "start_rk string, depth int, rk string, code string"
 
 # the walk terminates on its own (frontier empties at each chain's origin
 # exec tx); the cap only bounds a pathological/corrupt feed
 MAX_DEPTH = 64
 
 
-def _lineage_proj(tx: DataFrame) -> DataFrame:
-    # distinct over the FULL triple, not per requestkey: a re-introduced
-    # requestkey (orphan re-mine) may carry different code, and the
-    # reference's recursive join fans out over every distinct row
-    # (Queries.hs:126-130 dedups whole rows, not keys) — so must we.
-    return tx.select(
-        "requestkey", "pactid", "code", _key_bucket(F.col("requestkey"))
-    ).dropDuplicates(["requestkey", "pactid", "code"])
+def _bucket_dir(path: str, key: str) -> str:
+    # ingest/transforms.py _key_bucket_expr: 'k' + the key's first char
+    return os.path.join(path, f"key_bucket=k{key[:1]}")
 
 
-def _pruned_lineage(
-    spark: SparkSession, path: str, buckets: list[str]
+def _read_buckets(
+    spark: SparkSession, path: str, schema: str, keys
 ) -> DataFrame | None:
-    if not os.path.exists(path) or not buckets:
+    """``path`` read from only the bucket directories of ``keys``; None
+    when none of them exists."""
+    dirs = sorted({_bucket_dir(path, k) for k in keys})
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
         return None
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("key_bucket").isin(buckets))
-        .select("requestkey", "pactid", "code")
-    )
+    return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
 
 
 def update_continuation_history(
@@ -80,84 +81,75 @@ def update_continuation_history(
     lineage_path = os.path.join(out_dir, LINEAGE)
     history_path = os.path.join(out_dir, HISTORY)
 
-    batch = _lineage_proj(tx_batch).cache()
+    # distinct over the FULL triple, not per requestkey: a re-introduced
+    # requestkey (orphan re-mine) may carry different code, and the
+    # reference's recursive join fans out over every distinct row
+    # (Queries.hs:126-130 dedups whole rows, not keys) — so must we.
+    batch = [
+        tuple(r)
+        for r in tx_batch.select("requestkey", "pactid", "code")
+        .dropDuplicates()
+        .collect()
+    ]
+    rows: dict[str, set] = {}  # requestkey -> (pactid, code), batch ∪ stored
+    for rk, pactid, code in batch:
+        rows.setdefault(rk, set()).add((pactid, code))
     # tips: this batch's continuation steps, walked to their origins
-    frontier = (
-        batch.filter(F.col("pactid").isNotNull())
-        .select(F.col("requestkey").alias("start_rk"), F.col("pactid").alias("_next"))
-        .cache()
-    )
-    # the loop rebinds `frontier` to localCheckpoint results; keep the
-    # cached initial frontier so its blocks are released after the walk
-    # (unpersisting only the rebound frame would leak them every batch)
-    first_frontier = frontier
-    acc: DataFrame | None = None
+    frontier = {(rk, pactid) for rk, pactid, _ in batch if pactid is not None}
+    looked_up: set[str] = set()
+    history = []
     depth = 0
-    while depth < MAX_DEPTH and not frontier.isEmpty():
-        # probe universe: the batch itself plus ONLY the stored-lineage
-        # buckets the frontier's parent keys map to (an IN-set of at most
-        # |frontier| single-char buckets — O(batch), not O(history))
-        need = [
-            r[0]
-            for r in frontier.select(
-                _key_bucket_expr(F.col("_next")).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        universe = batch.select("requestkey", "pactid", "code")
-        stored = _pruned_lineage(spark, lineage_path, need)
+    while frontier and depth < MAX_DEPTH:
+        need = {parent for _, parent in frontier} - looked_up
+        looked_up |= need
+        stored = _read_buckets(spark, lineage_path, LINEAGE_SCHEMA, need)
         if stored is not None:
-            universe = universe.unionByName(stored).dropDuplicates(
-                ["requestkey", "pactid", "code"]
-            )
-        step = (
-            frontier.join(
-                F.broadcast(universe.withColumnRenamed("requestkey", "_rk")),
-                F.col("_next") == F.col("_rk"),
-            )
-            .select(
-                "start_rk",
-                F.lit(depth).alias("depth"),
-                F.col("_rk").alias("rk"),
-                F.col("code"),
-                F.col("pactid").alias("_parent_pactid"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        out = step.select(
-            "start_rk", "depth", "rk", "code", _key_bucket(F.col("start_rk"))
-        )
-        acc = out if acc is None else acc.unionByName(out)
-        frontier = (
-            step.filter(F.col("_parent_pactid").isNotNull())
-            .select("start_rk", F.col("_parent_pactid").alias("_next"))
-            .localCheckpoint(eager=True)
-        )
+            for rk, pactid, code in (
+                stored.filter(F.col("requestkey").isin(sorted(need)))
+                .select("requestkey", "pactid", "code")
+                .collect()
+            ):
+                rows.setdefault(rk, set()).add((pactid, code))
+        nxt = set()
+        for start_rk, parent in frontier:
+            for parent_pactid, code in rows.get(parent, ()):
+                history.append((start_rk, depth, parent, code))
+                if parent_pactid is not None:
+                    nxt.add((start_rk, parent_pactid))
+        frontier = nxt
         depth += 1
 
     # persist: lineage first (idempotent merge on the full row identity —
     # replays are no-ops), then the new history rows under the tip-bucket
     # layout.  History identity includes (rk, code): a twin-fanned chain
     # legitimately has two rows at one depth.
-    merge_batch(spark, batch, lineage_path, ("requestkey", "pactid", "code"))
-    if acc is not None:
-        merge_batch(spark, acc, history_path, ("start_rk", "depth", "rk", "code"))
-    first_frontier.unpersist()
-    if frontier is not first_frontier:
-        frontier.unpersist()
-    batch.unpersist()
+    lineage = spark.createDataFrame(batch, LINEAGE_SCHEMA)
+    merge_batch(
+        spark,
+        lineage.withColumn("key_bucket", _key_bucket(F.col("requestkey"))),
+        lineage_path,
+        ("requestkey", "pactid", "code"),
+    )
+    if history:
+        hist = spark.createDataFrame(history, HISTORY_SCHEMA)
+        merge_batch(
+            spark,
+            hist.withColumn("key_bucket", _key_bucket(F.col("start_rk"))),
+            history_path,
+            ("start_rk", "depth", "rk", "code"),
+        )
 
 
 def lookup_history(spark: SparkSession, out_dir: str, start_rk: str) -> DataFrame:
     """The endpoint read: one bucket directory, one tip filter —
-    O(1 bucket), no walk."""
+    O(1 bucket), no walk, no listing of the other buckets."""
+    hist = _read_buckets(
+        spark, os.path.join(out_dir, HISTORY), HISTORY_SCHEMA, [start_rk]
+    )
+    if hist is None:  # no history row in this tip's bucket yet
+        return spark.createDataFrame([], HISTORY_SCHEMA)
     return (
-        spark.read.parquet(os.path.join(out_dir, HISTORY))
-        .filter(
-            (F.col("key_bucket") == "k" + start_rk[:1])
-            & (F.col("start_rk") == start_rk)
-        )
+        hist.filter(F.col("start_rk") == start_rk)
         .orderBy("depth")
         .select("start_rk", "depth", "rk", "code")
     )

@@ -151,3 +151,43 @@ def test_listen_stream_maintains_silver_history(spark, tx, tmp_path_factory):
         for r in spark.read.parquet(os.path.join(out, HISTORY)).collect()
     }
     assert expected and got == expected
+
+
+def test_pactid_cycle_stops_at_max_depth(spark, tmp_path):
+    """A corrupt feed whose pactids form a cycle (a -> b -> a) must not
+    walk forever: the walk stops after MAX_DEPTH levels.  The cycle closes
+    across two batches, so the stored-lineage lookup is on the path."""
+    from chainweb_data_spark.streaming.silver import MAX_DEPTH
+
+    out = str(tmp_path)
+    schema = "requestkey string, pactid string, code string"
+    for row in (("ka", "kb", "code-a"), ("kb", "ka", "code-b")):
+        update_continuation_history(spark, spark.createDataFrame([row], schema), out)
+    rows = lookup_history(spark, out, "kb").collect()
+    assert [r["depth"] for r in rows] == list(range(MAX_DEPTH))
+    assert [r["rk"] for r in rows[:4]] == ["ka", "kb", "ka", "kb"]
+
+
+def test_rounds_leave_no_persisted_copy(spark, tx, tmp_path):
+    """Five publish + silver rounds keep the JVM's count of persistent
+    RDDs flat: every cached copy a round makes is released by the round.
+    localCheckpoint copies are not counted — the context cleaner frees
+    those once the JVM drops its last reference, which the py4j
+    finalizers send asynchronously, so their count is timing, not code."""
+    from chainweb_data_spark.streaming.publish import publish_batch
+
+    def persisted():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return sum(not rdds[k].rdd().isLocallyCheckpointed() for k in rdds)
+
+    out = str(tmp_path)
+    pks = {"transactions": ("block", "requestkey")}
+    tx.count()  # the fixture's own cached copy
+    base = persisted()
+    sizes = []
+    for lo in range(0, 120, 24):
+        batch = tx.filter((F.col("height") >= lo) & (F.col("height") < lo + 24))
+        publish_batch(spark, {"transactions": batch}, out, pks=pks)
+        update_continuation_history(spark, batch, out)
+        sizes.append(persisted())
+    assert sizes == [base] * 5

@@ -417,6 +417,38 @@ def test_publish_batch_noop_burns_no_version_or_files(spark, tmp_path):
     assert read_manifest(out)["version"] == v1
 
 
+def test_publish_batch_evaluates_input_once(spark, tmp_path):
+    """Staging into a table that already has published rows runs the
+    input's lineage once — not once for the probe bounds, once for the
+    emptiness check and once for the write.  The key and the bucket come
+    from a UDF that counts its calls, so no action can prune it away."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import udf
+
+    out = str(tmp_path / "once")
+    pks = {"t": ("id",)}
+
+    def keyed(df):
+        return df.withColumn(
+            "height_bucket", (F.col("id") / 100).cast("long")
+        ).coalesce(1)
+
+    publish_batch(spark, {"t": keyed(spark.range(0, 150))}, out, pks=pks)
+    calls = spark.sparkContext.accumulator(0)
+
+    @udf("long")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    batch = keyed(spark.range(100, 250).select(counted("id").alias("id")))
+    rec = publish_batch(spark, {"t": batch}, out, pks=pks)
+    assert rec["op"] == "publish"
+    assert calls.value == 150
+    got = read_published(spark, out, "t")
+    assert got.count() == got.select("id").distinct().count() == 250
+
+
 def test_maintenance_vacuum_preserves_recent_snapshots(spark, tmp_path):
     """Maintenance ops auto-vacuum with a RETENTION horizon, never 0 — a
     reader pinned to the pre-maintenance snapshot (or a time-travel read)
