@@ -14,8 +14,7 @@ Layout (all under one ``out_dir`` commit log, ``streaming/publish.py``):
 
 - ``bm25_postings.parquet`` — (term, doc_id, tf, dl, key_bucket), PK
   (term, doc_id).  ``key_bucket`` = ``'t'`` + first ``BUCKET_HEX`` hex
-  chars of ``md5(term)`` (256 buckets for new indexes; pre-r9 16-bucket
-  indexes are width-detected, never mis-hashed) — the letter prefix pins
+  chars of ``md5(term)`` (256 buckets) — the letter prefix pins
   the partition-directory type to string (same rationale as the dedup
   index's ``'h'`` prefix, ``streaming/dedup_index.py:13-24``).  Files are
   term-sorted (``POSTINGS_SORT``) so parquet row-group min/max prunes a
@@ -51,13 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .text import _term_freq_scaffold, bm25_contrib_expr
-from ..streaming.publish import (
-    compact_published,
-    live_partition_values,
-    publish_batch,
-    read_published,
-    rewrite_published_many,
-)
+from ..streaming.publish import compact_published, publish_batch, read_published
 
 #: PKs for the unified single-flip commit (publish_batch pks=).
 BM25_PKS = {
@@ -66,14 +59,11 @@ BM25_PKS = {
     "bm25_meta": ("batch_id",),
 }
 
-#: hex chars of md5(term) in the bucket value for NEW indexes.  r8 shipped
-#: 1 (16 buckets) and its 10× rehearsal showed the probe growing with the
-#: corpus — a probe scans whole matching buckets, i.e. O(corpus/16).  2 hex
-#: (256 buckets) plus term-sorted files (row-group min/max pruning WITHIN a
-#: bucket) makes probe bytes track O(postings(query)).  Existing indexes
-#: keep their width: every writer/reader detects it from the live partition
-#: directories, so a 1-hex index keeps probing correctly and a mixed-width
-#: write can never happen.
+#: hex chars of md5(term) in the bucket value.  1 (16 buckets) made the
+#: probe grow with the corpus — a probe scans whole matching buckets, i.e.
+#: O(corpus/16).  2 hex (256 buckets) plus term-sorted files (row-group
+#: min/max pruning WITHIN a bucket) makes probe bytes track
+#: O(postings(query)).
 BUCKET_HEX = 2
 
 #: sort order of postings/df files — the row-group pruning contract that
@@ -81,34 +71,15 @@ BUCKET_HEX = 2
 POSTINGS_SORT = ("term", "doc_id")
 
 
-def _term_bucket(col, width: int = BUCKET_HEX):
-    """'t' + first ``width`` hex chars of md5(term) — 16^width string-typed
+def _term_bucket(col):
+    """'t' + first ``BUCKET_HEX`` hex chars of md5(term) — string-typed
     partitions ('t' prefix pins directory-type inference to string)."""
-    return F.concat(F.lit("t"), F.substring(F.md5(col), 1, width))
+    return F.concat(F.lit("t"), F.substring(F.md5(col), 1, BUCKET_HEX))
 
 
-def _term_bucket_py(term: str, width: int = BUCKET_HEX) -> str:
+def _term_bucket_py(term: str) -> str:
     """Driver-side twin of :func:`_term_bucket` for query-term pruning."""
-    return "t" + hashlib.md5(term.encode("utf-8")).hexdigest()[:width]
-
-
-def _index_bucket_width(out_dir: str) -> int | None:
-    """Bucket width of the EXISTING index at ``out_dir`` (hex chars after
-    the 't' prefix), from the live snapshot's partition values — None when
-    no postings exist yet.  Detecting (instead of assuming BUCKET_HEX)
-    keeps pre-r9 16-bucket indexes readable and appendable: a probe that
-    hashed with the wrong width would silently return EMPTY results for
-    every in-vocabulary term, the silent-wrong class this repo refuses."""
-    vals = live_partition_values(out_dir, "bm25_postings")
-    widths = {len(v) - 1 for v in vals if v.startswith("t")}
-    if not widths:
-        return None
-    if len(widths) != 1:
-        raise ValueError(
-            f"bm25 index at {out_dir!r} has mixed bucket widths {widths} — "
-            "corrupt layout; rebuild the index"
-        )
-    return widths.pop()
+    return "t" + hashlib.md5(term.encode("utf-8")).hexdigest()[:BUCKET_HEX]
 
 
 def bm25_update_index(
@@ -138,7 +109,6 @@ def bm25_update_index(
     (``compact_published`` — one log flip, term order preserved via
     ``sort_within=POSTINGS_SORT``, racing commits rebased).  Returns the
     commit record (``publish_batch``'s ``{version, op, add}``)."""
-    width = _index_bucket_width(out_dir) or BUCKET_HEX
     toks, tf, dfreq = _term_freq_scaffold(docs, id_col, text_col)
     dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
     postings = (
@@ -149,13 +119,13 @@ def bm25_update_index(
             F.col("tf"),
             F.col("dl"),
         )
-        .withColumn("key_bucket", _term_bucket(F.col("term"), width))
+        .withColumn("key_bucket", _term_bucket(F.col("term")))
     )
     df_rows = dfreq.select(
         F.col("token").alias("term"),
         F.lit(int(batch_id)).alias("batch_id"),
         F.col("df"),
-    ).withColumn("key_bucket", _term_bucket(F.col("term"), width))
+    ).withColumn("key_bucket", _term_bucket(F.col("term")))
     # n_docs counts EVERY batch doc (empty-text docs included — they are
     # corpus members for idf), n_dl_docs/dl_sum only tokenized docs: the
     # probe's avgdl = Σdl_sum / Σn_dl_docs, exactly bm25_search's
@@ -205,59 +175,6 @@ def bm25_update_index(
         )
         compact_published(spark, out_dir, "bm25_meta")
     return snap
-
-
-def migrate_bm25_index(spark: SparkSession, out_dir: str) -> int:
-    """One-shot migration of a pre-r9 narrow-bucket index (16 buckets,
-    O(corpus/16) probe cost forever) to the current ``BUCKET_HEX`` layout
-    (256 term-sorted buckets, probe bytes O(postings(query))) — the
-    migrate-don't-strand convention of ``migrate_dedup_index`` /
-    ``migrate_curation_store`` applied to the one store r9 left behind
-    (r9 verdict "What's wrong" #2).
-
-    Re-derives ``key_bucket`` over the live postings and df tables at the
-    target width and republishes BOTH in ONE log flip
-    (``rewrite_published_many`` — a probe sees the old layout or the new,
-    never a mix of widths; ``_index_bucket_width`` would refuse a mix
-    loudly).  File shape matches a fresh build: one file per bucket
-    direction via ``repartition(key_bucket)``, rows term-sorted
-    (``POSTINGS_SORT``) with the partition column leading the sort so the
-    planner's own Sort is the one eliminated (see ``_stage_table``).
-    The meta table is width-free and untouched; probes are bitwise
-    unchanged (bucketing only places rows, scores never read it).
-
-    Idempotent: an index already at the target width returns 0 without
-    committing (replaying a crashed migration just re-runs the rewrite;
-    single-writer like every maintenance op here).  Returns the number of
-    postings+df rows migrated."""
-    width = _index_bucket_width(out_dir)
-    if width is None or width == BUCKET_HEX:
-        return 0
-    postings = read_published(spark, out_dir, "bm25_postings")
-    dft = read_published(spark, out_dir, "bm25_df")
-    if postings is None or dft is None:
-        raise ValueError(
-            f"migrate_bm25_index: incomplete index at {out_dir!r}"
-        )
-
-    def _rebucket(df: DataFrame, sort: tuple[str, ...]) -> DataFrame:
-        return (
-            df.drop("key_bucket")
-            .withColumn("key_bucket", _term_bucket(F.col("term")))
-            .repartition("key_bucket")
-            .sortWithinPartitions("key_bucket", *sort)
-        )
-
-    p_fixed = _rebucket(postings, POSTINGS_SORT)
-    d_fixed = _rebucket(dft, ("term", "batch_id"))
-    n = p_fixed.count() + d_fixed.count()
-    rewrite_published_many(
-        spark,
-        out_dir,
-        {"bm25_postings": p_fixed, "bm25_df": d_fixed},
-        op="migrate",
-    )
-    return n
 
 
 def bm25_build_index(
@@ -385,9 +302,8 @@ def bm25_search_indexed_many(
         raise ValueError(
             f"bm25_search_indexed_many: no BM25 index at {index_dir!r}"
         )
-    width = _index_bucket_width(index_dir) or BUCKET_HEX
     terms = sorted({t for _, t in qterms})
-    buckets = sorted({_term_bucket_py(t, width) for t in terms})
+    buckets = sorted({_term_bucket_py(t) for t in terms})
     qt_df = spark.createDataFrame(qterms, "query_id string, term string")
     qpost = postings.filter(
         F.col("key_bucket").isin(buckets) & F.col("term").isin(terms)
@@ -454,8 +370,7 @@ def bm25_search_indexed(
             f"bm25_search_indexed: no BM25 index at {index_dir!r} — run "
             "bm25_build_index / bm25_update_index first"
         )
-    width = _index_bucket_width(index_dir) or BUCKET_HEX
-    buckets = sorted({_term_bucket_py(t, width) for t in terms})
+    buckets = sorted({_term_bucket_py(t) for t in terms})
     # partition-value filters FIRST: Spark prunes the snapshot's listed
     # files to the matching key_bucket= directories at planning time, so
     # the scan never opens a non-matching bucket's files

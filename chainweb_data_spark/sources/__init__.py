@@ -1,4 +1,3 @@
-from .maintenance import compact_table, migrate_flat_to_bucketed
 from .schema_check import check_store, check_table_schema
 from .tables import TESTDATA_TABLES, load_table, load_tables, register_views
 
@@ -6,9 +5,7 @@ __all__ = [
     "TESTDATA_TABLES",
     "check_store",
     "check_table_schema",
-    "compact_table",
     "load_table",
     "load_tables",
-    "migrate_flat_to_bucketed",
     "register_views",
 ]

@@ -1,22 +1,8 @@
-"""Table maintenance: compaction + layout migration for the streaming sink.
-
-The always-on listen path appends one small file set per micro-batch per
-partition (the reference's Postgres pays the analogous cost as index bloat
-and solves it with autovacuum).  At scale that is the classic small-files
-problem: a reader pays per-file open/footer costs, and the merge probe's
-pruning still touches every file in the probed buckets.  ``compact_table``
-is the autovacuum analog: rewrite each partition's many small files into
-few sorted files, atomically per partition (write to a temp dir, swap via
-rename), preserving rows exactly.
-
-``migrate_flat_to_bucketed`` upgrades a table written flat by an older
-merge_batch into the partitioned layout (merge_batch refuses to mix the
-two layouts in one directory — see ``_existing_layout_is_flat``).
-
-Both operate on one table directory at a time, driver-orchestrated but
-cluster-executed (the rewrite is a Spark job per partition set); on a
-1000-executor cluster the per-partition rewrites are independent jobs you
-can run concurrently or bucket-by-bucket behind the ingest's watermark.
+"""Layout maintenance for log-published tables (streaming/publish.py):
+Z-order rewrites and metadata-only TTL expiry.  Both resolve their input
+from the transaction log and swap the result in as ONE commit, so a
+reader sees the old layout or the new one, never a mix.  Compaction of
+a log-published table is ``publish.compact_published``.
 """
 
 from __future__ import annotations
@@ -26,101 +12,6 @@ import shutil
 import uuid
 
 from pyspark.sql import SparkSession
-
-from .layout import HEIGHT_BUCKET_SIZE  # noqa: F401  (re-export convenience)
-
-
-def _partition_dirs(path: str) -> list[str]:
-    return sorted(
-        d
-        for d in os.listdir(path)
-        if "=" in d and os.path.isdir(os.path.join(path, d))
-    )
-
-
-def _data_files(d: str) -> list[str]:
-    return [
-        f
-        for f in os.listdir(d)
-        if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(d, f))
-    ]
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    sort_cols: list[tuple[str, bool]] | None = None,
-    min_files: int = 2,
-    target_files: int = 1,
-) -> dict[str, tuple[int, int]]:
-    """Compact every partition directory holding more than ``min_files``
-    data files down to ``target_files`` sorted files.
-
-    Per-partition atomicity: the rewrite lands in a sibling temp dir, then
-    the old files are removed and the new ones renamed in — a reader sees
-    the old files or the new ones; because content is identical row-for-row
-    this is safe even mid-swap for readers that tolerate at-least-once
-    (the same guarantee the merge probe itself relies on).  Returns
-    {partition: (files_before, files_after)}.
-    """
-    from pyspark.sql import functions as F
-
-    done: dict[str, tuple[int, int]] = {}
-    for part in _partition_dirs(path):
-        pdir = os.path.join(path, part)
-        files = _data_files(pdir)
-        if len(files) <= max(min_files, target_files):
-            continue
-        df = spark.read.parquet(pdir)
-        if sort_cols:
-            df = df.sort(
-                *[
-                    F.col(c).desc() if desc else F.col(c).asc()
-                    for c, desc in sort_cols
-                ]
-            )
-        tmp = os.path.join(path, f".compact-{uuid.uuid4().hex}")
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        new_files = _data_files(tmp)
-        for f in files:
-            os.remove(os.path.join(pdir, f))
-        for f in new_files:
-            os.rename(os.path.join(tmp, f), os.path.join(pdir, f))
-        shutil.rmtree(tmp, ignore_errors=True)
-        done[part] = (len(files), len(new_files))
-    return done
-
-
-def migrate_flat_to_bucketed(
-    spark: SparkSession,
-    path: str,
-    bucket_col: str,
-    sort_cols: list[tuple[str, bool]] | None = None,
-) -> str:
-    """Rewrite a flat table directory into the partition layout merge_batch
-    and the probe pruning expect.  The rewrite goes to a sibling temp dir
-    and swaps in via two renames (old table parked, new table moved in,
-    park removed) — the table is never half-migrated at its path.  Returns
-    the path.  ``bucket_col`` must already exist as a column (the
-    transforms compute height_bucket/key_bucket)."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(path)
-    if bucket_col not in df.columns:
-        raise ValueError(f"{bucket_col!r} not in table columns {df.columns}")
-    tmp = f"{path}.migrating-{uuid.uuid4().hex}"
-    out = df.repartition(bucket_col)
-    if sort_cols:
-        out = out.sortWithinPartitions(
-            F.col(bucket_col).asc(),
-            *[F.col(c).desc() if desc else F.col(c).asc() for c, desc in sort_cols],
-        )
-    out.write.mode("overwrite").partitionBy(bucket_col).parquet(tmp)
-    park = f"{path}.pre-migration-{uuid.uuid4().hex}"
-    os.rename(path, park)
-    os.rename(tmp, path)
-    shutil.rmtree(park, ignore_errors=True)
-    return path
 
 
 def zorder_expr(col_ranges: dict[str, tuple[int, int]], bits: int = 16):
@@ -189,14 +80,14 @@ def rewrite_zordered(
 
     Driver work is one min/max aggregate; the rewrite is a single
     repartitionByRange job — on a real cluster, run it per partition-bucket
-    behind the ingest watermark like ``compact_table``.
+    behind the ingest watermark.
 
-    The rewritten layout is FLAT: a partition-directory column
-    (height_bucket/key_bucket) survives as a DATA column (the read
-    materializes it), but subsequent partition-DIRECTORY pruning no longer
-    applies — file skipping via the refreshed footer stats replaces it.
-    Z-order read-optimized ANALYTIC tables; the ingest merge path keeps
-    its bucketed layout (merge_batch refuses mixed layouts by design).
+    A table with a bucket column (height_bucket/key_bucket) keeps its
+    bucket directories, like every other writer, so later publishes and
+    merge probes keep directory pruning (a flat file beside bucket
+    directories would drop rows from snapshot reads).  Each range task
+    then writes one z-sorted file per bucket it spans: ``target_files``
+    bounds the range tasks, not the files.
 
     All-NULL Z columns are DROPPED from the key (a NULL-bounded dimension
     cannot rank-scale and would poison the whole key; the dropped names
@@ -240,25 +131,36 @@ def rewrite_zordered(
     z = zorder_expr(ranges, bits)
 
     staging = os.path.join(out_dir, "_staging", f"zorder-{table}-{uuid.uuid4().hex}")
-    (
+    bucket_col = next(
+        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
+    )
+    part = [bucket_col] if bucket_col is not None else []
+    # the sort key leads with the partition column, or the planned write's
+    # own Sort(partition) replaces it (see publish._stage_table)
+    writer = (
         df.withColumn("_z", z)
         .repartitionByRange(target_files, "_z")
-        .sortWithinPartitions("_z")
+        .sortWithinPartitions(*part, "_z")
         .drop("_z")
         .write.mode("overwrite")
-        .parquet(staging)
     )
+    if part:
+        writer = writer.partitionBy(*part)
+    writer.parquet(staging)
     moved: list[str] = []
     stats: dict[str, dict] = {}
-    for fname in sorted(os.listdir(staging)):
-        if fname.startswith(("_", ".")):
-            continue
-        dest = os.path.join(tdir, fname)
-        os.rename(os.path.join(staging, fname), dest)
-        moved.append(fname)
-        fs = pub._file_stats(dest)
-        if fs:
-            stats[fname] = fs
+    for root, _dirs, fnames in os.walk(staging):
+        for fname in fnames:
+            if fname.startswith(("_", ".")):
+                continue
+            rel = os.path.relpath(os.path.join(root, fname), staging)
+            dest = os.path.join(tdir, rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.rename(os.path.join(root, fname), dest)
+            moved.append(rel)
+            fs = pub._file_stats(dest)
+            if fs:
+                stats[rel] = fs
     shutil.rmtree(staging, ignore_errors=True)
 
     input_files = set(files)

@@ -58,62 +58,10 @@ MEMBERS_TABLE = "ann_members"
 _PKS = {MEMBERS_TABLE: ("vec_id",)}
 
 
-class AnnIndexFormatError(RuntimeError):
-    """A stored ``ann_members`` table predates the 'c'-prefixed key_bucket
-    format.  Digit-only partition values read back as INT under partition
-    type inference (the same fragility class the 'h'/'k' prefixes removed
-    elsewhere), and the pruned probe / merge probe filter on 'c'-prefixed
-    strings only — pre-migration members would silently stop matching and
-    replays would re-append.  Refusing at resume is the loud option."""
-
-
-def unprefixed_member_cells(out_dir: str) -> list[str]:
-    """LIVE key_bucket partition values lacking the 'c' prefix — one
-    manifest read / listdir, no Spark job."""
-    from .publish import live_partition_values
-
-    return [
-        v
-        for v in live_partition_values(out_dir, MEMBERS_TABLE)
-        if not v.startswith("c")
-    ]
-
-
-def check_members_format(out_dir: str) -> None:
-    bad = unprefixed_member_cells(out_dir)
-    if bad:
-        raise AnnIndexFormatError(
-            f"ann_members at {out_dir!r} has pre-migration key_bucket "
-            f"partitions {bad}: probes and merge pruning match only "
-            "'c'-prefixed cell values, so this history would be silently "
-            "skipped and replays would duplicate. Run "
-            "chainweb_data_spark.streaming.ann_index.migrate_ann_index("
-            "spark, out_dir) once to re-derive key_bucket and republish, "
-            "then resume the sink."
-        )
-
-
-def migrate_ann_index(spark: SparkSession, out_dir: str) -> int:
-    """One-shot format migration: re-derive ``key_bucket`` = 'c' + cell
-    over the whole members table and republish as ONE log commit
-    (``publish.rewrite_published``).  Idempotent: already-prefixed rows
-    re-derive to themselves.  Returns the row count migrated."""
-    from .publish import rewrite_published
-
-    members = read_published(spark, out_dir, MEMBERS_TABLE)
-    if members is None:
-        return 0
-    kb = F.col("key_bucket").cast("string")
-    fixed = (
-        members.withColumn(
-            "key_bucket",
-            F.when(kb.startswith("c"), kb).otherwise(F.concat(F.lit("c"), kb)),
-        )
-        .repartition("key_bucket")
-    )
-    n = fixed.count()
-    rewrite_published(spark, out_dir, MEMBERS_TABLE, fixed)
-    return n
+class QuantizerMismatchError(RuntimeError):
+    """A fold or search passed quantizer arrays whose digest differs from
+    the one ``ann_meta`` pinned at index creation/rebuild — ADC with a
+    mismatched quantizer returns silently wrong neighbors."""
 
 
 def update_ann_index(
@@ -132,7 +80,6 @@ def update_ann_index(
     encoding run FUSED in one Arrow-batched pass over the BATCH only
     (``pq_index_rows``); the existing index is touched solely by the
     merge probe, pruned to the batch's key_buckets."""
-    check_members_format(out_dir)  # refuse pre-'c'-prefix history loudly
     _check_quantizer(spark, out_dir, centroids, codebooks)
     members = (
         sim.pq_index_rows(vecs, id_col, vec_col, centroids, codebooks)
@@ -223,7 +170,6 @@ def ann_index_search(
     whose vec_id collides with a query id.  Pass ``exclude_self=False``
     for foreign-id query batches — every member then competes, including
     id-equal ones."""
-    check_members_format(out_dir)
     _check_quantizer(spark, out_dir, centroids, codebooks)
     members = read_published(spark, out_dir, MEMBERS_TABLE)
     if members is None:
@@ -352,11 +298,11 @@ def _check_quantizer(
 ) -> None:
     latest = _latest_meta(spark, out_dir)
     if latest is None:
-        return  # pre-meta index (or empty store): nothing recorded yet
+        return  # empty store: nothing recorded yet
     want = latest["quantizer_digest"]
     got = quantizer_digest(centroids, codebooks)
     if want != got:
-        raise AnnIndexFormatError(
+        raise QuantizerMismatchError(
             f"ann index at {out_dir!r} was built/rebuilt under quantizer "
             f"{want[:16]}… (epoch {latest['epoch']}) but this call passed "
             f"{got[:16]}… — folding or searching with a mismatched "

@@ -79,8 +79,7 @@ def corpus_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     """Current totals per language: one aggregation over the (small) delta
     table — never the corpus.  Before the first batch is folded the table
     does not exist; a monitoring/mixing poller then gets an EMPTY frame
-    with the totals schema (same guard stance as dedup_index's
-    ``_read_if_exists``), not a PATH_NOT_FOUND crash."""
+    with the totals schema, not a PATH_NOT_FOUND crash."""
     path = os.path.join(out_dir, STATS_TABLE)
     if not os.path.exists(path):
         return spark.createDataFrame(

@@ -19,20 +19,17 @@ history:
   partition-pruned by the hash's first hex char: the dedup-index probe
   pattern applied to exact identity;
 - near-dup detection is ``dedup_index.update_dedup_index`` unchanged —
-  three silver tables, one atomic manifest flip, the historical
-  hot-bucket rail;
-- the curated table, reject log, hash table, and per-language corpus
-  stats all land through idempotent PK merges (``listen.merge_batch``).
+  three silver tables, the historical hot-bucket rail;
+- the curated table, reject log, hash table, per-language corpus stats
+  and the per-batch summary land through idempotent PK merges.
 
 Exactly-once: the engine replays an uncommitted batch with the SAME
 batch_id; every write above is PK-idempotent (replays append nothing)
 and the index fold is idempotent per (content, batch_id), so the
-post-replay state equals the single-run state.  With ``atomic=True``
-(default) the four curation tables commit through ONE transaction-log
-flip and the index's three tables through another — the only crash
-window is BETWEEN the two commits (index folded, batch not yet
-curated), which the replay closes; with ``atomic=False`` every table is
-its own merge and the window widens to any pair of tables.
+post-replay state equals the single-run state.  All eight tables — the
+five curation tables and the index's three — commit through ONE
+transaction-log commit (``publish.publish_batch``), so a crash anywhere
+leaves the batch wholly absent.
 
 Reject semantics are flag-don't-drop at the LOG level: rejected docs are
 recorded with (reason, detail), kept docs land in the curated table —
@@ -50,17 +47,13 @@ continuous form a 100 TB training-data pipeline runs.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import lang_id, normalize_text, quality_features
 from .corpus_stats import stats_delta
-from .dedup_index import _id_bucket, _read_if_exists, update_dedup_index
-from .listen import merge_batch
-from .publish import publish_batch, read_published
+from .dedup_index import _id_bucket, update_dedup_index
+from .publish import compact_published, publish_batch, read_published
 
 CURATED_TABLE = "curated_docs.parquet"
 REJECTS_TABLE = "curation_rejects.parquet"
@@ -69,113 +62,6 @@ INDEX_SUBDIR = "dedup_index"
 #: manifest table-name prefix for the index tables inside the UNIFIED log
 #: — same physical directories as the standalone index layout
 INDEX_PREFIX = INDEX_SUBDIR + "/"
-
-
-class CurationStoreFormatError(RuntimeError):
-    """The store was written by the pre-round-7 TWO-log layout (the dedup
-    index committed separately under ``dedup_index/_manifest``).  The
-    unified single-commit sink reads the index through the PARENT log, so
-    resuming against a two-log store would silently see an EMPTY index —
-    every historical near-dup missed.  Refusing at resume is the loud
-    option; ``migrate_curation_store`` adopts the index tables into the
-    parent log (metadata-only, no data rewrite)."""
-
-
-def _is_legacy_two_log_store(out_dir: str) -> bool:
-    from .publish import _manifest_path, read_manifest
-
-    sub = os.path.join(out_dir, INDEX_SUBDIR)
-    if not os.path.isdir(_manifest_path(sub)):
-        return False
-    if not os.path.isdir(_manifest_path(out_dir)):
-        return True  # index log exists but no parent log at all
-    tables = read_manifest(out_dir)["tables"]
-    return not any(t.startswith(INDEX_PREFIX) for t in tables)
-
-
-def migrate_curation_store(spark: SparkSession, out_dir: str) -> list[str]:
-    """Adopt a two-log store's dedup-index tables into the parent
-    transaction log as ``dedup_index/<table>`` entries — ONE parent
-    commit, metadata only (the physical directories are identical in both
-    layouts, so file lists and footer stats copy over verbatim).  The
-    sub-log is then retired (renamed ``_manifest.migrated``) so the old
-    path cannot resume divergently.  A pre-decontamination
-    ``curation_log`` (no ``n_contam`` column) is backfilled with 0 in the
-    SAME commit — the table is one row per batch, so the rewrite is tiny,
-    and leaving it would hand the resumed sink a mixed-schema table the
-    check-schema guard rightly refuses.  Idempotent: a store already
-    unified returns [] untouched.  Returns the adopted table names."""
-    from .publish import (
-        _manifest_path,
-        _stage_table,
-        _write_manifest,
-        ensure_manifest,
-        read_manifest,
-    )
-
-    if not _is_legacy_two_log_store(out_dir):
-        return []
-    sub = os.path.join(out_dir, INDEX_SUBDIR)
-    sub_manifest = read_manifest(sub)
-    parent = ensure_manifest(out_dir)
-    new_tables = dict(parent["tables"])
-    new_stats = {t: dict(s) for t, s in parent.get("stats", {}).items()}
-    adopted = []
-    for name, files in sub_manifest["tables"].items():
-        unified = INDEX_PREFIX + name
-        new_tables[unified] = list(files)
-        st = sub_manifest.get("stats", {}).get(name)
-        if st:
-            new_stats[unified] = dict(st)
-        adopted.append(unified)
-    # n_contam backfill: rewrite the (tiny) summary table with the round-7
-    # column so the resumed sink never appends a second schema beside the
-    # old one.  Staged like any publish; the swap rides the adoption commit.
-    log_files = new_tables.get("curation_log", [])
-    ldir = os.path.join(out_dir, "curation_log.parquet")
-    if log_files:
-        old = spark.read.parquet(*[os.path.join(ldir, f) for f in log_files])
-        if "n_contam" not in old.columns:
-            rewritten = old.select(
-                "batch_id",
-                "n_in",
-                "n_kept",
-                "n_quality",
-                "n_exact",
-                F.lit(0).cast("long").alias("n_contam"),
-                "n_near",
-            ).coalesce(1)
-            # stage against an EMPTY probe view (unique batch_ids already)
-            files, fstats = _stage_table(
-                spark,
-                rewritten,
-                out_dir,
-                "curation_log__migrated",
-                ("batch_id",),
-            )
-            mdir = os.path.join(out_dir, "curation_log__migrated.parquet")
-            moved, mstats = [], {}
-            for rel in files:
-                dest = os.path.join(ldir, rel)
-                os.makedirs(os.path.dirname(dest) or ldir, exist_ok=True)
-                os.rename(os.path.join(mdir, rel), dest)
-                moved.append(rel)
-                if rel in fstats:
-                    mstats[rel] = fstats[rel]
-            shutil.rmtree(mdir, ignore_errors=True)
-            new_tables["curation_log"] = sorted(moved)
-            new_stats["curation_log"] = mstats
-    _write_manifest(
-        out_dir,
-        {
-            "version": parent["version"] + 1,
-            "tables": new_tables,
-            "stats": new_stats,
-            "op": "adopt-index",
-        },
-    )
-    os.rename(_manifest_path(sub), _manifest_path(sub) + ".migrated")
-    return sorted(adopted)
 
 
 def prepare_benchmark(
@@ -221,7 +107,6 @@ def curate_batch(
     text_col: str = "text",
     min_quality: float = 0.35,
     min_jaccard: float = 0.2,
-    atomic: bool = True,
     compact_every: int | None = 16,
     quality_model: dict | None = None,
     bench_shingles: DataFrame | None = None,
@@ -244,34 +129,18 @@ def curate_batch(
     decontamination stage on — the batch pipeline's ``contaminated_docs``
     semantics running continuously, reject reason ``"contaminated"``.
 
-    ``atomic`` (default, matching listen_stream and the dedup index):
     ALL EIGHT tables — curated docs, rejects, content hashes, the stats
     delta, the per-batch summary log, AND the dedup index's three — commit
-    through ONE transaction-log flip (publish_batch; the index tables are
-    staged via ``update_dedup_index(defer_publish=True)`` under
-    ``dedup_index/<table>`` names in the parent log, same physical
-    directories as before).  A crash anywhere leaves the batch wholly
-    absent; the old "between the two commits" window (index folded, batch
-    not yet curated) no longer exists.  Stores written by the pre-unified
-    two-log layout refuse to resume with ``CurationStoreFormatError`` —
-    ``migrate_curation_store`` adopts them (metadata-only).
-    ``atomic=False`` falls back to per-table merge appends.
+    through ONE transaction-log commit (publish_batch; the index tables
+    are staged via ``update_dedup_index(defer_publish=True)`` under
+    ``dedup_index/<table>`` names in the store's log).  A crash anywhere
+    leaves the batch wholly absent.
 
     ``compact_every`` — the long-run file bound, same knob as
     ``dedup_index_sink``: per-batch growth is one file per partition dir
     touched (coalesce(1)), but cumulative growth is O(batches) and the
-    hash probe pays it at the parquet-open layer; every N batches the
-    curation tables compact through a manifest flip (atomic path;
-    ``maintenance.compact_table`` otherwise) and the SAME knob passes to
-    the dedup index's own compaction."""
-    if atomic and _is_legacy_two_log_store(out_dir):
-        raise CurationStoreFormatError(
-            f"curation store at {out_dir!r} was written by the two-log "
-            "layout (dedup_index/_manifest exists, parent log has no "
-            "dedup_index/* tables): the unified sink would silently probe "
-            "an EMPTY index. Run migrate_curation_store(spark, out_dir) "
-            "once, then resume."
-        )
+    hash probe pays it at the parquet-open layer; every N batches all
+    eight tables compact through the log (``publish.compact_published``)."""
     scored = (
         lang_id(quality_features(docs, text_col), text_col)
         .withColumn("lang", F.col("lang_pred"))
@@ -346,10 +215,7 @@ def curate_batch(
         "_keep_id"
     )
 
-    if atomic:
-        stored = read_published(spark, out_dir, "content_hashes")
-    else:
-        stored = _read_if_exists(spark, os.path.join(out_dir, HASHES_TABLE))
+    stored = read_published(spark, out_dir, "content_hashes")
     cross_dup = None
     if stored is not None:
         keys = [
@@ -426,42 +292,22 @@ def curate_batch(
         ).localCheckpoint(eager=True)
 
     # --- stage 3: near-dup probe + fold ----------------------------------
-    # atomic: the index's three tables are STAGED here (defer_publish) and
+    # the index's three tables are STAGED here (defer_publish) and
     # committed below in the SAME publish_batch as the five curation
-    # tables — one manifest flip over all eight, so the old "between the
-    # two commits" crash window no longer exists (round-6 verdict #6).
-    # The physical directories are unchanged (dedup_index/<table>.parquet);
-    # only the parent log tracks them, as "dedup_index/<table>".
-    idx_tables: dict = {}
-    idx_pks: dict = {}
-    idx_cleanup = None
-    if atomic:
-        flags, idx_tables, idx_pks, idx_cleanup = update_dedup_index(
-            spark,
-            exact_survivors.select(id_col, text_col),
-            out_dir,
-            batch_id=batch_id,
-            id_col=id_col,
-            text_col=text_col,
-            min_jaccard=min_jaccard,
-            atomic=True,
-            table_prefix=INDEX_PREFIX,
-            defer_publish=True,
-            **index_kwargs,
-        )
-    else:
-        flags = update_dedup_index(
-            spark,
-            exact_survivors.select(id_col, text_col),
-            os.path.join(out_dir, INDEX_SUBDIR),
-            batch_id=batch_id,
-            id_col=id_col,
-            text_col=text_col,
-            min_jaccard=min_jaccard,
-            atomic=False,
-            compact_every=index_kwargs.pop("compact_every", compact_every),
-            **index_kwargs,
-        )
+    # tables — one commit over all eight.  The store's log tracks them
+    # as "dedup_index/<table>" (directories dedup_index/<table>.parquet).
+    flags, idx_tables, idx_pks, idx_cleanup = update_dedup_index(
+        spark,
+        exact_survivors.select(id_col, text_col),
+        out_dir,
+        batch_id=batch_id,
+        id_col=id_col,
+        text_col=text_col,
+        min_jaccard=min_jaccard,
+        table_prefix=INDEX_PREFIX,
+        defer_publish=True,
+        **index_kwargs,
+    )
     near_ids = flags.select(id_col).distinct()
     kept = exact_survivors.join(near_ids, id_col, "left_anti")
 
@@ -604,31 +450,16 @@ def curate_batch(
         "corpus_stats": ("batch_id", "lang"),
         "curation_log": ("batch_id",),
     }
-    if atomic:
-        # ONE commit over all eight tables: five curation + three index
-        tables = {**tables, **idx_tables}
-        pks = {**pks, **idx_pks}
-        try:
-            publish_batch(spark, tables, out_dir, pks=pks)
-        finally:
-            if idx_cleanup is not None:
-                idx_cleanup()
-    else:
-        for name, df in tables.items():
-            merge_batch(
-                spark, df, os.path.join(out_dir, f"{name}.parquet"), pks[name]
-            )
+    # ONE commit over all eight tables: five curation + three index
+    tables = {**tables, **idx_tables}
+    pks = {**pks, **idx_pks}
+    try:
+        publish_batch(spark, tables, out_dir, pks=pks)
+    finally:
+        idx_cleanup()
     if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        if atomic:
-            from .publish import compact_published
-
-            for name in pks:
-                compact_published(spark, out_dir, name)
-        else:
-            from ..sources.maintenance import compact_table
-
-            for name in pks:
-                compact_table(spark, os.path.join(out_dir, f"{name}.parquet"))
+        for name in pks:
+            compact_published(spark, out_dir, name)
 
     return summary
 
@@ -677,8 +508,6 @@ def train_quality_model(
     )
 
     curated = read_published(spark, out_dir, "curated_docs")
-    if curated is None:
-        curated = _read_if_exists(spark, os.path.join(out_dir, CURATED_TABLE))
     if curated is None:
         raise ValueError(
             f"train_quality_model: no curated history at {out_dir} — run "

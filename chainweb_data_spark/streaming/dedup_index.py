@@ -7,19 +7,17 @@ corpus against itself; a production ingestion pipeline needs the other
 shape: "is this NEW document a near-dup of anything we already hold?" —
 asked continuously, at 100 TB of history.  Re-running the batch job per
 arrival is O(history) per batch; this module maintains three silver tables
-(same merge/replay discipline as the chainweb listen sink,
-streaming/listen.py) so each batch costs O(batch + hits):
+committed through one transaction log (streaming/publish.py — the same
+merge/replay discipline as the chainweb listen sink) so each batch costs
+O(batch + hits):
 
 - ``minhash_bands.parquet`` — (doc_id, band, bucket, key_bucket): the
   banded LSH index rows (operators/dedup.py ``banded_signatures``),
   PK (doc_id, band), partitioned by ``key_bucket`` = ``'h'`` + the
   bucket's first hex char (the letter prefix pins partition-type
   inference to string — an all-digit dir set from a small batch would
-  read back as INT and crash the next probe's cast.  FORMAT NOTE: an
-  index written before the prefix existed has unprefixed dirs the
-  pruned probe no longer matches — migrate by reading the table,
-  re-deriving key_bucket, and republishing; per-partition compaction
-  keeps dir names and is NOT sufficient).  The cross-era probe BROADCASTS the batch's banded rows against
+  read back as INT and crash the next probe's cast).  The cross-era
+  probe BROADCASTS the batch's banded rows against
   this table — a map-side join: the index is never shuffled, only scanned
   (partition-pruned to the batch's key_buckets when the batch is narrow).
 - ``shingle_sets.parquet`` — (doc_id, _sh array, key_bucket): per-doc
@@ -44,20 +42,18 @@ and merges nothing — idempotent end to end.
 Scale notes: batch banded rows and the candidate id set broadcast (both
 O(batch)); the only shuffles are batch-internal (signature groupBy, pair
 dedup).  Index growth is bands rows × ~50 B per doc — ~2 TB of index per
-10¹⁰ docs at the defaults, scanned map-side per probe; compact with
-sources/maintenance.py like any other silver table.
+10¹⁰ docs at the defaults, scanned map-side per probe; ``compact_every``
+compacts it through the log (``publish.compact_published``).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
 from .listen import merge_batch
-from .publish import publish_batch, read_published
+from .publish import compact_published, publish_batch, read_published
 
 BANDS_TABLE = "minhash_bands.parquet"
 SETS_TABLE = "shingle_sets.parquet"
@@ -76,120 +72,11 @@ def _id_bucket(id_col: str, n: int = 16):
     ).cast("string")
 
 
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    return spark.read.parquet(path) if os.path.exists(path) else None
-
-
 _PKS = {
     "minhash_bands": ("doc_id", "band"),
     "shingle_sets": ("doc_id",),
     "bucket_counts": ("batch_id", "band", "bucket"),
 }
-
-
-class DedupIndexFormatError(RuntimeError):
-    """A stored ``minhash_bands`` table predates the 'h'-prefixed
-    key_bucket format.  The pruned cross-era probe filters on 'h'-prefixed
-    partition values only, so pre-migration history would silently stop
-    matching — every historical near-dup missed, no error.  Refusing at
-    resume is the only loud option (round-6 advice)."""
-
-
-def unprefixed_band_buckets(
-    out_dir: str, table: str = "minhash_bands"
-) -> list[str]:
-    """key_bucket partition values of the LIVE bands table that lack the
-    'h' prefix — one manifest read / listdir
-    (``publish.live_partition_values``); no Spark job, cheap per batch."""
-    from .publish import live_partition_values
-
-    return [
-        v
-        for v in live_partition_values(out_dir, table)
-        if not v.startswith("h")
-    ]
-
-
-def check_bands_format(out_dir: str, table: str = "minhash_bands") -> None:
-    bad = unprefixed_band_buckets(out_dir, table)
-    if bad:
-        prefix = table[: -len("minhash_bands")]
-        fix = (
-            f"migrate_dedup_index(spark, {out_dir!r}"
-            + (f", table_prefix={prefix!r})" if prefix else ")")
-        )
-        raise DedupIndexFormatError(
-            f"{table} at {out_dir!r} has pre-migration key_bucket "
-            f"partitions {bad}: the pruned cross-era probe matches only "
-            "'h'-prefixed values, so this history would be silently "
-            "skipped (missed near-dups). Run "
-            f"chainweb_data_spark.streaming.dedup_index.{fix} once to "
-            "re-derive key_bucket and republish, then resume the sink."
-        )
-
-
-def migrate_dedup_index(
-    spark: SparkSession,
-    out_dir: str,
-    atomic: bool = True,
-    table_prefix: str = "",
-) -> int:
-    """One-shot format migration: re-derive ``key_bucket`` ('h' + first
-    hex char of bucket) over the whole bands table and republish.  On the
-    txlog layout the rewrite commits as ONE log entry
-    (``publish.rewrite_published`` — readers see old or migrated, never a
-    mix; per-partition compaction keeps dir names and is NOT sufficient);
-    the legacy layout swaps directories via the park-and-rename move
-    (``maintenance.migrate_flat_to_bucketed``'s discipline).  Idempotent:
-    already-prefixed rows re-derive to themselves.
-
-    ``table_prefix`` mirrors :func:`update_dedup_index`'s: a unified
-    curation store keeps the bands under ``dedup_index/minhash_bands`` in
-    the PARENT log, and migrating the unprefixed name there would resolve
-    an empty table, "succeed" with 0 rows, and leave the store
-    unresumable (round-7 advice).  Returns the row count migrated."""
-    from .publish import _manifest_path, rewrite_published
-
-    t_bands = table_prefix + "minhash_bands"
-    stored = _read_table(
-        spark, out_dir, t_bands,
-        atomic and os.path.isdir(_manifest_path(out_dir)),
-    )
-    if stored is None:
-        tdir = os.path.join(out_dir, f"{t_bands}.parquet")
-        stored = _read_if_exists(spark, tdir)
-        if stored is None:
-            return 0
-    fixed = (
-        stored.drop("key_bucket")
-        .withColumn(
-            "key_bucket", F.concat(F.lit("h"), F.substring("bucket", 1, 1))
-        )
-        .repartition("key_bucket")
-    )
-    n = fixed.count()
-    if atomic and os.path.isdir(_manifest_path(out_dir)):
-        rewrite_published(spark, out_dir, t_bands, fixed)
-    else:
-        import shutil
-        import uuid
-
-        tdir = os.path.join(out_dir, f"{t_bands}.parquet")
-        tmp = f"{tdir}.migrating-{uuid.uuid4().hex}"
-        fixed.write.mode("overwrite").partitionBy("key_bucket").parquet(tmp)
-        park = f"{tdir}.pre-migration-{uuid.uuid4().hex}"
-        os.rename(tdir, park)
-        os.rename(tmp, tdir)
-        shutil.rmtree(park, ignore_errors=True)
-    return n
-
-
-def _read_table(
-    spark: SparkSession, out_dir: str, table: str, atomic: bool
-) -> DataFrame | None:
-    if atomic:
-        return read_published(spark, out_dir, table)
-    return _read_if_exists(spark, os.path.join(out_dir, f"{table}.parquet"))
 
 
 def update_dedup_index(
@@ -204,7 +91,6 @@ def update_dedup_index(
     bands: int = 4,
     min_jaccard: float = 0.2,
     max_bucket_size: int = 50,
-    atomic: bool = True,
     compact_every: int | None = None,
     table_prefix: str = "",
     defer_publish: bool = False,
@@ -226,19 +112,17 @@ def update_dedup_index(
     With ``defer_publish`` the caller owns compaction too
     (``compact_every`` is ignored here).
 
-    ``atomic`` (default) commits all three tables through ONE manifest
-    flip (streaming/publish.py) — a crash mid-fold leaves the index
-    exactly at the previous snapshot instead of bands-without-sets
-    (sets-less candidates would silently verify against nothing).
-    ``atomic=False`` falls back to per-table merge_batch appends.
+    All three tables commit through ONE log commit (streaming/publish.py)
+    — a crash mid-fold leaves the index exactly at the previous snapshot
+    instead of bands-without-sets (sets-less candidates would silently
+    verify against nothing).
 
     ``compact_every`` — the LONG-RUN file bound.  Per-batch growth is
     bounded (coalesce(1): ≤16 files/table/batch) but cumulative growth is
     O(batches), and probe cost is O(live files) at the parquet-open
     layer; every ``compact_every`` batches the three tables compact to
-    one file per partition directory through a manifest flip
-    (``publish.compact_published`` — crash-atomic, row-preserving; plain
-    ``maintenance.compact_table`` on the non-atomic layout).  The
+    one file per partition directory through one commit each
+    (``publish.compact_published`` — crash-atomic, row-preserving).  The
     100-batch streaming rehearsal measures probe time FLAT with this on
     and linearly degrading without."""
 
@@ -256,7 +140,7 @@ def update_dedup_index(
     # first run's own counts are already stored, and including them would
     # make the replay see a hotter history than the original run did
     # (fewer flags ⇒ the idempotence contract breaks exactly at the cap).
-    counts = _read_table(spark, out_dir, t_counts, atomic)
+    counts = read_published(spark, out_dir, t_counts)
     if counts is not None:
         counts = counts.filter(F.col("batch_id") != batch_id)
         hot = (
@@ -272,12 +156,8 @@ def update_dedup_index(
         probe_banded = banded
 
     # cross-era candidates: stored index rows sharing a (band, bucket) with
-    # the batch — batch side broadcast, index side scanned map-side only.
-    # Refuse FIRST if the stored table predates the 'h'-prefixed
-    # key_bucket format: the pruned probe below would silently skip all of
-    # that history (one manifest/listdir check, no job)
-    check_bands_format(out_dir, t_bands)
-    stored = _read_table(spark, out_dir, t_bands, atomic)
+    # the batch — batch side broadcast, index side scanned map-side only
+    stored = read_published(spark, out_dir, t_bands)
     cross: DataFrame | None = None
     if stored is not None:
         keys = [
@@ -323,7 +203,7 @@ def update_dedup_index(
     verify_sets = sets_
     if cross is not None:
         old_ids = cand.select(F.col("id_old").alias(id_col)).distinct()
-        stored_sets = _read_table(spark, out_dir, t_sets, atomic)
+        stored_sets = read_published(spark, out_dir, t_sets)
         if stored_sets is not None:
             fetched = stored_sets.join(F.broadcast(old_ids), id_col, "left_semi")
             verify_sets = (
@@ -398,24 +278,10 @@ def update_dedup_index(
             banded.unpersist()
 
         return result, to_merge, pks, _cleanup
-    if atomic:
-        publish_batch(spark, to_merge, out_dir, pks=pks)
-    else:
-        for name, df in to_merge.items():
-            merge_batch(
-                spark, df, os.path.join(out_dir, f"{name}.parquet"), pks[name]
-            )
+    publish_batch(spark, to_merge, out_dir, pks=pks)
     if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-        if atomic:
-            from .publish import compact_published
-
-            for name in pks:
-                compact_published(spark, out_dir, name)
-        else:
-            from ..sources.maintenance import compact_table
-
-            for name in pks:
-                compact_table(spark, os.path.join(out_dir, f"{name}.parquet"))
+        for name in pks:
+            compact_published(spark, out_dir, name)
     sets_.unpersist()
     if probe_banded is not banded:
         probe_banded.unpersist()

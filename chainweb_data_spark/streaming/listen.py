@@ -8,7 +8,7 @@ row-construction → one DB transaction writing all six tables with
     raw feed (file/socket/Kafka) → readStream
       → foreachBatch:
           payload_to_tables(batch)           # the SAME pure transforms
-          merge_batch per table              # idempotent PK merge
+          publish_batch(all six tables)      # idempotent PK merge, ONE commit
 
 Idempotence replaces the reference's ON CONFLICT DO NOTHING: each batch
 left-anti-joins the target on the table's primary key before appending, so
@@ -147,9 +147,9 @@ def _read_bucket_dirs(
     """The stored table at ``path`` read from only the partition
     directories :func:`batch_buckets` may hit (a superset: the caller
     still applies :func:`prune_existing_to_batch`), or None when no such
-    directory exists — an empty batch hits none.  Flat tables and
-    bucket-less batches read the whole table."""
-    if bucket_col is None or _existing_layout_is_flat(path):
+    directory exists — an empty batch hits none.  Bucket-less tables
+    read whole."""
+    if bucket_col is None:
         return spark.read.parquet(path)
     if bucket_col == "height_bucket":
         lo, hi = buckets
@@ -173,29 +173,13 @@ def _read_bucket_dirs(
     return spark.read.option("basePath", path).parquet(*dirs)
 
 
-def _existing_layout_is_flat(path: str) -> bool:
-    """True when ``path`` already holds root-level data files (an un-
-    partitioned table written by an older merge_batch).  Appending partition
-    subdirectories next to flat files makes the directory unreadable
-    (conflicting directory structures), so the writer must match the
-    existing layout."""
-    if not os.path.isdir(path):
-        return False
-    return any(
-        not name.startswith(("_", "."))
-        and os.path.isfile(os.path.join(path, name))
-        for name in os.listdir(path)
-    )
-
-
 def merge_batch(spark: SparkSession, df: DataFrame, path: str, pk: tuple[str, ...]) -> None:
-    """Write the merge_plan: bucket-partitioned append for tables carrying a
-    partition column (height_bucket or key_bucket — partition dirs = the
-    write layout of sources/layout.py, so readers get directory pruning),
-    flat append otherwise.  A pre-existing FLAT table keeps its flat layout
-    (appending partition dirs beside flat files would corrupt the
-    directory); rewrite the table through sources/layout.py to migrate it to
-    the bucketed layout."""
+    """Write the merge_plan WITHOUT a commit log: bucket-partitioned append
+    for tables carrying a partition column (height_bucket or key_bucket —
+    partition dirs = the write layout of sources/layout.py, so readers get
+    directory pruning), flat append otherwise.  For the log-less side
+    tables (silver lineage, corpus stats, windowed counts, dedup flags);
+    the chainweb tables publish through ``publish.publish_batch``."""
     batch, bucket_col = merge_plan(spark, df, path, pk)
     # execute the merge plan ONCE: isEmpty below and the append write are
     # two actions, and the unmaterialized plan (duplicate-probe scan +
@@ -210,7 +194,7 @@ def merge_batch(spark: SparkSession, df: DataFrame, path: str, pk: tuple[str, ..
         # watermark close are empty (stateful.py windowed_counts_sink).
         return
     writer = batch.write.mode("append")
-    if bucket_col is not None and not _existing_layout_is_flat(path):
+    if bucket_col is not None:
         writer = writer.partitionBy(bucket_col)
     writer.parquet(path)
 
@@ -222,7 +206,6 @@ def listen_stream(
     checkpoint_dir: str | None = None,
     event_min_height: int = 0,
     available_now: bool = True,
-    atomic: bool = True,
     continuation_history: bool = False,
 ):
     """Run the listen pipeline over a raw-feed directory (each file = a
@@ -230,21 +213,19 @@ def listen_stream(
     for the SSE stream; swap ``readStream.format`` for kafka/socket in
     production, the rest is identical).
 
-    ``atomic=True`` (the DEFAULT, matching the reference's single-transaction
-    boundary, Worker.hs:50-82) routes each micro-batch through
-    ``publish.publish_batch`` — all six tables committed by ONE manifest
-    flip; snapshot readers use ``publish.read_published`` (plain
-    ``spark.read.parquet`` also works between crashes, but may see staged
-    orphans after one).  A directory previously written by the non-atomic
-    path is adopted automatically (``publish.ensure_manifest``), flat or
-    bucketed.  ``atomic=False`` keeps the table-by-table append (replay
-    convergence closes the half-applied window eventually rather than
-    immediately).
+    Each micro-batch goes through ``publish.publish_batch`` — all six
+    tables committed by ONE log commit, the reference's single-transaction
+    boundary (Worker.hs:50-82); snapshot readers use
+    ``publish.read_published`` (plain ``spark.read.parquet`` also works
+    between crashes, but may see staged orphans after one).  A log-less
+    directory that already holds table data is refused
+    (``publish.StoreFormatError``).
 
     ``continuation_history=True`` additionally folds each batch's
     transactions into the incremental continuation-history silver tables
-    (``streaming/silver.py`` — SURVEY §2.3 J4 option b), so the history
-    endpoint reads a bucket-pruned lookup instead of walking at query time.
+    under ``out_dir/_silver/`` (``streaming/silver.py`` — SURVEY §2.3 J4
+    option b), so the history endpoint reads a bucket-pruned lookup
+    instead of walking at query time.
 
     Returns the StreamingQuery (caller awaits / stops it).
     """
@@ -275,18 +256,9 @@ def listen_stream(
         tables = payload_to_tables(batch_df, event_min_height=event_min_height)
         # derive events once; transfers re-derive from it inside
         # payload_to_tables — all six writes see one consistent batch
-        if atomic:
-            from .publish import publish_batch
+        from .publish import publish_batch
 
-            publish_batch(batch_df.sparkSession, tables, out_dir)
-        else:
-            for name, df in tables.items():
-                merge_batch(
-                    batch_df.sparkSession,
-                    df,
-                    os.path.join(out_dir, f"{name}.parquet"),
-                    TABLE_PKS[name],
-                )
+        publish_batch(batch_df.sparkSession, tables, out_dir)
         if continuation_history:
             from .silver import update_continuation_history
 

@@ -2,15 +2,35 @@
 parquet-native analog of the reference's single-transaction write of all six
 tables per block (``haskell-src/exec/Chainweb/Worker.hs:50-82``).
 
-Plain ``merge_batch`` appends table-by-table, so a reader between a crash
-and its replay can observe a half-applied block (replay converges, but the
-window exists).  This module closes the window with a commit log:
+Store layout (format 1, the only one this module reads or writes):
 
     out_dir/
       <table>.parquet/<bucket>=<v>/part-*.parquet   data files, append-only
-      _manifest/v<N>.json    commit N: full snapshot (checkpoint) or an
-                             incremental {add, remove} delta against N-1
-      _manifest/CURRENT      discovery hint naming the newest commit file
+      _manifest/v<N>.json     commit N — a checkpoint or a delta
+      _manifest/ckpt-v<N>-*.parquet   checkpoint sidecar: every live file
+      _manifest/delta-v<N>-*.parquet  spilled add/remove lists of a mega-delta
+      _manifest/CURRENT       discovery hint naming the newest commit file
+
+Every commit JSON carries ``"format": 1`` (:data:`FORMAT`), written by
+:func:`_link_commit` and checked by :func:`_load_commit`; any other value
+raises :class:`StoreFormatError`.  A commit has one of two shapes:
+
+- **checkpoint** (v1 and every ``CHECKPOINT_EVERY``-th version):
+  ``ckpt`` (the sidecar name), ``n_files``, ``n_files_by_table``,
+  ``table_names``, ``pins`` (the folded retention leases) and the
+  commit's own delta.  The O(live files) snapshot — file names plus
+  per-file footer stats as a JSON string column — lives in the zstd
+  sidecar, so the commit JSON stays O(#tables) bytes.
+- **delta** (every other version): ``parent`` plus inline ``add`` /
+  ``remove`` / ``stats_add`` lists, or — past
+  :data:`DELTA_SIDECAR_MIN_FILES` changed files — a ``delta`` sidecar
+  with per-table counts (``n_add_by_table``, ``n_remove_by_table``) and
+  the added files' partition directories (``add_dirs_by_table``) in the
+  JSON.  Pin/unpin commits carry a ``pin`` record.
+
+Every reader resolves a version the same way (:func:`_chain`): walk back
+to the checkpoint at or below it (at most ``CHECKPOINT_EVERY - 1``
+deltas), then fold the deltas forward.
 
 A batch stages ALL tables' new files first (files on disk but referenced by
 no commit ⇒ invisible to snapshot readers), then publishes ONE commit.  The
@@ -31,106 +51,62 @@ probe only consults published rows (null-safe on PK components, like
 stages nothing at all, in which case NO commit is written (a version
 burned per replay would silently shrink the retention horizon).
 
-Scale properties (the reasons a 100 TB table needs a log, not a listing):
+Scale properties:
 
-- **O(delta) commits.**  A commit writes only its added/removed file names;
-  every ``CHECKPOINT_EVERY``-th commit also writes a full snapshot so a
-  reader replays at most ``CHECKPOINT_EVERY - 1`` tiny deltas.  The v5
-  manifest rewrote the entire O(live files) list on every batch — at
-  millions of files that rewrite IS the commit cost; here it is amortized
-  to O(delta + files/CHECKPOINT_EVERY).
+- **O(delta) commits.**  Every writer (publish, compact, z-order, expire,
+  rewrite, pin) commits through :func:`_commit_delta` — exactly the
+  files it changed, no parent hydration or set-diff between
+  checkpoints; the checkpoint every ``CHECKPOINT_EVERY``-th commit
+  amortizes the O(live files) snapshot.
 - **No directory listings.**  Readers get explicit file lists from the
   snapshot (``basePath`` preserves bucket-partition columns), so the
   object-store LIST that dominates partitioned-table reads at scale never
   happens.
 - **File skipping.**  Staging records per-file min/max column stats from
   the parquet footers into the commit; ``read_published(where=...)``
-  prunes files whose ranges are disjoint from the predicate — finer than
-  directory partition pruning, the same mechanism as Delta/Iceberg data
-  skipping.
+  prunes files whose ranges are disjoint from the predicate — the same
+  mechanism as Delta/Iceberg data skipping.
 - **Time travel.**  ``read_manifest``/``read_published`` accept
   ``version=`` — any retained commit resolves to its exact snapshot
   (``vacuum`` bounds how far back the data files themselves survive).
+- **Per-table, column-pruned reads.**  ``read_published`` reads the
+  checkpoint sidecar filtered to one table (row groups prune on the
+  sorted ``table`` column) and fetches stats bytes only when a
+  ``where`` needs them; vacuum and pin probes read file sets only.
+- **Cluster-side paths past** :data:`CLUSTER_PATH_MIN_FILES`.
+  :func:`snapshot_files_df` scans the sidecar with Spark and ships only
+  the O(delta) commits from the driver; vacuum plans its orphan sweep as
+  a distributed-listing anti-join, ``pin_version`` probes re-readability
+  in executors, and checkpoint sidecars are derived and written by a
+  Spark job (:func:`_write_checkpoint_spark`).  ``vacuum`` /
+  ``pin_version`` / ``unpin_version`` default to :data:`AUTO`, which
+  picks the active session once the store's live-file count (free
+  metadata, :func:`_store_n_files`) crosses the threshold.
 
-Concurrent writers rebase with CONFLICT DETECTION (r9): a losing writer
+Concurrent writers rebase with CONFLICT DETECTION: a losing writer
 compares its staged files' partition directories with what the racers
 ADDED in between — overlapping tables re-run their PK anti-join against
 the fresh snapshot (duplicates a racer published are dropped; the stale
-staging is vacuumed as an orphan), disjoint tables rebase verbatim (the
-fast path — the reference's disjoint-chain-range workers never pay a
-re-stage).  Partition values are deterministic functions of row content
+staging is vacuumed as an orphan), disjoint tables rebase verbatim.
+Partition values are deterministic functions of row content
 (height/key buckets), so directory disjointness implies PK disjointness;
-flat tables conservatively re-stage on any same-table race.
-Single-writer deployments never rebase at all.
+unpartitioned tables conservatively re-stage on any same-table race.
 
-With Delta/Iceberg available this module disappears into their transaction
-log — same protocol (stage files, commit one metadata delta, checkpoint,
-vacuum), engine-grade implementation; the log here keeps the repo
-dependency-free.
+The STORAGE SEAM (Delta's LogStore move): every durability- or
+atomicity-bearing call on the LOG surface — the put-if-absent commit
+link, the CURRENT hint, sidecar writes/reads, orphan sweeps, staging
+reclamation, and the executor probe/walk closures — goes through the
+injectable :data:`LOG_STORE` (:class:`~.logstore.PosixLogStore` by
+default), so an object-store backend (conditional PUT) slots in without
+touching protocol code; URL-scheme ``out_dir``s are refused by the POSIX
+backend.  DATA files stay on the data plane: Spark writes staged parquet
+and ``read_published`` scans by path; the three staging moves
+(``_stage_table``, ``compact_published``, ``rewrite_published_many``)
+are same-filesystem renames of Spark-written files.
 
-Checkpoints are PARQUET (r9 — Delta's move, closing the former "known
-residual"): the per-checkpoint commit JSON stays O(1) bytes (version,
-op, pin fold, a sidecar reference and row count) while the O(live files)
-snapshot — file names and their per-file stats — lives in a zstd
-parquet sidecar next to the log.  The stats column is the bulk of
-checkpoint bytes and the part most readers never need, so consumers that
-want only file SETS (vacuum's live-set sweep, pin_version's
-re-readability probes) read the sidecar column-pruned via
-:func:`_snapshot_files` — the stats bytes are never fetched.  The commit
-point is unchanged (sidecars are staged and fsynced BEFORE the
-``os.link`` of the JSON, so a crash in between leaves an orphan sidecar
-that :func:`vacuum` reclaims by its embedded version, age-gated).
-Pre-r9 stores (checkpoints with inline ``tables``) read unchanged.
-
-Snapshot resolution is CLUSTER-SIDE on the scale path (r10, closing the
-former "known residual at extreme file counts"): :func:`snapshot_files_df`
-reads the checkpoint sidecar as a Spark DataFrame and ships only the
-O(delta) commits since it from the driver, so ``vacuum(spark=...)`` plans
-its orphan sweep as a distributed-listing anti-join (collecting only the
-orphans it deletes — Delta's vacuum shape) and ``pin_version(spark=...)``
-probes snapshot re-readability in executors (collecting at most one
-missing row).  ``read_published`` resolves PER TABLE through a filtered,
-column-pruned sidecar read — O(that table's files), never O(all live
-files), with stats bytes fetched only when a ``where`` needs them.  The
-remaining O(table files) driver artifact is the explicit path list handed
-to ``spark.read`` — the same place Delta keeps it (a scan's file index
-lives on the JVM driver by construction).
-
-Checkpoint WRITES are cluster-side too (r11, closing the last
-O(live files) driver path): past :data:`CLUSTER_PATH_MIN_FILES` a
-checkpoint's sidecar is DERIVED by Spark from the previous sidecar plus
-the O(delta) commit chain and written by a Spark job
-(:func:`_write_checkpoint_spark`) — the driver ships only the delta and
-links the O(1) commit JSON; row order and stats encoding match the
-driver builder byte-for-byte.  Every writer (publish, compact, z-order,
-expire, rewrite, pin) now commits DELTA-form through
-:func:`_commit_delta` — exactly the files it changed, no parent
-hydration or set-diff anywhere between checkpoints — and the
-maintenance ops resolve their inputs per-table.  The cluster paths
-AUTO-SELECT: ``vacuum``/``pin_version``/``unpin_version`` default to
-:data:`AUTO`, which picks the active SparkSession once the store's
-live-file count (free metadata: ``n_files`` in every checkpoint commit
-+ delta folds, :func:`_store_n_files`) crosses the threshold; explicit
-``spark=None`` keeps the dependency-free driver path, fine to ~10^6
-files.  The 1M/4M-file sweeps comparing all paths are
-``scripts/txlog_rehearsal.py`` rows.
-
-The STORAGE SEAM (r12 — Delta's LogStore move): every
-durability/atomicity-bearing call on the LOG surface — the
-put-if-absent commit link, the CURRENT hint, sidecar writes/reads,
-orphan sweeps, staging reclamation, and the executor probe/walk
-closures — goes through the injectable :data:`LOG_STORE`
-(:class:`~.logstore.PosixLogStore` by default), so an object-store
-backend (conditional PUT) slots in without touching protocol code;
-URL-scheme ``out_dir``s are refused by the POSIX backend instead of
-silently becoming local relative paths.  DATA files stay on the data
-plane: Spark writes staged parquet and ``read_published`` scans by
-path, exactly as Delta moves data through Hadoop filesystems — the
-three staging moves (``_stage_table``, ``compact_published``,
-``rewrite_published_many``) are same-filesystem renames of
-Spark-written files and remain native.  ``tests/test_logstore.py``
-runs a whole driver-path lifecycle against the in-memory backend with
-a real-filesystem bypass trap.
+With Delta/Iceberg available this module disappears into their
+transaction log — same protocol (stage files, commit one metadata delta,
+checkpoint, vacuum); the log here keeps the repo dependency-free.
 """
 
 from __future__ import annotations
@@ -143,12 +119,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .listen import (
-    TABLE_PKS,
-    _existing_layout_is_flat,
-    batch_buckets,
-    prune_existing_to_batch,
-)
+from .listen import TABLE_PKS, batch_buckets, prune_existing_to_batch
 from .logstore import InMemoryLogStore, PosixLogStore  # noqa: F401
 
 #: the txlog's storage seam (r12 — Delta's LogStore move): every
@@ -161,6 +132,10 @@ from .logstore import InMemoryLogStore, PosixLogStore  # noqa: F401
 LOG_STORE = PosixLogStore()
 
 _MANIFEST_DIR = "_manifest"
+
+#: the on-disk format every commit carries (``"format"`` in its JSON);
+#: readers refuse any other value with :class:`StoreFormatError`.
+FORMAT = 1
 
 #: every Nth commit is written as a full snapshot; readers replay at most
 #: N-1 incremental deltas on top of the nearest checkpoint at or below the
@@ -227,6 +202,23 @@ MAINT_KEEP_VERSIONS = 2
 VACUUM_GRACE_S = 900.0
 
 
+class StoreFormatError(RuntimeError):
+    """The store holds something this build does not read: a commit whose
+    ``format`` is not :data:`FORMAT`, or data files in a directory with no
+    commit log.  ``path`` names the commit file (or the table directory)
+    and ``version`` the commit version (None for a log-less directory)."""
+
+    def __init__(self, path: str, version: int | None, found: str) -> None:
+        where = path if version is None else f"{path} (version {version})"
+        super().__init__(
+            f"{where}: {found} — this build reads only format-{FORMAT} "
+            "stores; republish the data through publish_batch into a "
+            "fresh directory"
+        )
+        self.path = path
+        self.version = version
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed the version this writer was about to.
 
@@ -286,10 +278,60 @@ def _commit_name(version: int) -> str:
 
 
 def _load_commit(out_dir: str, version: int) -> dict:
-    return json.loads(
-        LOG_STORE.read_bytes(
-            os.path.join(_manifest_path(out_dir), _commit_name(version))
+    """Commit ``version`` — the one place a commit is read back, so the
+    one format check every reader passes through."""
+    path = os.path.join(_manifest_path(out_dir), _commit_name(version))
+    commit = json.loads(LOG_STORE.read_bytes(path))
+    if commit.get("format") != FORMAT:
+        raise StoreFormatError(
+            path, version, f"commit format {commit.get('format')!r}"
         )
+    return commit
+
+
+def _chain(
+    out_dir: str, version: int, held=None
+) -> tuple[dict, list[dict]]:
+    """The one walk over the log: from ``version`` back to its checkpoint
+    (at most ``CHECKPOINT_EVERY - 1`` deltas).  Returns ``(base,
+    deltas)`` with the deltas after the base, oldest first.  The base is
+    the checkpoint commit — or, when ``held(v)`` returns a snapshot the
+    caller already holds resolved for a version on the way (the
+    snapshot cache), that snapshot, and the walk stops there."""
+    deltas: list[dict] = []
+    v = version
+    while v >= 1:
+        base = held(v) if held is not None else None
+        if base is None:
+            commit = _load_commit(out_dir, v)
+            base = commit if "ckpt" in commit else None
+        if base is not None:
+            deltas.reverse()
+            return base, deltas
+        deltas.append(commit)
+        v -= 1
+    raise RuntimeError(
+        f"commit chain for version {version} in {out_dir} has no "
+        "checkpoint ancestor — log is corrupt"
+    )
+
+
+def _delta_counts(commit: dict) -> tuple[dict[str, int], dict[str, int]]:
+    """Per-table ``(added, removed)`` file counts of the delta a commit
+    states — from the JSON count fields of a spilled delta, from the
+    inline lists otherwise (checkpoint commits carry their own delta
+    too)."""
+    if "delta" in commit:
+        return (
+            {t: int(n) for t, n in commit.get("n_add_by_table", {}).items()},
+            {
+                t: int(n)
+                for t, n in commit.get("n_remove_by_table", {}).items()
+            },
+        )
+    return (
+        {t: len(fs) for t, fs in commit.get("add", {}).items()},
+        {t: len(fs) for t, fs in commit.get("remove", {}).items()},
     )
 
 
@@ -429,10 +471,8 @@ def _hydrate_delta(
         else:
             remove.setdefault(tname, []).append(rel)
     out = dict(commit)
-    # "add" is set even when empty: its PRESENCE tells _added_between
-    # the commit states its own delta (no snapshot diff needed) — the
-    # same sentinel inline checkpoint commits carry
-    out["add"] = add
+    if add:
+        out["add"] = add
     if remove:
         out["remove"] = remove
     if stats_add:
@@ -545,31 +585,9 @@ def _table_files(
             list(hit["tables"].get(table, [])),
             dict(hit["stats"].get(table, {})) if with_stats else {},
         )
-    deltas: list[dict] = []
-    v = version
-    while True:
-        commit = _load_commit(out_dir, v)
-        if "ckpt" in commit:
-            files, stats = _read_sidecar_table(
-                out_dir, commit, table, with_stats
-            )
-            break
-        if "tables" in commit:
-            files = list(commit["tables"].get(table, []))
-            stats = (
-                dict(commit.get("stats", {}).get(table, {}))
-                if with_stats
-                else {}
-            )
-            break
-        deltas.append(commit)
-        v = commit.get("parent", v - 1)
-        if v < 1:
-            raise RuntimeError(
-                f"commit chain for version {version} in {out_dir} has no "
-                "checkpoint ancestor — log is corrupt"
-            )
-    for delta in reversed(deltas):
+    ckpt, deltas = _chain(out_dir, version)
+    files, stats = _read_sidecar_table(out_dir, ckpt, table, with_stats)
+    for delta in deltas:
         # a spilled mega-delta hydrates ONLY this table's rows (parquet
         # predicate on the sorted table column) — the per-table read
         # stays O(that table's churn)
@@ -623,71 +641,28 @@ def _latest_version(out_dir: str) -> int:
 
 def _store_n_files(out_dir: str, version: int) -> int | None:
     """The snapshot's live-file COUNT at ``version`` from commit metadata
-    alone — O(deltas since the last checkpoint), never a file-list scan:
-    checkpoint commits carry ``n_files`` in their O(1) JSON, and each
-    delta states exactly how many files it added/removed.  Pre-r9 inline
-    checkpoints pay one JSON parse (those stores are driver-bounded by
-    construction).  ``None`` when nothing is committed."""
+    alone (:func:`_store_table_counts`), never a file-list scan.
+    ``None`` when nothing is committed."""
     if version < 1:
         return None
-    n = 0
-    v = version
-    while v >= 1:
-        c = _load_commit(out_dir, v)
-        if "n_files" in c:
-            return int(c["n_files"]) + n
-        if "tables" in c:  # inline / legacy checkpoint
-            return sum(len(fs) for fs in c["tables"].values()) + n
-        if "delta" in c:  # spilled mega-delta: counts ride in the JSON
-            n += sum(c.get("n_add_by_table", {}).values())
-            n -= sum(c.get("n_remove_by_table", {}).values())
-        else:
-            n += sum(len(fs) for fs in c.get("add", {}).values())
-            n -= sum(len(fs) for fs in c.get("remove", {}).values())
-        v = c.get("parent", v - 1)
-    raise RuntimeError(
-        f"commit chain for version {version} in {out_dir} has no "
-        "checkpoint ancestor — log is corrupt"
-    )
+    return sum(_store_table_counts(out_dir, version).values())
 
 
-def _store_table_counts(out_dir: str, version: int) -> dict[str, int] | None:
+def _store_table_counts(out_dir: str, version: int) -> dict[str, int]:
     """Per-table live-file counts at ``version`` from commit metadata
-    alone — the per-table refinement of :func:`_store_n_files` (r12):
-    checkpoint commits carry ``n_files_by_table`` and each delta states
-    exactly what it added/removed per table, so the fold is O(deltas ×
-    tables) with no file-list scan.  ``None`` when the checkpoint
-    ancestor predates the field (pre-r12 sidecar) — callers then fall
-    back to deriving names from the sidecar itself."""
+    alone: the checkpoint's ``n_files_by_table`` plus what each delta
+    since states it added/removed — O(deltas × tables), no file-list
+    scan."""
     if version < 1:
         return {}
-    deltas: list[dict] = []
-    v = version
-    while True:
-        c = _load_commit(out_dir, v)
-        if "n_files_by_table" in c:
-            counts = {t: int(n) for t, n in c["n_files_by_table"].items()}
-            break
-        if "tables" in c:  # inline / legacy checkpoint: exact and tiny
-            counts = {t: len(fs) for t, fs in c["tables"].items()}
-            break
-        if "ckpt" in c:  # pre-r12 sidecar checkpoint: counts not carried
-            return None
-        deltas.append(c)
-        v = c.get("parent", v - 1)
-        if v < 1:
-            return None
-    for c in reversed(deltas):
-        if "delta" in c:  # spilled mega-delta: counts ride in the JSON
-            for t, n in c.get("n_add_by_table", {}).items():
-                counts[t] = counts.get(t, 0) + int(n)
-            for t, n in c.get("n_remove_by_table", {}).items():
-                counts[t] = counts.get(t, 0) - int(n)
-            continue
-        for t, fs in c.get("add", {}).items():
-            counts[t] = counts.get(t, 0) + len(fs)
-        for t, fs in c.get("remove", {}).items():
-            counts[t] = counts.get(t, 0) - len(fs)
+    ckpt, deltas = _chain(out_dir, version)
+    counts = {t: int(n) for t, n in ckpt["n_files_by_table"].items()}
+    for c in deltas:
+        added, removed = _delta_counts(c)
+        for t, n in added.items():
+            counts[t] = counts.get(t, 0) + n
+        for t, n in removed.items():
+            counts[t] = counts.get(t, 0) - n
     return counts
 
 
@@ -725,47 +700,27 @@ def _cache_put(key: tuple, snap: dict) -> None:
 def _walk_snapshot(
     out_dir: str, version: int, with_stats: bool
 ) -> tuple[dict, dict]:
-    """The shared resolve walk: back to the nearest full-form commit
-    (parquet-checkpoint sidecar, inline checkpoint, pre-log legacy
-    manifest, or a cached resolved ancestor), then replay the deltas
-    forward.  ``with_stats=False`` column-prunes checkpoint sidecars and
-    skips ``stats_add`` replay — the stats bytes are never fetched.
-    Returns un-normalized ``(tables, stats)``."""
+    """The shared resolve walk: back to the checkpoint or a cached
+    resolved ancestor, then replay the deltas forward.
+    ``with_stats=False`` column-prunes checkpoint sidecars and skips
+    ``stats_add`` replay — the stats bytes are never fetched.  Returns
+    un-normalized ``(tables, stats)``."""
     root = os.path.abspath(out_dir)
-    deltas: list[dict] = []
-    v = version
-    while True:
-        cached = _SNAP_CACHE.get((root, v))
-        if cached is not None:
-            base_tables = {t: list(fs) for t, fs in cached["tables"].items()}
-            base_stats = (
-                {t: dict(s) for t, s in cached["stats"].items()}
-                if with_stats
-                else {}
-            )
-            break
-        commit = _load_commit(out_dir, v)
-        if "ckpt" in commit:  # r9 parquet-checkpoint form
-            base_tables, base_stats = _read_checkpoint_sidecar(
-                out_dir, commit, with_stats=with_stats
-            )
-            break
-        if "tables" in commit:  # inline snapshot / legacy manifest form
-            base_tables = {t: list(fs) for t, fs in commit["tables"].items()}
-            base_stats = (
-                {t: dict(s) for t, s in commit.get("stats", {}).items()}
-                if with_stats
-                else {}
-            )
-            break
-        deltas.append(commit)
-        v = commit.get("parent", v - 1)
-        if v < 1:
-            raise RuntimeError(
-                f"commit chain for version {version} in {out_dir} has no "
-                "checkpoint ancestor — log is corrupt"
-            )
-    for delta in reversed(deltas):
+    base, deltas = _chain(
+        out_dir, version, held=lambda v: _SNAP_CACHE.get((root, v))
+    )
+    if "ckpt" in base:
+        base_tables, base_stats = _read_checkpoint_sidecar(
+            out_dir, base, with_stats=with_stats
+        )
+    else:
+        base_tables = {t: list(fs) for t, fs in base["tables"].items()}
+        base_stats = (
+            {t: dict(s) for t, s in base["stats"].items()}
+            if with_stats
+            else {}
+        )
+    for delta in deltas:
         delta = _hydrate_delta(out_dir, delta, with_stats=with_stats)
         for t, rels in delta.get("remove", {}).items():
             gone = set(rels)
@@ -830,10 +785,7 @@ def snapshot_files_df(
     sidecar is scanned by Spark where it lies, and only the O(delta)
     commits since it ship from the driver (as a broadcast anti-join set
     plus a union), so resolution never materializes O(live files) Python
-    state no matter how many files are live.  Pre-r9 inline checkpoints
-    fall back to hydrating through the driver — those stores carried
-    their whole snapshot in one JSON and are driver-bounded by
-    construction; their next checkpoint lands as a sidecar."""
+    state no matter how many files are live."""
     return _snapshot_df(spark, out_dir, version, with_stats=False)
 
 
@@ -860,56 +812,22 @@ def _snapshot_df(
     schema = "table string, file string" + (
         ", stats string" if with_stats else ""
     )
-    deltas: list[dict] = []
-    base: DataFrame | None = None
-    v = version
-    while True:
-        commit = _load_commit(out_dir, v)
-        if "ckpt" in commit:
-            if base_cache is not None and v in base_cache:
-                base = base_cache[v]
-                break
-            # explicit schema: the sidecar layout is fixed by protocol,
-            # and letting Spark infer it re-reads the footer on every
-            # resolve (~0.7 s at a 1M-row sidecar, pure overhead)
-            base = spark.read.schema(
-                "table string, file string, stats string"
-            ).parquet(
-                os.path.join(_manifest_path(out_dir), commit["ckpt"])
-            ).select(*cols)
-            if base_cache is not None:
-                base = base.persist()
-                base_cache[v] = base
-            break
-        if "tables" in commit:  # inline / legacy: already driver-sized
-            st = commit.get("stats", {})
-            if with_stats:
-                rows = [
-                    (
-                        t,
-                        f,
-                        json.dumps(
-                            st[t][f], separators=(",", ":")
-                        )
-                        if st.get(t, {}).get(f)
-                        else None,
-                    )
-                    for t, fs in commit["tables"].items()
-                    for f in fs
-                ]
-            else:
-                rows = [
-                    (t, f) for t, fs in commit["tables"].items() for f in fs
-                ]
-            base = spark.createDataFrame(rows, schema)
-            break
-        deltas.append(commit)
-        v = commit.get("parent", v - 1)
-        if v < 1:
-            raise RuntimeError(
-                f"commit chain for version {version} in {out_dir} has no "
-                "checkpoint ancestor — log is corrupt"
-            )
+    ckpt, deltas = _chain(out_dir, version)
+    v_ckpt = version - len(deltas)
+    if base_cache is not None and v_ckpt in base_cache:
+        base = base_cache[v_ckpt]
+    else:
+        # explicit schema: the sidecar layout is fixed by protocol, and
+        # letting Spark infer it re-reads the footer on every resolve
+        # (~0.7 s at a 1M-row sidecar, pure overhead)
+        base = spark.read.schema(
+            "table string, file string, stats string"
+        ).parquet(
+            os.path.join(_manifest_path(out_dir), ckpt["ckpt"])
+        ).select(*cols)
+        if base_cache is not None:
+            base = base.persist()
+            base_cache[v_ckpt] = base
     # fold the delta chain driver-side (it is O(changed files) by the
     # commit protocol): file names are never reused, so the net effect is
     # one removed-set anti-join plus one added-rows union.  stats_add
@@ -917,7 +835,7 @@ def _snapshot_df(
     # _write_manifest choke point), so added rows carry their stats.
     removed: set[tuple] = set()
     added: dict[tuple, str | None] = {}
-    for delta in reversed(deltas):
+    for delta in deltas:
         for t, rels in delta.get("remove", {}).items():
             for rel in rels:
                 key = (t, rel)
@@ -1120,31 +1038,28 @@ def _write_checkpoint_spark(
     # commit's own add/remove) — no extra Spark job, no driver
     # hydration.  Cross-checked against the written sidecar's footer
     # row count; a mismatch (protocol violation: a remove naming a
-    # non-live file) or a pre-r12 parent falls back to ONE aggregate
-    # job over the sidecar (a pyarrow unique() would materialize the
-    # whole O(live files) column on the driver, the exact state this
-    # builder exists to avoid).
+    # non-live file) falls back to ONE aggregate job over the sidecar
+    # (a pyarrow unique() would materialize the whole O(live files)
+    # column on the driver, the exact state this builder exists to
+    # avoid).
     counts = _store_table_counts(out_dir, version - 1)
-    if counts is not None:
-        for t, fs in add.items():
-            counts[t] = counts.get(t, 0) + len(fs)
-        for t, fs in remove.items():
-            counts[t] = counts.get(t, 0) - len(fs)
-        counts = {t: c for t, c in counts.items() if c > 0}
-        if sum(counts.values()) != n_files:
-            import warnings
+    for t, fs in add.items():
+        counts[t] = counts.get(t, 0) + len(fs)
+    for t, fs in remove.items():
+        counts[t] = counts.get(t, 0) - len(fs)
+    counts = {t: c for t, c in counts.items() if c > 0}
+    if sum(counts.values()) != n_files:
+        import warnings
 
-            warnings.warn(
-                f"checkpoint v{version}: per-table metadata fold "
-                f"({sum(counts.values())} files) disagrees with the "
-                f"written sidecar ({n_files}) — a delta commit removed "
-                "a file that was not live; deriving table counts from "
-                "the sidecar instead",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            counts = None
-    if counts is None:
+        warnings.warn(
+            f"checkpoint v{version}: per-table metadata fold "
+            f"({sum(counts.values())} files) disagrees with the "
+            f"written sidecar ({n_files}) — a delta commit removed "
+            "a file that was not live; deriving table counts from "
+            "the sidecar instead",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         counts = {
             r["table"]: int(r["n"])
             for r in spark.read.schema(
@@ -1321,16 +1236,12 @@ def _attach_delta(
     mdir: str,
     version: int,
     manifest: dict,
-    keep_empty_add: bool,
 ) -> None:
     """The ONE spill-or-inline decision (delta commits and checkpoint
     commits both funnel here, so the threshold semantics cannot
     diverge): inline ``add``/``remove``/``stats_add`` below
     :data:`DELTA_SIDECAR_MIN_FILES` changed files, a spilled
-    ``delta-v*`` sidecar + O(#tables) count fields past it.
-    ``keep_empty_add=True`` (checkpoint commits) preserves an EMPTY
-    ``add`` key — its presence is the sentinel telling
-    :func:`_added_between` the commit states its own delta."""
+    ``delta-v*`` sidecar + O(#tables) count fields past it."""
     add = manifest.get("add", {})
     remove = manifest.get("remove", {})
     stats_add = manifest.get("stats_add", {})
@@ -1364,7 +1275,7 @@ def _attach_delta(
                 t: len(fs) for t, fs in sorted(remove.items())
             }
         return
-    if add or (keep_empty_add and "add" in manifest):
+    if add:
         commit["add"] = add
     if remove:
         commit["remove"] = remove
@@ -1377,22 +1288,21 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
 
     Three accepted shapes:
 
-    - FULL form (``tables`` [+ ``stats``]): the target snapshot.  The
-      durable encoding is chosen here — checkpoints (v1 and every
-      ``CHECKPOINT_EVERY``-th version) store the snapshot verbatim (the
-      parquet sidecar); other versions store only the computed delta
-      against N-1.
+    - CHECKPOINT form (``tables`` [+ ``stats``], checkpoint versions —
+      v1 and every ``CHECKPOINT_EVERY``-th — only): the target snapshot,
+      written to the parquet sidecar by the driver, plus the commit's
+      own delta when the caller states it.
     - DELTA form (``add`` and/or ``remove`` [+ ``stats_add``], no
-      ``tables`` — the r10/r11 hot path, :func:`_commit_delta`): the
-      caller states exactly which files it added/removed and the record
-      is written directly, O(changed files) with NO parent-snapshot
+      ``tables`` — the hot path, :func:`_commit_delta`): the caller
+      states exactly which files it added/removed and the record is
+      written directly, O(changed files) with NO parent-snapshot
       hydration or set-diff.  ``stats_add`` is filtered to the files in
       ``add`` (the protocol invariant the cluster-side resolves rely
       on).  Refused on checkpoint versions (those owe readers a full
       snapshot).
     - PRE-BUILT CHECKPOINT form (``ckpt`` + ``n_files`` +
-      ``table_names``, no ``tables`` — :func:`_write_checkpoint_spark`,
-      r11): the sidecar parquet was already staged and made durable by a
+      ``table_names``, no ``tables`` — :func:`_write_checkpoint_spark`):
+      the sidecar parquet was already staged and made durable by a
       Spark job; only the O(1) commit JSON (with the pin fold) is
       written here.  Refused OFF checkpoint versions.
 
@@ -1417,16 +1327,14 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
             "ckpt": manifest["ckpt"],
             "n_files": int(manifest["n_files"]),
             "table_names": sorted(manifest["table_names"]),
-        }
-        if "n_files_by_table" in manifest:  # r12: per-table fold seed
-            commit["n_files_by_table"] = {
+            "n_files_by_table": {
                 t: int(n)
                 for t, n in sorted(manifest["n_files_by_table"].items())
-            }
-        # the checkpoint's own delta, when the writer knows it: presence
-        # (even empty) tells _added_between no snapshot diff is needed;
-        # a mega-delta landing ON the boundary spills (r12)
-        _attach_delta(commit, mdir, version, manifest, keep_empty_add=True)
+            },
+        }
+        # the checkpoint's own delta, so race-window conflict detection
+        # stays O(delta); a mega-delta landing ON the boundary spills
+        _attach_delta(commit, mdir, version, manifest)
         if "pin" in manifest:
             commit["pin"] = manifest["pin"]
         commit["pins"] = _fold_checkpoint_pins(
@@ -1475,86 +1383,48 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
         _attach_delta(
             commit, mdir, version,
             {"add": add, "remove": remove, "stats_add": stats_add},
-            keep_empty_add=False,
         )
         if "pin" in manifest:  # pin/unpin ops change no files — O(1) commit
             commit["pin"] = manifest["pin"]
         _link_commit(mdir, version, commit)
         return
+    if not is_ckpt_version:
+        raise ValueError(
+            f"full-form commit for non-checkpoint version {version} — "
+            "deltas between checkpoints use the delta form"
+        )
     tables = {t: sorted(fs) for t, fs in manifest["tables"].items() if fs}
     stats = {t: s for t, s in manifest.get("stats", {}).items() if s}
-
-    if is_ckpt_version:
-        # the O(live files) payload goes to a parquet sidecar; the commit
-        # JSON stays O(1) bytes no matter how many files are live
-        ckpt_name, n_files = _write_checkpoint_sidecar(
-            mdir, version, tables, stats
-        )
-        commit = {
-            "version": version,
-            "ts": round(time.time(), 3),
-            "op": op,
-            "ckpt": ckpt_name,
-            "n_files": n_files,
-            # table NAMES are O(dozens) — carrying them here lets
-            # consumers (vacuum's candidate-table seeding) learn the
-            # snapshot's tables without scanning the O(live files) sidecar
-            "table_names": sorted(tables),
-            # per-table counts (r12): lets the NEXT cluster-side
-            # checkpoint derive its table_names/counts by folding delta
-            # metadata instead of running a Spark distinct over the
-            # sidecar — O(#tables) JSON bytes buys back one job/ckpt
-            "n_files_by_table": {
-                t: len(fs) for t, fs in sorted(tables.items())
-            },
-        }
-        # delta passthrough (see the pre-built branch): _commit_delta's
-        # driver checkpoint path states what it changed so race-window
-        # conflict detection never diffs full snapshots; mega-deltas
-        # landing on the boundary spill (r12)
-        _attach_delta(commit, mdir, version, manifest, keep_empty_add=True)
-        if "pin" in manifest:
-            commit["pin"] = manifest["pin"]
-        commit["pins"] = _fold_checkpoint_pins(
-            out_dir, version, op, manifest.get("pin")
-        )
-    else:
-        base = _resolve(out_dir, version - 1)
-        add: dict[str, list[str]] = {}
-        remove: dict[str, list[str]] = {}
-        stats_add: dict[str, dict] = {}
-        names = set(tables) | set(base["tables"])
-        for t in sorted(names):
-            old = set(base["tables"].get(t, []))
-            new = set(tables.get(t, []))
-            if new - old:
-                add[t] = sorted(new - old)
-                per_file = {
-                    rel: stats.get(t, {})[rel]
-                    for rel in add[t]
-                    if rel in stats.get(t, {})
-                }
-                if per_file:
-                    stats_add[t] = per_file
-            if old - new:
-                remove[t] = sorted(old - new)
-        commit = {
-            "version": version,
-            "parent": version - 1,
-            "ts": round(time.time(), 3),
-            "op": op,
-        }
-        # the legacy full-form route spills past the threshold too — a
-        # whole-table rewrite handed in as a target snapshot must not
-        # re-create the multi-MB inline JSON the spill exists to prevent
-        _attach_delta(
-            commit, mdir, version,
-            {"add": add, "remove": remove, "stats_add": stats_add},
-            keep_empty_add=False,
-        )
-        if "pin" in manifest:
-            commit["pin"] = manifest["pin"]
-
+    # the O(live files) payload goes to a parquet sidecar; the commit
+    # JSON stays O(1) bytes no matter how many files are live
+    ckpt_name, n_files = _write_checkpoint_sidecar(
+        mdir, version, tables, stats
+    )
+    commit = {
+        "version": version,
+        "ts": round(time.time(), 3),
+        "op": op,
+        "ckpt": ckpt_name,
+        "n_files": n_files,
+        # table NAMES are O(dozens) — carrying them here lets consumers
+        # (vacuum's candidate-table seeding) learn the snapshot's tables
+        # without scanning the O(live files) sidecar
+        "table_names": sorted(tables),
+        # per-table counts: lets the NEXT cluster-side checkpoint derive
+        # its table_names/counts by folding delta metadata instead of
+        # running a Spark distinct over the sidecar
+        "n_files_by_table": {t: len(fs) for t, fs in sorted(tables.items())},
+    }
+    # delta passthrough (see the pre-built branch): _commit_delta's driver
+    # checkpoint path states what it changed so race-window conflict
+    # detection never diffs full snapshots; mega-deltas landing on the
+    # boundary spill
+    _attach_delta(commit, mdir, version, manifest)
+    if "pin" in manifest:
+        commit["pin"] = manifest["pin"]
+    commit["pins"] = _fold_checkpoint_pins(
+        out_dir, version, op, manifest.get("pin")
+    )
     _link_commit(mdir, version, commit)
 
 
@@ -1564,9 +1434,12 @@ def _link_commit(mdir: str, version: int, commit: dict) -> None:
     temp + ``os.link``; object stores: conditional PUT; a concurrent
     committer of the same version raises :class:`ConcurrentWriteError`
     instead of silently clobbering), then the CURRENT discovery hint via
-    ``write_atomic``."""
+    ``write_atomic``.  Every commit is stamped ``"format": FORMAT``
+    here, the one place a commit is serialized."""
     name = _commit_name(version)
-    data = json.dumps(commit, separators=(",", ":")).encode()
+    data = json.dumps(
+        {"format": FORMAT, **commit}, separators=(",", ":")
+    ).encode()
     try:
         LOG_STORE.put_if_absent(os.path.join(mdir, name), data)
     except FileExistsError:
@@ -1691,76 +1564,38 @@ def history(out_dir: str) -> list[dict]:
     out: list[dict] = []
     for v in range(1, _latest_version(out_dir) + 1):
         c = _load_commit(out_dir, v)
-        if "ckpt" in c:
-            # parquet checkpoint: counts ride in the commit JSON, so
-            # history never opens the sidecar.  r11 checkpoints carry
-            # their own delta — report the TRUE change (a compact
-            # landing on a boundary removes files; n_files would show a
-            # phantom million-file write); pre-r11 checkpoints fall
-            # back to the snapshot size, the only number they recorded
-            kind = "checkpoint"
-            if "delta" in c:  # spilled mega-delta on a boundary (r12)
-                added = sum(c.get("n_add_by_table", {}).values())
-                removed = sum(c.get("n_remove_by_table", {}).values())
-            elif "add" in c or "remove" in c:
-                added = sum(len(fs) for fs in c.get("add", {}).values())
-                removed = sum(
-                    len(fs) for fs in c.get("remove", {}).values()
-                )
-            else:
-                added = int(c["n_files"])
-                removed = 0
-        elif "tables" in c:
-            kind = "checkpoint" if "ts" in c else "legacy"
-            added = sum(len(fs) for fs in c["tables"].values())
-            removed = 0
-        elif "delta" in c:  # spilled mega-delta (r12): counts in JSON
-            kind = "delta"
-            added = sum(c.get("n_add_by_table", {}).values())
-            removed = sum(c.get("n_remove_by_table", {}).values())
-        else:
-            kind = "delta"
-            added = sum(len(fs) for fs in c.get("add", {}).values())
-            removed = sum(len(fs) for fs in c.get("remove", {}).values())
+        # counts ride in the commit JSON (checkpoints carry their own
+        # delta), so history never opens a sidecar
+        added, removed = _delta_counts(c)
         out.append(
             {
                 "version": v,
-                "op": c.get("op", "write"),
-                "ts": c.get("ts"),
-                "kind": kind,
-                "added": added,
-                "removed": removed,
+                "op": c["op"],
+                "ts": c["ts"],
+                "kind": "checkpoint" if "ckpt" in c else "delta",
+                "added": sum(added.values()),
+                "removed": sum(removed.values()),
             }
         )
     return out
 
 
 def _pins_at(out_dir: str, version: int) -> dict[int, str | None]:
-    """The active pin set AS OF ``version``: walk back to the nearest
-    commit carrying a folded ``pins`` snapshot (checkpoints write one —
-    the same amortization as table state, so this is O(commits since
-    last checkpoint), not O(total versions)), then replay the pin/unpin
-    ops forward.  Pre-fold stores (checkpoints without the key) fall
-    through to a full replay from v1 — correct, just unamortized until
-    their next checkpoint lands."""
-    ops: list[dict] = []
-    base: dict[int, str | None] = {}
-    v = version
-    while v >= 1:
-        c = _load_commit(out_dir, v)
-        if "pins" in c:
-            base = {int(k): n for k, n in c["pins"].items()}
-            break
+    """The active pin set AS OF ``version``: the checkpoint's folded
+    ``pins`` plus the pin/unpin ops since — the same amortization as
+    table state, so this is O(commits since last checkpoint), not
+    O(total versions)."""
+    if version < 1:
+        return {}
+    ckpt, deltas = _chain(out_dir, version)
+    pins = {int(k): n for k, n in ckpt["pins"].items()}
+    for c in deltas:
         p = c.get("pin")
-        if p and c.get("op") in ("pin", "unpin"):
-            ops.append({"op": c["op"], **p})
-        v = c.get("parent", v - 1) if "tables" not in c else v - 1
-    for p in reversed(ops):
-        if p["op"] == "pin":
-            base[int(p["version"])] = p.get("name")
-        else:
-            base.pop(int(p["version"]), None)
-    return base
+        if p and c["op"] == "pin":
+            pins[int(p["version"])] = p.get("name")
+        elif p and c["op"] == "unpin":
+            pins.pop(int(p["version"]), None)
+    return pins
 
 
 def pinned_versions(out_dir: str) -> dict[int, str | None]:
@@ -2001,45 +1836,32 @@ def _commit_pin_op(
 
 
 def ensure_manifest(out_dir: str) -> dict:
-    """Adopt an unmanaged directory into the commit-log protocol — the
-    rewrite-compat shim that lets ``atomic=True`` be the DEFAULT sink over
-    tables previously written by the plain table-by-table ``merge_batch``
-    path.
-
-    When no commit exists, every data file already under a
-    ``<table>.parquet`` directory is committed as snapshot v1 (legacy rows
-    stay visible to ``read_published`` and to the duplicate probe, so the
-    switch appends nothing twice).  On a FRESH directory this commits an
-    EMPTY v1 — deliberately, and before any staging: once a commit
-    exists, a crash mid-stage can never be mistaken for adoptable legacy
-    data on replay (files outside the log are orphans, reclaimed by
-    :func:`vacuum`).  The only unsupported shape is a directory holding
-    half-staged files from a crashed log-LESS writer — don't mix writers
-    mid-crash.  Idempotent; returns the live snapshot."""
+    """Start the commit log of a fresh store: commit an EMPTY v1 —
+    before any staging, so once a commit exists a crash mid-stage leaves
+    only orphans (files outside the log, reclaimed by :func:`vacuum`),
+    and version numbering and checkpoint placement are the same for
+    every store.  A log-less directory whose ``<table>.parquet`` already
+    holds data files is refused with :class:`StoreFormatError`: those
+    files are in no commit, and nothing adopts them.  Idempotent;
+    returns the live snapshot."""
     if _latest_version(out_dir) > 0:
         return read_manifest(out_dir)
     store = LOG_STORE
-    tables: dict[str, list[str]] = {}
     if store.isdir(out_dir):
         for entry in sorted(store.listdir(out_dir)):
-            if not entry.endswith(".parquet"):
-                continue
             tdir = os.path.join(out_dir, entry)
-            if not store.isdir(tdir):
-                continue
-            rels = [
-                os.path.relpath(os.path.join(root, fname), tdir)
-                for root, _dirs, files in store.walk(tdir)
-                for fname in files
-                if not fname.startswith(("_", "."))
-            ]
-            if rels:
-                tables[entry[: -len(".parquet")]] = sorted(rels)
-    manifest = {"version": 1, "tables": tables, "op": "adopt"}
+            if (
+                entry.endswith(".parquet")
+                and store.isdir(tdir)
+                and _first_data_file(tdir) is not None
+            ):
+                raise StoreFormatError(
+                    tdir, None, "data files in a directory with no commit log"
+                )
     try:
-        _write_manifest(out_dir, manifest)
+        _write_manifest(out_dir, {"version": 1, "tables": {}, "op": "create"})
     except ConcurrentWriteError:
-        pass  # another writer adopted first — their v1 serves
+        pass  # another writer created v1 first — theirs serves
     return read_manifest(out_dir)
 
 
@@ -2277,10 +2099,7 @@ def _stage_table(
     staging = os.path.join(out_dir, "_staging", f"{table}-{uuid.uuid4().hex}")
     tdir = os.path.join(out_dir, f"{table}.parquet")
     writer = batch.write.mode("overwrite")
-    # an ADOPTED legacy table may be flat (bucket col in the data, not the
-    # directory name) — match it: mixing partition subdirs beside flat files
-    # would give readers conflicting schemas for the bucket column
-    if bucket_col is not None and not _existing_layout_is_flat(tdir):
+    if bucket_col is not None:
         writer = writer.partitionBy(bucket_col)
     try:
         writer.parquet(staging)
@@ -2315,30 +2134,18 @@ def _stage_table(
 
 def _added_between(out_dir: str, old_v: int, new_v: int) -> dict[str, list]:
     """Files ADDED by commits ``old_v+1 .. new_v`` — what the racing
-    writer(s) published while our batch was staging.  Delta commits carry
-    the answer verbatim, and r11 checkpoints carry their OWN delta in the
-    commit JSON (``add``/``remove`` beside ``ckpt``), so a checkpoint
-    landing in the race window costs O(delta) too; only pre-r11
-    full-form commits fall back to diffing two resolved snapshots.
+    writer(s) published while our batch was staging.  Every commit
+    states its own delta (checkpoints too), so this is O(delta).
     Conflict detection itself uses the cheaper
-    :func:`_added_dirs_between` (r12 — spilled mega-deltas answer from
-    JSON metadata); this file-level fold remains for introspection and
-    as the reference semantics the dirs fold is tested against."""
+    :func:`_added_dirs_between` (spilled mega-deltas answer from JSON
+    metadata); this file-level fold remains for introspection and as the
+    reference semantics the dirs fold is tested against."""
     added: dict[str, list] = {}
     for v in range(old_v + 1, new_v + 1):
         c = _hydrate_delta(
             out_dir, _load_commit(out_dir, v), with_stats=False
         )
-        if "add" in c or ("tables" not in c and "ckpt" not in c):
-            per = c.get("add", {})
-        else:  # full form: diff against the previous snapshot
-            prev = _snapshot_files(out_dir, v - 1)
-            cur = _snapshot_files(out_dir, v)
-            per = {
-                t: sorted(set(fs) - set(prev.get(t, [])))
-                for t, fs in cur.items()
-            }
-        for t, rels in per.items():
+        for t, rels in c.get("add", {}).items():
             if rels:
                 added.setdefault(t, []).extend(rels)
     return added
@@ -2348,12 +2155,10 @@ def _added_dirs_between(
     out_dir: str, old_v: int, new_v: int
 ) -> dict[str, set | None]:
     """The partition DIRECTORIES of files added by commits
-    ``old_v+1 .. new_v`` — all conflict detection needs (r12).  Spilled
+    ``old_v+1 .. new_v`` — all conflict detection needs.  Spilled
     mega-deltas answer from their ``add_dirs_by_table`` JSON field
     without opening the sidecar; a ``None`` value is the over-cap
-    wildcard (treat as conflicting with anything on that table).
-    Pre-r12 spills without the field hydrate once, like
-    :func:`_added_between`."""
+    wildcard (treat as conflicting with anything on that table)."""
     dirs: dict[str, set | None] = {}
 
     def _merge(t: str, ds) -> None:
@@ -2366,21 +2171,11 @@ def _added_dirs_between(
 
     for v in range(old_v + 1, new_v + 1):
         c = _load_commit(out_dir, v)
-        if "delta" in c and "add_dirs_by_table" in c:
-            for t, ds in c["add_dirs_by_table"].items():
+        if "delta" in c:
+            for t, ds in c.get("add_dirs_by_table", {}).items():
                 _merge(t, set(ds) if ds is not None else None)
             continue
-        c = _hydrate_delta(out_dir, c, with_stats=False)
-        if "add" in c or ("tables" not in c and "ckpt" not in c):
-            per = c.get("add", {})
-        else:  # pre-r10 full form: diff against the previous snapshot
-            prev = _snapshot_files(out_dir, v - 1)
-            cur = _snapshot_files(out_dir, v)
-            per = {
-                t: sorted(set(fs) - set(prev.get(t, [])))
-                for t, fs in cur.items()
-            }
-        for t, rels in per.items():
+        for t, rels in c.get("add", {}).items():
             if rels:
                 _merge(t, {os.path.dirname(f) for f in rels})
     return dirs
@@ -2449,9 +2244,9 @@ def publish_batch(
     returning one would cost more than the commit; callers that want the
     snapshot read it (``read_manifest`` / ``read_published``)."""
     pks = pks or TABLE_PKS
-    # adopt legacy (log-less) layouts and pin v1 before staging — see
-    # ensure_manifest for why this must precede the first staged file
-    # (rare one-time path; the hot loop skips the full-snapshot resolve)
+    # commit the empty v1 before staging — see ensure_manifest for why
+    # this must precede the first staged file (one-time path; the hot
+    # loop skips the full-snapshot resolve)
     if _latest_version(out_dir) == 0:
         ensure_manifest(out_dir)
     base_v = _latest_version(out_dir)
@@ -2645,41 +2440,6 @@ def compact_published(
     raise AssertionError("unreachable")
 
 
-def live_partition_values(
-    out_dir: str, table: str, column: str = "key_bucket"
-) -> list[str]:
-    """Distinct values of a partition-directory column across the LIVE
-    snapshot — from the manifest file list when a log exists (replaced
-    files linger on disk for time travel, so a directory listing would
-    false-positive right after a format migration), else one listdir.
-    No Spark job; cheap enough for per-batch format guards."""
-    tdir = os.path.join(out_dir, f"{table}.parquet")
-    if not LOG_STORE.isdir(tdir):
-        return []
-    prefix = f"{column}="
-    vals: set[str] = set()
-    if LOG_STORE.isdir(_manifest_path(out_dir)):
-        latest = _latest_version(out_dir)
-        # per-table filtered resolve (r11): a per-batch format guard must
-        # not pay O(all live files) for one table's partition values
-        files = (
-            _table_files(out_dir, latest, table, with_stats=False)[0]
-            if latest
-            else []
-        )
-        for rel in files:
-            head = rel.replace(os.sep, "/").split("/", 1)[0]
-            if head.startswith(prefix):
-                vals.add(head.split("=", 1)[1])
-    else:
-        vals = {
-            d.split("=", 1)[1]
-            for d in LOG_STORE.listdir(tdir)
-            if d.startswith(prefix)
-        }
-    return sorted(vals)
-
-
 def rewrite_published(
     spark: SparkSession,
     out_dir: str,
@@ -2814,10 +2574,12 @@ def vacuum(
     :data:`VACUUM_GRACE_S`; an explicit ``vacuum(out)`` defaults to 0
     (immediate reclamation — correct once all writers are quiesced).
 
-    A directory with NO commit log yet (a legacy table written by the
-    non-atomic path, awaiting ``ensure_manifest`` adoption) is left
-    untouched: an empty live set there means "nothing published", not
-    "everything is garbage".
+    A directory with NO commit log yet is left untouched: an empty live
+    set there means "nothing published", not "everything is garbage".
+    Only the log's namespace is swept — top-level ``<table>.parquet``
+    directories, the tables the retained snapshots name, ``_staging``
+    and ``_manifest`` — so log-less tables kept elsewhere in the store
+    (the silver tables under ``_silver/``) are never touched.
 
     ``spark`` (r10) switches the data-file phase to the CLUSTER-SIDE
     plan: live sets come from :func:`snapshot_files_df` (sidecar scanned
@@ -3057,39 +2819,15 @@ def vacuum(
 
 def _live_table_names(out_dir: str, version: int) -> set[str]:
     """The table NAMES a snapshot references — O(#tables + deltas)
-    metadata, never a file-list scan: delta commits carry names as their
-    add/remove keys, r10 checkpoints carry ``table_names`` in the commit
-    JSON, and older checkpoints fall back to a columnar unique() over the
-    sidecar's dictionary-encoded table column (pre-r9 inline forms just
-    read their keys)."""
-    names: set[str] = set()
-    v = version
-    while True:
-        commit = _load_commit(out_dir, v)
-        if "table_names" in commit:
-            names.update(commit["table_names"])
-            return names
-        if "ckpt" in commit:
-            arr = LOG_STORE.read_parquet(
-                os.path.join(_manifest_path(out_dir), commit["ckpt"]),
-                columns=["table"],
-            )
-            names.update(arr.column("table").unique().to_pylist())
-            return names
-        if "tables" in commit:
-            names.update(commit["tables"])
-            return names
-        names.update(commit.get("add", {}))
-        names.update(commit.get("remove", {}))
-        # spilled mega-deltas (r12) carry their names as count keys
-        names.update(commit.get("n_add_by_table", {}))
-        names.update(commit.get("n_remove_by_table", {}))
-        v = commit.get("parent", v - 1)
-        if v < 1:
-            raise RuntimeError(
-                f"commit chain for version {version} in {out_dir} has no "
-                "checkpoint ancestor — log is corrupt"
-            )
+    metadata, never a file-list scan: the checkpoint's ``table_names``
+    plus the tables each delta since added to or removed from."""
+    ckpt, deltas = _chain(out_dir, version)
+    names = set(ckpt["table_names"])
+    for c in deltas:
+        added, removed = _delta_counts(c)
+        names.update(added)
+        names.update(removed)
+    return names
 
 
 def _warn_hollow(

@@ -4,7 +4,10 @@ approximates: maintain, at ingest, one table of resolved defpact ancestry
 rows so the continuation-history endpoint (``Queries.hs:112-137``, WITH
 RECURSIVE per request) becomes an O(1) bucket-pruned lookup.
 
-Two tables under ``<out_dir>/``:
+Two log-less tables under ``<out_dir>/_silver/`` — outside the
+transaction log's namespace, so ``publish.vacuum`` (which sweeps the
+top-level ``<table>.parquet`` directories as log-managed) never deletes
+them:
 
 - ``tx_lineage.parquet`` — slim (requestkey, pactid, code, key_bucket)
   projection of every tx seen, PK requestkey.  This is the walk universe:
@@ -46,8 +49,8 @@ from pyspark.sql import functions as F
 from ..ingest.transforms import _key_bucket
 from .listen import merge_batch
 
-LINEAGE = "tx_lineage.parquet"
-HISTORY = "cont_history.parquet"
+LINEAGE = os.path.join("_silver", "tx_lineage.parquet")
+HISTORY = os.path.join("_silver", "cont_history.parquet")
 # stored data columns; a given schema spares each read a footer-inference job
 LINEAGE_SCHEMA = "requestkey string, pactid string, code string"
 HISTORY_SCHEMA = "start_rk string, depth int, rk string, code string"

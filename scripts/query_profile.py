@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Round-12 optimization profiler: per-headliner plan + runtime evidence.
+"""Optimization profiler: per-headliner plan + runtime evidence.
 
-For each requested query this captures, into ``plans/r13/``:
-  <name>_<tag>.txt   — .explain("formatted") of the exact DataFrame benched
+For each requested query this captures, into the ``--out`` directory:
+  <name>_<tag>.txt    — .explain("formatted") of the exact DataFrame benched
+  profile_<tag>.json  — every query's row, MERGED into an existing capture
 and prints one JSON line per query with:
   wall seconds (same warm/min-of-N protocol as bench.py), #jobs, #stages,
   #tasks, shuffle read/write bytes, plan-feature counts (Exchange,
@@ -11,11 +12,12 @@ and prints one JSON line per query with:
 Metrics come from the Spark UI REST API (spark.ui.enabled forced on in this
 session only; bench.py itself keeps the UI off).  Usage:
 
-  python scripts/profile_r13.py [--tag before] [--runs 3] [q1 q2 ...]
+  python scripts/query_profile.py --out plans/<tag> [--tag before] [--runs 3] [q1 q2 ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -23,12 +25,10 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
-)
 
 PLAN_FEATURES = [
     ("exchange", r"\bExchange\b"),
@@ -115,19 +115,18 @@ def main() -> None:
     from chainweb_data_spark.queries import query_fns
     import bench
 
-    tag = "before"
-    if "--tag" in sys.argv:
-        tag = sys.argv[sys.argv.index("--tag") + 1]
-    runs = 3
-    if "--runs" in sys.argv:
-        runs = int(sys.argv[sys.argv.index("--runs") + 1])
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    names = [n for n in names if n not in (tag, str(runs))]
-    if not names:
-        names = bench.HEADLINE
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--out", required=True, help="capture dir, e.g. plans/r14")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("names", nargs="*", help="queries (default: bench.HEADLINE)")
+    args = ap.parse_args()
+    tag, runs = args.tag, args.runs
+    names = args.names or bench.HEADLINE
+    plans_dir = os.path.join(ROOT, args.out)
 
-    os.makedirs(PLANS_DIR, exist_ok=True)
-    spark = get_spark("cds-profile-r13", extra_conf={"spark.ui.enabled": "true"})
+    os.makedirs(plans_dir, exist_ok=True)
+    spark = get_spark("cds-profile", extra_conf={"spark.ui.enabled": "true"})
     fns = query_fns()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
@@ -141,7 +140,7 @@ def main() -> None:
         df = fns[name](spark, SF_DIR)
         df.collect()  # warm: codegen + page cache (bench protocol)
         plan = _explain_str(df)
-        with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
 
         best = float("inf")
@@ -167,7 +166,7 @@ def main() -> None:
         results[name] = row
         print(json.dumps({name: row}), flush=True)
 
-    out_path = os.path.join(PLANS_DIR, f"profile_{tag}.json")
+    out_path = os.path.join(plans_dir, f"profile_{tag}.json")
     # MERGE into an existing capture: partial invocations (a few queries
     # after an edit) must not drop the other queries' entries
     merged = {}

@@ -441,39 +441,8 @@ def main() -> None:
                 )
 
             row[f"{label}_probe_s"] = timed(probe, spark, sf_dir)
-
-            # migrated-index probe (r11 verdict #5): a stranded r8-era
-            # 16-bucket index, migrated in place (one log flip), must
-            # probe with the same growth as a fresh 256-bucket build —
-            # the claim migrate_bm25_index exists to deliver
-            import chainweb_data_spark.operators.bm25_index as bi
-            from chainweb_data_spark.operators.bm25_index import (
-                migrate_bm25_index,
-            )
-
-            mig = f"/tmp/cds_scale/bm25mig_{label}"
-            _sh.rmtree(mig, ignore_errors=True)
-            old_hex = bi.BUCKET_HEX
-            bi.BUCKET_HEX = 1  # the r8 shipping width
-            try:
-                bm25_build_index(spark, docs, mig)
-            finally:
-                bi.BUCKET_HEX = old_hex
-            migrate_bm25_index(spark, mig)
-
-            def probe_mig(spark_, _sf, _idx=mig):
-                return bm25_search_indexed(
-                    spark_, _idx, "merge scan table", k=10
-                )
-
-            row[f"{label}_migrated_probe_s"] = timed(probe_mig, spark, sf_dir)
         row["probe_growth"] = round(
             row["scaled_probe_s"] / max(row["base_probe_s"], 1e-9), 2
-        )
-        row["migrated_probe_growth"] = round(
-            row["scaled_migrated_probe_s"]
-            / max(row["base_migrated_probe_s"], 1e-9),
-            2,
         )
         row["quadratic_would_be"] = mult * mult
         return row

@@ -7,7 +7,7 @@ growth with corpus size; this one measures the three sink-side costs of
 the listen pipeline (streaming/listen.py, streaming/publish.py,
 streaming/stateful.py) against history size:
 
-- merge probe (non-atomic path): the PK anti-join behind merge_batch —
+- merge probe (log-less path): the PK anti-join behind merge_batch —
   claimed bounded by height_bucket range pruning (listen.py merge_plan),
   so probing one tip batch must cost the same against 10× the buckets.
 - atomic publish: stage + manifest commit of one tip batch via
@@ -82,21 +82,24 @@ def time_merge_probe(spark, path: str, n_buckets: int, n: int) -> float:
 
 
 def time_atomic_publish(spark, name: str, n_buckets: int, n: int) -> float:
-    """publish_batch of one tip batch against an adopted history: stage
-    write + probe + manifest flip.  The first call adopts (untimed); each
-    timed call publishes a DISTINCT new slice so the probe always faces
-    the same shape (previous slices live in newer manifests)."""
-    from chainweb_data_spark.streaming.publish import ensure_manifest, publish_batch
+    """publish_batch of one tip batch against a PUBLISHED history: stage
+    write + probe + commit.  The history is published once (untimed) into
+    its own store — the sink refuses log-less table data; each timed call
+    publishes a DISTINCT new slice so the probe always faces the same
+    shape (previous slices live in newer commits)."""
+    from chainweb_data_spark.streaming.publish import publish_batch, read_manifest
 
-    out_dir = os.path.join(WORK, name)
-    ensure_manifest(out_dir)
+    out_dir = os.path.join(WORK, f"{name}_published")
+    pks = {"blocks": ("hash",)}
     top = n_buckets * ROWS_PER_BUCKET
+    if read_manifest(out_dir)["version"] == 0:
+        publish_batch(spark, {"blocks": _blocks(spark, 0, top)}, out_dir, pks)
     best = float("inf")
     for i in range(n):
         lo = top + i * BATCH_ROWS
         batch = _blocks(spark, lo - BATCH_ROWS // 2, lo + BATCH_ROWS // 2)
         t0 = time.perf_counter()
-        publish_batch(spark, {"blocks": batch}, out_dir, {"blocks": ("hash",)})
+        publish_batch(spark, {"blocks": batch}, out_dir, pks)
         best = min(best, time.perf_counter() - t0)
     return round(best, 3)
 

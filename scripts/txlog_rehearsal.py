@@ -28,7 +28,7 @@ Two Spark-backed modes (r10):
       orphans or the row is refused.
 
   --megarewrite [n_files]   The r12 spilled-delta row: a whole-table
-      rewrite committed at ``n_files`` live files, inline (pre-r12)
+      rewrite committed at ``n_files`` live files, inline
       vs spilled sidecar form on twin stores — commit JSON bytes,
       commit/resolve/race-fold walls, identical results required.
 
@@ -73,10 +73,17 @@ def _dir_bytes(mdir: str) -> int:
     )
 
 
+def _seed(out: str, tables: dict) -> None:
+    """Commit ``tables`` as the v1 checkpoint (the O(live files) snapshot
+    lands in the parquet sidecar; no delta rides along, so a seed of any
+    size writes no spill)."""
+    pub._write_manifest(out, {"version": 1, "tables": tables, "op": "seed"})
+
+
 def run_log(base: str, tables: dict, n_commits: int) -> dict:
     out = os.path.join(base, "log")
     os.makedirs(out)
-    pub._write_manifest(out, {"version": 1, "tables": tables, "op": "seed"})
+    _seed(out, tables)
     per_commit: list[tuple[bool, float]] = []
     t0 = time.perf_counter()
     for b in range(n_commits):
@@ -156,55 +163,6 @@ def run_full_rewrite(base: str, tables: dict, n_commits: int) -> dict:
     }
 
 
-def run_checkpoint_form(base: str, live_files: int) -> dict:
-    """r9: price ONE checkpoint in both forms at this file count, WITH
-    per-file stats (the dominant payload a real store carries — 12 stat
-    columns per file here): inline-JSON (pre-r9) vs parquet sidecar, and
-    the file-set read each form offers a consumer that doesn't want
-    stats (vacuum's live-set sweep — the sidecar is column-pruned, the
-    JSON must parse everything)."""
-    tables = _seed_snapshot(live_files)
-    stats = {
-        t: {
-            rel: {f"col_{c}": [i * 1000 + c, i * 1000 + c + 999]
-                  for c in range(12)}
-            for i, rel in enumerate(fs)
-        }
-        for t, fs in tables.items()
-    }
-    d = os.path.join(base, "ckptform")
-    os.makedirs(d)
-    jpath = os.path.join(d, "inline.json")
-    t0 = time.perf_counter()
-    with open(jpath, "w") as f:
-        json.dump(
-            {"version": 16, "ts": 1.0, "op": "write", "tables": tables,
-             "stats": stats},
-            f, separators=(",", ":"),
-        )
-    t_jw = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    name, _n = pub._write_checkpoint_sidecar(d, 16, tables, stats)
-    t_pw = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    json.load(open(jpath))
-    t_jr = time.perf_counter() - t0
-    import pyarrow.parquet as pq
-
-    t0 = time.perf_counter()
-    pq.read_table(os.path.join(d, name), columns=["table", "file"])
-    t_pr = time.perf_counter() - t0
-    jb = os.path.getsize(jpath)
-    pb = os.path.getsize(os.path.join(d, name))
-    return {
-        "inline_json": {"bytes": jb, "write_s": round(t_jw, 3),
-                        "full_read_s": round(t_jr, 3)},
-        "parquet_sidecar": {"bytes": pb, "write_s": round(t_pw, 3),
-                            "pruned_fileset_read_s": round(t_pr, 3)},
-        "bytes_ratio": round(jb / pb, 1),
-    }
-
-
 def _vm_rss_mb() -> float:
     """Current (not peak) resident set of THIS Python process, MB."""
     with open("/proc/self/status") as f:
@@ -233,10 +191,7 @@ def run_bigsweep(n_files: int) -> dict:
         # throwaway store runs the full spark-vacuum path untimed
         warm = os.path.join(base, "_warm")
         os.makedirs(warm)
-        pub10._write_manifest(
-            warm,
-            {"version": 1, "tables": _seed_snapshot(600), "op": "seed"},
-        )
+        _seed(warm, _seed_snapshot(600))
         pub10.vacuum(warm, keep_versions=0, spark=spark)
         def plant_orphans(out: str) -> list[str]:
             kept = []
@@ -263,9 +218,7 @@ def run_bigsweep(n_files: int) -> dict:
             os.makedirs(out)
             # v1 checkpoint: the O(n_files) snapshot rides the parquet
             # sidecar; the commit JSON stays O(1)
-            pub10._write_manifest(
-                out, {"version": 1, "tables": tables, "op": "seed"}
-            )
+            _seed(out, tables)
             # two timed sweeps per mode: the FIRST pays one-time plan/
             # codegen warmth this store's shapes haven't seen (the tiny
             # warm store above plans differently — AQE picks other
@@ -615,8 +568,8 @@ def run_race_spark(rounds: int) -> dict:
     }
     hollow: list = []
 
-    # adopt an EMPTY v1 first: once a commit exists, junk planted below
-    # is an orphan — with no log it would be adopted as legacy data
+    # commit an EMPTY v1 first: once a commit exists, junk planted below
+    # is an orphan (with no log, the sink would refuse the directory)
     os.makedirs(os.path.join(out, "t.parquet"), exist_ok=True)
     pub10.ensure_manifest(out)
     # pre-aged orphans: reclaimable through min_age_s=30 from the start
@@ -761,9 +714,7 @@ def run_pinsweep(n_files: int) -> dict:
     os.makedirs(out)
     report: dict = {"live_files": sum(len(v) for v in tables.values())}
     try:
-        pub12._write_manifest(
-            out, {"version": 1, "tables": tables, "op": "seed"}
-        )
+        _seed(out, tables)
         # a few deltas, then pins on four versions (same v1 ancestor)
         for i in range(6):
             v = pub12._latest_version(out) + 1
@@ -842,9 +793,7 @@ def run_megarewrite(n_files: int) -> dict:
             )
             out = os.path.join(base, mode)
             os.makedirs(out)
-            pub._write_manifest(
-                out, {"version": 1, "tables": tables, "op": "seed"}
-            )
+            _seed(out, tables)
             # a couple of small deltas first, so the rewrite lands
             # off-boundary like a real maintenance op
             for i in range(2):
@@ -954,7 +903,6 @@ def main() -> None:
                 "log": run_log(base, tables, n_commits),
                 "full_rewrite": run_full_rewrite(base, tables, n_commits),
             },
-            "checkpoint_form": run_checkpoint_form(base, live_files),
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)

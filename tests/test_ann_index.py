@@ -200,56 +200,6 @@ def test_search_prunes_to_probed_cells(spark, tmp_path):
     assert f"= {next(iter(probed))}" in plan
 
 
-@pytest.mark.heavy
-def test_pre_migration_members_refuse_and_migrate(spark, tmp_path):
-    """Round-6 advice: an index written with digit-only cell buckets must
-    refuse fold AND search loudly, and migrate_ann_index must restore
-    matching with identical results."""
-    import pytest as pt
-
-    from chainweb_data_spark.streaming.ann_index import (
-        AnnIndexFormatError,
-        migrate_ann_index,
-        unprefixed_member_cells,
-    )
-    from chainweb_data_spark.streaming.publish import rewrite_published
-
-    out = str(tmp_path / "idx6")
-    rows = _vec_rows(0, 60)
-    cents, cb = _quantizer(spark, rows)
-    update_ann_index(spark, _df(spark, rows), out, 0, cents, cb)
-    assert unprefixed_member_cells(out) == []
-    one = _df(spark, rows[:1])
-    want = _pairs(ann_index_search(spark, out, one, cents, cb, nprobe=1, k=K))
-
-    # forge the pre-migration digit-only format
-    members = read_published(spark, out, MEMBERS_TABLE)
-    legacy = members.withColumn(
-        "key_bucket", F.expr("substring(key_bucket, 2)")
-    ).repartition("key_bucket")
-    rewrite_published(spark, out, MEMBERS_TABLE, legacy)
-    assert unprefixed_member_cells(out) != []
-    with pt.raises(AnnIndexFormatError, match="migrate_ann_index"):
-        ann_index_search(spark, out, one, cents, cb, nprobe=1, k=K)
-    with pt.raises(AnnIndexFormatError):
-        update_ann_index(spark, _df(spark, rows[:5]), out, 1, cents, cb)
-
-    n = migrate_ann_index(spark, out)
-    assert n == 60
-    assert unprefixed_member_cells(out) == []
-    got = _pairs(ann_index_search(spark, out, one, cents, cb, nprobe=1, k=K))
-    assert got == want
-    # idempotent re-run, and the fold works again
-    assert migrate_ann_index(spark, out) == 60
-    update_ann_index(spark, _df(spark, rows[:5]), out, 1, cents, cb)
-    assert read_published(spark, out, MEMBERS_TABLE).count() == 60
-
-
-# ---------------------------------------------------------------------------
-# staleness: skew tracking, quantizer pinning, rebuild
-# ---------------------------------------------------------------------------
-
-
 def _drifted_rows(lo, hi, shift):
     """Vectors whose cluster structure CONCENTRATES as ``shift`` grows:
     shift=0 spreads over 4 groups (the trained layout), shift=2 collapses
@@ -274,7 +224,7 @@ def test_quantizer_digest_pins_fold_and_search(spark, tmp_path):
     import pytest as pt
 
     from chainweb_data_spark.streaming.ann_index import (
-        AnnIndexFormatError,
+        QuantizerMismatchError,
         META_TABLE,
     )
 
@@ -287,11 +237,11 @@ def test_quantizer_digest_pins_fold_and_search(spark, tmp_path):
     assert len(meta) == 1 and meta[0]["epoch"] == 0
 
     other_c, other_b = _quantizer(spark, _vec_rows(100, 140))
-    with pt.raises(AnnIndexFormatError, match="mismatched quantizer"):
+    with pt.raises(QuantizerMismatchError, match="mismatched quantizer"):
         update_ann_index(
             spark, _df(spark, _vec_rows(30, 40)), out, 1, other_c, other_b
         )
-    with pt.raises(AnnIndexFormatError, match="mismatched quantizer"):
+    with pt.raises(QuantizerMismatchError, match="mismatched quantizer"):
         ann_index_search(
             spark, out, _df(spark, rows[:3]), other_c, other_b, k=2
         )

@@ -43,7 +43,7 @@ def test_atomic_stream_equals_batch_and_replay_is_noop(
     out = os.path.join(base, "tables")
     _write_feed(raw_rows, feed, 3)
 
-    q = listen_stream(spark, feed, out, event_min_height=ACTIVATION, atomic=True)
+    q = listen_stream(spark, feed, out, event_min_height=ACTIVATION)
     q.awaitTermination(300)
 
     expected = payload_to_tables(_raw_df(spark, raw_rows), event_min_height=ACTIVATION)
@@ -62,7 +62,7 @@ def test_atomic_stream_equals_batch_and_replay_is_noop(
     v_before = read_manifest(out)["version"]
     q2 = listen_stream(
         spark, feed, out, checkpoint_dir=os.path.join(base, "ckpt2"),
-        event_min_height=ACTIVATION, atomic=True,
+        event_min_height=ACTIVATION,
     )
     q2.awaitTermination(300)
     for name in TABLE_PKS:
@@ -156,7 +156,7 @@ def test_manifest_flip_is_atomic_rename(tmp_path):
     check CURRENT always parses and points at a complete snapshot.)"""
     out = str(tmp_path / "t")
     pub._write_manifest(out, {"version": 1, "tables": {"blocks": ["a"]}})
-    pub._write_manifest(out, {"version": 2, "tables": {"blocks": ["a", "b"]}})
+    pub._write_manifest(out, {"version": 2, "add": {"blocks": ["b"]}})
     m = read_manifest(out)
     assert m["version"] == 2 and m["tables"]["blocks"] == ["a", "b"]
     mdir = os.path.join(out, "_manifest")

@@ -330,64 +330,3 @@ def test_term_sorted_files_prune_rows_within_bucket(spark, tmp_path):
         bm25_search_indexed(spark, unsorted_dir, anchor, k=5)
     )
     assert r_sorted < r_unsorted / 2, (r_sorted, r_unsorted)
-
-
-@pytest.mark.heavy
-def test_migrate_bm25_index_from_narrow_buckets(spark, tmp_path):
-    """r10 (r9 verdict #2): a pre-r9 16-bucket index must be migratable
-    to the 256-bucket term-sorted layout — probe bitwise-identical to a
-    FRESH current-layout build, width detected as BUCKET_HEX afterward,
-    file pruning restored, and the migration idempotent."""
-    import chainweb_data_spark.operators.bm25_index as bi
-    from chainweb_data_spark.operators.bm25_index import migrate_bm25_index
-
-    docs = _docs(spark)
-    old_dir = str(tmp_path / "old")
-    orig_hex = bi.BUCKET_HEX
-    bi.BUCKET_HEX = 1  # the r8 shipping width
-    try:
-        bm25_build_index(spark, docs, old_dir, source_version=7)
-        bm25_update_index(spark, docs.limit(0), old_dir, batch_id=1)
-    finally:
-        bi.BUCKET_HEX = orig_hex
-    assert bi._index_bucket_width(old_dir) == 1
-
-    fresh_dir = str(tmp_path / "fresh")
-    bm25_build_index(spark, docs, fresh_dir, source_version=7)
-
-    n = migrate_bm25_index(spark, old_dir)
-    assert n > 0
-    assert bi._index_bucket_width(old_dir) == bi.BUCKET_HEX
-    # probe bitwise-identical to the fresh current-layout build
-    probe_migrated = bm25_search_indexed(spark, old_dir, QUERY, k=10)
-    probe_fresh = bm25_search_indexed(spark, fresh_dir, QUERY, k=10)
-    assert _pairs(probe_migrated) == _pairs(probe_fresh)
-    # stats (meta untouched by migration) still agree
-    assert bm25_index_stats(spark, old_dir)["n_docs"] == bm25_index_stats(
-        spark, fresh_dir
-    )["n_docs"]
-    # file pruning holds on the migrated store: the probe opens only the
-    # query terms' buckets (+ meta), never the whole postings table
-    manifest = read_manifest(old_dir)
-    postings = manifest["tables"]["bm25_postings"]
-    dft = manifest["tables"]["bm25_df"]
-    assert len({f.split(os.sep, 1)[0] for f in postings}) > 8
-    want = {f"key_bucket={_term_bucket_py(t)}" for t in QUERY.split(" ")}
-    matching = [f for f in postings if f.split(os.sep, 1)[0] in want] + [
-        f for f in dft if f.split(os.sep, 1)[0] in want
-    ]
-    meta = manifest["tables"]["bm25_meta"]
-    n_read = _scan_files_read(bm25_search_indexed(spark, old_dir, QUERY, k=10))
-    assert n_read <= len(matching) + len(meta)
-    assert n_read < len(postings) + len(dft) + len(meta)
-    # idempotent: already at the target width → no-op, no burned version
-    v_before = read_manifest(old_dir)["version"]
-    assert migrate_bm25_index(spark, old_dir) == 0
-    assert read_manifest(old_dir)["version"] == v_before
-    # incremental updates keep working at the new width
-    extra = spark.createDataFrame(
-        [(999_001, "merge scan table aftermigration")],
-        "doc_id long, text string",
-    )
-    bm25_update_index(spark, extra, old_dir, batch_id=2)
-    assert bm25_index_stats(spark, old_dir)["n_docs"] == docs.count() + 1

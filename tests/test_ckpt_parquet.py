@@ -3,12 +3,11 @@ r9): the O(live files) snapshot half of a checkpoint lives in a zstd
 parquet sidecar while the commit JSON stays O(1) bytes — Delta's
 checkpoint move, closing the module's former "known residual at extreme
 file counts".  Covered here: thin-JSON form on disk, hydration
-equivalence, column-pruned file-set reads, legacy inline-checkpoint
-stores, crash-orphan sidecar reclamation (referenced sidecars never
-deleted), and file skipping through sidecar-carried stats."""
+equivalence, column-pruned file-set reads, crash-orphan sidecar
+reclamation (referenced sidecars never deleted), and file skipping
+through sidecar-carried stats."""
 
 import pytest
-import json
 import os
 
 import pyarrow.parquet as pq
@@ -78,48 +77,6 @@ def test_pruned_file_sets_match_full_resolve(spark, tmp_path):
         pub._SNAP_CACHE.clear()
         full = pub._resolve(out, v)["tables"]
         assert pruned == full
-
-
-@pytest.mark.heavy
-def test_legacy_inline_checkpoints_still_read(spark, tmp_path):
-    """A pre-r9 store (checkpoints with inline tables/stats) must resolve
-    unchanged — rewrite the new form back to the old to simulate one."""
-    out = str(tmp_path / "lg")
-    _grow(spark, out, pub.CHECKPOINT_EVERY + 2)
-    latest = read_manifest(out)["version"]
-    want = read_manifest(out, latest)
-    mdir = os.path.join(out, "_manifest")
-    rewritten = 0
-    for name in sorted(os.listdir(mdir)):
-        if not (name.startswith("v") and name.endswith(".json")):
-            continue
-        v = int(name[1:-5])
-        c = pub._load_commit(out, v)
-        if "ckpt" not in c:
-            continue
-        snap = {"tables": {}, "stats": {}}
-        snap["tables"], snap["stats"] = pub._read_checkpoint_sidecar(out, c)
-        legacy = {
-            "version": c["version"],
-            "ts": c["ts"],
-            "op": c["op"],
-            "tables": snap["tables"],
-            "stats": snap["stats"],
-        }
-        if "pins" in c:
-            legacy["pins"] = c["pins"]
-        os.remove(os.path.join(mdir, c["ckpt"]))
-        with open(os.path.join(mdir, name), "w") as f:
-            json.dump(legacy, f, separators=(",", ":"))
-        rewritten += 1
-    assert rewritten >= 2
-    pub._SNAP_CACHE.clear()
-    got = read_manifest(out, latest)
-    assert got["tables"] == want["tables"]
-    assert got["stats"] == want["stats"]
-    rows = {r["id"] for r in read_published(spark, out, "t").collect()}
-    assert rows == set(range(0, len(rows)))
-    assert len(rows) >= 10 * (latest - 1)
 
 
 @pytest.mark.heavy

@@ -239,33 +239,6 @@ def test_atomic_commit_covers_all_four_tables(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_non_atomic_path_matches(spark, tmp_path):
-    """atomic=False produces the same curated/reject decisions through
-    plain per-table merges (no manifest anywhere in out_dir itself)."""
-    out = str(tmp_path / "cur")
-    s0 = curate_batch(
-        spark,
-        _docs(spark, [(1, BASE_TEXT), (2, "zz")]),
-        out,
-        batch_id=0,
-        min_quality=MIN_Q,
-        atomic=False,
-    )
-    s1 = curate_batch(
-        spark,
-        _docs(spark, [(10, BASE_TEXT), (11, BASE_TEXT + " tail"), (12, OTHER_TEXT)]),
-        out,
-        batch_id=1,
-        min_quality=MIN_Q,
-        atomic=False,
-    )
-    assert (s0["n_kept"], s0["n_quality"]) == (1, 1)
-    assert (s1["n_exact"], s1["n_near"], s1["n_kept"]) == (1, 1, 1)
-    assert _ids(spark, out, CURATED_TABLE) == [1, 12]
-    assert not os.path.exists(os.path.join(out, "_manifest"))
-
-
-@pytest.mark.heavy
 def test_compaction_bounds_files_and_preserves_rows(spark, tmp_path):
     """compact_every folds the four curation tables' live files down
     through a manifest flip (and the index's via its own knob): rows are
@@ -365,80 +338,6 @@ def test_crash_at_the_single_commit_leaves_nothing(spark, tmp_path, monkeypatch)
             map(tuple, read_published(spark, ref, t).drop("key_bucket").collect())
         )
         assert got == want, t
-
-
-@pytest.mark.heavy
-def test_legacy_two_log_store_refuses_and_migrates(spark, tmp_path):
-    """A store written by the pre-unified layout (index under its own log)
-    must REFUSE to resume (the unified probe would silently see an empty
-    index) and migrate_curation_store must adopt it metadata-only, after
-    which near-dups against the legacy history flag again."""
-    import pytest as _pytest
-
-    from chainweb_data_spark.streaming.curation import (
-        CurationStoreFormatError,
-        migrate_curation_store,
-    )
-    from chainweb_data_spark.streaming.dedup_index import update_dedup_index
-    from chainweb_data_spark.streaming.publish import (
-        publish_batch,
-        read_published,
-    )
-
-    out = str(tmp_path / "cur")
-    # forge a legacy store: batch 0 curated via the old two-log shape —
-    # curation tables in the parent log (curation_log with the PRE-r7
-    # six-column schema, no n_contam), index folded under its own log
-    seed = _docs(spark, [(1, BASE_TEXT)])
-    update_dedup_index(
-        spark, seed, os.path.join(out, "dedup_index"), batch_id=0
-    )
-    old_log = spark.createDataFrame(
-        [(0, 1, 1, 0, 0, 0)],
-        "batch_id long, n_in long, n_kept long, n_quality long, "
-        "n_exact long, n_near long",
-    )
-    publish_batch(
-        spark,
-        {
-            "curated_docs": seed.withColumn("batch_id", F.lit(0)),
-            "curation_log": old_log,
-        },
-        out,
-        pks={"curated_docs": ("doc_id",), "curation_log": ("batch_id",)},
-    )
-    with _pytest.raises(CurationStoreFormatError, match="migrate_curation_store"):
-        curate_batch(
-            spark,
-            _docs(spark, [(10, BASE_TEXT + " tail")]),
-            out,
-            batch_id=1,
-            min_quality=MIN_Q,
-        )
-    adopted = migrate_curation_store(spark, out)
-    assert adopted == [
-        "dedup_index/bucket_counts",
-        "dedup_index/minhash_bands",
-        "dedup_index/shingle_sets",
-    ]
-    assert migrate_curation_store(spark, out) == []  # idempotent
-    # the legacy fold is visible through the parent log...
-    assert read_published(spark, out, "dedup_index/minhash_bands").count() > 0
-    # ...the pre-r7 curation_log was backfilled with n_contam = 0 in the
-    # same commit (no mixed-schema table awaits the resumed sink)...
-    log0 = read_published(spark, out, "curation_log").collect()
-    assert [(r["batch_id"], r["n_contam"]) for r in log0] == [(0, 0)]
-    # ...and a resumed batch flags a near-dup of the LEGACY history
-    s = curate_batch(
-        spark,
-        _docs(spark, [(10, BASE_TEXT + " tail")]),
-        out,
-        batch_id=1,
-        min_quality=MIN_Q,
-    )
-    assert s["n_near"] == 1
-    log = read_published(spark, out, "curation_log")
-    assert log.count() == 2 and "n_contam" in log.columns
 
 
 def test_null_text_rejects_at_quality(spark, tmp_path):

@@ -6,7 +6,6 @@ union corpus."""
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from chainweb_data_spark.operators import dedup as dd
 from chainweb_data_spark.streaming.dedup_index import (
@@ -173,23 +172,6 @@ def test_replay_idempotent_at_the_hot_cap_boundary(spark, tmp_path):
     assert first  # cross-era flags exist on the first run
     replay = _flags(update_dedup_index(spark, b1, out, batch_id=1, max_bucket_size=cap))
     assert replay == first
-
-
-@pytest.mark.heavy
-def test_non_atomic_fallback_matches_atomic(spark, tmp_path):
-    rows0 = [(1, BASE_TEXT)]
-    rows1 = [(10, BASE_TEXT + " tail"), (11, BASE_TEXT + " tail extra")]
-    flags = {}
-    for mode in (True, False):
-        out = str(tmp_path / f"idx_{mode}")
-        update_dedup_index(spark, _docs(spark, rows0), out, batch_id=0, atomic=mode)
-        flags[mode] = _flags(
-            update_dedup_index(spark, _docs(spark, rows1), out, batch_id=1, atomic=mode)
-        )
-    assert flags[True] == flags[False] != []
-    # atomic mode leaves a manifest; fallback mode does not
-    assert os.path.exists(os.path.join(str(tmp_path / "idx_True"), "_manifest"))
-    assert not os.path.exists(os.path.join(str(tmp_path / "idx_False"), "_manifest"))
 
 
 # ---------------------------------------------------------------------------
@@ -399,161 +381,3 @@ def test_compaction_preserves_rows_and_bounds_files(spark, tmp_path):
     probe = _docs(spark, [(999, f"{BASE_TEXT} batch0 doc0 filler tail")])
     got = _flags(update_dedup_index(spark, probe, out, batch_id=6, compact_every=4))
     assert (999, 0) in got
-
-
-@pytest.mark.heavy
-def test_pre_migration_bands_refuse_and_migrate(spark, tmp_path):
-    """Round-6 advice: an index written before the 'h'-prefixed key_bucket
-    format must REFUSE the pruned cross-era probe (silent history loss
-    otherwise), and migrate_dedup_index must restore matching."""
-    import pytest as pt
-
-    from chainweb_data_spark.streaming.dedup_index import (
-        DedupIndexFormatError,
-        check_bands_format,
-        migrate_dedup_index,
-        unprefixed_band_buckets,
-    )
-    from chainweb_data_spark.streaming.publish import (
-        read_manifest,
-        read_published,
-        rewrite_published,
-    )
-
-    out = str(tmp_path / "idx")
-    b0 = _docs(spark, [(1, BASE_TEXT)])
-    update_dedup_index(spark, b0, out, batch_id=0)
-    assert unprefixed_band_buckets(out) == []
-
-    # forge the pre-migration format: strip the prefix and republish, so
-    # the live snapshot's partition dirs are the old unprefixed values
-    bands = read_published(spark, out, "minhash_bands")
-    legacy = (
-        bands.drop("key_bucket")
-        .withColumn("key_bucket", F.substring("bucket", 1, 1))
-        .repartition("key_bucket")
-    )
-    rewrite_published(spark, out, "minhash_bands", legacy)
-    assert unprefixed_band_buckets(out) != []
-    with pt.raises(DedupIndexFormatError, match="migrate_dedup_index"):
-        check_bands_format(out)
-    b1 = _docs(spark, [(10, BASE_TEXT + " tail")])
-    with pt.raises(DedupIndexFormatError):
-        update_dedup_index(spark, b1, out, batch_id=1)
-
-    # migrate: one commit, live list fully 'h'-prefixed, probe matches the
-    # pre-prefix history again, and a re-run is an idempotent no-op
-    n = migrate_dedup_index(spark, out)
-    assert n == bands.count()
-    assert unprefixed_band_buckets(out) == []
-    from chainweb_data_spark.streaming.publish import history
-
-    assert history(out)[-1]["op"] == "rewrite"
-    m = read_manifest(out)
-    assert all(
-        f.split("=", 1)[1].startswith("h")
-        for f in m["tables"]["minhash_bands"]
-        if f.startswith("key_bucket=")
-    )
-    assert migrate_dedup_index(spark, out) == n
-    got = _flags(update_dedup_index(spark, b1, out, batch_id=1))
-    assert (10, 1) in got
-
-
-@pytest.mark.heavy
-def test_pre_migration_detection_legacy_layout(spark, tmp_path):
-    """Log-less (atomic=False) indexes detect via listdir and migrate via
-    the park-and-rename directory swap."""
-    import pytest as pt
-
-    from chainweb_data_spark.streaming.dedup_index import (
-        DedupIndexFormatError,
-        migrate_dedup_index,
-        unprefixed_band_buckets,
-    )
-
-    out = str(tmp_path / "idx")
-    b0 = _docs(spark, [(1, BASE_TEXT)])
-    update_dedup_index(spark, b0, out, batch_id=0, atomic=False)
-    # forge: rewrite the bands dir with unprefixed partition values
-    tdir = os.path.join(out, BANDS_TABLE)
-    bands = spark.read.parquet(tdir)
-    legacy = (
-        bands.drop("key_bucket")
-        .withColumn("key_bucket", F.substring("bucket", 1, 1))
-        .repartition("key_bucket")
-    )
-    tmp = tdir + ".forge"
-    legacy.write.mode("overwrite").partitionBy("key_bucket").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(tdir)
-    os.rename(tmp, tdir)
-    assert unprefixed_band_buckets(out) != []
-    b1 = _docs(spark, [(10, BASE_TEXT + " tail")])
-    with pt.raises(DedupIndexFormatError):
-        update_dedup_index(spark, b1, out, batch_id=1, atomic=False)
-    migrate_dedup_index(spark, out, atomic=False)
-    assert unprefixed_band_buckets(out) == []
-    got = _flags(
-        update_dedup_index(spark, b1, out, batch_id=1, atomic=False)
-    )
-    assert (10, 1) in got
-
-
-def test_pre_migration_bands_prefixed_unified_store(spark, tmp_path):
-    """Round-7 advice: in a UNIFIED curation store the bands live under
-    'dedup_index/minhash_bands' in the parent log — migrate_dedup_index
-    must take the same table_prefix as update_dedup_index, and the
-    format error must name the PREFIXED table with the prefixed fix
-    (the unprefixed call would resolve an empty table and 'migrate'
-    0 rows, leaving the store unresumable)."""
-    import pytest as pt
-
-    from chainweb_data_spark.streaming.dedup_index import (
-        DedupIndexFormatError,
-        check_bands_format,
-        migrate_dedup_index,
-        unprefixed_band_buckets,
-        update_dedup_index,
-    )
-    from chainweb_data_spark.streaming.publish import (
-        publish_batch,
-        read_published,
-        rewrite_published,
-    )
-
-    out = str(tmp_path / "store")
-    prefix = "dedup_index/"
-    t_bands = prefix + "minhash_bands"
-    b0 = _docs(spark, [(1, BASE_TEXT)])
-    flags, tables, pks, cleanup = update_dedup_index(
-        spark, b0, out, batch_id=0, table_prefix=prefix, defer_publish=True
-    )
-    flags.count()
-    publish_batch(spark, tables, out, pks=pks)
-    cleanup()
-    assert unprefixed_band_buckets(out, t_bands) == []
-
-    # forge the pre-migration format on the PREFIXED table
-    bands = read_published(spark, out, t_bands)
-    legacy = (
-        bands.drop("key_bucket")
-        .withColumn("key_bucket", F.substring("bucket", 1, 1))
-        .repartition("key_bucket")
-    )
-    rewrite_published(spark, out, t_bands, legacy)
-    assert unprefixed_band_buckets(out, t_bands) != []
-    # the error names the prefixed table AND the prefixed fix
-    with pt.raises(
-        DedupIndexFormatError, match="table_prefix='dedup_index/'"
-    ):
-        check_bands_format(out, t_bands)
-
-    # the advertised fix actually migrates the prefixed table
-    n = migrate_dedup_index(spark, out, table_prefix=prefix)
-    assert n == bands.count() and n > 0
-    assert unprefixed_band_buckets(out, t_bands) == []
-    # and the unprefixed call on this store is the 0-row trap the
-    # prefix parameter exists to avoid
-    assert migrate_dedup_index(spark, out) == 0

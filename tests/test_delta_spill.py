@@ -266,35 +266,6 @@ def test_vacuum_reclaims_orphan_delta_spills_keeps_referenced(
     assert snap["t"] == sorted(f"b=9/r{k}.parquet" for k in range(8))
 
 
-def test_legacy_full_form_route_spills_too(tmp_path, monkeypatch):
-    """r12 review: a whole-table rewrite handed to _write_manifest as a
-    FULL target snapshot (the legacy route) must spill past the
-    threshold exactly like the delta-form route."""
-    monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 5)
-    out = str(tmp_path / "lf")
-    os.makedirs(out)
-    pub._write_manifest(
-        out,
-        {"version": 1,
-         "tables": {"t": [f"b=0/s{k}.parquet" for k in range(6)]},
-         "op": "seed"},
-    )
-    pub._write_manifest(
-        out,
-        {"version": 2,
-         "tables": {"t": [f"b=1/n{k}.parquet" for k in range(6)]},
-         "op": "rewrite"},
-    )
-    c = pub._load_commit(out, 2)
-    assert "delta" in c and "add" not in c and "remove" not in c
-    assert c["n_add_by_table"] == {"t": 6}
-    assert c["n_remove_by_table"] == {"t": 6}
-    pub._SNAP_CACHE.clear()
-    assert pub._snapshot_files(out, 2)["t"] == sorted(
-        f"b=1/n{k}.parquet" for k in range(6)
-    )
-
-
 def test_hydrate_delta_prunes_stats_for_setonly_consumers(
     twins, monkeypatch
 ):

@@ -35,7 +35,7 @@ def memstore(monkeypatch):
 def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
     store, root, out = memstore
     pub._SNAP_CACHE.clear()
-    # adopt an empty store: v1 checkpoint (sidecar via write_atomic)
+    # start an empty store: v1 checkpoint (sidecar via write_atomic)
     m = pub.ensure_manifest(out)
     assert m["version"] == 1 and m["tables"] == {}
     # micro-batch deltas (put_if_absent commit point + CURRENT hint)

@@ -1,16 +1,18 @@
-"""Compaction + layout migration (sources/maintenance.py) — the autovacuum
-analog for the streaming sink's per-micro-batch small files, and the
-documented upgrade path for pre-bucketed flat tables."""
+"""Log-aware compaction (streaming/publish.py ``compact_published``) — the
+autovacuum analog for the streaming sink's per-micro-batch small files:
+many live files per partition rewritten into one, swapped in as ONE
+commit, rows preserved exactly."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from chainweb_data_spark.sources.maintenance import (
-    compact_table,
-    migrate_flat_to_bucketed,
+from chainweb_data_spark.streaming.publish import (
+    compact_published,
+    publish_batch,
+    read_manifest,
+    read_published,
 )
-from chainweb_data_spark.streaming.listen import merge_batch
 
 
 def _mk(spark, lo, hi):
@@ -22,49 +24,48 @@ def _mk(spark, lo, hi):
 
 
 def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("compact") / "blocks.parquet")
-    # simulate many micro-batches: each append adds files per partition
+    out = str(tmp_path_factory.mktemp("compact"))
+    pks = {"blocks": ("hash",)}
+    # simulate many micro-batches: each commit adds files per partition
     for i in range(5):
-        merge_batch(spark, _mk(spark, i * 100, (i + 1) * 100 + 50), path, ("hash",))
-    before = spark.read.parquet(path)
+        batch = _mk(spark, i * 100, (i + 1) * 100 + 50)
+        publish_batch(spark, {"blocks": batch}, out, pks=pks)
+    before = read_published(spark, out, "blocks")
     n_before, files_before = before.count(), len(before.inputFiles())
     rows_before = {r["hash"] for r in before.select("hash").collect()}
 
-    done = compact_table(spark, path, sort_cols=[("height", True)], min_files=1)
+    done = compact_published(
+        spark, out, "blocks", min_files=1, sort_within=("height",)
+    )
     assert done, "nothing compacted despite multi-batch appends"
     for part, (fb, fa) in done.items():
         assert fa < fb, part
 
-    after = spark.read.parquet(path)
+    after = read_published(spark, out, "blocks")
     assert after.count() == n_before
     assert {r["hash"] for r in after.select("hash").collect()} == rows_before
     assert len(after.inputFiles()) < files_before
-    # files are sorted on the cursor order: row-group stats stay tight
-    # (check a partition that was actually rewritten — single-file ones are
-    # skipped and keep their original order)
+    # files are sorted on the requested order: row-group stats stay tight
     one_part = sorted(done)[0]
-    pdf = spark.read.parquet(os.path.join(path, one_part)).select("height").toPandas()
-    assert list(pdf["height"]) == sorted(pdf["height"], reverse=True)
+    live = [
+        f
+        for f in read_manifest(out)["tables"]["blocks"]
+        if os.path.dirname(f) == one_part
+    ]
+    assert len(live) == 1
+    pdf = (
+        spark.read.parquet(os.path.join(out, "blocks.parquet", live[0]))
+        .select("height")
+        .toPandas()
+    )
+    assert list(pdf["height"]) == sorted(pdf["height"])
 
 
 def test_compaction_is_idempotent(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("compact2") / "t.parquet")
+    out = str(tmp_path_factory.mktemp("compact2"))
     for i in range(3):
-        merge_batch(spark, _mk(spark, i * 50, (i + 1) * 50), path, ("hash",))
-    compact_table(spark, path, min_files=1)
-    again = compact_table(spark, path, min_files=1)
+        batch = _mk(spark, i * 50, (i + 1) * 50)
+        publish_batch(spark, {"t": batch}, out, pks={"t": ("hash",)})
+    compact_published(spark, out, "t", min_files=1)
+    again = compact_published(spark, out, "t", min_files=1)
     assert again == {}, "second compaction rewrote already-compact partitions"
-
-
-def test_migrate_flat_to_bucketed_then_merge_prunes(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("migrate") / "blocks.parquet")
-    _mk(spark, 0, 1000).write.parquet(path)  # legacy flat layout
-    migrate_flat_to_bucketed(spark, path, "height_bucket", sort_cols=[("height", True)])
-    parts = [d for d in os.listdir(path) if d.startswith("height_bucket=")]
-    assert len(parts) == 10
-    assert spark.read.parquet(path).count() == 1000
-    # and merge_batch now appends partitioned (no flat fallback anymore)
-    merge_batch(spark, _mk(spark, 900, 1100), path, ("hash",))
-    back = spark.read.parquet(path)
-    assert back.count() == 1100
-    assert back.filter(F.col("height_bucket") == 10).count() == 100

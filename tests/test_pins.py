@@ -199,34 +199,6 @@ def test_pins_folded_into_checkpoints_bounds_the_scan(spark, tmp_path):
     assert min(loads) >= ckpt
 
 
-def test_pre_fold_store_still_replays_fully(spark, tmp_path):
-    """A store whose checkpoints predate the fold (no "pins" key) must
-    fall through to the full-log replay — strip the key to simulate."""
-    import json
-
-    out = str(tmp_path / "pl")
-    publish_batch(spark, {"t": _batch(spark, 0, 10)}, out, pks=PK)
-    pin_version(out, 1, name="old-lease")
-    for i in range(pub.CHECKPOINT_EVERY + 2):
-        lo = 10 + i * 10
-        publish_batch(spark, {"t": _batch(spark, lo, lo + 10)}, out, pks=PK)
-    mdir = os.path.join(out, "_manifest")
-    stripped = 0
-    for name in os.listdir(mdir):
-        if not (name.startswith("v") and name.endswith(".json")):
-            continue
-        p = os.path.join(mdir, name)
-        with open(p) as f:
-            c = json.load(f)
-        if "pins" in c:
-            del c["pins"]
-            with open(p, "w") as f:
-                json.dump(c, f, separators=(",", ":"))
-            stripped += 1
-    assert stripped >= 2  # v1 and at least one later checkpoint
-    assert pinned_versions(out) == {1: "old-lease"}
-
-
 def test_pin_lost_race_with_vacuum_fails_loudly(spark, tmp_path, monkeypatch):
     """r9 (ADVICE): a vacuum that reclaims the files BETWEEN pin_version's
     pre-check and its commit must surface as a loud error with the lease

@@ -191,3 +191,32 @@ def test_rounds_leave_no_persisted_copy(spark, tx, tmp_path):
         update_continuation_history(spark, batch, out)
         sizes.append(persisted())
     assert sizes == [base] * 5
+
+
+def test_vacuum_keeps_the_silver_tables(spark, tx, tmp_path):
+    """The silver tables live under ``_silver/``, outside the namespace
+    publish.vacuum sweeps: a publish, a silver update and a vacuum leave
+    every continuation-history lookup unchanged."""
+    from chainweb_data_spark.streaming.publish import publish_batch, vacuum
+
+    out = str(tmp_path / "store")
+    publish_batch(spark, {"transactions": tx}, out)
+    update_continuation_history(spark, tx, out)
+    tips = sorted(
+        r["start_rk"]
+        for r in spark.read.parquet(os.path.join(out, HISTORY))
+        .select("start_rk")
+        .distinct()
+        .collect()
+    )[:4]
+
+    def lookups():
+        return {
+            t: [tuple(r) for r in lookup_history(spark, out, t).collect()]
+            for t in tips
+        }
+
+    before = lookups()
+    assert tips and all(before.values())
+    vacuum(out)
+    assert lookups() == before

@@ -201,96 +201,11 @@ def test_stream_partitions_all_six_tables(spark, tmp_path_factory, raw_rows):
         assert parts, f"{name}: no {prefix}* partition dirs in {os.listdir(tdir)[:5]}"
 
 
-def test_merge_into_legacy_flat_table_stays_readable(spark, tmp_path_factory):
-    """Appending to a table previously written FLAT (pre-bucketed layout)
-    must match the existing layout: partition subdirs beside root data files
-    make the directory unreadable (ADVICE r02).  The merge stays correct,
-    just without directory pruning — migrate via sources/layout.py for
-    that."""
-    from pyspark.sql import functions as F
-
-    from chainweb_data_spark.streaming.listen import merge_batch
-
-    path = str(tmp_path_factory.mktemp("flat") / "blocks.parquet")
-    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
-        F.md5(F.col("id").cast("string")).alias("hash"),
-        F.col("id").alias("height"),
-        (F.col("id") / 100).cast("long").alias("height_bucket"),
-    )
-    # legacy writer: flat, no partitionBy
-    mk(0, 500).write.parquet(path)
-    # new merge_batch appends a batch that WOULD be bucket-partitioned
-    merge_batch(spark, mk(400, 700), path, ("hash",))
-    back = spark.read.parquet(path)
-    assert back.count() == 700  # 100 replayed rows dropped by the PK probe
-    assert back.select("hash").distinct().count() == 700
-    # layout stayed flat: no partition subdirectories were created
-    assert not any(
-        d.startswith("height_bucket=")
-        for d in os.listdir(path)
-        if os.path.isdir(os.path.join(path, d))
-    )
-
-
-@pytest.mark.heavy
-def test_crash_between_table_writes_converges(spark, tmp_path_factory, raw_rows, monkeypatch):
-    """The LEGACY (atomic=False) path is not atomic across tables, so its
-    guarantee is replay-convergence: kill the batch between table writes,
-    restart the stream on the same checkpoint, and the re-delivered batch
-    heals the partially-applied block set.  (The default atomic path closes
-    the window entirely — test_crash_mid_atomic_batch_is_invisible.)"""
-    import chainweb_data_spark.streaming.listen as listen_mod
-
-    base = str(tmp_path_factory.mktemp("crash"))
-    feed = os.path.join(base, "feed")
-    out = os.path.join(base, "tables")
-    ckpt = os.path.join(base, "ckpt")
-    _write_feed(raw_rows, feed, 2)
-
-    real_merge = listen_mod.merge_batch
-    calls = {"n": 0}
-
-    def dying_merge(spark_, df, path, pk):
-        calls["n"] += 1
-        if calls["n"] == 3:  # die mid-transaction: after 2 of 6 table writes
-            raise RuntimeError("injected crash between table writes")
-        real_merge(spark_, df, path, pk)
-
-    monkeypatch.setattr(listen_mod, "merge_batch", dying_merge)
-    q = listen_stream(spark, feed, out, checkpoint_dir=ckpt,
-                      event_min_height=ACTIVATION, atomic=False)
-    try:
-        q.awaitTermination(300)
-    except Exception:
-        pass  # the injected crash surfaces as a StreamingQueryException
-    assert calls["n"] == 3, "crash injection did not fire"
-
-    # restart on the SAME checkpoint: the uncommitted batch re-delivers
-    monkeypatch.setattr(listen_mod, "merge_batch", real_merge)
-    q2 = listen_stream(spark, feed, out, checkpoint_dir=ckpt,
-                       event_min_height=ACTIVATION, atomic=False)
-    q2.awaitTermination(300)
-
-    raw = spark.createDataFrame(
-        [(r["header"], r["powHash"], r["payload"]) for r in raw_rows], RAW_SCHEMA
-    )
-    expected = payload_to_tables(raw, event_min_height=ACTIVATION)
-    for name, exp_raw in expected.items():
-        got = spark.read.parquet(os.path.join(out, f"{name}.parquet"))
-        pk = list(TABLE_PKS[name])
-        exp = exp_raw.dropDuplicates(pk)
-        assert got.count() == exp.count(), f"{name}: {got.count()} != {exp.count()}"
-        assert (
-            exp.select(pk).exceptAll(got.select(pk)).isEmpty()
-            and got.select(pk).exceptAll(exp.select(pk)).isEmpty()
-        ), f"{name}: PK sets differ after crash-recovery"
-
-
 @pytest.mark.heavy
 def test_crash_mid_atomic_batch_is_invisible_then_heals(
     spark, tmp_path_factory, raw_rows, monkeypatch
 ):
-    """The DEFAULT path (atomic=True): kill the stream after some tables of
+    """Kill the stream after some tables of
     a micro-batch are staged but before the manifest flip.  Snapshot readers
     must see the previous complete batch set for ALL six tables (no
     half-applied block, Worker.hs:50-82 parity); a restart on the same
@@ -326,7 +241,7 @@ def test_crash_mid_atomic_batch_is_invisible_then_heals(
 
     monkeypatch.setattr(pub_mod, "_stage_table", dying_stage)
     q = listen_stream(spark, feed, out, checkpoint_dir=ckpt,
-                      event_min_height=ACTIVATION)  # default: atomic
+                      event_min_height=ACTIVATION)
     try:
         q.awaitTermination(300)
     except Exception:
@@ -380,55 +295,6 @@ def test_crash_mid_atomic_batch_is_invisible_then_heals(
         got = read_published(spark, out, name)
         exp = expected[name].dropDuplicates(list(TABLE_PKS[name]))
         assert got.count() == exp.count(), f"{name}: vacuum changed published rows"
-
-
-@pytest.mark.heavy
-def test_atomic_default_adopts_legacy_dir(spark, tmp_path_factory, raw_rows):
-    """Flipping a deployment to the (now default) atomic sink over an
-    out_dir written by the old table-by-table path must adopt the legacy
-    rows: they stay visible to snapshot readers AND to the duplicate probe
-    (re-delivered legacy blocks append nothing)."""
-    from chainweb_data_spark.streaming.publish import read_manifest, read_published
-
-    base = str(tmp_path_factory.mktemp("adopt"))
-    feed = os.path.join(base, "feed")
-    out = os.path.join(base, "tables")
-    _write_feed(raw_rows, feed, 2)
-
-    # legacy run: non-atomic, first chunk only
-    legacy_feed = os.path.join(base, "feed1")
-    os.makedirs(legacy_feed)
-    with open(os.path.join(feed, "feed_000.json")) as f:
-        first = f.read()
-    with open(os.path.join(legacy_feed, "feed_000.json"), "w") as f:
-        f.write(first)
-    q = listen_stream(spark, legacy_feed, out,
-                      checkpoint_dir=os.path.join(base, "ckpt-legacy"),
-                      event_min_height=ACTIVATION, atomic=False)
-    q.awaitTermination(300)
-    legacy_blocks = spark.read.parquet(os.path.join(out, "blocks.parquet")).count()
-    assert legacy_blocks > 0
-
-    # atomic run over the FULL feed (chunk 0 re-delivered + chunk 1 new)
-    q2 = listen_stream(spark, feed, out,
-                       checkpoint_dir=os.path.join(base, "ckpt-atomic"),
-                       event_min_height=ACTIVATION)  # default: atomic
-    q2.awaitTermination(300)
-
-    assert read_manifest(out)["version"] >= 1
-    raw = spark.createDataFrame(
-        [(r["header"], r["powHash"], r["payload"]) for r in raw_rows], RAW_SCHEMA
-    )
-    expected = payload_to_tables(raw, event_min_height=ACTIVATION)
-    for name, exp_raw in expected.items():
-        got = read_published(spark, out, name)
-        pk = list(TABLE_PKS[name])
-        exp = exp_raw.dropDuplicates(pk)
-        assert got is not None and got.count() == exp.count(), (
-            f"{name}: {0 if got is None else got.count()} != {exp.count()}"
-        )
-        # adoption kept the probe honest: no PK appears twice
-        assert got.count() == got.dropDuplicates(pk).count(), f"{name}: dup PKs"
 
 
 def test_orphan_twins_coexist(spark, raw_rows):

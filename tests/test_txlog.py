@@ -107,12 +107,11 @@ def test_optimistic_concurrency_rebases(spark, tmp_path):
         calls["n"] += 1
         if calls["n"] == 1:
             # the OTHER writer lands the same version first (disjoint table)
-            base = read_manifest(out_dir)
             real_write(
                 out_dir,
                 {
-                    "version": base["version"] + 1,
-                    "tables": {**base["tables"], "raced": ["r.parquet"]},
+                    "version": read_manifest(out_dir)["version"] + 1,
+                    "add": {"raced": ["r.parquet"]},
                     "op": "race",
                 },
             )
@@ -131,7 +130,7 @@ def test_optimistic_concurrency_rebases(spark, tmp_path):
 
     # direct double-commit of one version is refused, never clobbered
     with pytest.raises(ConcurrentWriteError):
-        real_write(out, {"version": m["version"], "tables": m["tables"]})
+        real_write(out, {"version": m["version"], "add": {"t": ["x.parquet"]}})
 
 
 def test_file_skipping_by_footer_stats(spark, tmp_path):
@@ -163,32 +162,6 @@ def test_file_skipping_by_footer_stats(spark, tmp_path):
     assert loose.count() == 300
 
 
-def test_legacy_full_manifests_still_resolve(spark, tmp_path):
-    """A directory written by the v5 full-rewrite manifest (every v<N>.json
-    a complete snapshot, CURRENT authoritative) reads unchanged, and new
-    commits append deltas on top of it."""
-    out = str(tmp_path / "t6")
-    _batch(spark, 0, 10).write.parquet(os.path.join(out, "t.parquet"))
-    files = sorted(
-        f
-        for f in os.listdir(os.path.join(out, "t.parquet"))
-        if not f.startswith(("_", "."))
-    )
-    mdir = os.path.join(out, "_manifest")
-    os.makedirs(mdir)
-    for v in (1, 2):  # old format: full snapshot, no ts/op
-        with open(os.path.join(mdir, "v%09d.json" % v), "w") as f:
-            json.dump({"version": v, "tables": {"t": files if v == 2 else []}}, f)
-    with open(os.path.join(mdir, "CURRENT"), "w") as f:
-        f.write("v%09d.json" % 2)
-
-    assert read_published(spark, out, "t").count() == 10
-    assert history(out)[1]["kind"] == "legacy"
-    publish_batch(spark, {"t": _batch(spark, 10, 20)}, out, pks=PK)
-    assert read_manifest(out)["version"] == 3
-    assert read_published(spark, out, "t").count() == 20
-
-
 def test_vacuum_horizon_bounds_time_travel(spark, tmp_path):
     out = str(tmp_path / "t7")
     publish_batch(spark, {"t": _batch(spark, 0, 10)}, out, pks=PK)
@@ -202,7 +175,7 @@ def test_vacuum_horizon_bounds_time_travel(spark, tmp_path):
         out,
         {
             "version": v_both + 1,
-            "tables": {"t": [old_files[-1]]},
+            "remove": {"t": old_files[:-1]},
             "op": "shrink",
         },
     )
@@ -354,10 +327,9 @@ def test_expire_files_is_metadata_only(spark, tmp_path):
 
 
 def test_vacuum_never_touches_a_logless_directory(spark, tmp_path):
-    """A directory with NO commit log (a legacy table written by the
-    non-atomic path, awaiting ensure_manifest adoption) must survive
-    vacuum untouched: an empty live set there means 'nothing published',
-    not 'everything is garbage'."""
+    """A directory with NO commit log must survive vacuum untouched: an
+    empty live set there means 'nothing published', not 'everything is
+    garbage'."""
     out = str(tmp_path / "legacy")
     _batch(spark, 0, 10).write.parquet(os.path.join(out, "t.parquet"))
     assert vacuum(out) == []
@@ -775,7 +747,7 @@ def test_publish_commits_delta_directly_and_returns_commit_record(
     checkpoint versions (readers are owed a full snapshot there)."""
     out = str(tmp_path / "dd")
     rec = publish_batch(spark, {"t": _batch(spark, 0, 10)}, out, pks=PK)
-    assert rec["op"] == "publish" and rec["version"] == 2  # v1 = adopt
+    assert rec["op"] == "publish" and rec["version"] == 2  # v1 = create
     assert set(rec["add"]) == {"t"} and rec["add"]["t"] >= 1
     c = pub._load_commit(out, 2)
     assert "tables" not in c and "ckpt" not in c and "remove" not in c
@@ -794,3 +766,29 @@ def test_publish_commits_delta_directly_and_returns_commit_record(
                 "add": {"t": ["bogus.parquet"]},
             },
         )
+
+
+def test_publish_after_zorder_keeps_every_row(spark, tmp_path):
+    """rewrite_zordered keeps a bucketed table's bucket directories, so a
+    later publish (which always stages into them) never puts bucket
+    directories beside flat files — a layout mix that drops rows from the
+    snapshot read."""
+    from pyspark.sql import functions as F
+
+    from chainweb_data_spark.sources.maintenance import rewrite_zordered
+
+    out = str(tmp_path / "zp")
+
+    def bucketed(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id"), (F.col("id") % 2).alias("height_bucket")
+        )
+
+    publish_batch(spark, {"t": bucketed(0, 20)}, out, pks=PK)
+    rewrite_zordered(spark, out, "t", ["id"], target_files=2)
+    assert all(
+        f.startswith("height_bucket=") for f in read_manifest(out)["tables"]["t"]
+    )
+    publish_batch(spark, {"t": bucketed(20, 30)}, out, pks=PK)
+    got = read_published(spark, out, "t")
+    assert sorted(r["id"] for r in got.collect()) == list(range(30))

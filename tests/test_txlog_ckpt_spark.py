@@ -9,7 +9,6 @@ The load-bearing property throughout: the spark-built checkpoint is
 VALUE-IDENTICAL to the driver-built one (same rows, same order, same
 stats encoding), so every sidecar consumer works on either."""
 
-import json
 import os
 
 import pytest
@@ -512,16 +511,17 @@ def test_classify_pin_miss_separates_vacuumed_from_invisible(tmp_path):
 
 
 def test_history_reports_checkpoint_deltas(spark, tmp_path, monkeypatch):
-    """An r11 checkpoint carrying its delta must show its TRUE
-    add/remove in history(), not a phantom whole-snapshot write."""
+    """A checkpoint carrying its delta must show its TRUE add/remove in
+    history(), not a phantom whole-snapshot write."""
     out = str(tmp_path / "h")
     _grow_meta(out, pub.CHECKPOINT_EVERY + 1, seed_files=2)
     h = {e["version"]: e for e in pub.history(out)}
     ck = h[pub.CHECKPOINT_EVERY]
     assert ck["kind"] == "checkpoint"
     assert ck["added"] == 2  # one file into each of t and u
-    # v1 seed (no delta recorded) falls back to snapshot size
-    assert h[1]["added"] == 2
+    # a checkpoint written without a stated delta (the v1 seed) reports
+    # none — history reads counts from the commit JSON only
+    assert h[1]["kind"] == "checkpoint" and h[1]["added"] == 0
 
 
 def test_read_published_schema_probe_error_names_the_snapshot(
@@ -573,19 +573,8 @@ def test_spark_checkpoint_derives_table_counts_from_metadata(
     c16 = pub._load_commit(out, pub.CHECKPOINT_EVERY)
     assert "n_files_by_table" in c16, sorted(c16)
 
-    # the v32 build must take the metadata fold: bomb the fallback by
-    # requiring _store_table_counts to succeed, and fail on the
-    # mismatch warning that would re-route to the sidecar aggregate
-    real = pub._store_table_counts
-
-    def fold_or_bomb(out_dir, v):
-        counts = real(out_dir, v)
-        assert counts is not None, (
-            "metadata fold unavailable — the fallback Spark job would run"
-        )
-        return counts
-
-    monkeypatch.setattr(pub, "_store_table_counts", fold_or_bomb)
+    # the v32 build must take the metadata fold: fail on the mismatch
+    # warning that would re-route to the sidecar aggregate
     import warnings as _warnings
 
     with _warnings.catch_warnings():
@@ -607,7 +596,7 @@ def test_spark_checkpoint_derives_table_counts_from_metadata(
 
 def test_store_table_counts_matches_snapshots(tmp_path):
     """The per-table metadata fold equals the resolved snapshot at every
-    probed version (and reports None for pre-r12 sidecar ancestors)."""
+    probed version."""
     out = str(tmp_path / "stc")
     _grow_meta(out, 20, seed_files=3)
     latest = pub._latest_version(out)
@@ -621,17 +610,6 @@ def test_store_table_counts_matches_snapshots(tmp_path):
         got = pub._store_table_counts(out, v)
         assert got is not None
         assert {t: n for t, n in got.items() if n > 0} == want, v
-    # simulate a pre-r12 checkpoint ancestor: strip the field
-    mdir = os.path.join(out, "_manifest")
-    ck = pub.CHECKPOINT_EVERY
-    p = os.path.join(mdir, f"v{ck:09d}.json")
-    c = json.load(open(p))
-    if "n_files_by_table" in c:
-        del c["n_files_by_table"]
-        os.remove(p)
-        with open(p, "w") as f:
-            json.dump(c, f)
-        assert pub._store_table_counts(out, latest) is None
 
 
 def test_vacuum_spares_in_flight_ckpt_build_staging(tmp_path):
