@@ -167,9 +167,7 @@ def rewrite_zordered(
     for rebase in (False, True):
         try:
             # delta-form swap (r11): exactly {remove: the old layout,
-            # add: the z-files} — no full-snapshot hydration; a swap
-            # landing on a checkpoint boundary builds the sidecar
-            # cluster-side past CLUSTER_PATH_MIN_FILES
+            # add: the z-files} — no full-snapshot hydration
             pub._commit_delta(
                 out_dir,
                 latest + 1,
@@ -177,7 +175,6 @@ def rewrite_zordered(
                 remove={table: sorted(input_files)},
                 stats_add={table: stats},
                 op="zorder",
-                spark=spark,
             )
             pub.vacuum(out_dir, keep_versions=keep_versions, min_age_s=pub.VACUUM_GRACE_S)
             out = {"files": len(moved), "ranges": ranges}
@@ -263,7 +260,6 @@ def expire_files(
                 remove={table: sorted(drop)},
                 stats_add={},
                 op="expire",
-                spark=spark,
             )
         except pub.ConcurrentWriteError:
             if attempt == max_retries:

@@ -11,12 +11,9 @@ object-store backend (conditional PUT instead of ``os.link``
 put-if-absent, DELETE instead of ``os.remove``) can slot in WITHOUT
 touching protocol code.  The seam covers the LOG surface — commit
 JSONs, CURRENT hint, checkpoint/delta sidecars, orphan sweeps, the
-driver walk, and the executor probe/walk closures (the store object is
-pickled into them, so implementations must be picklable).  DATA files
-are written by Spark's own writers and read by path exactly as Delta
-reads data through Hadoop filesystems; a non-POSIX backend therefore
-also needs its paths to be Spark-addressable for the cluster-side
-maintenance paths (the same requirement Delta has).
+vacuum walk and the pin probe, all of which run on the driver.  DATA
+files are written by Spark's own writers and read by path exactly as
+Delta reads data through Hadoop filesystems.
 
 Three implementations:
 
@@ -45,9 +42,7 @@ import uuid
 
 
 class PosixLogStore:
-    """Commit-point primitives over shared POSIX storage.  Stateless and
-    picklable — instances ship inside executor closures (`_disk_files_df`,
-    pin probes) unchanged."""
+    """Commit-point primitives over shared POSIX storage.  Stateless."""
 
     #: scheme-less paths only; every entry point validates through this
     def validate(self, out_dir: str) -> None:
@@ -116,20 +111,12 @@ class PosixLogStore:
         )
 
     def finalize_file(self, tmp_path: str, final_path: str) -> None:
-        """Durably publish an already-staged file (a Spark- or
-        pyarrow-written sidecar part) at ``final_path``.  POSIX: fsync +
-        rename; object stores: upload + delete the stage."""
+        """Durably publish an already-staged file (a pyarrow-written
+        sidecar) at ``final_path``.  POSIX: fsync + rename; object
+        stores: upload + delete the stage."""
         with open(tmp_path, "rb") as f:
             os.fsync(f.fileno())
         os.rename(tmp_path, final_path)
-
-    def finalize_dir(self, tmp_dir: str, final_dir: str) -> None:
-        """Publish a staged DIRECTORY (multi-part sidecar) at
-        ``final_dir`` — one atomic rename on POSIX; object stores copy
-        the keys under the final prefix (their "directories" are key
-        prefixes, so per-key PUT + the commit JSON linking last
-        preserves the protocol's crash story)."""
-        os.rename(tmp_dir, final_dir)
 
     # -- reads -----------------------------------------------------------
     def read_bytes(self, path: str) -> bytes:
@@ -137,15 +124,15 @@ class PosixLogStore:
             return f.read()
 
     def read_parquet(self, path: str, columns=None, filters=None):
-        """A (possibly multi-part) log sidecar as a pyarrow Table, with
-        column pruning and row-group predicate pushdown preserved —
-        backends must keep both or per-table resolves regress to full
-        sidecar scans."""
+        """A log sidecar as a pyarrow Table (a directory-shaped one
+        reads too), with column pruning and row-group predicate
+        pushdown preserved — backends must keep both or per-table
+        resolves regress to full sidecar scans."""
         import pyarrow.parquet as pq
 
         return pq.read_table(path, columns=columns, filters=filters)
 
-    # -- namespace probes (also run INSIDE executor closures) -----------
+    # -- namespace probes ----------------------------------------------
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
 
@@ -229,17 +216,6 @@ class InMemoryLogStore:
         os.remove(tmp_path)
         self._touch(final_path)
 
-    def finalize_dir(self, tmp_dir: str, final_dir: str) -> None:
-        for root, _dirs, files in os.walk(tmp_dir):
-            for fn in files:
-                src = os.path.join(root, fn)
-                rel = os.path.relpath(src, tmp_dir)
-                with open(src, "rb") as f:
-                    self.files[os.path.join(final_dir, rel)] = f.read()
-                self._touch(os.path.join(final_dir, rel))
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        self.dirs.add(final_dir)
-
     def read_bytes(self, path: str) -> bytes:
         if path not in self.files:
             raise FileNotFoundError(path)
@@ -251,23 +227,9 @@ class InMemoryLogStore:
         # gives PosixLogStore
         import pyarrow.parquet as pq
 
-        if path in self.files:
-            table = pq.read_table(io.BytesIO(self.files[path]))
-        elif path in self.dirs or any(
-            p.startswith(path + os.sep) for p in self.files
-        ):
-            import pyarrow as pa
-
-            parts = [
-                pq.read_table(io.BytesIO(self.files[p]))
-                for p in sorted(self.files)
-                if p.startswith(path + os.sep)
-                and p.endswith(".parquet")
-                and not os.path.basename(p).startswith(("_", "."))
-            ]
-            table = pa.concat_tables(parts)
-        else:
+        if path not in self.files:
             raise FileNotFoundError(path)
+        table = pq.read_table(io.BytesIO(self.files[path]))
         if filters:
             import pyarrow.compute as pc
 

@@ -73,15 +73,13 @@ Scale properties:
   checkpoint sidecar filtered to one table (row groups prune on the
   sorted ``table`` column) and fetches stats bytes only when a
   ``where`` needs them; vacuum and pin probes read file sets only.
-- **Cluster-side paths past** :data:`CLUSTER_PATH_MIN_FILES`.
-  :func:`snapshot_files_df` scans the sidecar with Spark and ships only
-  the O(delta) commits from the driver; vacuum plans its orphan sweep as
-  a distributed-listing anti-join, ``pin_version`` probes re-readability
-  in executors, and checkpoint sidecars are derived and written by a
-  Spark job (:func:`_write_checkpoint_spark`).  ``vacuum`` /
-  ``pin_version`` / ``unpin_version`` default to :data:`AUTO`, which
-  picks the active session once the store's live-file count (free
-  metadata, :func:`_store_n_files`) crosses the threshold.
+- **One maintenance path.**  Checkpoint builds, resolves, vacuum and
+  pin probes all run on the driver over the log seam.  A checkpoint is
+  an Arrow fold of the parent sidecar (:func:`_write_checkpoint`): the
+  stats stay JSON strings, so its O(live files) driver state is Arrow
+  buffers, never Python objects.  The seam keeps every path
+  working on storage executors cannot see and on
+  :class:`~.logstore.InMemoryLogStore`.
 
 Concurrent writers rebase with CONFLICT DETECTION: a losing writer
 compares its staged files' partition directories with what the racers
@@ -95,7 +93,7 @@ unpartitioned tables conservatively re-stage on any same-table race.
 The STORAGE SEAM (Delta's LogStore move): every durability- or
 atomicity-bearing call on the LOG surface — the put-if-absent commit
 link, the CURRENT hint, sidecar writes/reads, orphan sweeps, staging
-reclamation, and the executor probe/walk closures — goes through the
+reclamation and the pin probe — goes through the
 injectable :data:`LOG_STORE` (:class:`~.logstore.PosixLogStore` by
 default), so an object-store backend (conditional PUT) slots in without
 touching protocol code; URL-scheme ``out_dir``s are refused by the POSIX
@@ -124,7 +122,7 @@ from .logstore import InMemoryLogStore, PosixLogStore  # noqa: F401
 
 #: the txlog's storage seam (r12 — Delta's LogStore move): every
 #: durability/atomicity-bearing call on the LOG surface (commit JSONs,
-#: CURRENT, sidecars, orphan sweeps, probe/walk closures) goes through
+#: CURRENT, sidecars, orphan sweeps, the pin probe) goes through
 #: this object, so an object-store backend slots in without touching
 #: protocol code.  Swap per-deployment (``publish.LOG_STORE = MyStore()``)
 #: — DATA files are still written/read by Spark by path, exactly as
@@ -145,41 +143,6 @@ CHECKPOINT_EVERY = 16
 #: per-file stats are kept for at most this many columns (footer order) to
 #: bound commit JSON size on wide tables.
 _MAX_STATS_COLUMNS = 24
-
-#: live-file count past which the maintenance consumers (vacuum,
-#: pin_version, checkpoint construction) AUTO-SELECT the cluster-side
-#: plan when a SparkSession is reachable (r11 — mechanism-not-policy
-#: with a safe default: below the threshold the dependency-free driver
-#: path is faster, above it the driver path's O(live files) dicts are
-#: exactly the state the cluster path exists to avoid; the README's
-#: 1M/4M crossover table is where the number comes from).  The count is
-#: free metadata: every checkpoint commit JSON carries ``n_files``, and
-#: :func:`_store_n_files` folds the deltas since.  Pass ``spark=None``
-#: explicitly to force the driver path, or a session to force the
-#: cluster path, regardless of size.
-CLUSTER_PATH_MIN_FILES = 1_000_000
-
-#: live-file count past which a CLUSTER-BUILT checkpoint sidecar is
-#: written as a DIRECTORY of range-partitioned part files instead of a
-#: single file (Delta's multi-part checkpoint move, r11): one writer
-#: task per ~this many rows, so checkpoint serialization stays parallel
-#: at the 10^8-file regime instead of bottlenecking on a single task's
-#: sort+write.  Readers are unchanged — pyarrow and Spark both read a
-#: parquet directory natively, and the global (table, file) sort order
-#: is preserved across parts by range partitioning.
-SIDECAR_ROWS_PER_PART = 8_000_000
-
-
-class _AutoSpark:
-    """Sentinel default for ``spark=`` parameters: resolve to the active
-    SparkSession iff the store's live-file count crosses
-    :data:`CLUSTER_PATH_MIN_FILES` (see :func:`_resolve_spark_arg`)."""
-
-    def __repr__(self) -> str:  # pragma: no cover - repr cosmetics
-        return "AUTO"
-
-
-AUTO = _AutoSpark()
 
 #: how many snapshots BEFORE the newest the maintenance ops
 #: (compact_published, rewrite_zordered, expire_files) retain when they
@@ -225,32 +188,6 @@ class ConcurrentWriteError(RuntimeError):
     Raised from the put-if-absent commit; callers re-read the log and
     rebase (``publish_batch`` retries automatically, ``compact_published``
     rebases once or abandons — compaction is an optimization)."""
-
-
-def _warn_executor_blind(op: str, out_dir: str) -> None:
-    """The one degradation message for every AUTO-selected cluster path
-    abandoned because executors cannot see the store (vacuum, pin) —
-    kept in a helper so the polarity/wording cannot drift per site."""
-    import warnings
-
-    warnings.warn(
-        f"{op}: {out_dir!r} is not visible to executors; the "
-        "auto-selected cluster path was abandoned and the driver path "
-        "ran instead — expect O(live files) driver work at this store's "
-        "size",
-        RuntimeWarning,
-        stacklevel=3,
-    )
-
-
-class StorageVisibilityError(RuntimeError):
-    """The cluster-side path found files the DRIVER can see but the
-    executors' distributed walk cannot — ``out_dir`` is not on shared
-    storage.  Raised when the caller passed an explicit ``spark``
-    session; when :data:`AUTO` picked the session on its own, consumers
-    degrade to the driver path with a warning instead (the pre-r11
-    default behavior must not turn into a hard error just because a
-    store crossed the size threshold)."""
 
 
 # ---------------------------------------------------------------------------
@@ -355,9 +292,9 @@ def _write_sidecar_parquet(mdir: str, name: str, table) -> None:
     (pyarrow streams the parquet — no in-memory double buffer), then
     durably publish through the seam's ``finalize_file`` (POSIX:
     fsync + same-dir rename).  Shared by the checkpoint and delta-spill
-    writers so the format knobs — zstd, the 262 144-row group bound that
-    keeps later cluster-side scans parallel and the sorted key columns'
-    per-group min/max pruning fine-grained — cannot drift apart.  A
+    writers so the format knobs — zstd and the 262 144-row group bound
+    that keeps the sorted key columns' per-group min/max pruning
+    fine-grained — cannot drift apart.  A
     failed stage never outlives the call."""
     import pyarrow.parquet as pq
 
@@ -440,10 +377,7 @@ def _hydrate_delta(
     footer min/max and :func:`_table_files` stays O(that table).
     ``with_stats=False`` column-prunes the stats bytes — the sidecar's
     dominant payload — for consumers that only fold file SETS (the same
-    pruning every checkpoint-sidecar reader gets).  Driver folds are
-    the small-store/per-table paths; the cluster resolve
-    (:func:`_snapshot_df`) reads the same sidecar with Spark and never
-    hydrates it here."""
+    pruning every checkpoint-sidecar reader gets)."""
     if "delta" not in commit:
         return commit
     path = os.path.join(_manifest_path(out_dir), commit["delta"])
@@ -480,50 +414,110 @@ def _hydrate_delta(
     return out
 
 
-def _write_checkpoint_sidecar(
-    mdir: str, version: int, tables: dict, stats: dict
-) -> tuple[str, int]:
-    """Write the O(live files) half of a checkpoint as a zstd parquet
-    sidecar — one row per live file: ``(table, file, stats)`` with stats
-    as a compact JSON string (heterogeneous per table, so a string column
-    beats a union of typed structs; it dictionary-encodes and compresses
-    far better than the file-repeated JSON object form, and readers that
-    don't want it column-prune it away entirely).  Durable before return
-    (fsync + same-dir rename); named with the version AND a uuid so
-    racing writers of the same version cannot collide — the loser's
-    sidecar becomes an orphan that vacuum reclaims.  Returns
-    ``(sidecar name, n_files)``."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+#: the checkpoint sidecar's columns: one row per live file, stats as a
+#: compact JSON string (heterogeneous per table, so a string column beats
+#: a union of typed structs; readers that don't want it column-prune it)
+_SIDECAR_SCHEMA = "table", "file", "stats"
 
-    t_col: list[str] = []
-    f_col: list[str] = []
-    s_col: list[str | None] = []
-    for t in sorted(tables):
-        per_file = stats.get(t, {})
-        for rel in tables[t]:
-            t_col.append(t)
-            f_col.append(rel)
-            s = per_file.get(rel)
-            s_col.append(
-                json.dumps(s, separators=(",", ":")) if s else None
+
+def _write_checkpoint(
+    out_dir: str,
+    version: int,
+    add: dict[str, list],
+    remove: dict[str, list],
+    stats_add: dict[str, dict],
+) -> dict:
+    """Build checkpoint ``version``'s sidecar — the one checkpoint
+    builder, an Arrow fold: read the parent checkpoint's sidecar (stats
+    stay JSON strings, never parsed), fold the ≤15 deltas since it plus
+    this commit's own into one removed set and one added map, drop the
+    removed rows with ``is_in``, append the added ones and sort by
+    (table, file).  v1 is the same fold over an empty parent.  Durable
+    before return, named with the version AND a uuid so racing writers
+    of the same version cannot collide — the loser's sidecar becomes an
+    orphan that vacuum reclaims.  Returns the checkpoint's commit fields
+    (``ckpt``, ``n_files``, ``table_names``, ``n_files_by_table``), all
+    taken from the table written."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = pa.schema([(c, pa.string()) for c in _SIDECAR_SCHEMA])
+    mdir = _manifest_path(out_dir)
+    removed: set[tuple[str, str]] = set()
+    added: dict[tuple[str, str], str | None] = {}
+
+    def fold(delta: dict) -> None:
+        # file names are never reused, so a remove either cancels an add
+        # since the parent checkpoint or drops a parent row
+        for t, rels in delta.get("remove", {}).items():
+            for rel in rels:
+                if (t, rel) in added:
+                    del added[(t, rel)]
+                else:
+                    removed.add((t, rel))
+        st = delta.get("stats_add", {})
+        for t, rels in delta.get("add", {}).items():
+            per = st.get(t, {})
+            for rel in rels:
+                s = per.get(rel)
+                added[(t, rel)] = (
+                    json.dumps(s, separators=(",", ":")) if s else None
+                )
+
+    if version == 1:
+        snap = schema.empty_table()
+    else:
+        ckpt, deltas = _chain(out_dir, version - 1)
+        snap = LOG_STORE.read_parquet(
+            os.path.join(mdir, ckpt["ckpt"]), columns=list(_SIDECAR_SCHEMA)
+        ).cast(schema)
+        for delta in deltas:
+            fold(_hydrate_delta(out_dir, delta))
+    fold({"add": add, "remove": remove, "stats_add": stats_add})
+    if removed:
+        by_table: dict[str, list] = {}
+        for t, rel in removed:
+            by_table.setdefault(t, []).append(rel)
+        drop = None
+        for t, rels in by_table.items():
+            hit = pc.and_(
+                pc.equal(snap["table"], t),
+                pc.is_in(snap["file"], value_set=pa.array(rels, pa.string())),
             )
+            drop = hit if drop is None else pc.or_(drop, hit)
+        snap = snap.filter(pc.invert(drop))
+    if added:
+        snap = pa.concat_tables(
+            [
+                snap,
+                pa.table(
+                    [
+                        pa.array([t for t, _ in added], pa.string()),
+                        pa.array([rel for _, rel in added], pa.string()),
+                        pa.array(list(added.values()), pa.string()),
+                    ],
+                    schema=schema,
+                ),
+            ]
+        ).sort_by([("table", "ascending"), ("file", "ascending")])
     name = f"ckpt-v{version}-{uuid.uuid4().hex[:12]}.parquet"
-    # durable before the commit link, via the storage seam (this is the
-    # DRIVER builder — the small-store path; the cluster builder stages
-    # via Spark and finalizes separately)
-    _write_sidecar_parquet(
-        mdir,
-        name,
-        pa.table(
-            {
-                "table": pa.array(t_col, pa.string()),
-                "file": pa.array(f_col, pa.string()),
-                "stats": pa.array(s_col, pa.string()),
-            }
-        ),
+    LOG_STORE.makedirs(mdir)
+    _write_sidecar_parquet(mdir, name, snap)
+    counts = pc.value_counts(snap["table"])
+    by_t = dict(
+        zip(
+            counts.field("values").to_pylist(),
+            counts.field("counts").to_pylist(),
+        )
     )
-    return name, len(f_col)
+    return {
+        "ckpt": name,
+        "n_files": snap.num_rows,
+        # table NAMES and counts are O(dozens): a reader learns the
+        # snapshot's tables without scanning the O(live files) sidecar
+        "table_names": sorted(by_t),
+        "n_files_by_table": {t: by_t[t] for t in sorted(by_t)},
+    }
 
 
 def _read_checkpoint_sidecar(
@@ -639,48 +633,6 @@ def _latest_version(out_dir: str) -> int:
     return v
 
 
-def _store_n_files(out_dir: str, version: int) -> int | None:
-    """The snapshot's live-file COUNT at ``version`` from commit metadata
-    alone (:func:`_store_table_counts`), never a file-list scan.
-    ``None`` when nothing is committed."""
-    if version < 1:
-        return None
-    return sum(_store_table_counts(out_dir, version).values())
-
-
-def _store_table_counts(out_dir: str, version: int) -> dict[str, int]:
-    """Per-table live-file counts at ``version`` from commit metadata
-    alone: the checkpoint's ``n_files_by_table`` plus what each delta
-    since states it added/removed — O(deltas × tables), no file-list
-    scan."""
-    if version < 1:
-        return {}
-    ckpt, deltas = _chain(out_dir, version)
-    counts = {t: int(n) for t, n in ckpt["n_files_by_table"].items()}
-    for c in deltas:
-        added, removed = _delta_counts(c)
-        for t, n in added.items():
-            counts[t] = counts.get(t, 0) + n
-        for t, n in removed.items():
-            counts[t] = counts.get(t, 0) - n
-    return counts
-
-
-def _resolve_spark_arg(spark, out_dir: str):
-    """Resolve a consumer's ``spark`` argument: :data:`AUTO` (the
-    default) picks the active SparkSession when the store's live-file
-    count has crossed :data:`CLUSTER_PATH_MIN_FILES` — the point where
-    the driver path's O(live files) Python dicts become the bottleneck —
-    and the driver path otherwise; an explicit session or ``None``
-    passes through untouched (the caller's override)."""
-    if not isinstance(spark, _AutoSpark):
-        return spark
-    n = _store_n_files(out_dir, _latest_version(out_dir))
-    if n is not None and n >= CLUSTER_PATH_MIN_FILES:
-        return SparkSession.getActiveSession()
-    return None
-
-
 #: resolved snapshots keyed by (abspath, version).  A committed version is
 #: immutable (put-if-absent commit files are never rewritten), so entries
 #: never go stale; the cache turns the single-writer hot loop's resolve
@@ -776,431 +728,6 @@ def _snapshot_files(out_dir: str, version: int) -> dict[str, list]:
     return {t: sorted(fs) for t, fs in base.items() if fs}
 
 
-def snapshot_files_df(
-    spark: SparkSession, out_dir: str, version: int
-) -> DataFrame:
-    """The snapshot's live file SET at ``version`` as a DataFrame of
-    ``(table string, file string)`` — the CLUSTER-SIDE resolve (r10,
-    closing the module's former driver-dict residual): the checkpoint
-    sidecar is scanned by Spark where it lies, and only the O(delta)
-    commits since it ship from the driver (as a broadcast anti-join set
-    plus a union), so resolution never materializes O(live files) Python
-    state no matter how many files are live."""
-    return _snapshot_df(spark, out_dir, version, with_stats=False)
-
-
-def _snapshot_df(
-    spark: SparkSession,
-    out_dir: str,
-    version: int,
-    with_stats: bool,
-    base_cache: dict | None = None,
-) -> DataFrame:
-    """The shared cluster-side resolve behind :func:`snapshot_files_df`
-    (file sets) and :func:`_write_checkpoint_spark` (``with_stats=True``
-    adds the per-file stats-JSON string column, the sidecar's dominant
-    payload — only the checkpoint writer wants those bytes moved).
-
-    ``base_cache`` (r12): a caller resolving MANY versions that share a
-    checkpoint ancestor (vacuum over retained + pinned snapshots) passes
-    a dict; the ancestor's sidecar scan is then built once, PERSISTED,
-    and shared — K resolves cost one sidecar scan per distinct ancestor
-    instead of K.  The caller owns unpersisting the cached DataFrames."""
-    from pyspark.sql import functions as F
-
-    cols = ["table", "file"] + (["stats"] if with_stats else [])
-    schema = "table string, file string" + (
-        ", stats string" if with_stats else ""
-    )
-    ckpt, deltas = _chain(out_dir, version)
-    v_ckpt = version - len(deltas)
-    if base_cache is not None and v_ckpt in base_cache:
-        base = base_cache[v_ckpt]
-    else:
-        # explicit schema: the sidecar layout is fixed by protocol, and
-        # letting Spark infer it re-reads the footer on every resolve
-        # (~0.7 s at a 1M-row sidecar, pure overhead)
-        base = spark.read.schema(
-            "table string, file string, stats string"
-        ).parquet(
-            os.path.join(_manifest_path(out_dir), ckpt["ckpt"])
-        ).select(*cols)
-        if base_cache is not None:
-            base = base.persist()
-            base_cache[v_ckpt] = base
-    # fold the delta chain driver-side (it is O(changed files) by the
-    # commit protocol): file names are never reused, so the net effect is
-    # one removed-set anti-join plus one added-rows union.  stats_add
-    # keys are a subset of the same delta's add (enforced at the
-    # _write_manifest choke point), so added rows carry their stats.
-    removed: set[tuple] = set()
-    added: dict[tuple, str | None] = {}
-    for delta in deltas:
-        for t, rels in delta.get("remove", {}).items():
-            for rel in rels:
-                key = (t, rel)
-                if key in added:
-                    del added[key]
-                else:
-                    removed.add(key)
-        st = delta.get("stats_add", {})
-        for t, rels in delta.get("add", {}).items():
-            per = st.get(t, {})
-            for rel in rels:
-                s = per.get(rel)
-                added[(t, rel)] = (
-                    json.dumps(s, separators=(",", ":")) if s else None
-                )
-    spill_paths = [
-        os.path.join(_manifest_path(out_dir), d["delta"])
-        for d in deltas
-        if "delta" in d
-    ]
-    if spill_paths:
-        # SPILLED mega-deltas (r12): their file lists live in parquet
-        # sidecars, read here by Spark where they lie — the driver ships
-        # only the inline deltas' rows, never the spilled lists.  File
-        # names are never reused (commit protocol), so a remove always
-        # postdates its file's add and ANY interleaving of inline and
-        # spilled deltas reduces to set algebra: (base ∪ adds) \ removes.
-        sp = spark.read.schema(
-            "action string, table string, file string, stats string"
-        ).parquet(*spill_paths)
-        all_rm = sp.filter(F.col("action") == "remove").select(
-            "table", "file"
-        )
-        if removed:
-            all_rm = all_rm.union(
-                spark.createDataFrame(
-                    sorted(removed), "table string, file string"
-                )
-            )
-        adds = sp.filter(F.col("action") == "add").select(*cols)
-        if added:
-            if with_stats:
-                add_rows = [
-                    (t, f, s) for (t, f), s in sorted(added.items())
-                ]
-            else:
-                add_rows = sorted(added)
-            adds = adds.unionByName(
-                spark.createDataFrame(add_rows, schema)
-            )
-        # removes can be table-sized here (that's what a mega-rewrite
-        # is), so no broadcast hint — AQE picks the join strategy
-        base = base.join(all_rm, ["table", "file"], "left_anti")
-        return base.unionByName(
-            adds.join(all_rm, ["table", "file"], "left_anti")
-        )
-    if removed:
-        rm_df = spark.createDataFrame(
-            sorted(removed), "table string, file string"
-        )
-        base = base.join(F.broadcast(rm_df), ["table", "file"], "left_anti")
-    if added:
-        if with_stats:
-            add_rows = [(t, f, s) for (t, f), s in sorted(added.items())]
-        else:
-            add_rows = sorted(added)
-        base = base.unionByName(spark.createDataFrame(add_rows, schema))
-    return base
-
-
-def _write_checkpoint_spark(
-    spark: SparkSession,
-    out_dir: str,
-    version: int,
-    add: dict[str, list],
-    remove: dict[str, list],
-    stats_add: dict[str, dict],
-    op: str,
-    pin: dict | None = None,
-    est_rows: int | None = None,
-) -> None:
-    """Write checkpoint ``version`` with the snapshot derived and
-    serialized CLUSTER-SIDE (r11 — closing the last O(live files) driver
-    path): the parent snapshot comes from :func:`_snapshot_df` (previous
-    sidecar scanned by Spark + the O(delta) commit chain), this commit's
-    own add/remove folds in the same way, and the new sidecar parquet is
-    written by a Spark job — the driver ships only O(delta) rows and
-    never hydrates a file list.  Row order (sorted by table, file) and
-    stats encoding match :func:`_write_checkpoint_sidecar` exactly, so
-    the two builders are byte-comparable and every sidecar reader works
-    on either.  ``n_files`` / ``table_names`` for the O(1) commit JSON
-    come from the written file's own parquet footer (no second job).
-    Past :data:`SIDECAR_ROWS_PER_PART` estimated rows the sidecar is a
-    DIRECTORY of range-partitioned part files (Delta's multi-part
-    checkpoint): writer tasks serialize in parallel, readers (pyarrow
-    dataset, Spark) consume the directory natively, and the global
-    sort order survives across parts.
-
-    The sidecar is durable (fsync + rename into ``_manifest``) BEFORE
-    the commit JSON links — same protocol as the driver builder: a crash
-    or a lost commit race leaves an orphan sidecar that :func:`vacuum`
-    reclaims by its embedded version; the staging dir lives under
-    ``_staging`` where vacuum already sweeps crashed builds."""
-    from pyspark.sql import functions as F
-
-    df = _snapshot_df(spark, out_dir, version - 1, with_stats=True)
-    rm = sorted((t, rel) for t, rels in remove.items() for rel in rels)
-    if rm:
-        rm_df = spark.createDataFrame(rm, "table string, file string")
-        df = df.join(F.broadcast(rm_df), ["table", "file"], "left_anti")
-    add_rows = sorted(
-        (
-            t,
-            rel,
-            json.dumps(stats_add[t][rel], separators=(",", ":"))
-            if stats_add.get(t, {}).get(rel)
-            else None,
-        )
-        for t, rels in add.items()
-        for rel in rels
-    )
-    if add_rows:
-        df = df.unionByName(
-            spark.createDataFrame(
-                add_rows, "table string, file string, stats string"
-            )
-        )
-    # the target version rides in the staging dir name so vacuum's
-    # staging sweep can recognize an IN-FLIGHT checkpoint build (version
-    # ahead of the newest commit) and give it the same full grace window
-    # as an in-flight sidecar — unlike an orphaned data stage, rmtree'ing
-    # a live build mid-Spark-job fails the checkpoint commit
-    staging = os.path.join(
-        out_dir, "_staging", f"ckpt-build-v{version}-{uuid.uuid4().hex}"
-    )
-    # MULTI-PART past SIDECAR_ROWS_PER_PART (Delta's multi-part
-    # checkpoint move): range-partitioned on the sort key, so the global
-    # (table, file) order is preserved across part files and every
-    # writer task serializes ~one part's rows — at 10^8 files a single
-    # repartition(1) task's sort+write would be the checkpoint's wall
-    if est_rows is None:  # the gate in _commit_delta passes its count
-        est_rows = (_store_n_files(out_dir, version - 1) or 0) + sum(
-            len(fs) for fs in add.values()
-        )
-    n_parts = max(1, min(256, -(-est_rows // SIDECAR_ROWS_PER_PART)))
-    if n_parts == 1:
-        shaped = df.repartition(1)
-    else:
-        shaped = df.repartitionByRange(n_parts, "table", "file")
-    (
-        shaped.sortWithinPartitions("table", "file")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        # bounded row groups (same rationale as the driver builder's
-        # row_group_size): one giant group would make later sidecar
-        # scans single-task
-        .option("parquet.block.size", 16 * 1024 * 1024)
-        .parquet(staging)
-    )
-    import pyarrow.parquet as pq
-
-    store = LOG_STORE
-    parts = [
-        f
-        for f in store.listdir(staging)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    if not parts:  # pragma: no cover - the write above always emits one
-        store.rmtree(staging)
-        raise RuntimeError("checkpoint build wrote no part files")
-    # n_files from the part footers (free — no data read or extra job)
-    n_files = 0
-    for p in parts:
-        src = os.path.join(staging, p)
-        n_files += pq.ParquetFile(src).metadata.num_rows
-    mdir = _manifest_path(out_dir)
-    store.makedirs(mdir)
-    name = f"ckpt-v{version}-{uuid.uuid4().hex[:12]}.parquet"
-    if len(parts) == 1:
-        # single-file shape: byte-compatible with the driver builder;
-        # finalize_file carries the fsync+rename durability
-        store.finalize_file(
-            os.path.join(staging, parts[0]), os.path.join(mdir, name)
-        )
-        store.rmtree(staging)
-    else:
-        # directory shape: the staging dir itself becomes the sidecar
-        # (one atomic rename on POSIX; _SUCCESS/hidden files stay —
-        # pyarrow's dataset discovery and Spark both ignore '_'/'.'
-        # prefixes).  Durability: fsync each part before the move
-        for p in parts:
-            store.finalize_file(
-                os.path.join(staging, p), os.path.join(staging, p)
-            )
-        store.finalize_dir(staging, os.path.join(mdir, name))
-
-    path = os.path.join(mdir, name)
-    # table NAMES + per-table counts: folded from free commit metadata
-    # (parent checkpoint's n_files_by_table + the delta chain + this
-    # commit's own add/remove) — no extra Spark job, no driver
-    # hydration.  Cross-checked against the written sidecar's footer
-    # row count; a mismatch (protocol violation: a remove naming a
-    # non-live file) falls back to ONE aggregate job over the sidecar
-    # (a pyarrow unique() would materialize the whole O(live files)
-    # column on the driver, the exact state this builder exists to
-    # avoid).
-    counts = _store_table_counts(out_dir, version - 1)
-    for t, fs in add.items():
-        counts[t] = counts.get(t, 0) + len(fs)
-    for t, fs in remove.items():
-        counts[t] = counts.get(t, 0) - len(fs)
-    counts = {t: c for t, c in counts.items() if c > 0}
-    if sum(counts.values()) != n_files:
-        import warnings
-
-        warnings.warn(
-            f"checkpoint v{version}: per-table metadata fold "
-            f"({sum(counts.values())} files) disagrees with the "
-            f"written sidecar ({n_files}) — a delta commit removed "
-            "a file that was not live; deriving table counts from "
-            "the sidecar instead",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        counts = {
-            r["table"]: int(r["n"])
-            for r in spark.read.schema(
-                "table string, file string, stats string"
-            )
-            .parquet(path)
-            .groupBy("table")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    table_names = sorted(counts)
-    manifest = {
-        "version": version,
-        "op": op,
-        "ckpt": name,
-        "n_files": int(n_files),
-        "table_names": table_names,
-        "n_files_by_table": {t: counts[t] for t in table_names},
-        # the checkpoint's OWN delta rides along (O(changed files) JSON):
-        # racing writers' conflict detection (_added_between) then never
-        # hydrates two full snapshots just because a checkpoint landed
-        # inside the race window
-        "add": {t: sorted(fs) for t, fs in add.items() if fs},
-        "remove": {t: sorted(fs) for t, fs in remove.items() if fs},
-    }
-    if pin is not None:
-        manifest["pin"] = pin
-    _write_manifest(out_dir, manifest)
-
-
-def _executor_visible(spark: SparkSession, path: str) -> bool:
-    """True when an EXECUTOR can see ``path`` — one tiny single-partition
-    job.  The common non-shared-storage failure is NOT the walk
-    cross-check (which sees an empty inventory) but executors being
-    unable to read the checkpoint sidecar at all: ``snapshot_files_df``'s
-    scan then throws an opaque executor ``FileNotFoundException`` before
-    any cross-check runs.  Probing first lets :data:`AUTO` degrade to the
-    driver path with the documented warning, and explicit ``spark=``
-    raise a :class:`StorageVisibilityError` that names the contract
-    instead of a Java stack trace."""
-
-    store = LOG_STORE  # pickled into the executor closure
-
-    def _probe(p: str) -> bool:
-        return store.exists(p)
-
-    return bool(
-        spark.sparkContext.parallelize([path], 1).map(_probe).collect()[0]
-    )
-
-
-def _disk_files_df(
-    spark: SparkSession, out_dir: str, tables: list[str]
-) -> DataFrame:
-    """One row per data file currently ON DISK under the given tables'
-    directories: ``(table, file, mtime)``.  The driver lists only each
-    table directory's immediate children (O(partition directories)); the
-    per-directory recursive walks run in EXECUTORS via ``mapInPandas`` —
-    the distributed-listing shape Delta's vacuum uses.  Requires storage
-    visible to executors, which holds for local mode and for any shared
-    filesystem / object store a real cluster would run against (the
-    caller cross-checks the inventory against a driver probe and fails
-    loudly when the walk sees nothing the driver can see —
-    :func:`_vacuum_data_spark`).
-
-    Hidden (``_``/``.``-prefixed) SUBDIRECTORIES are walked — only file
-    NAMES filter, exactly like the driver vacuum's walk — so a crashed
-    non-staged writer's ``_temporary`` tree reclaims identically on both
-    paths (r11, closing the one reclamation divergence)."""
-    store = LOG_STORE  # driver seeding AND the executor walk closures
-    seeds: list[tuple] = []
-    for t in tables:
-        tdir = os.path.join(out_dir, f"{t}.parquet")
-        if not store.isdir(tdir):
-            continue
-        seeds.append((t, ""))  # the directory's own immediate files
-        for e in store.listdir(tdir):
-            if store.isdir(os.path.join(tdir, e)):
-                seeds.append((t, e))
-    schema = "table string, file string, mtime double"
-    if not seeds:
-        return spark.createDataFrame([], schema)
-    root = os.path.abspath(out_dir)
-
-    def _walk(batches):
-        import os as _os
-
-        import pandas as pd
-
-        for pdf in batches:
-            t_out: list[str] = []
-            f_out: list[str] = []
-            m_out: list[float] = []
-
-            def emit(t: str, tdir: str, full: str) -> None:
-                try:
-                    m = store.getmtime(full)
-                except OSError:
-                    return  # vanished concurrently
-                t_out.append(t)
-                f_out.append(_os.path.relpath(full, tdir))
-                m_out.append(m)
-
-            for t, sub in zip(pdf["table"], pdf["sub"]):
-                tdir = _os.path.join(root, f"{t}.parquet")
-                if sub == "":
-                    try:
-                        entries = store.listdir(tdir)
-                    except OSError:
-                        continue
-                    for e in entries:
-                        full = _os.path.join(tdir, e)
-                        if e.startswith(("_", ".")) or store.isdir(full):
-                            continue  # subdirs are their own seeds
-                        emit(t, tdir, full)
-                else:
-                    for wroot, _dirs, files in store.walk(
-                        _os.path.join(tdir, sub)
-                    ):
-                        for fname in files:
-                            if fname.startswith(("_", ".")):
-                                continue
-                            emit(t, tdir, _os.path.join(wroot, fname))
-            yield pd.DataFrame(
-                {"table": t_out, "file": f_out, "mtime": m_out}
-            )
-
-    # half the cores, not all: each seed partition is a statfs-bound walk
-    # of one directory, and scheduling 32 tiny tasks cost ~2 s of fixed
-    # overhead at 1M files where 16 fatter ones amortize it (r11 trim);
-    # on a real cluster the walk is I/O-bound and extra slots don't help
-    n_part = max(
-        1, min(len(seeds), spark.sparkContext.defaultParallelism // 2 or 1)
-    )
-    return (
-        spark.createDataFrame(seeds, "table string, sub string")
-        .repartition(n_part)
-        .mapInPandas(_walk, schema)
-    )
-
-
 def read_manifest(out_dir: str, version: int | None = None) -> dict:
     """The snapshot at ``version`` (default: newest): ``{"version": N,
     "tables": {name: [relative files]}, "stats": {name: {file: {col:
@@ -1286,26 +813,22 @@ def _attach_delta(
 def _write_manifest(out_dir: str, manifest: dict) -> None:
     """Commit ``manifest`` as version N — the single commit choke point.
 
-    Three accepted shapes:
+    Two accepted shapes, each with the commit's own ``add`` /
+    ``remove`` (+ ``stats_add``) lists:
 
-    - CHECKPOINT form (``tables`` [+ ``stats``], checkpoint versions —
-      v1 and every ``CHECKPOINT_EVERY``-th — only): the target snapshot,
-      written to the parquet sidecar by the driver, plus the commit's
-      own delta when the caller states it.
-    - DELTA form (``add`` and/or ``remove`` [+ ``stats_add``], no
-      ``tables`` — the hot path, :func:`_commit_delta`): the caller
-      states exactly which files it added/removed and the record is
-      written directly, O(changed files) with NO parent-snapshot
-      hydration or set-diff.  ``stats_add`` is filtered to the files in
-      ``add`` (the protocol invariant the cluster-side resolves rely
-      on).  Refused on checkpoint versions (those owe readers a full
-      snapshot).
-    - PRE-BUILT CHECKPOINT form (``ckpt`` + ``n_files`` +
-      ``table_names``, no ``tables`` — :func:`_write_checkpoint_spark`):
-      the sidecar parquet was already staged and made durable by a
-      Spark job; only the O(1) commit JSON (with the pin fold) is
-      written here.  Refused OFF checkpoint versions.
+    - DELTA form (no ``ckpt`` — the hot path, :func:`_commit_delta`):
+      the record is written directly, O(changed files) with NO
+      parent-snapshot hydration or set-diff.  ``stats_add`` is filtered
+      to the files in ``add``.  Refused on checkpoint versions (those
+      owe readers a full snapshot).
+    - CHECKPOINT form (``ckpt`` + ``n_files`` + ``table_names`` +
+      ``n_files_by_table``, v1 and every ``CHECKPOINT_EVERY``-th version
+      only): the sidecar :func:`_write_checkpoint` already made durable;
+      the O(1) commit JSON gets the pin fold and the commit's own delta,
+      so race-window conflict detection stays O(delta).
 
+    Mega-deltas (format migration, whole-table rewrite) spill their file
+    lists to a parquet sidecar (:func:`_attach_delta`) on either shape.
     Either way the commit point is :func:`_link_commit`'s put-if-absent
     ``os.link`` — a concurrent committer of the same version raises
     :class:`ConcurrentWriteError` instead of silently clobbering."""
@@ -1313,13 +836,21 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
     LOG_STORE.makedirs(mdir)
     version = manifest["version"]
     op = manifest.get("op", "write")
-    is_ckpt_version = version == 1 or version % CHECKPOINT_EVERY == 0
-    if "ckpt" in manifest and "tables" not in manifest:
-        if not is_ckpt_version:
-            raise ValueError(
-                f"pre-built checkpoint commit for non-checkpoint version "
-                f"{version} — deltas between checkpoints use the delta form"
-            )
+    is_ckpt = "ckpt" in manifest
+    if is_ckpt != (version == 1 or version % CHECKPOINT_EVERY == 0):
+        raise ValueError(
+            f"{'checkpoint' if is_ckpt else 'delta'}-form commit for "
+            f"{'non-' if is_ckpt else ''}checkpoint version {version} — "
+            "checkpoints carry the full snapshot (_commit_delta builds "
+            "it), deltas between checkpoints use the delta form"
+        )
+    add = {t: sorted(fs) for t, fs in manifest.get("add", {}).items() if fs}
+    remove = {
+        t: sorted(fs) for t, fs in manifest.get("remove", {}).items() if fs
+    }
+    stats_add: dict[str, dict] = {}
+    if is_ckpt:
+        # the added files' stats live in the sidecar
         commit = {
             "version": version,
             "ts": round(time.time(), 3),
@@ -1332,36 +863,12 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
                 for t, n in sorted(manifest["n_files_by_table"].items())
             },
         }
-        # the checkpoint's own delta, so race-window conflict detection
-        # stays O(delta); a mega-delta landing ON the boundary spills
-        _attach_delta(commit, mdir, version, manifest)
-        if "pin" in manifest:
-            commit["pin"] = manifest["pin"]
-        commit["pins"] = _fold_checkpoint_pins(
-            out_dir, version, op, manifest.get("pin")
-        )
-        _link_commit(mdir, version, commit)
-        return
-    if "tables" not in manifest:
-        if is_ckpt_version:
-            raise ValueError(
-                f"delta-form commit for checkpoint version {version} — "
-                "checkpoints must carry the full snapshot (_commit_delta "
-                "routes them through the full or pre-built form)"
-            )
+    else:
         commit = {
             "version": version,
             "parent": version - 1,
             "ts": round(time.time(), 3),
             "op": op,
-        }
-        add = {
-            t: sorted(fs) for t, fs in manifest.get("add", {}).items() if fs
-        }
-        remove = {
-            t: sorted(fs)
-            for t, fs in manifest.get("remove", {}).items()
-            if fs
         }
         # hoist the per-table membership sets: rebuilding set(add[t])
         # inside the inner comprehension is O(n^2) for an n-file table,
@@ -1373,58 +880,16 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
             if per and t in added_sets
         }
         stats_add = {t: per for t, per in stats_add.items() if per}
-        # mega-deltas (format migration, whole-table rewrite) spill the
-        # file lists to a parquet sidecar and keep the commit JSON O(1)
-        # bytes + O(#tables) counts — every resolve between checkpoints
-        # re-parses this JSON, so an inlined million-file list would tax
-        # the whole store until the next checkpoint.  The sidecar is
-        # durable BEFORE the commit link; a race loser's spill is a
-        # vacuumable orphan.  Same decision point as checkpoint commits.
-        _attach_delta(
-            commit, mdir, version,
-            {"add": add, "remove": remove, "stats_add": stats_add},
-        )
-        if "pin" in manifest:  # pin/unpin ops change no files — O(1) commit
-            commit["pin"] = manifest["pin"]
-        _link_commit(mdir, version, commit)
-        return
-    if not is_ckpt_version:
-        raise ValueError(
-            f"full-form commit for non-checkpoint version {version} — "
-            "deltas between checkpoints use the delta form"
-        )
-    tables = {t: sorted(fs) for t, fs in manifest["tables"].items() if fs}
-    stats = {t: s for t, s in manifest.get("stats", {}).items() if s}
-    # the O(live files) payload goes to a parquet sidecar; the commit
-    # JSON stays O(1) bytes no matter how many files are live
-    ckpt_name, n_files = _write_checkpoint_sidecar(
-        mdir, version, tables, stats
+    _attach_delta(
+        commit, mdir, version,
+        {"add": add, "remove": remove, "stats_add": stats_add},
     )
-    commit = {
-        "version": version,
-        "ts": round(time.time(), 3),
-        "op": op,
-        "ckpt": ckpt_name,
-        "n_files": n_files,
-        # table NAMES are O(dozens) — carrying them here lets consumers
-        # (vacuum's candidate-table seeding) learn the snapshot's tables
-        # without scanning the O(live files) sidecar
-        "table_names": sorted(tables),
-        # per-table counts: lets the NEXT cluster-side checkpoint derive
-        # its table_names/counts by folding delta metadata instead of
-        # running a Spark distinct over the sidecar
-        "n_files_by_table": {t: len(fs) for t, fs in sorted(tables.items())},
-    }
-    # delta passthrough (see the pre-built branch): _commit_delta's driver
-    # checkpoint path states what it changed so race-window conflict
-    # detection never diffs full snapshots; mega-deltas landing on the
-    # boundary spill
-    _attach_delta(commit, mdir, version, manifest)
-    if "pin" in manifest:
+    if "pin" in manifest:  # pin/unpin ops change no files
         commit["pin"] = manifest["pin"]
-    commit["pins"] = _fold_checkpoint_pins(
-        out_dir, version, op, manifest.get("pin")
-    )
+    if is_ckpt:
+        commit["pins"] = _fold_checkpoint_pins(
+            out_dir, version, op, manifest.get("pin")
+        )
     _link_commit(mdir, version, commit)
 
 
@@ -1451,19 +916,6 @@ def _link_commit(mdir: str, version: int, commit: dict) -> None:
     )  # hint, not the commit
 
 
-def _commit_append(
-    out_dir: str,
-    version: int,
-    add: dict[str, list],
-    stats_add: dict[str, dict],
-    op: str = "publish",
-    spark: SparkSession | None = None,
-) -> None:
-    """Commit ``version`` as a pure ADDITION of files — the hot write
-    path (r10); :func:`_commit_delta` with an empty remove set."""
-    _commit_delta(out_dir, version, add, {}, stats_add, op=op, spark=spark)
-
-
 def _commit_delta(
     out_dir: str,
     version: int,
@@ -1471,88 +923,28 @@ def _commit_delta(
     remove: dict[str, list],
     stats_add: dict[str, dict],
     op: str = "publish",
-    spark: SparkSession | None = None,
     pin: dict | None = None,
 ) -> None:
     """Commit ``version`` from exactly what the writer CHANGED — the
-    single delta-shaped commit every writer (publish, compact, z-order,
-    expire, rewrite, pin) funnels through (r11).  Non-checkpoint
-    versions write the delta record DIRECTLY: O(changed files) driver
-    work, no parent-snapshot hydration, no full-list set-diff.  The old
-    route (hand ``_write_manifest`` a full target snapshot and let it
-    diff against the parent) cost O(live files) of driver CPU on EVERY
-    commit — measured 660 ms/commit at 1M live files
-    (``txlog_rehearsal.py 1000000``) for a writer adding 3 files, the
-    kind of tax a micro-batch sink pays every few seconds forever.
-
-    Checkpoint versions (v1 and every ``CHECKPOINT_EVERY``-th) owe
-    readers the full snapshot.  Above :data:`CLUSTER_PATH_MIN_FILES`
-    (with a ``spark`` session supplied or auto-resolved by the caller)
-    the sidecar is derived and written CLUSTER-SIDE
-    (:func:`_write_checkpoint_spark`: previous sidecar + delta chain,
-    one Spark job — the r11 path that keeps the driver O(delta) even on
-    the amortized commit); below it, or with no session, the driver
-    resolves the parent and writes the sidecar itself (fast at small
-    counts: the cache makes the resolve a ≤15-delta replay).
+    single commit every writer (create, publish, compact, z-order,
+    expire, rewrite, pin) funnels through.  Non-checkpoint versions
+    write the delta record DIRECTLY: O(changed files) driver work, no
+    parent-snapshot hydration, no full-list set-diff.  Checkpoint
+    versions (v1 and every ``CHECKPOINT_EVERY``-th) owe readers the full
+    snapshot: :func:`_write_checkpoint` folds the parent sidecar with
+    the deltas since and this commit's own, and the commit JSON names
+    the sidecar it wrote.
 
     Same commit point (``_link_commit``'s put-if-absent), so racing
-    writers fail loudly and rebase exactly as before; all forms funnel
-    through ``_write_manifest``, the single injectable choke point."""
+    writers fail loudly and rebase; both forms funnel through
+    ``_write_manifest``, the single injectable choke point."""
+    manifest = {"version": version, "op": op, "add": add, "remove": remove}
     if version == 1 or version % CHECKPOINT_EVERY == 0:
-        parent_n = (
-            _store_n_files(out_dir, version - 1) if version > 1 else None
+        manifest.update(
+            _write_checkpoint(out_dir, version, add, remove, stats_add)
         )
-        if (
-            spark is not None
-            and version > 1
-            and (parent_n or 0) >= CLUSTER_PATH_MIN_FILES
-        ):
-            _write_checkpoint_spark(
-                spark, out_dir, version, add, remove, stats_add, op,
-                pin=pin,
-                est_rows=(parent_n or 0)
-                + sum(len(fs) for fs in add.values()),
-            )
-            return
-        base = (
-            _resolve(out_dir, version - 1)
-            if version > 1
-            else {"tables": {}, "stats": {}}
-        )
-        tables = {t: list(fs) for t, fs in base["tables"].items()}
-        stats = {t: dict(s) for t, s in base["stats"].items()}
-        for t, rels in remove.items():
-            gone = set(rels)
-            tables[t] = [f for f in tables.get(t, []) if f not in gone]
-            if t in stats:
-                for rel in rels:
-                    stats[t].pop(rel, None)
-        for t, fs in add.items():
-            tables.setdefault(t, []).extend(fs)
-        for t, per in stats_add.items():
-            if per:
-                stats.setdefault(t, {}).update(per)
-        manifest = {
-            "version": version,
-            "tables": tables,
-            "stats": stats,
-            "op": op,
-            # the delta this commit applies, carried into the checkpoint
-            # JSON so race-window conflict detection stays O(delta)
-            "add": {t: sorted(fs) for t, fs in add.items() if fs},
-            "remove": {t: sorted(fs) for t, fs in remove.items() if fs},
-        }
-        if pin is not None:
-            manifest["pin"] = pin
-        _write_manifest(out_dir, manifest)
-        return
-    manifest = {
-        "version": version,
-        "op": op,
-        "add": add,
-        "remove": remove,
-        "stats_add": stats_add,
-    }
+    else:
+        manifest["stats_add"] = stats_add
     if pin is not None:
         manifest["pin"] = pin
     _write_manifest(out_dir, manifest)
@@ -1610,12 +1002,7 @@ def pinned_versions(out_dir: str) -> dict[int, str | None]:
     return _pins_at(out_dir, _latest_version(out_dir))
 
 
-def pin_version(
-    out_dir: str,
-    version: int,
-    name: str | None = None,
-    spark: SparkSession | None | _AutoSpark = AUTO,
-) -> dict:
+def pin_version(out_dir: str, version: int, name: str | None = None) -> dict:
     """Take a RETENTION LEASE on snapshot ``version``: commit a ``pin``
     log entry that :func:`vacuum` (and therefore every maintenance op's
     auto-vacuum) must honor — the pinned snapshot's data files survive
@@ -1625,15 +1012,10 @@ def pin_version(
     Refuses a version that is uncommitted or whose files are ALREADY
     reclaimed (a lease on an unreadable snapshot would promise the
     impossible).  Returns the pin COMMIT RECORD ({version, op, pin} —
-    an O(1) delta commit off checkpoint boundaries, r10), not a
-    snapshot; callers that want the snapshot read it
-    (``read_manifest`` / ``read_published``).
-
-    ``spark`` defaults to :data:`AUTO`: past
-    :data:`CLUSTER_PATH_MIN_FILES` live files the re-readability probe
-    runs in executors on the active session (collecting ≤1 row); below
-    it — or with an explicit ``spark=None`` — the dependency-free driver
-    probe runs.  Pass a session explicitly to force the cluster path.
+    an O(1) delta commit off checkpoint boundaries), not a snapshot;
+    callers that want the snapshot read it (``read_manifest`` /
+    ``read_published``).  The re-readability probe checks the
+    snapshot's file set (stats column-pruned) through the log seam.
 
     Concurrency: a vacuum IN FLIGHT while this commits may have read the
     pin set before the pin landed.  The files are re-verified AFTER the
@@ -1650,70 +1032,14 @@ def pin_version(
             f"pin_version: version {version} not in committed range "
             f"1..{latest} of {out_dir!r}"
         )
-    auto_selected = isinstance(spark, _AutoSpark)
-    spark = _resolve_spark_arg(spark, out_dir)
 
-    def _driver_missing_file() -> str | None:
+    def _missing_file() -> str | None:
         for t, fs in _snapshot_files(out_dir, version).items():  # no stats
             tdir = os.path.join(out_dir, f"{t}.parquet")
             for rel in fs:
                 if not LOG_STORE.exists(os.path.join(tdir, rel)):
                     return f"{t}/{rel}"
         return None
-
-    if spark is not None and not _executor_visible(
-        spark, os.path.abspath(_manifest_path(out_dir))
-    ):
-        # same polarity as vacuum (r12): executors that cannot read the
-        # commit log would die inside the sidecar scan with an opaque
-        # FileNotFoundException — AUTO degrades to the driver probe with
-        # the documented warning, explicit spark= names the contract
-        if not auto_selected:
-            raise StorageVisibilityError(
-                f"pin_version(spark=...): executors cannot see the "
-                f"commit log under {out_dir!r} — the store is not on "
-                "shared storage; use spark=None or run against shared "
-                "storage"
-            )
-        _warn_executor_blind("pin_version", out_dir)
-        spark = None
-    if spark is None:
-        _missing_file = _driver_missing_file
-    else:
-        # r10 scale path: the snapshot file set never touches the driver —
-        # the sidecar-resolved DataFrame is probed for existence in
-        # EXECUTORS and only the first missing row (O(1)) is collected.
-        # Re-invoking the DataFrame re-runs the probe, so the post-commit
-        # re-verify below is a genuinely fresh look at the filesystem.
-        files_df = snapshot_files_df(spark, out_dir, version)
-        root = os.path.abspath(out_dir)
-        store = LOG_STORE  # pickled into the executor closure
-
-        def _probe(batches):
-            import os as _os
-
-            for pdf in batches:
-                mask = [
-                    not store.exists(
-                        _os.path.join(root, f"{t}.parquet", rel)
-                    )
-                    for t, rel in zip(pdf["table"], pdf["file"])
-                ]
-                yield pdf[mask]
-
-        def _missing_file() -> str | None:
-            miss = files_df.mapInPandas(
-                _probe, "table string, file string"
-            ).take(1)
-            if not miss:
-                return None
-            return _classify_pin_miss(
-                out_dir,
-                miss[0]["table"],
-                miss[0]["file"],
-                auto_selected,
-                _driver_missing_file,
-            )
 
     gone = _missing_file()
     if gone is not None:
@@ -1725,8 +1051,7 @@ def pin_version(
     for _ in range(2):
         try:
             commit = _commit_pin_op(
-                out_dir, "pin", {"version": version, "name": name},
-                spark=spark,
+                out_dir, "pin", {"version": version, "name": name}
             )
         except ConcurrentWriteError:
             continue
@@ -1747,66 +1072,20 @@ def pin_version(
     )
 
 
-def _classify_pin_miss(
-    out_dir: str,
-    table: str,
-    rel: str,
-    auto_selected: bool,
-    driver_probe,
-) -> str | None:
-    """Diagnose a file the EXECUTOR probe reported missing.  When the
-    DRIVER can see it, the snapshot was never vacuumed — the storage is
-    not shared with executors, and misdiagnosing that would refuse a
-    perfectly valid lease: explicit ``spark=`` surfaces
-    :class:`StorageVisibilityError` loudly; :data:`AUTO` degrades to the
-    driver probe with a warning (the pre-r11 default behavior).  When
-    the driver can't see it either, it is genuinely gone."""
-    if LOG_STORE.exists(
-        os.path.join(os.path.abspath(out_dir), f"{table}.parquet", rel)
-    ):
-        if not auto_selected:
-            raise StorageVisibilityError(
-                f"pin_version: executors cannot see {table}/{rel} that "
-                f"the driver can — out_dir {out_dir!r} is not on shared "
-                "storage; use spark=None or run against shared storage"
-            )
-        import warnings
-
-        warnings.warn(
-            f"pin_version: {out_dir!r} is not visible to executors; the "
-            "auto-selected cluster probe was abandoned for the driver "
-            "probe",
-            RuntimeWarning,
-            stacklevel=4,
-        )
-        return driver_probe()
-    return f"{table}/{rel}"
-
-
-def unpin_version(
-    out_dir: str,
-    version: int,
-    spark: SparkSession | None | _AutoSpark = AUTO,
-) -> dict:
+def unpin_version(out_dir: str, version: int) -> dict:
     """Release the retention lease on ``version`` (a ``unpin`` log
     entry); its files become reclaimable by the next :func:`vacuum` when
     outside the normal retention horizon.  Refuses when no active pin
     exists — an unpin that silently no-ops would mask a double-release
-    bug in the caller's provenance bookkeeping.  ``spark`` (default
-    :data:`AUTO`, like :func:`pin_version`) only matters when the commit
-    lands on a checkpoint boundary — the sidecar is then built
-    cluster-side past :data:`CLUSTER_PATH_MIN_FILES`."""
+    bug in the caller's provenance bookkeeping."""
     if version not in pinned_versions(out_dir):
         raise ValueError(
             f"unpin_version: version {version} holds no active pin in "
             f"{out_dir!r}"
         )
-    spark = _resolve_spark_arg(spark, out_dir)
     for _ in range(2):
         try:
-            return _commit_pin_op(
-                out_dir, "unpin", {"version": version}, spark=spark
-            )
+            return _commit_pin_op(out_dir, "unpin", {"version": version})
         except ConcurrentWriteError:
             continue
     raise ConcurrentWriteError(
@@ -1814,24 +1093,18 @@ def unpin_version(
     )
 
 
-def _commit_pin_op(
-    out_dir: str, op: str, pin: dict, spark: SparkSession | None = None
-) -> dict:
+def _commit_pin_op(out_dir: str, op: str, pin: dict) -> dict:
     """One ``pin``/``unpin`` log entry.  A lease changes NO files, so off
-    checkpoint boundaries this is an O(1) delta-form commit (r10 — the
-    old path hydrated the full snapshot just to re-state it); a commit
-    landing ON a checkpoint boundary carries the full snapshot form the
-    protocol owes readers there (and folds the pin set) — built
-    cluster-side past :data:`CLUSTER_PATH_MIN_FILES` when ``spark`` is
-    supplied, like every other checkpoint (:func:`_commit_delta`).
-    Raises :class:`ConcurrentWriteError` on a lost race; returns the pin
-    commit record ``{version, op, pin}`` (version metadata only — even
-    on a checkpoint boundary the sidecar keys stay in the log; read the
+    checkpoint boundaries this is an O(1) delta-form commit; a commit
+    landing ON a checkpoint boundary writes the checkpoint the protocol
+    owes readers there (and folds the pin set), like every other
+    checkpoint (:func:`_commit_delta`).  Raises
+    :class:`ConcurrentWriteError` on a lost race; returns the pin commit
+    record ``{version, op, pin}`` (version metadata only — even on a
+    checkpoint boundary the sidecar keys stay in the log; read the
     commit with ``_load_commit`` if you need them)."""
     v_next = _latest_version(out_dir) + 1
-    _commit_delta(
-        out_dir, v_next, {}, {}, {}, op=op, spark=spark, pin=pin
-    )
+    _commit_delta(out_dir, v_next, {}, {}, {}, op=op, pin=pin)
     return {"version": v_next, "op": op, "pin": pin}
 
 
@@ -1859,7 +1132,7 @@ def ensure_manifest(out_dir: str) -> dict:
                     tdir, None, "data files in a directory with no commit log"
                 )
     try:
-        _write_manifest(out_dir, {"version": 1, "tables": {}, "op": "create"})
+        _commit_delta(out_dir, 1, {}, {}, {}, op="create")
     except ConcurrentWriteError:
         pass  # another writer created v1 first — theirs serves
     return read_manifest(out_dir)
@@ -2240,7 +1513,7 @@ def publish_batch(
     Returns the COMMIT RECORD ``{"version": N, "op": "publish"|"noop",
     "add": {table: n_files}}`` — version metadata only (r10): the hot
     write path commits O(staged files) deltas directly
-    (:func:`_commit_append`) and never hydrates the full snapshot, so
+    (:func:`_commit_delta`) and never hydrates the full snapshot, so
     returning one would cost more than the commit; callers that want the
     snapshot read it (``read_manifest`` / ``read_published``)."""
     pks = pks or TABLE_PKS
@@ -2292,12 +1565,8 @@ def publish_batch(
             name: fstats for name, (_f, fstats) in staged.items() if fstats
         }
         try:
-            # spark rides along for the amortized checkpoint commits: at
-            # ≥ CLUSTER_PATH_MIN_FILES the sidecar is derived and written
-            # cluster-side instead of hydrating O(live files) driver dicts
-            _commit_append(
-                out_dir, base_v + 1, add, stats_add, op="publish",
-                spark=spark,
+            _commit_delta(
+                out_dir, base_v + 1, add, {}, stats_add, op="publish"
             )
             return {
                 "version": base_v + 1,
@@ -2361,9 +1630,7 @@ def compact_published(
     Resolution and commit are PER-TABLE and delta-form (r11): the input
     file list comes from the filtered sidecar read (never O(all live
     files)), and the swap commits exactly {remove: replaced, add:
-    rewritten} — no full-snapshot hydration anywhere on the path; a
-    swap landing on a checkpoint boundary builds the sidecar
-    cluster-side past :data:`CLUSTER_PATH_MIN_FILES`."""
+    rewritten} — no full-snapshot hydration anywhere on the path."""
     from collections import defaultdict
 
     latest = _latest_version(out_dir)
@@ -2423,7 +1690,6 @@ def compact_published(
                 remove={table: sorted(replaced)},
                 stats_add={table: added_stats},
                 op="compact",
-                spark=spark,
             )
             vacuum(out_dir, keep_versions=keep_versions, min_age_s=VACUUM_GRACE_S)
             return done
@@ -2482,10 +1748,8 @@ def rewrite_published_many(
 
     Commits DELTA-form (r11): remove = each rewritten table's old live
     list (resolved per-table from the filtered sidecar), add = the
-    staged files — never a full-snapshot hydration; a migration landing
-    on a checkpoint boundary builds the sidecar cluster-side past
-    :data:`CLUSTER_PATH_MIN_FILES`.  Returns the commit record
-    ``{"version": N, "op": op, "add": {table: n_files}}``."""
+    staged files — never a full-snapshot hydration.  Returns the commit
+    record ``{"version": N, "op": op, "add": {table: n_files}}``."""
     latest = _latest_version(out_dir)
     version = latest + 1
     add: dict[str, list[str]] = {}
@@ -2538,9 +1802,7 @@ def rewrite_published_many(
         moved, new_stats = _stage_rewrite(table, df)
         add[table] = sorted(add.get(table, []) + moved)
         stats_add.setdefault(table, {}).update(new_stats)
-    _commit_delta(
-        out_dir, version, add, remove, stats_add, op=op, spark=spark
-    )
+    _commit_delta(out_dir, version, add, remove, stats_add, op=op)
     vacuum(out_dir, keep_versions=keep_versions, min_age_s=VACUUM_GRACE_S)
     return {
         "version": version,
@@ -2553,7 +1815,6 @@ def vacuum(
     out_dir: str,
     keep_versions: int = 0,
     min_age_s: float = 0.0,
-    spark: SparkSession | None | _AutoSpark = AUTO,
 ) -> list[str]:
     """Delete data files referenced by NO retained snapshot (crash orphans
     from batches that staged but never committed, and files compacted
@@ -2581,25 +1842,14 @@ def vacuum(
     and ``_manifest`` — so log-less tables kept elsewhere in the store
     (the silver tables under ``_silver/``) are never touched.
 
-    ``spark`` (r10) switches the data-file phase to the CLUSTER-SIDE
-    plan: live sets come from :func:`snapshot_files_df` (sidecar scanned
-    by Spark), the on-disk inventory from a distributed directory walk,
-    and the orphan set from an anti-join — the driver collects only the
-    O(orphans) rows it must delete, never the O(live files) sets.  The
-    default is :data:`AUTO` (r11): the cluster plan engages by itself on
-    the active session once the store crosses
-    :data:`CLUSTER_PATH_MIN_FILES` live files (the README's measured
-    crossover), so a deployment that grows past the driver path's
-    comfort zone doesn't silently degrade; ``spark=None`` explicitly
-    forces the dependency-free driver path, fine to ~10^6 files.
-    Identical reclamation semantics either way (rehearsed side-by-side
-    in ``scripts/txlog_rehearsal.py``)."""
+    The sweep runs on the driver: it resolves each retained snapshot's
+    file set (stats column-pruned), walks the table directories once
+    through the log seam, and deletes what no retained snapshot names.
+    The same walk finds hollow leases for free (see below)."""
     latest = _latest_version(out_dir)
     removed: list[str] = []
     if latest == 0:
         return removed
-    auto_selected = isinstance(spark, _AutoSpark)
-    spark = _resolve_spark_arg(spark, out_dir)
     store = LOG_STORE
     now = time.time()
 
@@ -2620,39 +1870,6 @@ def vacuum(
     if store.isdir(staging_root):
         for d in store.listdir(staging_root):
             p = os.path.join(staging_root, d)
-            if d.startswith("ckpt-build-v"):
-                # an IN-FLIGHT cluster-side checkpoint build (target
-                # version ahead of the newest commit): reclaiming it
-                # mid-Spark-job fails the checkpoint commit, so — like
-                # in-flight sidecars — it always gets the full grace
-                # window, keyed on the NEWEST mtime in the tree (a live
-                # build keeps landing part files, so its newest mtime
-                # stays fresh even when the job outlives the window;
-                # the top dir's own mtime can go stale mid-job).  Builds
-                # for versions ≤ latest are dead (committed elsewhere or
-                # lost the race) and sweep under the normal min_age_s.
-                try:
-                    cv = int(d[len("ckpt-build-v"):].split("-", 1)[0])
-                except ValueError:
-                    cv = None
-                if cv is not None and cv > latest:
-                    newest = 0.0
-                    for root_, _dirs, files_ in store.walk(p):
-                        for fn in files_:
-                            try:
-                                m = store.getmtime(
-                                    os.path.join(root_, fn)
-                                )
-                            except OSError:
-                                continue
-                            newest = max(newest, m)
-                    if not newest:
-                        try:
-                            newest = store.getmtime(p)
-                        except OSError:
-                            continue
-                    if now - newest < VACUUM_GRACE_S:
-                        continue
             if _old_enough(p):
                 store.rmtree(p)
     # orphan checkpoint / delta-spill sidecars: a crash between the
@@ -2709,7 +1926,7 @@ def vacuum(
                 except OSError:
                     continue
             if name != ref and _old_enough(p):
-                if store.isdir(p):  # multi-part sidecar (r11)
+                if store.isdir(p):  # a directory-shaped sidecar
                     store.rmtree(p)
                 else:
                     store.remove(p)
@@ -2724,40 +1941,6 @@ def vacuum(
     late = set(pinned_versions(out_dir)) - retained
     pins |= late
     retained |= late
-    if spark is not None and not _executor_visible(
-        spark, os.path.abspath(_manifest_path(out_dir))
-    ):
-        # executors can't even see the commit log: the sidecar scan
-        # inside the cluster sweep would die with an opaque executor
-        # FileNotFoundException.  Same polarity as the walk cross-check:
-        # AUTO degrades to the driver sweep with a warning, explicit
-        # spark= surfaces the broken storage contract loudly.
-        if not auto_selected:
-            raise StorageVisibilityError(
-                f"vacuum(spark=...): executors cannot see the commit log "
-                f"under {out_dir!r} — the store is not on shared storage; "
-                "use the driver path (spark=None) or run against shared "
-                "storage"
-            )
-        _warn_executor_blind("vacuum", out_dir)
-        spark = None
-    if spark is not None:
-        try:
-            removed.extend(
-                _vacuum_data_spark(
-                    spark, out_dir, sorted(retained), pins, now, min_age_s
-                )
-            )
-            return sorted(removed)
-        except StorageVisibilityError:
-            # the caller EXPLICITLY asked for the cluster plan: surface
-            # the broken storage contract loudly.  When AUTO picked the
-            # session on its own (the store merely crossed the size
-            # threshold), degrade to the driver sweep with a warning —
-            # a previously-working default must not become a hard error
-            if not auto_selected:
-                raise
-            _warn_executor_blind("vacuum", out_dir)
     live: dict[str, set] = {}
     pin_files: dict[int, dict[str, set]] = {}
     for v in sorted(retained):
@@ -2808,26 +1991,19 @@ def vacuum(
     # Warn rather than auto-release: vacuum is a reader of the pin
     # registry, and silently unpinning would erase the provenance evidence
     # the operator needs to investigate the loss.
+    # One warning per lease: it names the first lost file and counts the
+    # losses across every table.
     for v in sorted(pin_files):
-        for t, fs in pin_files[v].items():
-            gone = fs - seen.get(t, set())
-            if gone:
-                _warn_hollow(out_dir, v, t, sorted(gone)[0], len(gone) - 1)
-                break
+        lost = [
+            (t, sorted(fs - seen.get(t, set())))
+            for t, fs in sorted(pin_files[v].items())
+        ]
+        lost = [(t, gone) for t, gone in lost if gone]
+        if lost:
+            t, gone = lost[0]
+            n_lost = sum(len(g) for _, g in lost)
+            _warn_hollow(out_dir, v, t, gone[0], n_lost - 1)
     return sorted(removed)
-
-
-def _live_table_names(out_dir: str, version: int) -> set[str]:
-    """The table NAMES a snapshot references — O(#tables + deltas)
-    metadata, never a file-list scan: the checkpoint's ``table_names``
-    plus the tables each delta since added to or removed from."""
-    ckpt, deltas = _chain(out_dir, version)
-    names = set(ckpt["table_names"])
-    for c in deltas:
-        added, removed = _delta_counts(c)
-        names.update(added)
-        names.update(removed)
-    return names
 
 
 def _warn_hollow(
@@ -2846,13 +2022,10 @@ def _warn_hollow(
     )
 
 
-def _first_data_file(tdir: str, before: float | None = None) -> str | None:
-    """The first non-hidden data file the DRIVER can see under a table
-    directory — an early-exit walk touching O(few) entries, used only as
-    the storage-visibility probe of :func:`_vacuum_data_spark`.
-    ``before`` skips files created after the distributed walk began: a
-    concurrent writer staging a dead table's first new file mid-sweep is
-    not evidence the walk was blind (it ran before the file existed)."""
+def _first_data_file(tdir: str) -> str | None:
+    """The first non-hidden data file under a table directory — an
+    early-exit walk touching O(few) entries (:func:`ensure_manifest`'s
+    log-less-data refusal)."""
     store = LOG_STORE
     if not store.isdir(tdir):
         return None
@@ -2860,154 +2033,7 @@ def _first_data_file(tdir: str, before: float | None = None) -> str | None:
         for fname in files:
             if fname.startswith(("_", ".")):
                 continue
-            full = os.path.join(root, fname)
-            if before is not None:
-                try:
-                    if store.getmtime(full) >= before:
-                        continue
-                except OSError:
-                    continue  # vanished concurrently
-            return os.path.relpath(full, tdir)
+            return os.path.relpath(os.path.join(root, fname), tdir)
     return None
 
 
-def _orphans_df(disk: DataFrame, live: DataFrame) -> DataFrame:
-    """On-disk files referenced by no retained snapshot.  The anti-join
-    is HINTED to sort-merge: the planner's static estimate sees the live
-    side as a ~10MB compressed sidecar and elects to BROADCAST it — a
-    hashed relation of every live file name on the JVM driver, the exact
-    O(live files) driver state this path exists to avoid (and measured
-    slower than SMJ at 1M files even locally: 3.6 s vs 1.9 s).  SMJ
-    shuffles both sides on the key — the plan that still works at 10^8
-    files.  Plan-guarded by ``tests/test_txlog_spark.py``."""
-    return disk.join(live.hint("merge"), ["table", "file"], "left_anti")
-
-
-def _vacuum_data_spark(
-    spark: SparkSession,
-    out_dir: str,
-    retained: list[int],
-    pins: set[int],
-    now: float,
-    min_age_s: float,
-) -> list[str]:
-    """The data-file phase of :func:`vacuum`, planned cluster-side: live
-    sets are DataFrames resolved from the checkpoint sidecar
-    (:func:`snapshot_files_df`), the on-disk inventory is a distributed
-    walk (:func:`_disk_files_df`), and orphans fall out of one anti-join
-    — the driver only ever collects the O(orphans) rows it deletes plus
-    an O(1) hollow-lease probe per pin.  Same reclamation semantics as
-    the driver path (one sweep of both at 1M synthetic files is a
-    ``scripts/txlog_rehearsal.py`` row)."""
-    from pyspark.sql import functions as F
-
-    live: DataFrame | None = None
-    pin_dfs: dict[int, DataFrame] = {}
-    # shared-ancestor base cache (r12): retained versions cluster within
-    # CHECKPOINT_EVERY of each other and pins can be arbitrary — resolve
-    # each DISTINCT checkpoint ancestor's sidecar once (persisted) and
-    # fold per-version deltas onto it, instead of one sidecar scan per
-    # retained/pinned version (pin-heavy stores paid K scans)
-    base_cache: dict[int, DataFrame] = {}
-    for v in retained:
-        df = _snapshot_df(
-            spark, out_dir, v, with_stats=False, base_cache=base_cache
-        )
-        if v in pins:
-            pin_dfs[v] = df
-        live = df if live is None else live.unionByName(df)
-    if live is None:
-        return []
-    if len(retained) > 1:
-        live = live.distinct()
-    # candidate tables: pure metadata — retained snapshots' table NAMES
-    # (O(#tables), no file-list scan) plus any top-level directory
-    # holding only dead files
-    candidates = {
-        entry[: -len(".parquet")]
-        for entry in LOG_STORE.listdir(out_dir)
-        if entry.endswith(".parquet")
-    }
-    for v in retained:
-        candidates |= _live_table_names(out_dir, v)
-    # persisted: reused by the sanity probe, the orphan scan, and each
-    # pin's hollow probe — one distributed walk, not three
-    disk = _disk_files_df(spark, out_dir, sorted(candidates)).persist()
-    removed: list[str] = []
-    try:
-        # sanity cross-check (r11): when out_dir is NOT visible to
-        # executors (non-shared storage) the distributed walk silently
-        # returns an empty inventory — the fail direction is safe (no
-        # wrong deletes) but every pinned snapshot would warn HOLLOW and
-        # the vacuum would no-op with no signal.  Any table whose
-        # directory the DRIVER can see a data file in (one early-exit
-        # walk per table, O(1) files touched) must have rows in the
-        # distributed inventory (one O(#tables) aggregate over the
-        # persisted walk); if the driver sees bytes the executors
-        # missed, the storage contract is broken — fail loudly instead
-        # of reporting "nothing to reclaim".
-        disk_counts = {
-            r["table"]: r["n"]
-            for r in disk.groupBy("table")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        for t in candidates:
-            if disk_counts.get(t, 0):
-                continue
-            seen = _first_data_file(
-                os.path.join(out_dir, f"{t}.parquet"), before=now
-            )
-            if seen is not None:
-                # a probe hit can be a RACE, not broken storage: the
-                # table dir was empty when the persisted walk ran and a
-                # concurrent writer then renamed staged files in (rename
-                # preserves mtimes, which may predate `now`).  Re-list
-                # that ONE table executor-side before raising — on
-                # shared storage the fresh listing sees the file and the
-                # vacuum proceeds (the stale inventory is still safe:
-                # files it never saw are simply not deletion candidates)
-                if (
-                    _disk_files_df(spark, out_dir, [t]).limit(1).count()
-                    > 0
-                ):
-                    continue
-                raise StorageVisibilityError(
-                    f"vacuum(spark=...): the distributed walk saw NO files "
-                    f"under {t}.parquet but the driver can see "
-                    f"{seen} — out_dir {out_dir!r} is not visible to "
-                    "executors (non-shared storage?); use the driver path "
-                    "(spark=None) or run against shared storage"
-                )
-        orphans = _orphans_df(disk, live)
-        if min_age_s > 0:
-            # the concurrent-writer grace window, evaluated on the mtimes
-            # the distributed walk recorded
-            orphans = orphans.filter(F.col("mtime") <= float(now - min_age_s))
-        for r in orphans.select("table", "file").collect():  # O(orphans)
-            entry = f"{r['table']}.parquet"
-            full = os.path.join(out_dir, entry, r["file"])
-            try:
-                LOG_STORE.remove(full)
-            except OSError:
-                continue  # vanished concurrently — another vacuum got it
-            removed.append(os.path.join(entry, r["file"]))
-        # hollow-lease probe: a pinned file the (pre-delete, persisted)
-        # disk inventory never saw is already lost — same detection as
-        # the driver path.  The count is exact (one distributed count,
-        # O(1) collected) so the warning reports the full loss, not just
-        # the first file (r11 advice); the sample row is a second tiny
-        # job only on the already-broken path.
-        for v in sorted(pin_dfs):
-            anti = pin_dfs[v].join(disk, ["table", "file"], "left_anti")
-            n_gone = anti.count()
-            if n_gone:
-                miss = anti.take(1)[0]
-                _warn_hollow(
-                    out_dir, v, miss["table"], miss["file"], n_gone - 1
-                )
-    finally:
-        disk.unpersist()
-        for b in base_cache.values():
-            b.unpersist()
-    return removed

@@ -9,28 +9,26 @@ only, no Spark: the cost under test is JSON bytes + fsync, which is
 exactly what an object-store commit pays.
 
 Output: one JSON line {live_files, n_commits, schemes: {log: {...},
-full_rewrite: {...}}} with per-commit bytes written (mean), total bytes,
-wall seconds, and worst-case snapshot-resolve time for the log.
+full_rewrite: {...}}} with the metadata bytes the ``n_commits`` commits
+wrote after the seed (total and per-commit mean), wall seconds, and
+worst-case snapshot-resolve time for the log.
 
 Usage: python scripts/txlog_rehearsal.py [live_files] [n_commits]
 
-Two Spark-backed modes (r10):
+Other modes:
 
-  --bigsweep [n_files]   The 1M-file sweep: a store whose checkpoint
-      sidecar names ``n_files`` live files (default 1M), with real
-      orphans planted on disk.  Runs vacuum BOTH ways — the classic
-      driver path (hydrates O(live files) Python sets) and the r10
-      cluster path (``vacuum(spark=...)``: sidecar scanned by Spark,
-      distributed disk walk, orphan anti-join, O(orphans) collected) —
-      and reports wall seconds + Python-driver RSS growth for each,
-      plus the resolve-only comparison (``_snapshot_files`` vs
-      ``snapshot_files_df``).  Both must reclaim exactly the planted
-      orphans or the row is refused.
+  --bigsweep [n_files]   The large-store maintenance row: a store whose
+      v1 checkpoint names ``n_files`` live files (default 1M), with real
+      orphans planted on disk.  Reports the cold and steady vacuum walls
+      with driver RSS growth (both sweeps must reclaim exactly the
+      planted orphans), the ``_snapshot_files`` resolve wall, and the
+      wall and driver RSS growth of the next checkpoint commit (the
+      Arrow fold of the v1 sidecar).  Metadata only, no Spark.
 
-  --megarewrite [n_files]   The r12 spilled-delta row: a whole-table
-      rewrite committed at ``n_files`` live files, inline
-      vs spilled sidecar form on twin stores — commit JSON bytes,
-      commit/resolve/race-fold walls, identical results required.
+  --megarewrite [n_files]   The spilled-delta row: a whole-table rewrite
+      committed at ``n_files`` live files, inline vs spilled sidecar
+      form on twin stores — commit JSON bytes, commit/resolve/race-fold
+      walls, identical results required.
 
   --race [rounds]        Two genuinely interleaved writers (threads,
       shared session) publishing to the same table for ``rounds``
@@ -39,6 +37,12 @@ Two Spark-backed modes (r10):
       shared PKs.  Asserts zero lost rows and zero duplicate PKs in
       both, and reports how many rebases took the verbatim fast path vs
       a conflict re-stage.
+
+  --race --maintenance [rounds]   A writer thread publishing while a
+      maintenance thread loops pin_version → vacuum → pinned re-read →
+      unpin.  Asserts zero lost rows and duplicate PKs, every pinned
+      re-read ok, the planted orphans reclaimed, and that an injected
+      hollow lease warns.
 """
 
 import json
@@ -74,30 +78,31 @@ def _dir_bytes(mdir: str) -> int:
 
 
 def _seed(out: str, tables: dict) -> None:
-    """Commit ``tables`` as the v1 checkpoint (the O(live files) snapshot
-    lands in the parquet sidecar; no delta rides along, so a seed of any
-    size writes no spill)."""
-    pub._write_manifest(out, {"version": 1, "tables": tables, "op": "seed"})
+    """Commit ``tables`` as the v1 checkpoint through the one commit path
+    (the O(live files) snapshot lands in the parquet sidecar; past
+    ``DELTA_SIDECAR_MIN_FILES`` the seed's own delta spills too)."""
+    os.makedirs(out, exist_ok=True)
+    pub._commit_delta(out, 1, tables, {}, {}, op="seed")
 
 
 def run_log(base: str, tables: dict, n_commits: int) -> dict:
     out = os.path.join(base, "log")
-    os.makedirs(out)
     _seed(out, tables)
+    seed_bytes = _dir_bytes(os.path.join(out, "_manifest"))
     per_commit: list[tuple[bool, float]] = []
     t0 = time.perf_counter()
     for b in range(n_commits):
-        # the r10 writer path: version discovery + a DIRECT delta commit
-        # of the files this batch staged (publish_batch's _commit_append)
-        # — O(staged files) per commit; checkpoint versions resolve the
-        # parent and write the full sidecar form (amortized)
+        # the writer path: version discovery + a DIRECT delta commit of
+        # the files this batch staged (publish_batch's _commit_delta) —
+        # O(staged files) per commit; checkpoint versions fold the
+        # parent sidecar into a new one (amortized)
         v = pub._latest_version(out)
         add = {
             t: [f"height_bucket={b % 64}/part-new-{b}-{t[:4]}.parquet"]
             for t in TABLES[:3]  # a block batch touches a few tables
         }
         tc = time.perf_counter()
-        pub._commit_append(out, v + 1, add, {}, op="publish")
+        pub._commit_delta(out, v + 1, add, {}, {}, op="publish")
         per_commit.append(
             ((v + 1) % pub.CHECKPOINT_EVERY == 0, time.perf_counter() - tc)
         )
@@ -112,14 +117,14 @@ def run_log(base: str, tables: dict, n_commits: int) -> dict:
     t1 = time.perf_counter()
     pub.read_manifest(out, version=max(worst, 1))
     resolve_s = time.perf_counter() - t1
-    total = _dir_bytes(os.path.join(out, "_manifest"))
+    total = _dir_bytes(os.path.join(out, "_manifest")) - seed_bytes
     return {
         "total_meta_bytes": total,
-        "bytes_per_commit": round(total / (n_commits + 1)),
+        "bytes_per_commit": round(total / n_commits),
         "wall_s": round(wall, 2),
         "commit_ms": round(wall / n_commits * 1000, 2),
         # the split the mean hides: delta commits are O(staged files)
-        # regardless of table size (r10 _commit_append); the amortized
+        # regardless of table size (_commit_delta); the amortized
         # spikes are the every-16th checkpoint's full-snapshot sidecar
         "delta_commit_ms_p50": round(deltas[len(deltas) // 2] * 1000, 2)
         if deltas
@@ -148,16 +153,17 @@ def run_full_rewrite(base: str, tables: dict, n_commits: int) -> dict:
 
     cur = {t: list(fs) for t, fs in tables.items()}
     write(1, cur)
+    seed_bytes = _dir_bytes(out)
     t0 = time.perf_counter()
     for b in range(n_commits):
         for t in TABLES[:3]:
             cur[t].append(f"height_bucket={b % 64}/part-new-{b}-{t[:4]}.parquet")
         write(b + 2, cur)
     wall = time.perf_counter() - t0
-    total = _dir_bytes(out)
+    total = _dir_bytes(out) - seed_bytes
     return {
         "total_meta_bytes": total,
-        "bytes_per_commit": round(total / (n_commits + 1)),
+        "bytes_per_commit": round(total / n_commits),
         "wall_s": round(wall, 2),
         "commit_ms": round(wall / n_commits * 1000, 2),
     }
@@ -173,27 +179,21 @@ def _vm_rss_mb() -> float:
 
 
 def run_bigsweep(n_files: int) -> dict:
-    """Vacuum planning at ``n_files`` live files, driver path vs the r10
-    cluster path, on twin stores with identical planted orphans."""
-    from chainweb_data_spark.session import get_spark
-    from chainweb_data_spark.streaming import publish as pub10
-
-    spark = get_spark("txlog-bigsweep")
+    """Maintenance at ``n_files`` live files: vacuum (cold, then steady)
+    with planted orphans, the file-set resolve, and the next checkpoint
+    commit — the one driver path, metadata only."""
     tables = _seed_snapshot(n_files)
     n_orphans = 512
     report: dict = {"live_files": sum(len(v) for v in tables.values()),
                     "planted_orphans": n_orphans}
     base = tempfile.mkdtemp(prefix="txlog-bigsweep-")
     try:
-        # warm the session once (worker pool, codegen, parquet reader) —
-        # the number under test is a long-lived maintenance service's
-        # steady-state planning cost, not JVM cold-start: a tiny
-        # throwaway store runs the full spark-vacuum path untimed
-        warm = os.path.join(base, "_warm")
-        os.makedirs(warm)
-        _seed(warm, _seed_snapshot(600))
-        pub10.vacuum(warm, keep_versions=0, spark=spark)
-        def plant_orphans(out: str) -> list[str]:
+        out = os.path.join(base, "store")
+        # v1 checkpoint: the O(n_files) snapshot rides the parquet
+        # sidecar; the commit JSON stays O(1)
+        _seed(out, tables)
+
+        def plant_orphans() -> list[str]:
             kept = []
             for t in TABLES[:2]:
                 tdir = os.path.join(out, f"{t}.parquet")
@@ -213,207 +213,60 @@ def run_bigsweep(n_files: int) -> dict:
                     kept.append(full)
             return kept
 
-        for mode in ("driver", "spark"):
-            out = os.path.join(base, mode)
-            os.makedirs(out)
-            # v1 checkpoint: the O(n_files) snapshot rides the parquet
-            # sidecar; the commit JSON stays O(1)
-            _seed(out, tables)
-            # two timed sweeps per mode: the FIRST pays one-time plan/
-            # codegen warmth this store's shapes haven't seen (the tiny
-            # warm store above plans differently — AQE picks other
-            # strategies at 600 rows); the SECOND, with orphans
-            # replanted, is the steady-state cost a long-lived
-            # maintenance service actually pays per cycle.  Both sweeps
-            # must reclaim exactly the planted orphans.
-            walls = []
-            for run in ("cold", "steady"):
-                kept = plant_orphans(out)
-                pub10._SNAP_CACHE.clear()
-                rss0 = _vm_rss_mb()
-                t0 = time.perf_counter()
-                if mode == "spark":
-                    removed = pub10.vacuum(out, keep_versions=0, spark=spark)
-                else:
-                    removed = pub10.vacuum(out, keep_versions=0)
-                walls.append(time.perf_counter() - t0)
-                rss1 = _vm_rss_mb()
-                assert len(removed) == n_orphans, (mode, run, len(removed))
-                assert all(os.path.exists(p) for p in kept), (mode, run)
-            report[f"vacuum_{mode}"] = {
-                "wall_s": round(walls[1], 3),
-                "cold_wall_s": round(walls[0], 3),
-                "driver_rss_growth_mb": round(rss1 - rss0, 1),
-            }
-        # resolve-only comparison at the same version
-        out = os.path.join(base, "spark")
-        pub10._SNAP_CACHE.clear()
-        t0 = time.perf_counter()
-        n_drv = sum(len(v) for v in pub10._snapshot_files(out, 1).values())
-        t_drv = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        n_spk = pub10.snapshot_files_df(spark, out, 1).count()
-        t_spk = time.perf_counter() - t0
-        assert n_drv == n_spk == report["live_files"]
-        report["resolve_driver_s"] = round(t_drv, 3)
-        report["resolve_spark_s"] = round(t_spk, 3)
-
-        # AUTO-select row (r11): fresh orphans, vacuum() with NO spark
-        # argument — past CLUSTER_PATH_MIN_FILES it must route
-        # cluster-side by itself off the free n_files metadata
-        fresh = []
-        for i in range(64):
-            d = os.path.join(out, "blocks.parquet", f"height_bucket={i}")
-            os.makedirs(d, exist_ok=True)
-            p = os.path.join(d, f"part-auto-orphan-{i:03d}.parquet")
-            with open(p, "wb") as f:
-                f.write(b"x")
-            fresh.append(p)
-        calls = {"n": 0}
-        orig_vds = pub10._vacuum_data_spark
-
-        def counting(*a, **k):
-            calls["n"] += 1
-            return orig_vds(*a, **k)
-
-        pub10._vacuum_data_spark = counting
-        try:
-            pub10._SNAP_CACHE.clear()
+        # two timed sweeps: the FIRST pays the cold page cache of the
+        # sidecar and the table directories; the SECOND, with orphans
+        # replanted, is the steady-state cost a long-lived maintenance
+        # service pays per cycle.  Both must reclaim exactly the planted
+        # orphans and keep the live files.
+        walls = []
+        for run in ("cold", "steady"):
+            kept = plant_orphans()
+            pub._SNAP_CACHE.clear()
+            rss0 = _vm_rss_mb()
             t0 = time.perf_counter()
-            removed = pub10.vacuum(out, keep_versions=0)
-            wall = time.perf_counter() - t0
-        finally:
-            pub10._vacuum_data_spark = orig_vds
-        assert len(removed) == len(fresh), len(removed)
-        report["vacuum_auto"] = {
-            "wall_s": round(wall, 3),
-            "routed": "spark" if calls["n"] else "driver",
-            "threshold": pub10.CLUSTER_PATH_MIN_FILES,
+            removed = pub.vacuum(out, keep_versions=0)
+            walls.append(time.perf_counter() - t0)
+            rss1 = _vm_rss_mb()
+            assert len(removed) == n_orphans, (run, len(removed))
+            assert all(os.path.exists(p) for p in kept), run
+        report["vacuum"] = {
+            "wall_s": round(walls[1], 3),
+            "cold_wall_s": round(walls[0], 3),
+            "driver_rss_growth_mb": round(rss1 - rss0, 1),
         }
-
-        # checkpoint-COMMIT rows (r11): the amortized every-16th commit
-        # that used to hydrate the full snapshot on the driver.  Advance
-        # each twin store to one version short of the boundary with tiny
-        # deltas, then time the checkpoint commit itself — driver-built
-        # sidecar vs the cluster-side build
-        for mode in ("driver", "spark"):
-            st = os.path.join(base, mode)
-            while (pub10._latest_version(st) + 1) % pub10.CHECKPOINT_EVERY:
-                v = pub10._latest_version(st) + 1
-                pub10._commit_delta(
-                    st, v,
-                    {"blocks": [f"part-delta-{v:04d}.parquet"]}, {}, {},
-                    op="publish",
-                )
-            v_ck = pub10._latest_version(st) + 1
-            add = {"blocks": [f"part-ck-{v_ck:04d}.parquet"]}
-            pub10._SNAP_CACHE.clear()
-            old_thresh = pub10.CLUSTER_PATH_MIN_FILES
-            if mode == "spark":
-                pub10.CLUSTER_PATH_MIN_FILES = 0  # force at any sweep size
-            try:
-                rss0 = _vm_rss_mb()
-                t0 = time.perf_counter()
-                pub10._commit_delta(
-                    st, v_ck, add, {}, {}, op="publish",
-                    spark=spark if mode == "spark" else None,
-                )
-                wall = time.perf_counter() - t0
-                rss1 = _vm_rss_mb()
-            finally:
-                pub10.CLUSTER_PATH_MIN_FILES = old_thresh
-            c = pub10._load_commit(st, v_ck)
-            assert "ckpt" in c, (mode, c)
-            report[f"ckpt_commit_{mode}"] = {
-                "wall_s": round(wall, 3),
-                "driver_rss_growth_mb": round(rss1 - rss0, 1),
-                "n_files": c["n_files"],
-            }
-        assert (
-            report["ckpt_commit_driver"]["n_files"]
-            == report["ckpt_commit_spark"]["n_files"]
-        )
-
-        # MULTI-PART checkpoint row (r11): same cluster build with the
-        # part threshold forced low enough to range-partition the
-        # sidecar — at 10^8 files this is the difference between one
-        # writer task's giant sort+write and N parallel parts; here it
-        # measures the shape's overhead/benefit at the sweep's size
-        st = os.path.join(base, "spark")
-        while (pub10._latest_version(st) + 1) % pub10.CHECKPOINT_EVERY:
-            v = pub10._latest_version(st) + 1
-            pub10._commit_delta(
-                st, v, {"blocks": [f"part-mp-delta-{v:04d}.parquet"]},
-                {}, {}, op="publish",
-            )
-        v_ck = pub10._latest_version(st) + 1
-        old_thresh = pub10.CLUSTER_PATH_MIN_FILES
-        old_part = pub10.SIDECAR_ROWS_PER_PART
-        pub10.CLUSTER_PATH_MIN_FILES = 0
-        pub10.SIDECAR_ROWS_PER_PART = max(1, n_files // 8)
-        try:
-            pub10._SNAP_CACHE.clear()
-            t0 = time.perf_counter()
-            pub10._commit_delta(
-                st, v_ck, {"blocks": [f"part-mp-{v_ck:04d}.parquet"]},
-                {}, {}, op="publish", spark=spark,
-            )
-            wall = time.perf_counter() - t0
-        finally:
-            pub10.CLUSTER_PATH_MIN_FILES = old_thresh
-            pub10.SIDECAR_ROWS_PER_PART = old_part
-        c = pub10._load_commit(st, v_ck)
-        side = os.path.join(st, "_manifest", c["ckpt"])
-        n_parts = (
-            len([f for f in os.listdir(side)
-                 if not f.startswith(("_", "."))])
-            if os.path.isdir(side)
-            else 1
-        )
-        pub10._SNAP_CACHE.clear()
+        pub._SNAP_CACHE.clear()
         t0 = time.perf_counter()
-        n_resolved = pub10.snapshot_files_df(spark, st, v_ck).count()
-        t_res = time.perf_counter() - t0
-        assert n_resolved == c["n_files"]
-        report["ckpt_commit_spark_multipart"] = {
-            "wall_s": round(wall, 3),
-            "n_parts": n_parts,
-            "resolve_spark_s": round(t_res, 3),
-        }
+        n = sum(len(v) for v in pub._snapshot_files(out, 1).values())
+        report["resolve_s"] = round(time.perf_counter() - t0, 3)
+        assert n == report["live_files"]
 
-        # ABOVE the 8M-row design point (r12: the 16M sweep) the natural
-        # build is already multi-part — measure the INVERSE too: a
-        # forced single-part build at the same size, so the threshold's
-        # design point (multi-part ≤ single-part wall past 8M rows) is
-        # measured rather than extrapolated from the forced-low 4M row
-        if n_files > old_part:
-            while (pub10._latest_version(st) + 1) % pub10.CHECKPOINT_EVERY:
-                v = pub10._latest_version(st) + 1
-                pub10._commit_delta(
-                    st, v, {"blocks": [f"part-sp-delta-{v:04d}.parquet"]},
-                    {}, {}, op="publish",
-                )
-            v_ck = pub10._latest_version(st) + 1
-            pub10.CLUSTER_PATH_MIN_FILES = 0
-            pub10.SIDECAR_ROWS_PER_PART = 10 ** 12  # force ONE part
-            try:
-                pub10._SNAP_CACHE.clear()
-                t0 = time.perf_counter()
-                pub10._commit_delta(
-                    st, v_ck, {"blocks": [f"part-sp-{v_ck:04d}.parquet"]},
-                    {}, {}, op="publish", spark=spark,
-                )
-                wall = time.perf_counter() - t0
-            finally:
-                pub10.CLUSTER_PATH_MIN_FILES = old_thresh
-                pub10.SIDECAR_ROWS_PER_PART = old_part
-            c = pub10._load_commit(st, v_ck)
-            assert not os.path.isdir(
-                os.path.join(st, "_manifest", c["ckpt"])
-            ), "single-part force failed"
-            report["ckpt_commit_spark_single_forced"] = {
-                "wall_s": round(wall, 3),
-            }
+        # the checkpoint COMMIT: advance to one version short of the
+        # boundary with tiny deltas, then time the checkpoint commit —
+        # the Arrow fold of the v1 sidecar with the deltas since
+        while (pub._latest_version(out) + 1) % pub.CHECKPOINT_EVERY:
+            v = pub._latest_version(out) + 1
+            pub._commit_delta(
+                out, v,
+                {"blocks": [f"part-delta-{v:04d}.parquet"]}, {}, {},
+                op="publish",
+            )
+        v_ck = pub._latest_version(out) + 1
+        pub._SNAP_CACHE.clear()
+        rss0 = _vm_rss_mb()
+        t0 = time.perf_counter()
+        pub._commit_delta(
+            out, v_ck, {"blocks": [f"part-ck-{v_ck:04d}.parquet"]}, {}, {},
+            op="publish",
+        )
+        wall = time.perf_counter() - t0
+        rss1 = _vm_rss_mb()
+        c = pub._load_commit(out, v_ck)
+        assert "ckpt" in c and c["n_files"] == n + v_ck - 1, c["n_files"]
+        report["ckpt_commit"] = {
+            "wall_s": round(wall, 3),
+            "driver_rss_growth_mb": round(rss1 - rss0, 1),
+            "n_files": c["n_files"],
+        }
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return report
@@ -520,11 +373,10 @@ def run_race(rounds: int) -> dict:
     return report
 
 
-def run_race_spark(rounds: int) -> dict:
-    """The r10/r11 CLUSTER paths under genuine interleaving (r11 verdict
-    ask): a writer thread publishing micro-batches while a maintenance
-    thread loops pin_version(spark=) → vacuum(spark=) → pinned-snapshot
-    re-read → unpin — so distributed walks, executor pin probes, and
+def run_race_maintenance(rounds: int) -> dict:
+    """Maintenance under genuine interleaving: a writer thread publishing
+    micro-batches while a maintenance thread loops pin_version → vacuum
+    → pinned-snapshot re-read → unpin — so vacuum walks, pin probes and
     checkpoint builds all run while commits land.  Pre-aged orphans are
     planted for the sweeps to reclaim (min_age_s=30 keeps the writer's
     in-flight staging safe, exactly the production configuration).
@@ -539,9 +391,9 @@ def run_race_spark(rounds: int) -> dict:
     from chainweb_data_spark.session import get_spark
     from chainweb_data_spark.streaming import publish as pub10
 
-    spark = get_spark("txlog-race-spark")
+    spark = get_spark("txlog-race-maintenance")
     PK = {"t": ("id",)}
-    base = tempfile.mkdtemp(prefix="txlog-race-spark-")
+    base = tempfile.mkdtemp(prefix="txlog-race-maint-")
     out = os.path.join(base, "store")
 
     def batch(lo, hi):
@@ -608,24 +460,20 @@ def run_race_spark(rounds: int) -> dict:
                 cycle += 1
                 held = None
                 try:
-                    pub10.pin_version(out, v, name="race", spark=spark)
+                    pub10.pin_version(out, v, name="race")
                     held = v
                     stats["pins"] += 1
                 except ValueError:
                     # lost the pin/vacuum race — the LOUD contract
                     stats["pin_lost_races"] += 1
-                # vacuum every THIRD cycle (r12 pacing): the full
-                # cluster sweep dominated each cycle's wall, capping the
-                # rehearsal at ~7 pin→read→unpin cycles per run — the
-                # race-window coverage under test is the pin/read/unpin
-                # vs writer interleaving, so let those cycles outnumber
-                # the sweeps
+                # vacuum every THIRD cycle: the race-window coverage under
+                # test is the pin/read/unpin vs writer interleaving, so
+                # let those cycles outnumber the sweeps
                 if cycle % 3 == 1:
                     with warnings.catch_warnings(record=True) as w:
                         warnings.simplefilter("always")
                         removed = pub10.vacuum(
-                            out, keep_versions=1, min_age_s=30.0,
-                            spark=spark,
+                            out, keep_versions=1, min_age_s=30.0
                         )
                     hollow.extend(
                         x for x in w if "HOLLOW" in str(x.message)
@@ -668,14 +516,14 @@ def run_race_spark(rounds: int) -> dict:
         assert stats["orphans_reclaimed"] >= planted, stats
 
         # injected hollow lease: delete a pinned file mid-lease — the
-        # next spark vacuum MUST warn (and name the loss count)
+        # next vacuum MUST warn (and name the loss count)
         v_pin = pub10._latest_version(out)
-        pub10.pin_version(out, v_pin, name="doomed", spark=spark)
+        pub10.pin_version(out, v_pin, name="doomed")
         victim = pub10._snapshot_files(out, v_pin)["t"][0]
         os.remove(os.path.join(out, "t.parquet", victim))
         with warnings.catch_warnings(record=True) as w:
             warnings.simplefilter("always")
-            pub10.vacuum(out, keep_versions=0, min_age_s=30.0, spark=spark)
+            pub10.vacuum(out, keep_versions=0, min_age_s=30.0)
         injected = [x for x in w if "HOLLOW" in str(x.message)]
         assert injected, "injected hollow lease did not warn"
 
@@ -697,71 +545,6 @@ def run_race_spark(rounds: int) -> dict:
     return report
 
 
-def run_pinsweep(n_files: int) -> dict:
-    """The r12 shared-base row: vacuum over a store with FOUR pinned
-    snapshots (all sharing one checkpoint ancestor) — the base_cache
-    resolves the ancestor's sidecar once instead of once per retained/
-    pinned version.  Timed both ways (cache on = production path; cache
-    off = per-version scans, simulated by bypassing the cache seam) on
-    the same store; identical reclamation required."""
-    from chainweb_data_spark.session import get_spark
-    from chainweb_data_spark.streaming import publish as pub12
-
-    spark = get_spark("txlog-pinsweep")
-    tables = _seed_snapshot(n_files)
-    base = tempfile.mkdtemp(prefix="txlog-pinsweep-")
-    out = os.path.join(base, "store")
-    os.makedirs(out)
-    report: dict = {"live_files": sum(len(v) for v in tables.values())}
-    try:
-        _seed(out, tables)
-        # a few deltas, then pins on four versions (same v1 ancestor)
-        for i in range(6):
-            v = pub12._latest_version(out) + 1
-            add = {"blocks": [f"part-pin-delta-{v:03d}.parquet"]}
-            pub12._commit_append(out, v, add, {}, op="publish")
-        # materialize ONLY the pinned-delta files (the seed files are
-        # synthetic metadata; the pin probe runs executor-side against
-        # the full snapshot, so probe via driver path for speed here)
-        pins = [2, 4, 6, 7]
-        report["pins"] = len(pins)
-        for v in pins:
-            pub12._commit_pin_op(
-                out, "pin", {"version": v, "name": f"lease-{v}"}
-            )
-
-        def timed(label, cache_on):
-            orig = pub12._snapshot_df
-
-            def uncached(sp, od, ver, with_stats, base_cache=None):
-                return orig(
-                    sp, od, ver, with_stats,
-                    base_cache=base_cache if cache_on else None,
-                )
-
-            pub12._snapshot_df = uncached
-            try:
-                pub12._SNAP_CACHE.clear()
-                t0 = time.perf_counter()
-                removed = pub12.vacuum(
-                    out, keep_versions=1, spark=spark
-                )
-                report[label] = {
-                    "wall_s": round(time.perf_counter() - t0, 3),
-                    "removed": len(removed),
-                }
-            finally:
-                pub12._snapshot_df = orig
-
-        timed("vacuum_cache_off", cache_on=False)  # warm plans first
-        timed("vacuum_cache_off_steady", cache_on=False)
-        timed("vacuum_cache_on", cache_on=True)
-        timed("vacuum_cache_on_steady", cache_on=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return report
-
-
 def run_megarewrite(n_files: int) -> dict:
     """The r12 spilled-delta row: a whole-table rewrite (format
     migration) committed against a store with ``n_files`` live files,
@@ -771,8 +554,6 @@ def run_megarewrite(n_files: int) -> dict:
     rewrite), and the post-rewrite resolve wall — identical results
     required both ways.  Metadata-only, like the base rehearsal: the
     cost under test is JSON/parquet bytes + fsync."""
-    from chainweb_data_spark.session import get_spark
-
     tables = _seed_snapshot(n_files)
     rw_table = TABLES[0]
     new_files = [
@@ -845,14 +626,6 @@ def run_megarewrite(n_files: int) -> dict:
                 "resolve_wall_s": round(resolve_wall, 3),
                 "driver_rss_growth_mb": round(_vm_rss_mb() - rss0, 1),
             }
-        # cluster-side resolve across the spilled rewrite (the sidecar
-        # is read by Spark, never hydrated on the driver)
-        spark = get_spark("txlog-megarw")
-        out = os.path.join(base, "spill")
-        t0 = time.perf_counter()
-        n = pub.snapshot_files_df(spark, out, 4).count()
-        report["spill_resolve_spark_s"] = round(time.perf_counter() - t0, 3)
-        assert n == report["live_files"]
         report["json_bytes_ratio"] = round(
             report["inline"]["commit_json_bytes"]
             / report["spill"]["commit_json_bytes"],
@@ -865,11 +638,6 @@ def run_megarewrite(n_files: int) -> dict:
 
 
 def main() -> None:
-    if "--pinsweep" in sys.argv:
-        i = sys.argv.index("--pinsweep")
-        n = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 1_000_000
-        print(json.dumps({"pinsweep": run_pinsweep(n)}))
-        return
     if "--megarewrite" in sys.argv:
         i = sys.argv.index("--megarewrite")
         n = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 1_000_000
@@ -882,11 +650,10 @@ def main() -> None:
         return
     if "--race" in sys.argv:
         i = sys.argv.index("--race")
-        rounds = 12
-        if len(sys.argv) > i + 1 and sys.argv[i + 1].isdigit():
-            rounds = int(sys.argv[i + 1])
-        if "--spark" in sys.argv:
-            print(json.dumps({"race_spark": run_race_spark(rounds)}))
+        counts = [a for a in sys.argv[i + 1:] if a.isdigit()]
+        rounds = int(counts[0]) if counts else 12
+        if "--maintenance" in sys.argv:
+            print(json.dumps({"race_maintenance": run_race_maintenance(rounds)}))
         else:
             print(json.dumps({"race": run_race(rounds)}))
         return

@@ -155,7 +155,7 @@ def test_manifest_flip_is_atomic_rename(tmp_path):
     in-place truncation window.  (Protocol test: write two manifests and
     check CURRENT always parses and points at a complete snapshot.)"""
     out = str(tmp_path / "t")
-    pub._write_manifest(out, {"version": 1, "tables": {"blocks": ["a"]}})
+    pub._commit_delta(out, 1, {"blocks": ["a"]}, {}, {})
     pub._write_manifest(out, {"version": 2, "add": {"blocks": ["b"]}})
     m = read_manifest(out)
     assert m["version"] == 2 and m["tables"]["blocks"] == ["a", "b"]

@@ -7,8 +7,8 @@ a v<N>.json that every subsequent resolve re-parses.
 
 The load-bearing property: a SPILLED store is value-identical to an
 INLINE twin with the same commit history, on every consumer — driver
-resolve, per-table read, cluster-side DataFrame resolve, metadata count
-folds, history, race-window conflict detection."""
+resolve, per-table read, the checkpoint built across the spill,
+history, race-window conflict detection."""
 
 import json
 import os
@@ -23,11 +23,9 @@ def _grow_twin(out, spill):
     """Seed + 3 small deltas + one mega rewrite (remove ALL of t, add 8)
     + 2 more small deltas — identical histories either way."""
     os.makedirs(out)
-    pub._write_manifest(
-        out,
-        {"version": 1,
-         "tables": {"t": [f"b=0/s{k}.parquet" for k in range(4)]},
-         "op": "seed"},
+    pub._commit_delta(
+        out, 1, {"t": [f"b=0/s{k}.parquet" for k in range(4)]}, {}, {},
+        op="seed",
     )
     for i in range(3):
         pub._commit_delta(
@@ -90,12 +88,6 @@ def test_spilled_store_resolves_identically_to_inline_twin(twins):
         assert {t: sorted(f) for t, f in a.items()} == {
             t: sorted(f) for t, f in b.items()
         }, v
-        assert pub._store_n_files(twins["inline"], v) == pub._store_n_files(
-            twins["spill"], v
-        ), v
-        assert pub._store_table_counts(
-            twins["inline"], v
-        ) == pub._store_table_counts(twins["spill"], v), v
     # stats fold through the spill (stats ride the sidecar's add rows)
     pub._SNAP_CACHE.clear()
     assert (
@@ -130,53 +122,18 @@ def test_spilled_store_history_and_race_detection(twins):
     assert set(a["t"]) >= {f"b=9/r{k}.parquet" for k in range(8)}
 
 
-def test_cluster_resolve_reads_spill_with_spark(spark, twins, monkeypatch):
-    """snapshot_files_df must fold a spilled delta by READING the
-    sidecar with Spark — the driver never hydrates the spilled list
-    (pyarrow hydration is bombed for the duration)."""
-    latest = pub._latest_version(twins["spill"])
+def test_checkpoint_crosses_spilled_delta(twins):
+    """The checkpoint builder must fold a spilled delta in its ancestry
+    (hydrated through the delta sidecar) into the same sidecar rows and
+    commit counts as the inline twin."""
+    import pyarrow.parquet as pq
 
-    def boom(out_dir, commit, table=None, with_stats=True):
-        if "delta" in commit:
-            raise AssertionError(
-                "cluster resolve hydrated a spilled delta driver-side"
-            )
-        return commit
-
-    monkeypatch.setattr(pub, "_hydrate_delta", boom)
-    for v in (4, 5, latest):
-        rows = sorted(
-            (r["table"], r["file"])
-            for r in pub.snapshot_files_df(
-                spark, twins["spill"], v
-            ).collect()
-        )
-        # the bomb stays armed for every version; the truth side below
-        # reads the INLINE twin, which has no spilled commits to trip it
-        pub._SNAP_CACHE.clear()
-        truth = sorted(
-            (t, f)
-            for t, fs in pub._snapshot_files(twins["inline"], v).items()
-            for f in fs
-        )
-        assert rows == truth, v
-
-
-def test_checkpoint_crosses_spilled_delta_on_both_builders(
-    spark, twins, monkeypatch
-):
-    """Both checkpoint builders (driver resolve, cluster _snapshot_df)
-    must fold a spilled delta in their ancestry into an identical
-    sidecar snapshot."""
-    for mode, sp in (("inline", None), ("spill", spark)):
-        out = twins[mode]
-        if sp is not None:
-            monkeypatch.setattr(pub, "CLUSTER_PATH_MIN_FILES", 0)
+    for out in twins.values():
         while pub._latest_version(out) < pub.CHECKPOINT_EVERY:
             i = pub._latest_version(out)
             pub._commit_delta(
                 out, i + 1, {"u": [f"uu{i}.parquet"]}, {}, {},
-                op="publish", spark=sp,
+                op="publish",
             )
     cks = {
         m: pub._load_commit(twins[m], pub.CHECKPOINT_EVERY)
@@ -184,6 +141,14 @@ def test_checkpoint_crosses_spilled_delta_on_both_builders(
     }
     for key in ("n_files", "table_names", "n_files_by_table"):
         assert cks["inline"][key] == cks["spill"][key], key
+    rows = {
+        m: pq.read_table(
+            os.path.join(twins[m], "_manifest", cks[m]["ckpt"])
+        ).to_pydict()
+        for m in twins
+    }
+    assert rows["inline"] == rows["spill"]
+    assert set(rows["spill"]["file"]) >= {f"b=9/r{k}.parquet" for k in range(8)}
     pub._SNAP_CACHE.clear()
     assert pub._snapshot_files(
         twins["inline"], pub.CHECKPOINT_EVERY
@@ -194,15 +159,13 @@ def test_mega_delta_on_checkpoint_boundary_spills(tmp_path, monkeypatch):
     """A mega-rewrite landing exactly ON a checkpoint version spills its
     own delta too: the ckpt JSON carries delta+counts, not the list, and
     race detection still folds O(delta)."""
-    monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 5)
     out = str(tmp_path / "ckb")
     os.makedirs(out)
-    pub._write_manifest(
-        out,
-        {"version": 1,
-         "tables": {"t": [f"b=0/s{k}.parquet" for k in range(6)]},
-         "op": "seed"},
+    pub._commit_delta(
+        out, 1, {"t": [f"b=0/s{k}.parquet" for k in range(6)]}, {}, {},
+        op="seed",
     )
+    monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 5)
     while pub._latest_version(out) < pub.CHECKPOINT_EVERY - 1:
         i = pub._latest_version(out)
         pub._commit_delta(
@@ -248,7 +211,7 @@ def test_vacuum_reclaims_orphan_delta_spills_keeps_referenced(
         f.write(b"x")
     old = time.time() - 10 ** 6
     os.utime(orphan, (old, old))
-    removed = pub.vacuum(out, keep_versions=99, spark=None)
+    removed = pub.vacuum(out, keep_versions=99)
     assert any("delta-v3-deadbeef0000" in r for r in removed)
     assert not os.path.exists(orphan)
     assert os.path.exists(os.path.join(mdir, ref))
@@ -258,7 +221,7 @@ def test_vacuum_reclaims_orphan_delta_spills_keeps_referenced(
     )
     with open(ahead, "wb") as f:
         f.write(b"x")
-    pub.vacuum(out, keep_versions=99, min_age_s=0, spark=None)
+    pub.vacuum(out, keep_versions=99, min_age_s=0)
     assert os.path.exists(ahead), "in-flight delta spill reclaimed"
     # time-travel still replays the spilled rewrite after the vacuum
     pub._SNAP_CACHE.clear()
@@ -310,7 +273,7 @@ def test_vacuum_reclaims_crash_leaked_stage_tmps(twins):
             f.write(b"x")
     old = time.time() - 10 ** 6
     os.utime(old_tmp, (old, old))
-    removed = pub.vacuum(out, keep_versions=99, spark=None)
+    removed = pub.vacuum(out, keep_versions=99)
     assert any(".deadbeef.tmp" in r for r in removed)
     assert not os.path.exists(old_tmp)
     assert os.path.exists(fresh_tmp)
@@ -398,10 +361,7 @@ def test_overcap_spill_dirs_go_wildcard(tmp_path, monkeypatch):
     monkeypatch.setattr(pub, "DELTA_DIRS_CAP", 3)
     out = str(tmp_path / "oc")
     os.makedirs(out)
-    pub._write_manifest(
-        out, {"version": 1, "tables": {"t": ["b=0/s.parquet"]},
-              "op": "seed"},
-    )
+    pub._commit_delta(out, 1, {"t": ["b=0/s.parquet"]}, {}, {}, op="seed")
     pub._commit_delta(
         out, 2,
         {"t": [f"b={k}/n.parquet" for k in range(1, 7)]}, {}, {},

@@ -61,8 +61,8 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
     c5 = pub._load_commit(out, 5)
     assert "delta" in c5 and "add" not in c5
     monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 10 ** 9)
-    # cross a checkpoint boundary (driver builder: parent resolve
-    # through the spill + sidecar bytes through the seam)
+    # cross a checkpoint boundary (the builder folds the v1 sidecar with
+    # the deltas since, the spill included, all through the seam)
     while pub._latest_version(out) < pub.CHECKPOINT_EVERY:
         i = pub._latest_version(out)
         pub._commit_delta(
@@ -74,7 +74,7 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
     pub._SNAP_CACHE.clear()
     snap = pub._snapshot_files(out, pub.CHECKPOINT_EVERY)
     assert sorted(snap["t"]) == sorted(f"b=9/r{k}.parquet" for k in range(4))
-    assert pub._store_n_files(out, pub.CHECKPOINT_EVERY) == ck["n_files"]
+    assert sum(len(fs) for fs in snap.values()) == ck["n_files"]
     assert pub._table_files(
         out, pub.CHECKPOINT_EVERY, "t", with_stats=False
     )[0] == sorted(snap["t"])
@@ -91,7 +91,7 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
             store.write_atomic(
                 os.path.join(out, f"{t}.parquet", rel), b"d"
             )
-    pub.pin_version(out, latest, name="lease", spark=None)
+    pub.pin_version(out, latest, name="lease")
     assert pub.pinned_versions(out) == {latest: "lease"}
     # plant a dead data file + an orphan ckpt sidecar + an orphan delta
     # spill, age them, vacuum: exactly those go
@@ -108,7 +108,7 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
               os.path.join(mdir, "ckpt-v3-feedface0000.parquet"),
               os.path.join(mdir, "delta-v2-feedface0000.parquet")):
         store.mtimes[p] -= 10 ** 6
-    removed = pub.vacuum(out, keep_versions=0, spark=None)
+    removed = pub.vacuum(out, keep_versions=0)
     assert any("dead.parquet" in r for r in removed)
     assert any("ckpt-v3-feedface0000" in r for r in removed)
     assert any("delta-v2-feedface0000" in r for r in removed)
@@ -201,30 +201,3 @@ def test_memstore_walk_and_parquet_match_posix(tmp_path):
             filters=[("table", "==", "a")],
         )
         assert t.column("file").to_pylist() == ["1", "2"]
-
-
-def test_memstore_multipart_sidecar_roundtrip(tmp_path):
-    """finalize_dir ingests a staged DIRECTORY and read_parquet concats
-    its parts — the multi-part checkpoint shape through the fake."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    mem = InMemoryLogStore()
-    stage = tmp_path / "stage"
-    stage.mkdir()
-    for i, names in enumerate((["a", "b"], ["c"])):
-        pq.write_table(
-            pa.table({"table": ["t"] * len(names), "file": names,
-                      "stats": [None] * len(names)}),
-            str(stage / f"part-{i:05d}.parquet"),
-        )
-    (stage / "_SUCCESS").write_bytes(b"")
-    mem.finalize_dir(str(stage), "v/_manifest/ckpt-v16-abc.parquet")
-    assert not stage.exists()
-    t = mem.read_parquet(
-        "v/_manifest/ckpt-v16-abc.parquet", columns=["file"]
-    )
-    assert sorted(t.column("file").to_pylist()) == ["a", "b", "c"]
-    # hidden files are ignored by discovery, directory probes agree
-    assert mem.isdir("v/_manifest/ckpt-v16-abc.parquet")
-    assert mem.exists("v/_manifest/ckpt-v16-abc.parquet")

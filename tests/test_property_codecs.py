@@ -117,17 +117,17 @@ def test_checkpoint_sidecar_roundtrip(tmp_path_factory, snap):
     normalized away, matching the inline form's `if s` filter)."""
     from chainweb_data_spark.streaming.publish import (
         _read_checkpoint_sidecar,
-        _write_checkpoint_sidecar,
+        _write_checkpoint,
     )
-
-    import os
 
     tables, stats = snap
     d = str(tmp_path_factory.mktemp("sidecar"))
-    mdir = os.path.join(d, "_manifest")
-    os.makedirs(mdir, exist_ok=True)
-    name, n = _write_checkpoint_sidecar(mdir, 16, tables, stats)
-    assert n == sum(len(fs) for fs in tables.values())
+    ck = _write_checkpoint(d, 1, tables, {}, stats)
+    name = ck["ckpt"]
+    assert ck["n_files"] == sum(len(fs) for fs in tables.values())
+    assert ck["n_files_by_table"] == {
+        t: len(fs) for t, fs in sorted(tables.items())
+    }
     got_tables, got_stats = _read_checkpoint_sidecar(
         d, {"ckpt": name}, with_stats=True
     )

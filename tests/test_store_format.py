@@ -57,27 +57,19 @@ def test_every_writer_stamps_format_1(spark, tmp_path, monkeypatch):
     # every z-file but the one holding the max id lies wholly below it
     assert expire_files(spark, out, "t", "id", 39)["removed"] >= 1
     v = pub._latest_version(out)
-    pin_version(out, v, name="lease", spark=None)
-    unpin_version(out, v, spark=None)
+    pin_version(out, v, name="lease")
+    unpin_version(out, v)
     # a spilled delta
     monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 1)
     publish_batch(spark, {"t": _batch(spark, 40, 50)}, out, pks=PK)
     monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 10**9)
-    # metadata-only deltas up to a checkpoint built cluster-side
-    built = []
-    real = pub._write_checkpoint_spark
-    monkeypatch.setattr(
-        pub, "_write_checkpoint_spark",
-        lambda *a, **k: built.append(1) or real(*a, **k),
-    )
-    monkeypatch.setattr(pub, "CLUSTER_PATH_MIN_FILES", 0)
+    # metadata-only deltas up to the next checkpoint
     while pub._latest_version(out) < pub.CHECKPOINT_EVERY:
         i = pub._latest_version(out)
         pub._commit_delta(
             out, i + 1, {"u": [f"synthetic-{i}.parquet"]}, {}, {},
-            op="publish", spark=spark,
+            op="publish",
         )
-    assert built == [1]
 
     commits = _commits(out)
     assert sorted(commits) == list(range(1, pub.CHECKPOINT_EVERY + 1))

@@ -792,3 +792,39 @@ def test_publish_after_zorder_keeps_every_row(spark, tmp_path):
     publish_batch(spark, {"t": bucketed(20, 30)}, out, pks=PK)
     got = read_published(spark, out, "t")
     assert sorted(r["id"] for r in got.collect()) == list(range(30))
+
+
+def test_table_files_matches_full_resolve(spark, tmp_path):
+    """read_published's per-table filtered resolve (files AND stats) must
+    equal the corresponding slice of the full-manifest resolve."""
+    from pyspark.sql import functions as F
+
+    def bucketed(lo, hi):
+        return (
+            spark.range(lo, hi)
+            .select(
+                F.col("id"),
+                (F.col("id") * 2).alias("val"),
+                (F.col("id") % 4).alias("height_bucket"),
+            )
+            .coalesce(1)
+        )
+
+    out = str(tmp_path / "tf")
+    for i in range(CHECKPOINT_EVERY + 2):
+        lo = i * 10
+        publish_batch(
+            spark,
+            {"t": bucketed(lo, lo + 10), "u": bucketed(lo, lo + 5)},
+            out,
+            pks={"t": ("id",), "u": ("id",)},
+        )
+    latest = read_manifest(out)["version"]
+    for v in (1, CHECKPOINT_EVERY, latest):
+        for table in ("t", "u", "never_written"):
+            pub._SNAP_CACHE.clear()
+            files, stats = pub._table_files(out, v, table, with_stats=True)
+            pub._SNAP_CACHE.clear()
+            full = pub._resolve(out, v)
+            assert files == full["tables"].get(table, [])
+            assert stats == full["stats"].get(table, {})
