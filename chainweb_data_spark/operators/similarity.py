@@ -33,10 +33,6 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def with_unit_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     """Pre-normalize so cosine = dot; cast float→double once up front.
 

@@ -744,21 +744,6 @@ def corpus_report(
     )
 
 
-def _gram_stream(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """ALL word k-gram occurrences per document (id, gram) — the counting
-    twin of ``dedup.word_shingles`` (which distincts): same
-    sequence+transform+slice windowing, same materialize-the-token-array
-    rule (one split per doc, not one per window)."""
-    base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
-    toks = F.col("_toks")
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )
-    return base.select(F.col(id_col), F.explode(grams).alias("gram"))
-
-
 def gopher_repetition(
     df: DataFrame,
     id_col: str,

@@ -15,6 +15,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: where the driver-heap default reads the memory this process may use
+MEMINFO = "/proc/meminfo"
+CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+#: the driver-heap default never exceeds this (MiB)
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """About half the memory this process may use — ``MemTotal``, or the
+    cgroup v2 ``memory.max`` when that is lower — capped at 48g.  A
+    fixed 48g heap on a smaller machine lets the JVM grow past physical
+    memory and be OOM-killed mid-run.  ``SPARK_DRIVER_MEM`` overrides."""
+    limits = []
+    try:
+        with open(MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)  # kB
+                    break
+    except (OSError, ValueError, IndexError):
+        pass
+    try:
+        with open(CGROUP_MEMORY_MAX) as f:
+            limits.append(int(f.read().strip()))  # "max" = no limit
+    except (OSError, ValueError):
+        pass
+    if not limits:
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(min(limits) // 2 // 2**20, MAX_DRIVER_MEM_MB)}m"
+
 
 def get_spark(
     app_name: str = "chainweb-data-spark",
@@ -33,7 +63,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # driver testdata stores TIMESTAMP(NANOS) which Spark has no type

@@ -1,7 +1,7 @@
 from .ann_index import ann_index_search, ann_index_sink, update_ann_index
 from .curation import curate_batch, curation_sink
 from .dedup_index import dedup_index_sink, update_dedup_index
-from .listen import TABLE_PKS, listen_stream, merge_batch
+from .listen import TABLE_PKS, listen_stream
 from .publish import (
     ConcurrentWriteError,
     compact_published,
@@ -33,7 +33,6 @@ __all__ = [
     "compact_published",
     "history",
     "listen_stream",
-    "merge_batch",
     "parse_sse_lines",
     "sse_events_to_raw_rows",
     "publish_batch",

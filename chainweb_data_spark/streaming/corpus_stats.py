@@ -1,34 +1,32 @@
 """Incremental corpus statistics — per-batch aggregate deltas folded into
-one silver table, so "what does the corpus look like right now" (language
-mix, token/char volume — the numbers every mixing/sampling decision reads)
-never rescans the corpus.
+one table of the store's transaction log, so "what does the corpus look
+like right now" (language mix, token/char volume — the numbers every
+mixing/sampling decision reads) never rescans the corpus.
 
 Per batch, ONE map-side-combined aggregation produces a handful of rows —
-(batch_id, lang, n_docs, n_tokens, n_chars), PK (batch_id, lang) — merged
-with the listen sink's replay discipline (streaming/listen.py
-``merge_batch``): a replayed batch_id anti-joins to nothing, so totals
-never double-count.  Reading the current totals sums the delta table
-(O(batches × langs) rows, ≪ corpus); compact with sources/maintenance.py
-when batch count grows large.
+(batch_id, lang, n_docs, n_tokens, n_chars), PK (batch_id, lang) —
+committed through ``publish.publish_batch`` as table ``corpus_stats``: a
+replayed batch_id anti-joins to nothing, so totals never double-count.
+Reading the current totals sums the PUBLISHED delta table
+(O(batches × langs) rows, ≪ corpus) — files a compaction replaced are
+in no snapshot, so they never count twice.
 
 This is the corpus-side sibling of the windowed stats sink
 (streaming/stateful.py ``windowed_counts_sink``) — same
-delta-plus-idempotent-merge shape, keyed by batch instead of event-time
+delta-plus-idempotent-commit shape, keyed by batch instead of event-time
 window because corpus stats have no watermark semantics: a batch is a
 batch, whenever it arrives.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import token_count
-from .listen import merge_batch
+from .publish import publish_batch, read_published
 
-STATS_TABLE = "corpus_stats.parquet"
+STATS_TABLE = "corpus_stats"
 
 
 def stats_delta(
@@ -66,31 +64,27 @@ def update_corpus_stats(
     lang_col: str = "lang",
     text_col: str = "text",
 ) -> None:
-    """Fold one batch's per-language stats into the delta table."""
-    merge_batch(
+    """Commit one batch's per-language stats into the delta table."""
+    publish_batch(
         spark,
-        stats_delta(docs, batch_id, lang_col, text_col),
-        os.path.join(out_dir, STATS_TABLE),
-        ("batch_id", "lang"),
+        {STATS_TABLE: stats_delta(docs, batch_id, lang_col, text_col)},
+        out_dir,
+        pks={STATS_TABLE: ("batch_id", "lang")},
     )
 
 
 def corpus_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Current totals per language: one aggregation over the (small) delta
-    table — never the corpus.  Before the first batch is folded the table
-    does not exist; a monitoring/mixing poller then gets an EMPTY frame
-    with the totals schema, not a PATH_NOT_FOUND crash."""
-    path = os.path.join(out_dir, STATS_TABLE)
-    if not os.path.exists(path):
+    """Current totals per language: one aggregation over the (small)
+    published delta table — never the corpus.  Before the first batch is
+    committed a monitoring/mixing poller gets an EMPTY frame with the
+    totals schema, not a crash."""
+    deltas = read_published(spark, out_dir, STATS_TABLE)
+    if deltas is None:
         return spark.createDataFrame(
             [], "lang string, n_docs bigint, n_tokens bigint, n_chars bigint"
         )
-    return (
-        spark.read.parquet(path)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_chars").alias("n_chars"),
-        )
+    return deltas.groupBy("lang").agg(
+        F.sum("n_docs").alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.sum("n_chars").alias("n_chars"),
     )

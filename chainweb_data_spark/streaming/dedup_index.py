@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
-from .listen import merge_batch
 from .publish import compact_published, publish_batch, read_published
 
 BANDS_TABLE = "minhash_bands.parquet"
@@ -311,12 +310,12 @@ def dedup_index_sink(
     uncommitted batch with the SAME batch_id after a crash, and
     ``update_dedup_index`` is idempotent per (content, batch_id) — the
     replay re-flags identical rows and merges nothing.  Flagged rows
-    optionally persist to ``flags_dir`` through the idempotent PK merge
-    (PK = (id, dup_of); a replayed batch's flags land as no-ops), with a
-    ``key_bucket`` so downstream probes prune.  Compaction runs inside the
-    batch callback every ``compact_every`` batches — serialized with the
-    writes, which the manifest protocol's single-writer assumption
-    requires.  Returns the StreamingQuery (caller awaits / stops)."""
+    optionally persist as table ``dedup_flags`` of the transaction-log
+    store at ``flags_dir`` (``publish_batch``; PK = (id, dup_of), so a
+    replayed batch's flags land as no-ops), with a ``key_bucket`` so the
+    duplicate probe prunes.  Compaction runs inside the batch callback
+    every ``compact_every`` batches — serialized with the writes, which
+    the manifest protocol's single-writer assumption requires.  Returns the StreamingQuery (caller awaits / stops)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -332,7 +331,12 @@ def dedup_index_sink(
         )
         if flags_dir is not None:
             out = flags.withColumn("key_bucket", _id_bucket(id_col))
-            merge_batch(sp, out, flags_dir, (id_col, "dup_of"))
+            publish_batch(
+                sp,
+                {"dedup_flags": out},
+                flags_dir,
+                pks={"dedup_flags": (id_col, "dup_of")},
+            )
 
     writer = (
         docs_stream.writeStream.foreachBatch(_process)

@@ -46,10 +46,10 @@ leaves orphan data files that no commit references; :func:`vacuum`
 reclaims them (with a ``min_age_s`` grace window so a CONCURRENT writer's
 staged-but-uncommitted files — indistinguishable from crash orphans by
 reference alone — survive until its commit lands), and the duplicate
-probe only consults published rows (null-safe on PK components, like
-``merge_plan``), so the replayed batch re-stages identical content — or
-stages nothing at all, in which case NO commit is written (a version
-burned per replay would silently shrink the retention horizon).
+probe only consults published rows (null-safe on PK components), so
+the replayed batch re-stages identical content — or stages nothing at
+all, in which case NO commit is written (a version burned per replay
+would silently shrink the retention horizon).
 
 Scale properties:
 
@@ -117,7 +117,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .listen import TABLE_PKS, batch_buckets, prune_existing_to_batch
+from .listen import TABLE_PKS
 from .logstore import InMemoryLogStore, PosixLogStore  # noqa: F401
 
 #: the txlog's storage seam (r12 — Delta's LogStore move): every
@@ -1296,6 +1296,95 @@ def _footer(path: str) -> tuple[int | None, dict[str, list]]:
     return md.num_rows, acc
 
 
+def batch_buckets(
+    batch: DataFrame, bucket_col: str | None
+) -> tuple | list | None:
+    """The partitions the batch can collide with: the (lo, hi) RANGE of
+    height_bucket (the stream is height-clustered; (None, None) for an
+    empty batch), the distinct key_bucket values (key buckets are a pure
+    function of the PK), or None when the batch carries no bucket.  One
+    action on ``batch``."""
+    from pyspark.sql import functions as F
+
+    if bucket_col == "height_bucket":
+        return tuple(batch.agg(F.min(bucket_col), F.max(bucket_col)).first())
+    if bucket_col is not None:
+        return [r[0] for r in batch.select(bucket_col).distinct().collect()]
+    return None
+
+
+def prune_existing_to_batch(
+    existing: DataFrame, bucket_col: str | None, buckets: tuple | list | None
+) -> DataFrame:
+    """Bound the duplicate-probe scan to the partitions
+    :func:`batch_buckets` found: a [min, max] RANGE on height_bucket, an
+    IN-set on key_bucket, the full table when the batch carries no bucket
+    or no rows."""
+    from pyspark.sql import functions as F
+
+    if bucket_col == "height_bucket":
+        lo, hi = buckets
+        if lo is not None:
+            return existing.filter(
+                (F.col(bucket_col) >= lo) & (F.col(bucket_col) <= hi)
+            )
+    elif bucket_col is not None and buckets:
+        return existing.filter(F.col(bucket_col).isin(buckets))
+    return existing
+
+
+def _probe_plan(
+    spark: SparkSession,
+    df: DataFrame,
+    out_dir: str,
+    table: str,
+    pk: tuple[str, ...],
+) -> tuple[DataFrame, str | None, DataFrame | None]:
+    """The rows to stage — ``df`` deduplicated on ``pk``, minus rows whose
+    PK is already PUBLISHED (ON CONFLICT DO NOTHING, Worker.hs:54-77) —
+    with the table's bucket column and the cached copy of ``df`` the
+    caller releases after its write (None when nothing was cached).
+
+    The duplicate probe is bounded by partition pruning (reference
+    parity: Worker.hs:50-82 touches only the incoming rows' keys):
+
+    - ``height_bucket`` tables: every PK embeds the block identity, so a
+      replayed row lands in the same bucket, and the stream is
+      height-clustered — a RANGE filter on the batch's [min, max] bucket
+      prunes the probe to O(recent buckets).
+    - ``key_bucket`` tables (signers, minerkeys, the silver and side
+      tables): the bucket is a pure function of the row's identity, so an
+      IN filter on the batch's distinct buckets is exact; probe cost
+      scales with the batch's key spread, not table history.
+
+    The equality is null-safe per PK column: silver-table identities
+    carry nullable components (a continuation row's code), and plain
+    equality (NULL != NULL) would re-append every NULL-keyed row on each
+    crash replay — the duplication the probe exists to prevent."""
+    bucket_col = next(
+        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
+    )
+    cached = None
+    existing = read_published(spark, out_dir, table)
+    if existing is not None and bucket_col is not None:
+        # a no-op projection is its own cache entry: releasing it never
+        # drops a cache the caller holds on ``df``.  Bounds over the input
+        # cover the deduplicated batch's buckets.
+        df = cached = df.select("*").cache()
+        existing = prune_existing_to_batch(
+            existing, bucket_col, batch_buckets(df, bucket_col)
+        )
+    batch = df.dropDuplicates(list(pk))
+    if existing is not None:
+        probe = existing.select(*pk)
+        cond = None
+        for c in pk:
+            eq = batch[c].eqNullSafe(probe[c])
+            cond = eq if cond is None else (cond & eq)
+        batch = batch.join(probe, on=cond, how="left_anti")
+    return batch, bucket_col, cached
+
+
 def _stage_table(
     spark: SparkSession,
     df: DataFrame,
@@ -1304,10 +1393,10 @@ def _stage_table(
     pk: tuple[str, ...],
     layout: tuple[tuple[str, ...], tuple[str, ...]] | None = None,
 ) -> tuple[list[str], dict[str, dict]]:
-    """Anti-join ``df`` against the PUBLISHED rows (bounded by the same
-    bucket pruning as merge_plan), write the survivors partition-laid-out
-    into the table directory, and return the new files' relative paths and
-    footer stats — on disk but in no commit until the caller commits.
+    """Anti-join ``df`` against the PUBLISHED rows (:func:`_probe_plan`),
+    write the survivors partition-laid-out into the table directory, and
+    return the new files' relative paths and footer stats — on disk but
+    in no commit until the caller commits.
 
     Actions per table: the write alone when the table has no published
     rows or no bucket column; else the probe-bounds action, which fills a
@@ -1328,31 +1417,7 @@ def _stage_table(
     aggregate's internal ordering).  ``repartition(cluster) →
     sortWithinPartitions(sort)`` here is the only placement that actually
     reaches the files."""
-    bucket_col = next(
-        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
-    )
-    cached = None
-    existing = read_published(spark, out_dir, table)
-    if existing is not None and bucket_col is not None:
-        # a no-op projection is its own cache entry: releasing it never
-        # drops a cache the caller holds on ``df``.  Bounds over the input
-        # cover the deduplicated batch's buckets.
-        df = cached = df.select("*").cache()
-        existing = prune_existing_to_batch(
-            existing, bucket_col, batch_buckets(df, bucket_col)
-        )
-    batch = df.dropDuplicates(list(pk))
-    if existing is not None:
-        # null-safe per-column equality, SAME rule as listen.py merge_plan:
-        # silver-table PKs carry nullable components, and plain equality
-        # (NULL != NULL) would re-append every NULL-keyed row on each
-        # crash replay — the duplication the probe exists to prevent
-        probe = existing.select(*pk)
-        cond = None
-        for c in pk:
-            eq = batch[c].eqNullSafe(probe[c])
-            cond = eq if cond is None else (cond & eq)
-        batch = batch.join(probe, on=cond, how="left_anti")
+    batch, bucket_col, cached = _probe_plan(spark, df, out_dir, table, pk)
 
     if layout is not None:
         cluster, sort = layout
@@ -1839,8 +1904,8 @@ def vacuum(
     set there means "nothing published", not "everything is garbage".
     Only the log's namespace is swept — top-level ``<table>.parquet``
     directories, the tables the retained snapshots name, ``_staging``
-    and ``_manifest`` — so log-less tables kept elsewhere in the store
-    (the silver tables under ``_silver/``) are never touched.
+    and ``_manifest`` — so other directories in the store (a stream's
+    ``_checkpoint``) are never touched.
 
     The sweep runs on the driver: it resolves each retained snapshot's
     file set (stats column-pruned), walks the table directories once
@@ -2024,8 +2089,8 @@ def _warn_hollow(
 
 def _first_data_file(tdir: str) -> str | None:
     """The first non-hidden data file under a table directory — an
-    early-exit walk touching O(few) entries (:func:`ensure_manifest`'s
-    log-less-data refusal)."""
+    early-exit walk touching O(few) entries (the log-less-data refusals
+    of :func:`ensure_manifest` and ``silver.continuation_tables``)."""
     store = LOG_STORE
     if not store.isdir(tdir):
         return None

@@ -192,7 +192,7 @@ def sessionize_stream(
 
 def windowed_counts_sink(
     stream: DataFrame,
-    out_path: str,
+    out_dir: str,
     checkpoint_dir: str,
     ts_col: str = "ts",
     key_col: str = "chainid",
@@ -200,19 +200,22 @@ def windowed_counts_sink(
     watermark: str = "30 minutes",
     available_now: bool = True,
 ):
-    """Persist finalized windows into a merged parquet stats table — the
-    incremental form of the reference's /stats counters (Server.hs:633-666
-    recomputes them per request; here each window is aggregated once,
-    when the watermark closes it, and appended idempotently).
+    """Persist finalized windows as table ``windowed_counts`` of the
+    transaction-log store at ``out_dir`` — the incremental form of the
+    reference's /stats counters (Server.hs:633-666 recomputes them per
+    request; here each window is aggregated once, when the watermark
+    closes it, and committed idempotently).  Read it with
+    ``publish.read_published(spark, out_dir, "windowed_counts")``.
 
     Append-mode emission means every (key, window) row arrives exactly
-    once per healthy run; the PK merge (same machinery as the six-table
-    sink) makes checkpoint-replay after a crash a no-op.  Rows carry a
-    ``key_bucket`` derived from the window start (one bucket per UTC day),
-    so the duplicate probe prunes to the day partitions a batch touches —
-    O(batch recency), not O(stats history).
+    once per healthy run; the PK probe of ``publish.publish_batch`` (the
+    six-table sink's) makes checkpoint-replay after a crash a no-op.
+    Rows carry a ``key_bucket`` derived from the window start (one bucket
+    per UTC day), so the duplicate probe prunes to the day partitions a
+    batch touches — O(batch recency), not O(stats history).  A batch
+    before the first watermark close stages nothing and commits nothing.
     """
-    from .listen import merge_batch
+    from .publish import publish_batch
 
     wc = windowed_counts(stream, ts_col, key_col, window, watermark)
 
@@ -221,8 +224,11 @@ def windowed_counts_sink(
             "key_bucket",
             F.date_format(F.col("window_start"), "yyyy-MM-dd"),
         )
-        merge_batch(
-            batch_df.sparkSession, out, out_path, (key_col, "window_start")
+        publish_batch(
+            batch_df.sparkSession,
+            {"windowed_counts": out},
+            out_dir,
+            pks={"windowed_counts": (key_col, "window_start")},
         )
 
     writer = (

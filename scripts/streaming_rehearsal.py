@@ -3,18 +3,17 @@
 claims are O(batch locality) stay FLAT as table history grows 10×.
 
 The query-side rehearsal (scripts/scale_rehearsal.py) measures operator
-growth with corpus size; this one measures the three sink-side costs of
-the listen pipeline (streaming/listen.py, streaming/publish.py,
+growth with corpus size; this one measures the sink-side costs of the
+listen pipeline (streaming/listen.py, streaming/publish.py,
 streaming/stateful.py) against history size:
 
-- merge probe (log-less path): the PK anti-join behind merge_batch —
-  claimed bounded by height_bucket range pruning (listen.py merge_plan),
-  so probing one tip batch must cost the same against 10× the buckets.
-- atomic publish: stage + manifest commit of one tip batch via
-  publish_batch — the probe reads the PUBLISHED file list (explicit files
-  + basePath), so partition pruning must survive the manifest indirection.
-- windowed stats sink: the (key, window_start) merge behind
-  windowed_counts_sink — claimed pruned by the day-derived key_bucket.
+- atomic publish: stage + commit of one tip batch via publish_batch —
+  the probe reads the PUBLISHED file list (explicit files + basePath),
+  so partition pruning must survive the log indirection.
+- windowed stats probe: the (key, window_start) duplicate probe
+  (publish._probe_plan) behind windowed_counts_sink — claimed pruned by
+  the day-derived key_bucket.
+- dedup-index probe+fold and one full curation batch.
 
 Each cost is timed as min-of-N at 1× and 10× history and reported as a
 growth ratio: ~1× validates the pruning claims; ~10× means a probe is
@@ -49,38 +48,6 @@ def _blocks(spark, lo: int, hi: int):
     )
 
 
-def build_history(spark, name: str, n_buckets: int) -> str:
-    """A bucket-partitioned blocks table of ``n_buckets`` height buckets —
-    the same layout merge_batch writes, built in one shot."""
-    path = os.path.join(WORK, name, "blocks.parquet")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    _blocks(spark, 0, n_buckets * ROWS_PER_BUCKET).write.partitionBy(
-        "height_bucket"
-    ).mode("overwrite").parquet(path)
-    return path
-
-
-def _tip_batch(spark, n_buckets: int):
-    top = n_buckets * ROWS_PER_BUCKET
-    return _blocks(spark, top - BATCH_ROWS // 2, top + BATCH_ROWS // 2)
-
-
-def time_merge_probe(spark, path: str, n_buckets: int, n: int) -> float:
-    """The merge_plan anti-join (probe + dedup) WITHOUT the append, so
-    repeated timings see identical history."""
-    from chainweb_data_spark.streaming.listen import merge_plan
-
-    best = float("inf")
-    for _ in range(n):
-        batch = _tip_batch(spark, n_buckets)
-        t0 = time.perf_counter()
-        plan, _bucket = merge_plan(spark, batch, path, ("hash",))
-        assert plan.count() == BATCH_ROWS // 2  # replayed half dropped
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def time_atomic_publish(spark, name: str, n_buckets: int, n: int) -> float:
     """publish_batch of one tip batch against a PUBLISHED history: stage
     write + probe + commit.  The history is published once (untimed) into
@@ -104,17 +71,14 @@ def time_atomic_publish(spark, name: str, n_buckets: int, n: int) -> float:
     return round(best, 3)
 
 
-def build_stats_history(spark, name: str, n_days: int) -> str:
-    """A (chainid, window_start) stats table bucketed by UTC day — the
-    windowed_counts_sink layout."""
+def _stats_rows(spark, lo: int, hi: int):
+    """(chainid, window_start, n) rows of 10-minute windows ``lo..hi``
+    across 4 chains, bucketed by UTC day — the windowed_counts_sink
+    layout."""
     from pyspark.sql import functions as F
 
-    path = os.path.join(WORK, name, "stats.parquet")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    windows_per_day = 144  # 10-minute windows
-    df = (
-        spark.range(0, n_days * windows_per_day)
+    return (
+        spark.range(lo, hi)
         .crossJoin(spark.range(0, 4).select(F.col("id").alias("chainid")))
         .select(
             "chainid",
@@ -127,42 +91,45 @@ def build_stats_history(spark, name: str, n_days: int) -> str:
             "key_bucket", F.date_format(F.col("window_start"), "yyyy-MM-dd")
         )
     )
-    df.write.partitionBy("key_bucket").mode("overwrite").parquet(path)
-    return path
 
 
-def time_stats_merge(spark, path: str, n_days: int, n: int) -> float:
-    from pyspark.sql import functions as F
+WINDOWS_PER_DAY = 144  # 10-minute windows
+STATS_PK = ("chainid", "window_start")
 
-    from chainweb_data_spark.streaming.listen import merge_plan
 
-    windows_per_day = 144
-    tip = n_days * windows_per_day
+def build_stats_history(spark, name: str, n_days: int) -> str:
+    """A published ``windowed_counts`` table of ``n_days`` day buckets."""
+    from chainweb_data_spark.streaming.publish import publish_batch
+
+    out_dir = os.path.join(WORK, name)
+    publish_batch(
+        spark,
+        {"windowed_counts": _stats_rows(spark, 0, n_days * WINDOWS_PER_DAY)},
+        out_dir,
+        pks={"windowed_counts": STATS_PK},
+    )
+    return out_dir
+
+
+def time_stats_probe(spark, out_dir: str, n_days: int, n: int) -> float:
+    """The publish probe of one tip batch (half replayed, half new) WITHOUT
+    the staging write, so repeated timings see identical history."""
+    from chainweb_data_spark.streaming.publish import _probe_plan
+
+    tip = n_days * WINDOWS_PER_DAY
     best = float("inf")
     for _ in range(n):
-        batch = (
-            spark.range(tip - windows_per_day // 2, tip + windows_per_day // 2)
-            .crossJoin(spark.range(0, 4).select(F.col("id").alias("chainid")))
-            .select(
-                "chainid",
-                F.timestamp_seconds(
-                    F.lit(1_600_000_000) + F.col("id") * 600
-                ).alias("window_start"),
-                (F.col("id") % 97 + 1).alias("n"),
-            )
-            .withColumn(
-                "key_bucket", F.date_format(F.col("window_start"), "yyyy-MM-dd")
-            )
+        batch = _stats_rows(
+            spark, tip - WINDOWS_PER_DAY // 2, tip + WINDOWS_PER_DAY // 2
         )
         t0 = time.perf_counter()
-        plan, _bucket = merge_plan(
-            spark, batch, path, ("chainid", "window_start")
+        plan, _bucket, cached = _probe_plan(
+            spark, batch, out_dir, "windowed_counts", STATS_PK
         )
-        assert plan.count() == windows_per_day // 2 * 4
+        assert plan.count() == WINDOWS_PER_DAY // 2 * 4
         best = min(best, time.perf_counter() - t0)
+        cached.unpersist()
     return round(best, 3)
-
-
 
 
 def build_dedup_history(spark, name: str, n_batches: int) -> str:
@@ -866,14 +833,6 @@ def main() -> None:
 
     result = {"multiplier": mult, "costs": {}}
 
-    p1 = build_history(spark, "hist1x", BASE_BUCKETS)
-    p10 = build_history(spark, "hist10x", BASE_BUCKETS * mult)
-    t1 = time_merge_probe(spark, p1, BASE_BUCKETS, n)
-    t10 = time_merge_probe(spark, p10, BASE_BUCKETS * mult, n)
-    result["costs"]["merge_probe"] = {
-        "base_s": t1, "scaled_s": t10, "growth": round(t10 / max(t1, 1e-9), 2)
-    }
-
     a1 = time_atomic_publish(spark, "hist1x", BASE_BUCKETS, n)
     a10 = time_atomic_publish(spark, "hist10x", BASE_BUCKETS * mult, n)
     result["costs"]["atomic_publish"] = {
@@ -882,9 +841,9 @@ def main() -> None:
 
     s1 = build_stats_history(spark, "stats1x", 30)
     s10 = build_stats_history(spark, "stats10x", 30 * mult)
-    w1 = time_stats_merge(spark, s1, 30, n)
-    w10 = time_stats_merge(spark, s10, 30 * mult, n)
-    result["costs"]["windowed_stats_merge"] = {
+    w1 = time_stats_probe(spark, s1, 30, n)
+    w10 = time_stats_probe(spark, s10, 30 * mult, n)
+    result["costs"]["windowed_stats_probe"] = {
         "base_s": w1, "scaled_s": w10, "growth": round(w10 / max(w1, 1e-9), 2)
     }
 

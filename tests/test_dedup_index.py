@@ -14,6 +14,7 @@ from chainweb_data_spark.streaming.dedup_index import (
     SETS_TABLE,
     update_dedup_index,
 )
+from chainweb_data_spark.streaming.publish import read_published
 
 BASE_TEXT = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
 
@@ -110,6 +111,36 @@ def test_corpus_stats_empty_before_first_batch(spark, tmp_path):
     got = corpus_stats(spark, str(tmp_path / "nostats"))
     assert got.count() == 0
     assert got.columns == ["lang", "n_docs", "n_tokens", "n_chars"]
+
+
+def test_corpus_stats_count_each_doc_once_after_compaction(spark, tmp_path):
+    """Totals read the committed snapshot: after a compaction the files it
+    replaced stay on disk until vacuum's grace window passes, and a
+    directory read would count their rows twice."""
+    from chainweb_data_spark.streaming.corpus_stats import (
+        corpus_stats,
+        stats_delta,
+    )
+    from chainweb_data_spark.streaming.publish import (
+        compact_published,
+        publish_batch,
+    )
+
+    out = str(tmp_path / "stats")
+    for b in range(3):
+        docs = spark.createDataFrame(
+            [(2 * b, "en", "one two"), (2 * b + 1, "en", "three")],
+            "doc_id long, lang string, text string",
+        )
+        publish_batch(
+            spark,
+            {"corpus_stats": stats_delta(docs, b)},
+            out,
+            pks={"corpus_stats": ("batch_id", "lang")},
+        )
+    assert compact_published(spark, out, "corpus_stats")
+    got = [tuple(r) for r in corpus_stats(spark, out).collect()]
+    assert got == [("en", 6, 9, 36)]
 
 
 @pytest.mark.heavy
@@ -266,7 +297,7 @@ def _run_sink(spark, feed, out, ckpt, flags_dir, **kw):
 def test_sink_wrapper_end_to_end(spark, tmp_path):
     """dedup_index_sink drives update_dedup_index through a real
     foreachBatch stream: per-file micro-batches, engine batch ids,
-    flags merged idempotently into flags_dir."""
+    flags published idempotently into flags_dir."""
     out, ckpt = str(tmp_path / "idx"), str(tmp_path / "ckpt")
     flags_dir = str(tmp_path / "flags")
     feed = _write_doc_feed(
@@ -280,7 +311,7 @@ def test_sink_wrapper_end_to_end(spark, tmp_path):
     _run_sink(spark, feed, out, ckpt, flags_dir)
     got = sorted(
         (r["doc_id"], r["dup_of"])
-        for r in spark.read.parquet(flags_dir).collect()
+        for r in read_published(spark, flags_dir, "dedup_flags").collect()
     )
     assert (10, 1) in got and (11, 10) in got
     # restart the SAME checkpoint with one more file: only the new batch
@@ -290,7 +321,7 @@ def test_sink_wrapper_end_to_end(spark, tmp_path):
 
         f.write(_json.dumps({"doc_id": 20, "text": BASE_TEXT + " tail two"}) + "\n")
     _run_sink(spark, feed, out, ckpt, flags_dir)
-    flags2 = spark.read.parquet(flags_dir)
+    flags2 = read_published(spark, flags_dir, "dedup_flags")
     pairs = sorted((r["doc_id"], r["dup_of"]) for r in flags2.collect())
     assert len(pairs) == len(set(pairs))  # PK merge: no duplicate flags
     assert any(d == 20 for d, _ in pairs)  # the new batch was processed
@@ -316,7 +347,7 @@ def test_sink_wrapper_replay_after_crash(spark, tmp_path):
     n_bands = spark.read.parquet(os.path.join(out, BANDS_TABLE)).count()
     flags_before = sorted(
         (r["doc_id"], r["dup_of"])
-        for r in spark.read.parquet(flags_dir).collect()
+        for r in read_published(spark, flags_dir, "dedup_flags").collect()
     )
     # simulate the crash window: delete the LAST checkpoint commit marker so
     # the engine replays the final batch with its original batch_id
@@ -335,7 +366,7 @@ def test_sink_wrapper_replay_after_crash(spark, tmp_path):
     assert spark.read.parquet(os.path.join(out, BANDS_TABLE)).count() == n_bands
     flags_after = sorted(
         (r["doc_id"], r["dup_of"])
-        for r in spark.read.parquet(flags_dir).collect()
+        for r in read_published(spark, flags_dir, "dedup_flags").collect()
     )
     assert flags_after == flags_before
 

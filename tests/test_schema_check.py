@@ -11,7 +11,8 @@ from chainweb_data_spark.fixtures.generate import generate_raw_rows
 from chainweb_data_spark.ingest.transforms import payload_to_tables
 from chainweb_data_spark.schemas.payload import RAW_SCHEMA
 from chainweb_data_spark.sources.schema_check import check_store, check_table_schema
-from chainweb_data_spark.streaming.listen import TABLE_PKS, merge_batch
+from chainweb_data_spark.streaming.listen import TABLE_PKS
+from chainweb_data_spark.streaming.publish import publish_batch
 
 
 @pytest.mark.heavy
@@ -21,8 +22,7 @@ def test_streamed_store_passes(spark, tmp_path_factory):
     raw = spark.createDataFrame(
         [(r["header"], r["powHash"], r["payload"]) for r in rows], RAW_SCHEMA
     )
-    for name, df in payload_to_tables(raw, event_min_height=60).items():
-        merge_batch(spark, df, os.path.join(out, f"{name}.parquet"), TABLE_PKS[name])
+    publish_batch(spark, payload_to_tables(raw, event_min_height=60), out)
     reports = check_store(spark, out)
     assert set(reports) == set(TABLE_PKS)
     assert all(r.ok for r in reports.values())

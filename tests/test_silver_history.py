@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from chainweb_data_spark.fixtures.generate import generate_raw_rows
 from chainweb_data_spark.ingest.transforms import payload_to_tables
 from chainweb_data_spark.schemas.payload import RAW_SCHEMA
+from chainweb_data_spark.streaming.publish import read_published
 from chainweb_data_spark.streaming.silver import (
-    HISTORY,
     lookup_history,
     update_continuation_history,
 )
@@ -73,25 +73,26 @@ def test_incremental_equals_direct_walk(spark, tx, silver_dir):
     )
     assert expected, "fixture must contain continuation chains"
     assert any(d >= 2 for (_, d, _, _) in expected), "need chains of len >= 3"
-    got = {
+    assert _history(spark, silver_dir) == expected
+
+
+def _history(spark, out):
+    return {
         (r["start_rk"], r["depth"], r["rk"], r["code"])
-        for r in spark.read.parquet(os.path.join(silver_dir, HISTORY)).collect()
+        for r in read_published(spark, out, "cont_history").collect()
     }
-    assert got == expected
 
 
 def test_replay_is_noop(spark, tx, silver_dir):
-    before = (
-        spark.read.parquet(os.path.join(silver_dir, HISTORY)).count()
-    )
+    before = read_published(spark, silver_dir, "cont_history").count()
     last = tx.filter(F.col("height") >= 80)
     update_continuation_history(spark, last, silver_dir)
-    after = spark.read.parquet(os.path.join(silver_dir, HISTORY)).count()
+    after = read_published(spark, silver_dir, "cont_history").count()
     assert after == before
 
 
 def test_lookup_reads_one_bucket_in_depth_order(spark, tx, silver_dir):
-    hist = spark.read.parquet(os.path.join(silver_dir, HISTORY))
+    hist = read_published(spark, silver_dir, "cont_history")
     tip = (
         hist.groupBy("start_rk")
         .count()
@@ -101,33 +102,17 @@ def test_lookup_reads_one_bucket_in_depth_order(spark, tx, silver_dir):
     rows = lookup_history(spark, silver_dir, tip).collect()
     assert [r["depth"] for r in rows] == list(range(len(rows)))
     assert len(rows) >= 2
-    # the physical read prunes to the tip's key bucket directory
-    # (input_file_name must be captured before any exchange — no orderBy)
-    files = [
-        f["fp"]
-        for f in spark.read.parquet(os.path.join(silver_dir, HISTORY))
-        .filter(
-            (F.col("key_bucket") == "k" + tip[:1]) & (F.col("start_rk") == tip)
-        )
-        .select(F.input_file_name().alias("fp"))
-        .distinct()
-        .collect()
-    ]
+    # the read opens only files of the tip's key bucket: the footer-stats
+    # skip on start_rk leaves no file of another bucket in the scan
+    files = lookup_history(spark, silver_dir, tip).inputFiles()
     assert files and all(f"key_bucket=k{tip[:1]}" in f for f in files)
 
 
-def test_listen_stream_maintains_silver_history(spark, tx, tmp_path_factory):
-    """End-to-end: the live listen pipeline with continuation_history=True
-    produces the same ancestry as the direct walk over the ingested txs."""
+@pytest.fixture(scope="module")
+def listen_feed(tmp_path_factory):
     import json
 
-    from chainweb_data_spark.fixtures.generate import generate_raw_rows
-    from chainweb_data_spark.streaming.listen import listen_stream
-
-    base = str(tmp_path_factory.mktemp("listen_silver"))
-    feed = os.path.join(base, "feed")
-    out = os.path.join(base, "tables")
-    os.makedirs(feed)
+    feed = str(tmp_path_factory.mktemp("listen_feed"))
     rows = generate_raw_rows(n_chains=2, max_height=120, seed=11)
     third = (len(rows) + 2) // 3
     for i in range(3):
@@ -136,21 +121,77 @@ def test_listen_stream_maintains_silver_history(spark, tx, tmp_path_factory):
             for r in rows[i * third : (i + 1) * third]:
                 f.write(json.dumps(r) + "\n")
         os.utime(path, (1_700_000_000 + i * 10,) * 2)
+    return feed
+
+
+def _listen(spark, feed, out):
+    from chainweb_data_spark.streaming.listen import listen_stream
 
     q = listen_stream(
         spark, feed, out, event_min_height=ACTIVATION, continuation_history=True
     )
     q.awaitTermination(300)
 
-    ingested = spark.read.parquet(os.path.join(out, "transactions.parquet"))
+
+@pytest.fixture(scope="module")
+def listen_store(spark, listen_feed, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("listen_silver") / "tables")
+    _listen(spark, listen_feed, out)
+    return out
+
+
+def test_listen_stream_maintains_silver_history(spark, listen_store):
+    """End-to-end: the live listen pipeline with continuation_history=True
+    produces the same ancestry as the direct walk over the ingested txs,
+    committed in the same version as the six tables."""
+    from chainweb_data_spark.streaming.publish import read_manifest
+
+    ingested = read_published(spark, listen_store, "transactions")
     expected = _python_walk(
         ingested.select("requestkey", "pactid", "code").collect()
     )
-    got = {
-        (r["start_rk"], r["depth"], r["rk"], r["code"])
-        for r in spark.read.parquet(os.path.join(out, HISTORY)).collect()
+    assert expected and _history(spark, listen_store) == expected
+    # one batch: the empty v1, then ONE commit holding bronze and silver
+    assert set(read_manifest(listen_store, 2)["tables"]) >= {
+        "transactions",
+        "tx_lineage",
+        "cont_history",
     }
-    assert expected and got == expected
+
+
+def test_listen_crash_while_staging_silver_commits_nothing(
+    spark, listen_feed, listen_store, tmp_path, monkeypatch
+):
+    """A failure while ``cont_history`` stages inside the listen batch's
+    commit writes no version — ``transactions`` stays invisible — and
+    the replay lands bronze and silver in ONE version whose history
+    equals the crash-free run's."""
+    from pyspark.errors import StreamingQueryException
+
+    from chainweb_data_spark.streaming import publish
+
+    out = str(tmp_path / "tables")
+    stage = publish._stage_table
+
+    def failing(spark, df, out_dir, table, *args):
+        if table == "cont_history":
+            raise RuntimeError("injected: crash while staging cont_history")
+        return stage(spark, df, out_dir, table, *args)
+
+    monkeypatch.setattr(publish, "_stage_table", failing)
+    with pytest.raises(StreamingQueryException, match="injected"):
+        _listen(spark, listen_feed, out)
+    assert publish._latest_version(out) <= 1  # at most the empty v1
+    assert read_published(spark, out, "transactions") is None
+    monkeypatch.setattr(publish, "_stage_table", stage)
+
+    _listen(spark, listen_feed, out)  # same checkpoint: the batch replays
+    commits = [h for h in publish.history(out) if h["op"] == "publish"]
+    assert len(commits) == 1
+    assert {"transactions", "tx_lineage", "cont_history"} <= set(
+        publish.read_manifest(out, commits[0]["version"])["tables"]
+    )
+    assert _history(spark, out) == _history(spark, listen_store)
 
 
 def test_pactid_cycle_stops_at_max_depth(spark, tmp_path):
@@ -194,21 +235,15 @@ def test_rounds_leave_no_persisted_copy(spark, tx, tmp_path):
 
 
 def test_vacuum_keeps_the_silver_tables(spark, tx, tmp_path):
-    """The silver tables live under ``_silver/``, outside the namespace
-    publish.vacuum sweeps: a publish, a silver update and a vacuum leave
-    every continuation-history lookup unchanged."""
+    """The silver tables are tables of the commit log, so publish.vacuum
+    keeps every file the live snapshot names: a publish, a silver update
+    and a vacuum leave every continuation-history lookup unchanged."""
     from chainweb_data_spark.streaming.publish import publish_batch, vacuum
 
     out = str(tmp_path / "store")
     publish_batch(spark, {"transactions": tx}, out)
     update_continuation_history(spark, tx, out)
-    tips = sorted(
-        r["start_rk"]
-        for r in spark.read.parquet(os.path.join(out, HISTORY))
-        .select("start_rk")
-        .distinct()
-        .collect()
-    )[:4]
+    tips = sorted({start_rk for start_rk, *_ in _history(spark, out)})[:4]
 
     def lookups():
         return {
@@ -220,3 +255,18 @@ def test_vacuum_keeps_the_silver_tables(spark, tx, tmp_path):
     assert tips and all(before.values())
     vacuum(out)
     assert lookups() == before
+
+
+def test_log_less_silver_directory_is_refused(spark, tx, tmp_path):
+    """A store whose ``_silver/`` still holds data files (the layout
+    before silver joined the commit log) is refused by the silver writer:
+    those rows are in no commit, and nothing adopts them."""
+    from chainweb_data_spark.streaming.publish import StoreFormatError
+
+    out = str(tmp_path / "store")
+    spark.createDataFrame(
+        [("ka", None, "code")], "requestkey string, pactid string, code string"
+    ).write.parquet(os.path.join(out, "_silver", "tx_lineage.parquet"))
+    with pytest.raises(StoreFormatError, match="_silver"):
+        update_continuation_history(spark, tx, out)
+    assert not os.path.exists(os.path.join(out, "_manifest"))

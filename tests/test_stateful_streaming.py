@@ -214,10 +214,11 @@ def test_sessionize_stream_spans_batches_and_matches_batch_segmentation(
 def test_windowed_counts_sink_persists_and_replay_is_noop(
     spark, tmp_path_factory
 ):
-    """Finalized windows land in the merged stats table exactly once; a
-    fresh-checkpoint replay of the same feed adds nothing (PK merge)."""
+    """Finalized windows land in the published stats table exactly once;
+    a fresh-checkpoint replay of the same feed adds nothing (PK probe)."""
     import os
 
+    from chainweb_data_spark.streaming.publish import read_published
     from chainweb_data_spark.streaming.stateful import windowed_counts_sink
 
     base = str(tmp_path_factory.mktemp("wsink"))
@@ -230,7 +231,7 @@ def test_windowed_counts_sink_persists_and_replay_is_noop(
             [(1, BASE + 91 * MIN)],  # advances the active watermark past w0
         ],
     )
-    out = os.path.join(base, "stats.parquet")
+    out = os.path.join(base, "stats")
 
     def run(tag):
         q = windowed_counts_sink(
@@ -244,15 +245,15 @@ def test_windowed_counts_sink_persists_and_replay_is_noop(
         )
         q.awaitTermination(300)
 
+    def stats():
+        return read_published(spark, out, "windowed_counts")
+
     run("a")
-    rows = {
-        (r["k"], r["n"])
-        for r in spark.read.parquet(out).select("k", "n").collect()
-    }
+    rows = {(r["k"], r["n"]) for r in stats().select("k", "n").collect()}
     assert rows == {(1, 2), (2, 1)}  # window 0 finalized; later windows open
-    n_before = spark.read.parquet(out).count()
-    run("b")  # fresh checkpoint: full re-emission, merged away
-    assert spark.read.parquet(out).count() == n_before
+    n_before = stats().count()
+    run("b")  # fresh checkpoint: full re-emission, probed away
+    assert stats().count() == n_before
 
 
 # ---------------------------------------------------------------------------

@@ -95,24 +95,29 @@ def test_second_run_is_noop(spark, tmp_path_factory, raw_rows):
     assert counts1 == counts2, f"replay changed tables: {counts1} vs {counts2}"
 
 
+def _publish_one(spark, df, out, table, pk):
+    from chainweb_data_spark.streaming.publish import publish_batch
+
+    publish_batch(spark, {table: df}, out, pks={table: pk})
+
+
 def test_merge_probe_prunes_to_batch_buckets(spark, tmp_path_factory):
-    """The duplicate probe must scan ONLY the partition buckets the batch
-    can collide with — numFiles of the executed anti-join plan equals the
-    probed bucket's files, not the whole table's (same technique as
+    """The publish duplicate probe must scan ONLY the partition buckets the
+    batch can collide with — numFiles of the executed anti-join plan equals
+    the probed bucket's files, not the whole table's (same technique as
     tests/test_layout.py)."""
     from pyspark.sql import functions as F
 
-    from chainweb_data_spark.streaming.listen import merge_batch, merge_plan
+    from chainweb_data_spark.streaming.publish import _probe_plan, read_published
 
-    path = str(tmp_path_factory.mktemp("merge") / "blocks.parquet")
+    out = str(tmp_path_factory.mktemp("merge"))
     base = spark.range(0, 10_000).select(
         F.md5(F.col("id").cast("string")).alias("hash"),
         F.col("id").alias("height"),
         (F.col("id") / 1_000).cast("long").alias("height_bucket"),
     )
-    merge_batch(spark, base, path, ("hash",))
-    existing = spark.read.parquet(path)
-    n_total_files = len(existing.inputFiles())
+    _publish_one(spark, base, out, "blocks", ("hash",))
+    n_total_files = len(read_published(spark, out, "blocks").inputFiles())
     assert n_total_files >= 10  # one dir per bucket at least
 
     # a new batch confined to the top bucket: half replayed, half new
@@ -121,7 +126,8 @@ def test_merge_probe_prunes_to_batch_buckets(spark, tmp_path_factory):
         F.col("id").alias("height"),
         (F.col("id") / 1_000).cast("long").alias("height_bucket"),
     )
-    plan, bucketed = merge_plan(spark, batch, path, ("hash",))
+    # the rows publish_batch would stage, and the cached input it releases
+    plan, bucketed, cached = _probe_plan(spark, batch, out, "blocks", ("hash",))
     assert bucketed == "height_bucket"
     # the probe side is the only parquet scan in the plan
     from tests.test_layout import _scan_files_read
@@ -130,8 +136,9 @@ def test_merge_probe_prunes_to_batch_buckets(spark, tmp_path_factory):
     assert files_read < n_total_files, "probe scanned the full table"
     per_bucket = n_total_files / 10
     assert files_read <= 2 * per_bucket, (files_read, n_total_files)
-    # and the merge itself is exact: only the 500 genuinely-new rows append
+    # and the probe itself is exact: only the 500 genuinely-new rows stage
     assert plan.count() == 500
+    cached.unpersist()
 
 
 def test_merge_probe_prunes_key_buckets(spark, tmp_path_factory):
@@ -141,15 +148,16 @@ def test_merge_probe_prunes_key_buckets(spark, tmp_path_factory):
     only those partitions, never the full table."""
     from pyspark.sql import functions as F
 
-    from chainweb_data_spark.streaming.listen import merge_batch, merge_plan
+    from chainweb_data_spark.streaming.publish import _probe_plan, read_published
 
-    path = str(tmp_path_factory.mktemp("mergek") / "signers.parquet")
+    out = str(tmp_path_factory.mktemp("mergek"))
+    pk = ("requestkey", "idx")
     base = spark.range(0, 20_000).select(
         F.md5(F.col("id").cast("string")).alias("requestkey"),
         F.lit(0).cast("int").alias("idx"),
     ).withColumn("key_bucket", F.substring("requestkey", 1, 1))
-    merge_batch(spark, base, path, ("requestkey", "idx"))
-    existing = spark.read.parquet(path)
+    _publish_one(spark, base, out, "signers", pk)
+    existing = read_published(spark, out, "signers")
     n_buckets = existing.select("key_bucket").distinct().count()
     assert n_buckets == 16  # md5 hex → 16 prefix buckets, all populated
     n_total_files = len(existing.inputFiles())
@@ -166,7 +174,7 @@ def test_merge_probe_prunes_key_buckets(spark, tmp_path_factory):
             ).withColumn("key_bucket", F.substring("requestkey", 1, 1))
         )
     )
-    plan, bucketed = merge_plan(spark, batch, path, ("requestkey", "idx"))
+    plan, bucketed, cached = _probe_plan(spark, batch, out, "signers", pk)
     assert bucketed == "key_bucket"
     from tests.test_layout import _scan_files_read
 
@@ -174,6 +182,7 @@ def test_merge_probe_prunes_key_buckets(spark, tmp_path_factory):
     assert files_read < n_total_files, "probe scanned the full table"
     assert files_read <= 2 * (2 / 16) * n_total_files, (files_read, n_total_files)
     assert plan.count() == 100  # replayed rows dropped, new keys kept
+    cached.unpersist()
 
 
 def test_stream_partitions_all_six_tables(spark, tmp_path_factory, raw_rows):
@@ -320,19 +329,20 @@ def test_key_bucket_survives_all_digit_first_batch(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from chainweb_data_spark.ingest.transforms import _key_bucket
-    from chainweb_data_spark.streaming.listen import merge_batch
+    from chainweb_data_spark.streaming.publish import read_published
 
-    path = str(tmp_path_factory.mktemp("kbdigit") / "signers.parquet")
+    out = str(tmp_path_factory.mktemp("kbdigit"))
+    pk = ("requestkey", "idx")
 
     def _batch(keys):
         return spark.createDataFrame(
             [(k, 0) for k in keys], "requestkey string, idx int"
         ).select("requestkey", "idx", _key_bucket(F.col("requestkey")))
 
-    merge_batch(spark, _batch(["7abc", "3xyz"]), path, ("requestkey", "idx"))
-    # pre-fix: this second merge raised NumberFormatException in the probe
-    merge_batch(spark, _batch(["Babc"]), path, ("requestkey", "idx"))
-    back = spark.read.parquet(path)
+    _publish_one(spark, _batch(["7abc", "3xyz"]), out, "signers", pk)
+    # pre-fix: this second publish raised NumberFormatException in the probe
+    _publish_one(spark, _batch(["Babc"]), out, "signers", pk)
+    back = read_published(spark, out, "signers")
     assert back.count() == 3
     assert sorted(r[0] for r in back.select("key_bucket").collect()) == [
         "k3",
@@ -340,5 +350,5 @@ def test_key_bucket_survives_all_digit_first_batch(spark, tmp_path_factory):
         "kB",
     ]
     # replay stays a no-op across the type boundary too
-    merge_batch(spark, _batch(["Babc", "7abc"]), path, ("requestkey", "idx"))
-    assert spark.read.parquet(path).count() == 3
+    _publish_one(spark, _batch(["Babc", "7abc"]), out, "signers", pk)
+    assert read_published(spark, out, "signers").count() == 3

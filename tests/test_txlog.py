@@ -355,9 +355,9 @@ def test_vacuum_grace_window_spares_young_orphans(spark, tmp_path):
 
 
 def test_publish_batch_null_pk_replay_is_idempotent(spark, tmp_path):
-    """The atomic sink's duplicate probe must be NULL-SAFE like
-    merge_plan's: a nullable PK component (silver-table shape) under
-    plain equality would re-append every NULL-keyed row per replay."""
+    """The atomic sink's duplicate probe must be NULL-SAFE: a nullable
+    PK component (silver-table shape) under plain equality would
+    re-append every NULL-keyed row per replay."""
     from pyspark.sql import functions as F
 
     out = str(tmp_path / "nullpk")
