@@ -118,9 +118,12 @@ MATMUL_MAX_VECTORS = 2_000_000
 def _check_matmul_envelope(
     df: DataFrame, op: str, max_vectors: int, n_rows: int | None = None
 ) -> None:
-    # n_rows: caller-known corpus size (parquet footer metadata, the same
-    # free-stats pattern as the IVF/PQ trainers) — skips the count() job;
-    # None keeps the self-counting behavior
+    """Refuse ``op`` when ``df`` holds more than ``max_vectors`` rows.
+    ``n_rows``, when given, must be the EXACT row count of the ``df``
+    passed (parquet footer metadata, the same free-stats pattern as the
+    IVF/PQ trainers): it replaces the ``count()`` job, so an undercount
+    lets an oversized corpus through.  None counts ``df``."""
+    assert n_rows is None or n_rows >= 0, n_rows
     n = df.count() if n_rows is None else n_rows
     if n > max_vectors:
         raise ValueError(

@@ -79,8 +79,8 @@ def get_spark(
         # 0.7-1.3 / 7.6 / 26.9 s as a job, 0.07-0.18 / 0.36 / 1.2 s on the
         # driver (4 vCPUs)
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
-        # bucketed tables (sources/bucketed.py) go through the session
-        # catalog; keep its metadata directory out of the working tree
+        # Spark creates the session catalog's warehouse directory on first
+        # catalog use; keep it out of the working tree
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/cds-warehouse"),

@@ -8,7 +8,6 @@ a log-published table is ``publish.compact_published``.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import SparkSession
@@ -114,9 +113,7 @@ def rewrite_zordered(
     if not files:
         return {}
     tdir = os.path.join(out_dir, f"{table}.parquet")
-    df = spark.read.option("basePath", tdir).parquet(
-        *[os.path.join(tdir, f) for f in files]
-    )
+    df = pub._read_files(spark, tdir, files)
     bounds = df.agg(
         *[F.min(c).alias(f"_lo_{c}") for c in cols],
         *[F.max(c).alias(f"_hi_{c}") for c in cols],
@@ -147,21 +144,7 @@ def rewrite_zordered(
     if part:
         writer = writer.partitionBy(*part)
     writer.parquet(staging)
-    moved: list[str] = []
-    stats: dict[str, dict] = {}
-    for root, _dirs, fnames in os.walk(staging):
-        for fname in fnames:
-            if fname.startswith(("_", ".")):
-                continue
-            rel = os.path.relpath(os.path.join(root, fname), staging)
-            dest = os.path.join(tdir, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(os.path.join(root, fname), dest)
-            moved.append(rel)
-            fs = pub._file_stats(dest)
-            if fs:
-                stats[rel] = fs
-    shutil.rmtree(staging, ignore_errors=True)
+    moved, stats = pub._land_staged(staging, tdir)
 
     input_files = set(files)
     for rebase in (False, True):
@@ -171,7 +154,7 @@ def rewrite_zordered(
             pub._commit_delta(
                 out_dir,
                 latest + 1,
-                add={table: sorted(moved)},
+                add={table: moved},
                 remove={table: sorted(input_files)},
                 stats_add={table: stats},
                 op="zorder",

@@ -58,10 +58,11 @@ Scale properties:
   files it changed, no parent hydration or set-diff between
   checkpoints; the checkpoint every ``CHECKPOINT_EVERY``-th commit
   amortizes the O(live files) snapshot.
-- **No directory listings.**  Readers get explicit file lists from the
-  snapshot (``basePath`` preserves bucket-partition columns), so the
-  object-store LIST that dominates partitioned-table reads at scale never
-  happens.
+- **No directory listings, no schema inference.**  Readers get explicit
+  file lists from the snapshot (``basePath`` preserves bucket-partition
+  columns), so the object-store LIST that dominates partitioned-table
+  reads at scale never happens, and the data schema from the files'
+  footers (:func:`_read_files`), so planning a read runs no Spark job.
 - **File skipping.**  Staging records per-file min/max column stats from
   the parquet footers into the commit; ``read_published(where=...)``
   prunes files whose ranges are disjoint from the predicate — the same
@@ -98,9 +99,9 @@ injectable :data:`LOG_STORE` (:class:`~.logstore.PosixLogStore` by
 default), so an object-store backend (conditional PUT) slots in without
 touching protocol code; URL-scheme ``out_dir``s are refused by the POSIX
 backend.  DATA files stay on the data plane: Spark writes staged parquet
-and ``read_published`` scans by path; the three staging moves
-(``_stage_table``, ``compact_published``, ``rewrite_published_many``)
-are same-filesystem renames of Spark-written files.
+and ``read_published`` scans by path; every staging move
+(:func:`_land_staged`) is a same-filesystem rename of Spark-written
+files.
 
 With Delta/Iceberg available this module disappears into their
 transaction log — same protocol (stage files, commit one metadata delta,
@@ -112,6 +113,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -1186,10 +1188,10 @@ def read_published(
     Resolution is PER-TABLE (r10): the checkpoint sidecar is read
     filtered to ``table`` and column-pruned (stats bytes only when a
     ``where`` needs them), so reading one table of an N-table store
-    costs O(that table's files), not O(all live files).  The explicit
-    path list handed to ``spark.read`` is the one remaining O(table
-    files) driver artifact — the same place Delta keeps it (the scan's
-    file index lives on the JVM driver by construction)."""
+    costs O(that table's files), not O(all live files).  Planning the
+    read runs no Spark job: the data schema comes from the files' footers
+    (:func:`_read_files`), the way Delta keeps the schema beside the file
+    list so a read never opens data to plan."""
     latest = _latest_version(out_dir)
     if version is None:
         version = latest
@@ -1210,11 +1212,7 @@ def read_published(
             # every file pruned: empty result with the table's full schema
             # (one-file read keeps partition columns via basePath)
             try:
-                schema = (
-                    spark.read.option("basePath", tdir)
-                    .parquet(os.path.join(tdir, all_files[0]))
-                    .schema
-                )
+                schema = _read_files(spark, tdir, all_files[:1]).schema
             except Exception as e:
                 # the probe file can vanish between resolve and read if a
                 # concurrent vacuum reclaimed this snapshot's horizon —
@@ -1228,9 +1226,23 @@ def read_published(
                     "(pin_version) to hold its files."
                 ) from e
             return spark.createDataFrame([], schema)
-    return spark.read.option("basePath", tdir).parquet(
-        *[os.path.join(tdir, f) for f in files]
-    )
+    return _read_files(spark, tdir, files)
+
+
+def _read_files(spark: SparkSession, tdir: str, rels: list[str]) -> DataFrame:
+    """Spark's read of the data files ``rels`` of table directory ``tdir``,
+    bucket partition columns typed from the paths (``basePath``).  The
+    data schema is handed to the reader (:func:`_data_schema`), so Spark
+    runs no inference job.  Writers never store a partition column in a
+    data file, so the schema leaves Spark to type the partition columns
+    from the paths, as inference does.  Files without Spark's footer key,
+    or files that disagree, get Spark's inferred read instead."""
+    paths = [os.path.join(tdir, r) for r in rels]
+    reader = spark.read.option("basePath", tdir)
+    schema = _data_schema(paths)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 # ---------------------------------------------------------------------------
@@ -1251,23 +1263,18 @@ def _json_safe(v):
     return None
 
 
-def _file_stats(path: str) -> dict[str, list]:
-    """Per-column [min, max] from the parquet footer (row-group stats
-    folded across groups) — free at stage time, and what lets
-    ``read_published(where=...)`` skip files without opening them.  Only
-    JSON-comparable scalar types are kept; anything else is skipped."""
-    return _footer(path)[1]
-
-
-def _footer(path: str) -> tuple[int | None, dict[str, list]]:
-    """The parquet footer's row count (None when unreadable) and the
-    :func:`_file_stats` of ``path`` — one footer read for both."""
+def _footer(path: str) -> tuple[int | None, dict[str, list], dict | None]:
+    """One read of ``path``'s parquet footer: the row count (None when
+    unreadable), per-column [min, max] folded across row groups — free at
+    stage time, and what lets ``read_published(where=...)`` skip files
+    without opening them; only JSON-comparable scalar types are kept — and
+    the key-value metadata that holds Spark's schema."""
     try:
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
     except Exception:
-        return None, {}
+        return None, {}, None
     acc: dict[str, list] = {}
     skipped: set[str] = set()
     for rg in range(md.num_row_groups):
@@ -1293,7 +1300,97 @@ def _footer(path: str) -> tuple[int | None, dict[str, list]]:
                 acc[name] = [lo, hi]
     if len(acc) > _MAX_STATS_COLUMNS:
         acc = dict(sorted(acc.items())[:_MAX_STATS_COLUMNS])
-    return md.num_rows, acc
+    return md.num_rows, acc, md.metadata
+
+
+#: the footer key under which Spark's parquet writer stores the rows'
+#: schema as StructType JSON — the key Spark's own schema inference reads
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: bound on the data-file → schema map, oldest entry evicted first.  Data
+#: files are immutable and their names embed a UUID, so a path's schema
+#: never changes.  One StructType is kept per distinct footer JSON.
+_SCHEMA_CACHE_MAX = 1 << 16
+_FILE_SCHEMAS: dict = {}
+_SCHEMAS: dict = {}
+_SCHEMA_LOCK = threading.Lock()
+_UNSEEN = object()
+
+
+def _remember_schema(path: str, kv: dict | None):
+    """Record under data file ``path`` the Spark schema that its footer's
+    key-value metadata ``kv`` holds, and return it (None when the file
+    carries no Spark key)."""
+    from pyspark.sql.types import StructType
+
+    raw = (kv or {}).get(_SPARK_SCHEMA_KEY)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMAS.get(raw)
+        if raw is not None and schema is None:
+            try:
+                schema = StructType.fromJson(json.loads(raw))
+            except Exception:
+                pass  # a schema this client cannot parse: Spark infers
+            else:
+                if len(_SCHEMAS) >= _SCHEMA_CACHE_MAX:
+                    _SCHEMAS.clear()
+                _SCHEMAS[raw] = schema
+        if len(_FILE_SCHEMAS) >= _SCHEMA_CACHE_MAX:
+            del _FILE_SCHEMAS[next(iter(_FILE_SCHEMAS))]
+        _FILE_SCHEMAS[os.path.abspath(path)] = schema
+    return schema
+
+
+def _data_schema(paths: list[str]):
+    """The Spark data schema that every file of ``paths`` carries in its
+    footer, or None when a file lacks Spark's key, is unreadable, or
+    disagrees with another.  Files the map does not hold cost one pyarrow
+    footer read each, on the driver."""
+    found = None
+    for p in paths:
+        schema = _FILE_SCHEMAS.get(os.path.abspath(p), _UNSEEN)
+        if schema is _UNSEEN:
+            try:
+                import pyarrow.parquet as pq
+
+                schema = _remember_schema(p, pq.read_metadata(p).metadata)
+            except Exception:
+                return None
+        if schema is None or (found is not None and schema != found):
+            return None
+        found = schema
+    return found
+
+
+def _land_staged(
+    staging: str, tdir: str, drop_empty: bool = False
+) -> tuple[list[str], dict[str, dict]]:
+    """Move a staged Spark write's data files into table directory
+    ``tdir``, keeping their partition-relative paths (part file names
+    embed a UUID, so they never collide), and return the sorted relative
+    paths with their footer stats.  Each footer's schema seeds the read
+    map, so the first read of the new files runs no inference job.
+    ``drop_empty`` leaves 0-row files behind; the staging directory is
+    removed either way."""
+    moved: list[str] = []
+    stats: dict[str, dict] = {}
+    for root, _dirs, files in os.walk(staging):
+        for fname in files:
+            if fname.startswith(("_", ".")):
+                continue
+            src = os.path.join(root, fname)
+            n_rows, fs, kv = _footer(src)
+            if drop_empty and n_rows == 0:
+                continue
+            rel = os.path.relpath(src, staging)
+            dest = os.path.join(tdir, rel)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.rename(src, dest)
+            _remember_schema(dest, kv)
+            moved.append(rel)
+            if fs:
+                stats[rel] = fs
+    shutil.rmtree(staging, ignore_errors=True)
+    return sorted(moved), stats
 
 
 def batch_buckets(
@@ -1445,29 +1542,9 @@ def _stage_table(
         if cached is not None:
             cached.unpersist()
 
-    # move data files into the table dir, preserving the partition-relative
-    # path; part file names embed a UUID so collisions can't occur.  0-row
-    # files (an unpartitioned write of zero survivors still emits one)
-    # stay behind and go with the staging directory.
-    moved: list[str] = []
-    stats: dict[str, dict] = {}
-    for root, _dirs, files in os.walk(staging):
-        for fname in files:
-            if fname.startswith(("_", ".")):
-                continue
-            src = os.path.join(root, fname)
-            n_rows, fs = _footer(src)
-            if n_rows == 0:
-                continue
-            rel = os.path.relpath(src, staging)
-            dest = os.path.join(tdir, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(src, dest)
-            moved.append(rel)
-            if fs:
-                stats[rel] = fs
-    shutil.rmtree(staging, ignore_errors=True)
-    return sorted(moved), stats
+    # 0-row files (an unpartitioned write of zero survivors still emits
+    # one) stay behind and go with the staging directory
+    return _land_staged(staging, tdir, drop_empty=True)
 
 
 def _added_between(out_dir: str, old_v: int, new_v: int) -> dict[str, list]:
@@ -1672,87 +1749,71 @@ def compact_published(
     out_dir: str,
     table: str,
     min_files: int = 2,
-    target_files: int = 1,
     keep_versions: int = MAINT_KEEP_VERSIONS,
     sort_within: tuple[str, ...] | None = None,
 ) -> dict[str, tuple[int, int]]:
-    """Log-aware compaction: rewrite each partition's many LIVE files
-    (the snapshot's list, not the directory's) into ``target_files``, then
-    commit the swap as ONE log entry — a reader sees the old snapshot
-    or the compacted one, never a mix; rows are preserved exactly.  The
-    replaced files fall out of the snapshot and are reclaimed by
-    :func:`vacuum` (called here with ``keep_versions`` — the retention
-    horizon that keeps recent snapshots' files readable for pinned
-    readers and time travel).  This is the append-only sink's
-    autovacuum: per-batch writes bound file growth per batch (coalesce(1)
-    in the sinks), but cumulative growth is O(batches) and probe cost is
+    """Log-aware compaction: rewrite every partition holding more than
+    ``min_files`` LIVE files (the snapshot's list, not the directory's)
+    into one file, then commit the swap as ONE log entry — a reader sees
+    the old snapshot or the compacted one, never a mix; rows are
+    preserved exactly.  The replaced files fall out of the snapshot and
+    are reclaimed by :func:`vacuum` (called here with ``keep_versions`` —
+    the retention horizon that keeps recent snapshots' files readable for
+    pinned readers and time travel).  This is the append-only sink's
+    autovacuum: cumulative file growth is O(batches) and probe cost is
     O(live files) at the parquet-open layer — periodic compaction is the
     long-run bound.  On a version race the swap is rebased if every
     replaced file is still live in the fresh snapshot, else abandoned
     (compaction is an optimization; the orphaned rewrite is vacuumed).
     Returns {partition: (files_before, files_after)}.
 
-    Resolution and commit are PER-TABLE and delta-form (r11): the input
-    file list comes from the filtered sidecar read (never O(all live
-    files)), and the swap commits exactly {remove: replaced, add:
-    rewritten} — no full-snapshot hydration anywhere on the path."""
-    from collections import defaultdict
+    The whole table is ONE rewrite: all compactable buckets are read
+    together (footer schema, :func:`_read_files`), shuffled by the bucket
+    column and written ``partitionBy`` it, which lands one file per
+    bucket, each sorted on ``sort_within``; a flat table is coalesced to
+    one file.  Resolution and commit are PER-TABLE and delta-form (r11):
+    the input file list comes from the filtered sidecar read (never
+    O(all live files)), and the swap commits exactly {remove: replaced,
+    add: rewritten}."""
+    from collections import Counter, defaultdict
 
     latest = _latest_version(out_dir)
     if latest == 0:
         return {}
     files, _ = _table_files(out_dir, latest, table, with_stats=False)
-    if not files:
-        return {}
-    tdir = os.path.join(out_dir, f"{table}.parquet")
     by_part: dict[str, list[str]] = defaultdict(list)
     for rel in files:
         by_part[os.path.dirname(rel)].append(rel)
-    replaced: list[str] = []
-    added: list[str] = []
-    added_stats: dict[str, dict] = {}
-    done: dict[str, tuple[int, int]] = {}
-    for part in sorted(by_part):
-        rels = by_part[part]
-        if len(rels) <= max(min_files, target_files):
-            continue
-        df = spark.read.parquet(*[os.path.join(tdir, r) for r in rels])
-        staging = os.path.join(
-            out_dir, "_staging", f"compact-{table}-{uuid.uuid4().hex}"
-        )
-        out_df = df.coalesce(target_files)
-        if sort_within:
-            # tables whose probes rely on row-group min/max pruning (e.g.
-            # the BM25 postings' term order) must keep that order through
-            # compaction, or the rewrite silently degrades every later probe
-            out_df = out_df.sortWithinPartitions(*sort_within)
-        out_df.write.mode("overwrite").parquet(staging)
-        moved: list[str] = []
-        for fname in sorted(os.listdir(staging)):
-            if fname.startswith(("_", ".")):
-                continue
-            dest_rel = os.path.join(part, fname) if part else fname
-            dest = os.path.join(tdir, dest_rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(os.path.join(staging, fname), dest)
-            moved.append(dest_rel)
-            fs = _file_stats(dest)
-            if fs:
-                added_stats[dest_rel] = fs
-        shutil.rmtree(staging, ignore_errors=True)
-        replaced.extend(rels)
-        added.extend(moved)
-        done[part or "."] = (len(rels), len(moved))
-    if not done:
+    todo = {
+        p: rels for p, rels in by_part.items() if len(rels) > max(min_files, 1)
+    }
+    if not todo:
         return {}
+    replaced = sorted(r for rels in todo.values() for r in rels)
+    tdir = os.path.join(out_dir, f"{table}.parquet")
+    df = _read_files(spark, tdir, replaced)
+    bucket = [c for c in ("height_bucket", "key_bucket") if c in df.columns][:1]
+    # tables whose probes rely on row-group min/max pruning (e.g. the BM25
+    # postings' term order) must keep that order through compaction; the
+    # sort key leads with the partition column (see _stage_table)
+    out_df = df.repartition(*bucket) if bucket else df.coalesce(1)
+    if bucket or sort_within:
+        out_df = out_df.sortWithinPartitions(*bucket, *(sort_within or ()))
+    staging = os.path.join(
+        out_dir, "_staging", f"compact-{table}-{uuid.uuid4().hex}"
+    )
+    out_df.write.mode("overwrite").partitionBy(*bucket).parquet(staging)
+    added, added_stats = _land_staged(staging, tdir)
+    landed = Counter(os.path.dirname(rel) for rel in added)
+    done = {p or ".": (len(todo[p]), landed[p]) for p in sorted(todo)}
     gone = set(replaced)
     for rebase in (False, True):
         try:
             _commit_delta(
                 out_dir,
                 latest + 1,
-                add={table: sorted(added)},
-                remove={table: sorted(replaced)},
+                add={table: added},
+                remove={table: replaced},
                 stats_add={table: added_stats},
                 op="compact",
             )
@@ -1835,22 +1896,7 @@ def rewrite_published_many(
         if bucket_col is not None:
             writer = writer.partitionBy(bucket_col)
         writer.parquet(staging)
-        moved: list[str] = []
-        new_stats: dict[str, dict] = {}
-        for root, _dirs, files in os.walk(staging):
-            for fname in files:
-                if fname.startswith(("_", ".")):
-                    continue
-                rel = os.path.relpath(os.path.join(root, fname), staging)
-                dest = os.path.join(tdir, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.rename(os.path.join(root, fname), dest)
-                moved.append(rel)
-                fs = _file_stats(dest)
-                if fs:
-                    new_stats[rel] = fs
-        shutil.rmtree(staging, ignore_errors=True)
-        return sorted(moved), new_stats
+        return _land_staged(staging, tdir)
 
     for table, df in tables.items():
         moved, new_stats = _stage_rewrite(table, df)

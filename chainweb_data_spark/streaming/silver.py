@@ -162,11 +162,14 @@ def lookup_history(spark: SparkSession, out_dir: str, start_rk: str) -> DataFram
     )
     if hist is None:  # no history row published yet
         return spark.createDataFrame([], HISTORY_SCHEMA)
+    # one chain's rows from a few files: a one-task sort orders them with
+    # a single job, where a global orderBy pays sampling and shuffle jobs
     return (
         hist.filter(
             (F.col("key_bucket") == f"k{start_rk[:1]}")
             & (F.col("start_rk") == start_rk)
         )
-        .orderBy("depth")
+        .coalesce(1)
+        .sortWithinPartitions("depth")
         .select("start_rk", "depth", "rk", "code")
     )

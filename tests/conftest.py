@@ -1,5 +1,7 @@
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -45,6 +47,36 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("cds-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` → ``(fn(), ids of the Spark jobs fn ran)``, counted
+    through a job group on the calling thread.  The status tracker fills
+    from the listener bus in event order, so once a sentinel job run after
+    ``fn`` shows up, every job of ``fn`` shows up too."""
+    sc = spark.sparkContext
+
+    def grouped(gid, fn):
+        sc.setJobGroup(gid, "counted")
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def run(fn):
+        gid = f"jobs-of-{uuid.uuid4().hex}"
+        out = grouped(gid, fn)
+        grouped(gid + "-end", lambda: sc.parallelize([0], 1).count())
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(gid + "-end"):
+            assert time.monotonic() < deadline, "sentinel job never showed"
+            time.sleep(0.05)
+        return out, sorted(tracker.getJobIdsForGroup(gid))
+
+    return run
 
 
 SF001 = "/root/testdata/sf0.001"

@@ -69,3 +69,46 @@ def test_compaction_is_idempotent(spark, tmp_path_factory):
     compact_published(spark, out, "t", min_files=1)
     again = compact_published(spark, out, "t", min_files=1)
     assert again == {}, "second compaction rewrote already-compact partitions"
+
+
+def test_compaction_rewrites_a_table_in_one_job(spark, tmp_path_factory, jobs_of):
+    """Every compactable bucket is rewritten by ONE write job (plus the
+    shuffle-map job of its repartition), not a read/write pair per bucket:
+    one file per bucket, every row kept, each file in ``sort_within``
+    order, and buckets at or under ``min_files`` untouched."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path_factory.mktemp("compact1job"))
+    pks = {"t": ("hash",)}
+    # three interleaved batches over heights 0-999: ten height buckets,
+    # each gaining files from every batch, heights unsorted across files
+    for i in (2, 0, 1):
+        publish_batch(spark, {"t": _mk(spark, 0, 1000).filter(F.col("height") % 3 == i)},
+                      out, pks=pks)
+    publish_batch(spark, {"t": _mk(spark, 2000, 2001)}, out, pks=pks)  # one file
+    before = read_manifest(out)["tables"]["t"]
+    by_part = {}
+    for f in before:
+        by_part.setdefault(os.path.dirname(f), []).append(f)
+    assert sum(len(fs) > 2 for fs in by_part.values()) >= 8
+    small = {p: fs for p, fs in by_part.items() if len(fs) <= 2}
+    assert small
+    rows_before = sorted(read_published(spark, out, "t").collect())
+
+    done, jobs = jobs_of(
+        lambda: compact_published(spark, out, "t", min_files=2, sort_within=("height",))
+    )
+    assert 1 <= len(jobs) <= 2, jobs
+    assert set(done) == {p for p, fs in by_part.items() if len(fs) > 2}
+    after = read_manifest(out)["tables"]["t"]
+    for part, fs in by_part.items():
+        live = [f for f in after if os.path.dirname(f) == part]
+        if part in small:
+            assert sorted(live) == sorted(fs), part
+            continue
+        assert len(live) == 1 and done[part] == (len(fs), 1), part
+        heights = pq.read_table(
+            os.path.join(out, "t.parquet", live[0]), columns=["height"]
+        )["height"].to_pylist()
+        assert heights == sorted(heights), part
+    assert sorted(read_published(spark, out, "t").collect()) == rows_before

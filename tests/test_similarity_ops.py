@@ -88,6 +88,19 @@ def test_matmul_envelope_enforced_everywhere(spark, emb):
             call()
 
 
+def test_matmul_envelope_trusts_n_rows_without_counting(spark, jobs_of):
+    """A caller-given ``n_rows`` is the corpus size: above ``max_vectors``
+    the exact tier refuses with no ``count()`` job."""
+
+    def refuse():
+        with pytest.raises(ValueError, match="exact tier"):
+            sim._check_matmul_envelope(spark.range(3), "op", 10, n_rows=11)
+
+    assert jobs_of(refuse)[1] == []
+    with pytest.raises(AssertionError):
+        sim._check_matmul_envelope(spark.range(3), "op", 10, n_rows=-1)
+
+
 def test_ivf_kmeans_trainer_deterministic(spark, emb):
     """The registration-time pyarrow trainer and the runtime Spark trainer
     must produce BIT-IDENTICAL centroids (that equality is what lets the
