@@ -496,27 +496,6 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    min_jaccard: float | None = None,
-) -> DataFrame:
-    """End-to-end MinHash LSH: shingle → signature → banded candidates,
-    optionally verified with exact Jaccard (computed only on candidates —
-    the LSH point: verification joins are O(candidates), not O(n²))."""
-    sets_ = shingle_set_arrays(df, id_col, text_col, k).cache()
-    sig = minhash_signatures_sets(sets_, id_col, num_hashes)
-    cand = lsh_candidate_pairs(sig, id_col, num_hashes, bands)
-    if min_jaccard is None:
-        return cand
-    jac = jaccard_for_pairs_sets(sets_, cand, id_col)
-    return jac.filter(F.col("jaccard") >= min_jaccard)
-
-
 def _jaccard_for_pairs(shingled: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """Exact Jaccard for an explicit candidate-pair list.
 

@@ -9,6 +9,8 @@ arithmetic, reproducible in any SQL engine, no regex dialect drift.
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd  # noqa: F401 — module-level so pandas_udf type hints resolve
 
@@ -24,27 +26,33 @@ from pyspark.sql.window import Window
 # model relations in the executor storage pool (the bench isolates itself
 # with clearCache() between queries; this is the in-process equivalent).
 # Ownership contract: the caller that materializes the scoring DataFrame
-# owns the release — call release_scorer_model_caches() once the scores are
-# consumed.  The registry holds plain references (NOT results); dropping
-# them does not change any result, only frees storage memory.
-_SCORER_MODEL_CACHES: list[DataFrame] = []
+# owns the release — call release_scorer_model_caches(spark) with the
+# session it scored in once the scores are consumed.  The registry is
+# keyed by SparkSession, so releasing one session's models never drops
+# another session's live ones; it holds plain references (NOT results),
+# and dropping them does not change any result, only frees storage memory.
+_SCORER_MODEL_CACHES: dict[object, list[DataFrame]] = {}
+_SCORER_LOCK = threading.Lock()
 
 
 def _model_cache(df: DataFrame) -> DataFrame:
-    """Cache a scorer model relation and register it for release."""
+    """Cache a scorer model relation and register it for release under
+    its SparkSession."""
     out = df.cache()
-    _SCORER_MODEL_CACHES.append(out)
+    with _SCORER_LOCK:
+        _SCORER_MODEL_CACHES.setdefault(df.sparkSession, []).append(out)
     return out
 
 
-def release_scorer_model_caches() -> int:
-    """Unpersist every registered n-gram scorer model relation (r13,
-    VERDICT item 7).  Returns the number released.  Safe to call at any
-    time: a consumer mid-collect simply recomputes the (deterministic)
-    model subtree on its next action."""
+def release_scorer_model_caches(spark) -> int:
+    """Unpersist every n-gram scorer model relation registered under
+    SparkSession ``spark`` (r13, VERDICT item 7).  Returns the number
+    released.  Safe to call at any time: a consumer mid-collect simply
+    recomputes the (deterministic) model subtree on its next action."""
+    with _SCORER_LOCK:
+        mine = _SCORER_MODEL_CACHES.pop(spark, [])
     n = 0
-    while _SCORER_MODEL_CACHES:
-        df = _SCORER_MODEL_CACHES.pop()
+    for df in mine:
         try:
             df.unpersist()
             n += 1

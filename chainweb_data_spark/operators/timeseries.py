@@ -290,22 +290,3 @@ def binned_range_join(
         & (F.col(point_ts) <= F.col(end_ts))
     )
     return out.drop("_bin")
-
-
-def suggest_bin_width(
-    intervals: DataFrame, start_ts: str, end_ts: str
-) -> int:
-    """Data-derived bin width for :func:`binned_range_join`: the MEDIAN
-    interval span in microseconds (floored at 1).  At that width the
-    typical interval replicates into ≤ 2 bins, which is the sweet spot —
-    wider bins cut replication but grow per-bin join populations; narrower
-    bins do the reverse.  One approximate-percentile aggregation over the
-    interval relation; run once per layout, not per query (the same
-    derive-the-knob-from-data move as ``auto_num_planes``/``auto_n_cells``).
-    """
-    row = intervals.select(
-        F.percentile_approx(
-            F.unix_micros(F.col(end_ts)) - F.unix_micros(F.col(start_ts)), 0.5
-        ).alias("m")
-    ).first()
-    return max(int(row["m"] or 1), 1)

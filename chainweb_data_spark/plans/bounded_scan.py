@@ -193,25 +193,6 @@ def _boundary_cursor(spec: CursorSpec, hi: int) -> tuple:
     return tuple(vals)
 
 
-def bounded_scan_all(
-    df: DataFrame,
-    predicate: Column,
-    spec: CursorSpec,
-    **kw,
-) -> list:
-    """Drain the governor to exhaustion (test helper): total result must
-    equal the un-governed query — the reference's invariant that repeated
-    bounded requests enumerate the full set."""
-    rows: list = []
-    cursor = None
-    while True:
-        res = bounded_scan(df, predicate, spec, cursor=cursor, **kw)
-        rows.extend(res.rows)
-        if res.next_cursor is None:
-            return rows
-        cursor = res.next_cursor
-
-
 def bounded_scan_published(
     spark,
     out_dir: str,
@@ -270,13 +251,14 @@ def _stats_ceiling(
     back to the agg) when ANY live file lacks the column's range: a
     partial max would silently truncate the walk's starting point, the
     silent-wrong class this repo refuses."""
-    from ..streaming.publish import _table_files
+    from ..streaming.publish import _file_stats, _snapshot, _table_rows
 
-    files, stats = _table_files(out_dir, version, table, with_stats=True)
-    if not files:
+    rows = _table_rows(_snapshot(out_dir, version), table)
+    if not rows.num_rows:
         return None
+    stats = _file_stats(rows)
     mx = None
-    for f in files:
+    for f in rows["file"].to_pylist():
         rng = stats.get(f, {}).get(col)
         if not rng or rng[1] is None:
             return None

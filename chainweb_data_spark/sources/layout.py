@@ -21,7 +21,7 @@ reference's ``blocks_height_chainid_idx (height DESC, chainid)`` makes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 HEIGHT_BUCKET_SIZE = 10_000
@@ -36,7 +36,10 @@ def write_indexed(
     mode: str = "overwrite",
 ) -> None:
     """Write ``df`` partitioned by the bucket of ``bucket_col`` and sorted
-    within files by ``sort_cols`` [(name, descending)]."""
+    within files by ``sort_cols`` [(name, descending)] — the sorted-on-write
+    layout of README row O1 (cursor sort orders), whose pruning and
+    in-file order ``tests/test_layout.py`` asserts; read it back with
+    ``spark.read.parquet`` and filter with :func:`height_range_pred`."""
     # The bucket leads the sort ASCENDING: FileFormatWriter requires rows
     # ordered by the partition columns and would otherwise inject its own
     # (non-stable) sort, destroying the cursor order inside each file.
@@ -53,13 +56,6 @@ def write_indexed(
         .partitionBy("height_bucket")
         .parquet(path)
     )
-
-
-def read_indexed(spark: SparkSession, path: str) -> DataFrame:
-    """Read an indexed table; height predicates written as
-    ``height_bucket`` conjuncts prune partitions.  ``with_bucket_pred``
-    derives the bucket conjunct from a height range automatically."""
-    return spark.read.parquet(path)
 
 
 def height_range_pred(

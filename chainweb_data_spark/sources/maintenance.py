@@ -109,7 +109,7 @@ def rewrite_zordered(
     latest = pub._latest_version(out_dir)
     if latest == 0:
         return {}
-    files, _ = pub._table_files(out_dir, latest, table, with_stats=False)
+    files = pub._live_files(out_dir, latest, table)
     if not files:
         return {}
     tdir = os.path.join(out_dir, f"{table}.parquet")
@@ -168,9 +168,7 @@ def rewrite_zordered(
             if rebase:
                 raise
             latest = pub._latest_version(out_dir)
-            fresh, _ = pub._table_files(
-                out_dir, latest, table, with_stats=False
-            )
+            fresh = pub._live_files(out_dir, latest, table)
             if set(fresh) != input_files:
                 # the racing commit changed THIS table — the z-layout's
                 # file list would drop (or resurrect) rows; abandon and
@@ -213,12 +211,11 @@ def expire_files(
         latest = pub._latest_version(out_dir)
         if latest == 0:
             return {"removed": 0, "kept": 0}
-        # per-table resolution (r11): files + their stats come from the
-        # filtered, column-pruned sidecar read — O(this table's files),
-        # never a full-snapshot hydration
-        files, per_file = pub._table_files(
-            out_dir, latest, table, with_stats=True
-        )
+        # the table's slice of the cached snapshot: only its files and
+        # stats become Python objects
+        rows = pub._table_rows(pub._snapshot(out_dir, latest), table)
+        files = rows["file"].to_pylist()
+        per_file = pub._file_stats(rows)
         if not files:
             return {"removed": 0, "kept": 0}
         drop = set()

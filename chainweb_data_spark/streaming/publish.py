@@ -28,9 +28,15 @@ raises :class:`StoreFormatError`.  A commit has one of two shapes:
   the added files' partition directories (``add_dirs_by_table``) in the
   JSON.  Pin/unpin commits carry a ``pin`` record.
 
-Every reader resolves a version the same way (:func:`_chain`): walk back
-to the checkpoint at or below it (at most ``CHECKPOINT_EVERY - 1``
-deltas), then fold the deltas forward.
+Every reader resolves a version the same way, through ONE resolver
+(:func:`_snapshot`): :func:`_chain` walks back to the checkpoint at or
+below it (at most ``CHECKPOINT_EVERY - 1`` deltas) or to a cached
+ancestor, then :func:`_fold` applies the deltas since.  The snapshot is
+one Arrow table ``(table, file, stats)`` sorted by (table, file), stats
+kept as JSON strings: the checkpoint sidecar's own shape, so a
+checkpoint is the parent snapshot plus the commit's delta written out,
+a per-table read is a slice, and vacuum is ``is_in`` over Arrow arrays.
+:func:`read_manifest` is the one place it becomes Python dicts.
 
 A batch stages ALL tables' new files first (files on disk but referenced by
 no commit ⇒ invisible to snapshot readers), then publishes ONE commit.  The
@@ -70,17 +76,17 @@ Scale properties:
 - **Time travel.**  ``read_manifest``/``read_published`` accept
   ``version=`` — any retained commit resolves to its exact snapshot
   (``vacuum`` bounds how far back the data files themselves survive).
-- **Per-table, column-pruned reads.**  ``read_published`` reads the
-  checkpoint sidecar filtered to one table (row groups prune on the
-  sorted ``table`` column) and fetches stats bytes only when a
-  ``where`` needs them; vacuum and pin probes read file sets only.
+- **Cached, sliced reads.**  Resolved snapshots are cached per
+  immutable version, so the hot loop folds only the deltas since its
+  last read (a few added files are spliced in by bisect).
+  ``read_published`` takes its table's slice and turns only those
+  paths into Python objects; vacuum and the pin probe resolve with the
+  stats column projected away.
 - **One maintenance path.**  Checkpoint builds, resolves, vacuum and
-  pin probes all run on the driver over the log seam.  A checkpoint is
-  an Arrow fold of the parent sidecar (:func:`_write_checkpoint`): the
-  stats stay JSON strings, so its O(live files) driver state is Arrow
-  buffers, never Python objects.  The seam keeps every path
-  working on storage executors cannot see and on
-  :class:`~.logstore.InMemoryLogStore`.
+  pin probes all run on the driver over the log seam, on the one
+  snapshot form: the O(live files) driver state is Arrow buffers,
+  never Python objects.  The seam keeps every path working on storage
+  executors cannot see and on :class:`~.logstore.InMemoryLogStore`.
 
 Concurrent writers rebase with CONFLICT DETECTION: a losing writer
 compares its staged files' partition directories with what the racers
@@ -234,9 +240,9 @@ def _chain(
     """The one walk over the log: from ``version`` back to its checkpoint
     (at most ``CHECKPOINT_EVERY - 1`` deltas).  Returns ``(base,
     deltas)`` with the deltas after the base, oldest first.  The base is
-    the checkpoint commit — or, when ``held(v)`` returns a snapshot the
-    caller already holds resolved for a version on the way (the
-    snapshot cache), that snapshot, and the walk stops there."""
+    the checkpoint commit — or, when ``held(v)`` returns a snapshot
+    already resolved for a version on the way (the snapshot cache's
+    Arrow table), that snapshot, and the walk stops there."""
     deltas: list[dict] = []
     v = version
     while v >= 1:
@@ -330,96 +336,153 @@ def _write_delta_sidecar(
     sort by (action, table, file): readers that want one action or one
     table prune row groups on the sorted columns' min/max."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    a_col: list[str] = []
-    t_col: list[str] = []
-    f_col: list[str] = []
-    s_col: list[str | None] = []
-    for action, per in (("add", add), ("remove", remove)):
-        for t in sorted(per):
-            per_stats = stats_add.get(t, {}) if action == "add" else {}
-            for rel in sorted(per[t]):
-                a_col.append(action)
-                t_col.append(t)
-                f_col.append(rel)
-                s = per_stats.get(rel)
-                s_col.append(
-                    json.dumps(s, separators=(",", ":")) if s else None
-                )
+    parts = []
+    for action, rows in (
+        ("add", _rows(add, stats_add, _SIDECAR_SCHEMA)),
+        ("remove", _rows(remove, {}, _SIDECAR_SCHEMA)),
+    ):
+        parts.append(
+            rows.add_column(
+                0, "action", pa.array([action] * rows.num_rows, pa.string())
+            )
+        )
     name = f"delta-v{version}-{uuid.uuid4().hex[:12]}.parquet"
     # durable before the commit link — a lost commit race leaves a
     # vacuumable orphan, never a torn sidecar
     _write_sidecar_parquet(
         mdir,
         name,
-        pa.table(
-            {
-                "action": pa.array(a_col, pa.string()),
-                "table": pa.array(t_col, pa.string()),
-                "file": pa.array(f_col, pa.string()),
-                "stats": pa.array(s_col, pa.string()),
-            }
+        pa.concat_tables(parts).sort_by(
+            [("action", "ascending")] + _SORT_KEY
         ),
     )
     return name
 
 
-def _hydrate_delta(
-    out_dir: str,
-    commit: dict,
-    table: str | None = None,
-    with_stats: bool = True,
-) -> dict:
-    """Materialize a SPILLED delta commit's add/remove/stats_add back
-    into the dict shape every driver-side fold consumes (a commit
-    without ``delta`` passes through untouched).  ``table`` narrows the
-    read to one table via a parquet predicate — the sidecar is sorted by
-    (action, table, file), so row groups outside the table prune on
-    footer min/max and :func:`_table_files` stays O(that table).
-    ``with_stats=False`` column-prunes the stats bytes — the sidecar's
-    dominant payload — for consumers that only fold file SETS (the same
-    pruning every checkpoint-sidecar reader gets)."""
-    if "delta" not in commit:
-        return commit
-    path = os.path.join(_manifest_path(out_dir), commit["delta"])
-    filters = [("table", "=", table)] if table is not None else None
-    cols = ["action", "table", "file"] + (["stats"] if with_stats else [])
-    t = LOG_STORE.read_parquet(path, columns=cols, filters=filters)
-    add: dict[str, list] = {}
-    remove: dict[str, list] = {}
-    stats_add: dict[str, dict] = {}
-    s_col = (
-        t.column("stats").to_pylist()
-        if with_stats
-        else [None] * t.num_rows
-    )
-    for action, tname, rel, s in zip(
-        t.column("action").to_pylist(),
-        t.column("table").to_pylist(),
-        t.column("file").to_pylist(),
-        s_col,
-    ):
-        if action == "add":
-            add.setdefault(tname, []).append(rel)
-            if s:
-                stats_add.setdefault(tname, {})[rel] = json.loads(s)
-        else:
-            remove.setdefault(tname, []).append(rel)
-    out = dict(commit)
-    if add:
-        out["add"] = add
-    if remove:
-        out["remove"] = remove
-    if stats_add:
-        out["stats_add"] = stats_add
-    return out
-
-
-#: the checkpoint sidecar's columns: one row per live file, stats as a
-#: compact JSON string (heterogeneous per table, so a string column beats
-#: a union of typed structs; readers that don't want it column-prune it)
+#: the snapshot's columns, and the checkpoint sidecar's: one row per live
+#: file, stats as a compact JSON string (heterogeneous per table, so a
+#: string column beats a union of typed structs; readers that don't want
+#: it column-prune it)
 _SIDECAR_SCHEMA = "table", "file", "stats"
+
+#: the order every snapshot and checkpoint sidecar keeps
+_SORT_KEY = [("table", "ascending"), ("file", "ascending")]
+
+#: :func:`_insert` splices k added rows into an n-row snapshot by bisect
+#: while ``k * log2(n) * _SPLICE_COST < n`` and sorts the concatenation
+#: otherwise.  A bisect step costs about 2.5 us of Python; a sort about
+#: 0.3 us per row in Arrow, less the 0.07 us per row the splice pays to
+#: re-combine its slices, so the splice wins while k * log2(n) < n / 9
+#: (``plans/arrow_snapshots/splice_vs_sort.py``: the sort wins a
+#: tip-shaped 4k-row fold of 66 adds, the splice a 1M-row fold of 1024)
+_SPLICE_COST = 9
+
+
+def _schema(cols):
+    import pyarrow as pa
+
+    return pa.schema([(c, pa.string()) for c in cols])
+
+
+def _rows(files: dict[str, list], stats: dict[str, dict], cols):
+    """Per-table file lists (and their per-file stats dicts) as snapshot
+    rows in ``cols`` — how an inline delta enters the fold."""
+    import pyarrow as pa
+
+    data: dict[str, list] = {"table": [], "file": [], "stats": []}
+    for t, rels in files.items():
+        per = stats.get(t, {})
+        for rel in rels:
+            s = per.get(rel)
+            data["table"].append(t)
+            data["file"].append(rel)
+            data["stats"].append(
+                json.dumps(s, separators=(",", ":")) if s else None
+            )
+    return pa.table(
+        [pa.array(data[c], pa.string()) for c in cols], schema=_schema(cols)
+    )
+
+
+def _delta_tables(out_dir: str, commit: dict, cols):
+    """The delta a commit states (checkpoint commits carry their own
+    too), as ``(removes, adds)``: the removed ``(table, file)`` rows and
+    the added rows in ``cols``.  A spilled delta is read as the Arrow
+    table its ``delta-v*`` sidecar already is, stats column-pruned
+    unless ``cols`` asks for them."""
+    import pyarrow.compute as pc
+
+    if "delta" not in commit:
+        return (
+            _rows(commit.get("remove", {}), {}, ("table", "file")),
+            _rows(commit.get("add", {}), commit.get("stats_add", {}), cols),
+        )
+    path = os.path.join(_manifest_path(out_dir), commit["delta"])
+    t = LOG_STORE.read_parquet(path, columns=["action", *cols])
+    is_add = pc.equal(t["action"], "add")
+    return (
+        t.filter(pc.invert(is_add)).select(["table", "file"]),
+        t.filter(is_add).select(list(cols)).cast(_schema(cols)),
+    )
+
+
+def _drop(rows, removes):
+    """``rows`` without the ``(table, file)`` pairs of ``removes``: one
+    ``pc.equal`` & ``pc.is_in`` mask per removed table."""
+    import pyarrow.compute as pc
+
+    drop = None
+    for t in pc.unique(removes["table"]).to_pylist():
+        gone = removes.filter(pc.equal(removes["table"], t))["file"]
+        hit = pc.and_(
+            pc.equal(rows["table"], t), pc.is_in(rows["file"], value_set=gone)
+        )
+        drop = hit if drop is None else pc.or_(drop, hit)
+    return rows.filter(pc.invert(drop))
+
+
+def _insert(snap, adds):
+    """Sorted ``snap`` with the sorted rows ``adds`` inserted at their
+    (table, file) positions, as one chunk.  A few adds into a large
+    snapshot are spliced in — a bisect per added row, one slice per run
+    of adds landing between the same two rows, then one combine — and
+    otherwise the concatenation is sorted (:data:`_SPLICE_COST`)."""
+    import bisect
+    import math
+
+    import pyarrow as pa
+
+    n = snap.num_rows
+    if adds.num_rows * math.log2(n + 2) * _SPLICE_COST >= n:
+        return pa.concat_tables([snap, adds]).sort_by(_SORT_KEY)
+    t_col, f_col = snap["table"], snap["file"]
+    index = range(n)
+    pieces, lo, run = [], 0, 0
+    for i, key in enumerate(
+        zip(adds["table"].to_pylist(), adds["file"].to_pylist())
+    ):
+        pos = bisect.bisect_left(
+            index, key, lo, key=lambda j: (t_col[j].as_py(), f_col[j].as_py())
+        )
+        if pos > lo:
+            pieces += [adds.slice(run, i - run), snap.slice(lo, pos - lo)]
+            run, lo = i, pos
+    pieces += [adds.slice(run), snap.slice(lo)]
+    return pa.concat_tables([p for p in pieces if p.num_rows]).combine_chunks()
+
+
+def _fold(snap, removes, adds):
+    """The one fold of the delta semantics: ``snap`` (sorted by (table,
+    file)) with the removed rows dropped and the added rows inserted in
+    order.  ``removes``/``adds`` may gather several consecutive deltas:
+    data file names are never reused, so a remove either drops a
+    snapshot row or cancels an add of an earlier delta."""
+    if removes.num_rows:
+        snap, adds = _drop(snap, removes), _drop(adds, removes)
+    if adds.num_rows:
+        snap = _insert(snap, adds.sort_by(_SORT_KEY))
+    return snap
 
 
 def _write_checkpoint(
@@ -429,79 +492,25 @@ def _write_checkpoint(
     remove: dict[str, list],
     stats_add: dict[str, dict],
 ) -> dict:
-    """Build checkpoint ``version``'s sidecar — the one checkpoint
-    builder, an Arrow fold: read the parent checkpoint's sidecar (stats
-    stay JSON strings, never parsed), fold the ≤15 deltas since it plus
-    this commit's own into one removed set and one added map, drop the
-    removed rows with ``is_in``, append the added ones and sort by
-    (table, file).  v1 is the same fold over an empty parent.  Durable
-    before return, named with the version AND a uuid so racing writers
-    of the same version cannot collide — the loser's sidecar becomes an
-    orphan that vacuum reclaims.  Returns the checkpoint's commit fields
-    (``ckpt``, ``n_files``, ``table_names``, ``n_files_by_table``), all
-    taken from the table written."""
-    import pyarrow as pa
+    """Build checkpoint ``version``'s sidecar: the snapshot of
+    ``version - 1`` (:func:`_snapshot`, empty for v1) folded with this
+    commit's own delta, written out — stats stay JSON strings, never
+    parsed.  Durable before return, named with the version AND a uuid
+    so racing writers of the same version cannot collide — the loser's
+    sidecar becomes an orphan that vacuum reclaims.  Returns the
+    checkpoint's commit fields (``ckpt``, ``n_files``, ``table_names``,
+    ``n_files_by_table``), all taken from the table written."""
     import pyarrow.compute as pc
 
-    schema = pa.schema([(c, pa.string()) for c in _SIDECAR_SCHEMA])
+    snap = _fold(
+        _snapshot(out_dir, version - 1),
+        *_delta_tables(
+            out_dir,
+            {"add": add, "remove": remove, "stats_add": stats_add},
+            _SIDECAR_SCHEMA,
+        ),
+    )
     mdir = _manifest_path(out_dir)
-    removed: set[tuple[str, str]] = set()
-    added: dict[tuple[str, str], str | None] = {}
-
-    def fold(delta: dict) -> None:
-        # file names are never reused, so a remove either cancels an add
-        # since the parent checkpoint or drops a parent row
-        for t, rels in delta.get("remove", {}).items():
-            for rel in rels:
-                if (t, rel) in added:
-                    del added[(t, rel)]
-                else:
-                    removed.add((t, rel))
-        st = delta.get("stats_add", {})
-        for t, rels in delta.get("add", {}).items():
-            per = st.get(t, {})
-            for rel in rels:
-                s = per.get(rel)
-                added[(t, rel)] = (
-                    json.dumps(s, separators=(",", ":")) if s else None
-                )
-
-    if version == 1:
-        snap = schema.empty_table()
-    else:
-        ckpt, deltas = _chain(out_dir, version - 1)
-        snap = LOG_STORE.read_parquet(
-            os.path.join(mdir, ckpt["ckpt"]), columns=list(_SIDECAR_SCHEMA)
-        ).cast(schema)
-        for delta in deltas:
-            fold(_hydrate_delta(out_dir, delta))
-    fold({"add": add, "remove": remove, "stats_add": stats_add})
-    if removed:
-        by_table: dict[str, list] = {}
-        for t, rel in removed:
-            by_table.setdefault(t, []).append(rel)
-        drop = None
-        for t, rels in by_table.items():
-            hit = pc.and_(
-                pc.equal(snap["table"], t),
-                pc.is_in(snap["file"], value_set=pa.array(rels, pa.string())),
-            )
-            drop = hit if drop is None else pc.or_(drop, hit)
-        snap = snap.filter(pc.invert(drop))
-    if added:
-        snap = pa.concat_tables(
-            [
-                snap,
-                pa.table(
-                    [
-                        pa.array([t for t, _ in added], pa.string()),
-                        pa.array([rel for _, rel in added], pa.string()),
-                        pa.array(list(added.values()), pa.string()),
-                    ],
-                    schema=schema,
-                ),
-            ]
-        ).sort_by([("table", "ascending"), ("file", "ascending")])
     name = f"ckpt-v{version}-{uuid.uuid4().hex[:12]}.parquet"
     LOG_STORE.makedirs(mdir)
     _write_sidecar_parquet(mdir, name, snap)
@@ -520,88 +529,6 @@ def _write_checkpoint(
         "table_names": sorted(by_t),
         "n_files_by_table": {t: by_t[t] for t in sorted(by_t)},
     }
-
-
-def _read_checkpoint_sidecar(
-    out_dir: str, commit: dict, with_stats: bool = True
-) -> tuple[dict, dict]:
-    """Hydrate a parquet-checkpoint commit back to ``(tables, stats)``.
-    ``with_stats=False`` column-prunes the stats bytes — the sidecar's
-    dominant payload — for consumers that only need file sets."""
-    path = os.path.join(_manifest_path(out_dir), commit["ckpt"])
-    cols = ["table", "file"] + (["stats"] if with_stats else [])
-    arr = LOG_STORE.read_parquet(path, columns=cols)
-    tables: dict[str, list] = {}
-    stats: dict[str, dict] = {}
-    t_col = arr.column("table").to_pylist()
-    f_col = arr.column("file").to_pylist()
-    s_col = arr.column("stats").to_pylist() if with_stats else None
-    for i, (t, rel) in enumerate(zip(t_col, f_col)):
-        tables.setdefault(t, []).append(rel)
-        if s_col is not None and s_col[i]:
-            stats.setdefault(t, {})[rel] = json.loads(s_col[i])
-    return tables, stats
-
-
-def _read_sidecar_table(
-    out_dir: str, commit: dict, table: str, with_stats: bool
-) -> tuple[list, dict]:
-    """ONE table's rows out of a checkpoint sidecar — predicate-pushed
-    (``filters`` prunes row groups on the ``table`` column, which the
-    writer emits in sorted runs) and column-pruned, so resolving a single
-    table never deserializes the other tables' file names or any stats
-    bytes it doesn't need."""
-    path = os.path.join(_manifest_path(out_dir), commit["ckpt"])
-    cols = ["file"] + (["stats"] if with_stats else [])
-    arr = LOG_STORE.read_parquet(
-        path, columns=cols, filters=[("table", "==", table)]
-    )
-    files = arr.column("file").to_pylist()
-    stats: dict = {}
-    if with_stats:
-        for rel, s in zip(files, arr.column("stats").to_pylist()):
-            if s:
-                stats[rel] = json.loads(s)
-    return files, stats
-
-
-def _table_files(
-    out_dir: str, version: int, table: str, with_stats: bool
-) -> tuple[list, dict]:
-    """Resolve ONE table's ``(files, stats)`` at ``version`` — the
-    read_published path (r10): per-table filtered sidecar read + per-table
-    delta replay, so reading one table of an N-table store costs O(that
-    table's files + deltas), never O(all live files).  Shares the resolved
-    snapshot cache on hit; on miss it deliberately does not populate it
-    (a one-table entry would poison full resolves)."""
-    root = os.path.abspath(out_dir)
-    hit = _SNAP_CACHE.get((root, version))
-    if hit is not None:
-        return (
-            list(hit["tables"].get(table, [])),
-            dict(hit["stats"].get(table, {})) if with_stats else {},
-        )
-    ckpt, deltas = _chain(out_dir, version)
-    files, stats = _read_sidecar_table(out_dir, ckpt, table, with_stats)
-    for delta in deltas:
-        # a spilled mega-delta hydrates ONLY this table's rows (parquet
-        # predicate on the sorted table column) — the per-table read
-        # stays O(that table's churn)
-        delta = _hydrate_delta(
-            out_dir, delta, table=table, with_stats=with_stats
-        )
-        rm = delta.get("remove", {}).get(table)
-        if rm:
-            gone = set(rm)
-            files = [f for f in files if f not in gone]
-            for rel in rm:
-                stats.pop(rel, None)
-        ad = delta.get("add", {}).get(table)
-        if ad:
-            files.extend(ad)
-        if with_stats:
-            stats.update(delta.get("stats_add", {}).get(table, {}))
-    return sorted(files), stats
 
 
 def _latest_version(out_dir: str) -> int:
@@ -635,99 +562,108 @@ def _latest_version(out_dir: str) -> int:
     return v
 
 
-#: resolved snapshots keyed by (abspath, version).  A committed version is
-#: immutable (put-if-absent commit files are never rewritten), so entries
-#: never go stale; the cache turns the single-writer hot loop's resolve
-#: into O(deltas since last read) instead of O(live files) JSON parsing.
-#: Cached structures are shared — consumers treat snapshots as read-only
-#: (all in-module consumers copy before mutating).
-_SNAP_CACHE: dict[tuple, dict] = {}
+#: resolved snapshots (Arrow tables) keyed by (abspath, version).  A
+#: committed version is immutable (put-if-absent commit files are never
+#: rewritten), so entries never go stale; the cache turns the
+#: single-writer hot loop's resolve into O(deltas since last read).
+#: Entries are ``(table, buffer bytes)``, shared and read-only (Arrow
+#: tables are immutable).  A stats-less entry never replaces one with
+#: stats.  Bounded by count and by bytes (buffers shared between entries
+#: count once per entry), oldest evicted first; the newest always stays.
+_SNAP_CACHE: dict[tuple, tuple] = {}
 _SNAP_CACHE_MAX = 32
+_SNAP_CACHE_MAX_BYTES = 1 << 30
+_SNAP_LOCK = threading.Lock()
 
 
-def _cache_put(key: tuple, snap: dict) -> None:
-    while len(_SNAP_CACHE) >= _SNAP_CACHE_MAX:
-        _SNAP_CACHE.pop(next(iter(_SNAP_CACHE)))
-    _SNAP_CACHE[key] = snap
+def _cache_put(key: tuple, snap) -> None:
+    with _SNAP_LOCK:
+        old = _SNAP_CACHE.pop(key, None)
+        if old is not None and old[0].num_columns >= snap.num_columns:
+            _SNAP_CACHE[key] = old
+        else:
+            _SNAP_CACHE[key] = (snap, snap.get_total_buffer_size())
+        size = sum(n for _s, n in _SNAP_CACHE.values())
+        while len(_SNAP_CACHE) > 1 and (
+            len(_SNAP_CACHE) > _SNAP_CACHE_MAX
+            or size > _SNAP_CACHE_MAX_BYTES
+        ):
+            size -= _SNAP_CACHE.pop(next(iter(_SNAP_CACHE)))[1]
 
 
-def _walk_snapshot(
-    out_dir: str, version: int, with_stats: bool
-) -> tuple[dict, dict]:
-    """The shared resolve walk: back to the checkpoint or a cached
-    resolved ancestor, then replay the deltas forward.
-    ``with_stats=False`` column-prunes checkpoint sidecars and skips
-    ``stats_add`` replay — the stats bytes are never fetched.  Returns
-    un-normalized ``(tables, stats)``."""
+def _snapshot(out_dir: str, version: int, stats: bool = True):
+    """THE resolver: the snapshot at ``version`` as one Arrow table
+    ``(table, file, stats)`` sorted by (table, file), stats as JSON
+    strings (version 0 is the empty table).  Walks :func:`_chain` back
+    to a checkpoint sidecar or to a cached ancestor, then folds the
+    deltas since in one :func:`_fold`; every resolve fills
+    :data:`_SNAP_CACHE`.  ``stats=False`` projects the stats column
+    away — the sidecars' dominant bytes, which vacuum and the pin probe
+    never read — and is served by any cached entry."""
+    import pyarrow as pa
+
+    cols = _SIDECAR_SCHEMA if stats else ("table", "file")
+    if version == 0:
+        return _schema(cols).empty_table()
     root = os.path.abspath(out_dir)
-    base, deltas = _chain(
-        out_dir, version, held=lambda v: _SNAP_CACHE.get((root, v))
+
+    def held(v):
+        snap, _n = _SNAP_CACHE.get((root, v), (None, 0))
+        if snap is None or snap.num_columns < len(cols):
+            return None
+        return snap.select(list(cols))
+
+    base, deltas = _chain(out_dir, version, held=held)
+    if isinstance(base, dict):
+        base = LOG_STORE.read_parquet(
+            os.path.join(_manifest_path(out_dir), base["ckpt"]),
+            columns=list(cols),
+        ).cast(_schema(cols))
+    if deltas:
+        parts = [_delta_tables(out_dir, c, cols) for c in deltas]
+        base = _fold(
+            base,
+            pa.concat_tables([r for r, _ in parts]),
+            pa.concat_tables([a for _, a in parts]),
+        )
+    _cache_put((root, version), base)
+    return base
+
+
+def _table_rows(snap, table: str):
+    """``table``'s rows of a snapshot: a zero-copy slice found by bisect
+    on the sorted ``table`` column."""
+    import bisect
+
+    t_col = snap["table"]
+    index = range(snap.num_rows)
+    lo = bisect.bisect_left(index, table, key=lambda i: t_col[i].as_py())
+    hi = bisect.bisect_right(
+        index, table, lo, key=lambda i: t_col[i].as_py()
     )
-    if "ckpt" in base:
-        base_tables, base_stats = _read_checkpoint_sidecar(
-            out_dir, base, with_stats=with_stats
-        )
-    else:
-        base_tables = {t: list(fs) for t, fs in base["tables"].items()}
-        base_stats = (
-            {t: dict(s) for t, s in base["stats"].items()}
-            if with_stats
-            else {}
-        )
-    for delta in deltas:
-        delta = _hydrate_delta(out_dir, delta, with_stats=with_stats)
-        for t, rels in delta.get("remove", {}).items():
-            gone = set(rels)
-            base_tables[t] = [f for f in base_tables.get(t, []) if f not in gone]
-            if t in base_stats:
-                for rel in rels:
-                    base_stats[t].pop(rel, None)
-        for t, rels in delta.get("add", {}).items():
-            base_tables.setdefault(t, []).extend(rels)
-        if with_stats:
-            for t, per_file in delta.get("stats_add", {}).items():
-                base_stats.setdefault(t, {}).update(per_file)
-    return base_tables, base_stats
+    return snap.slice(lo, hi - lo)
 
 
-def _resolve(out_dir: str, version: int) -> dict:
-    """Reconstruct the full snapshot at ``version`` (tables + stats),
-    cached per immutable version."""
-    root = os.path.abspath(out_dir)
-    hit = _SNAP_CACHE.get((root, version))
-    if hit is not None:
-        return {
-            "version": version,
-            "tables": dict(hit["tables"]),
-            "stats": dict(hit["stats"]),
-        }
-    base_tables, base_stats = _walk_snapshot(out_dir, version, with_stats=True)
-    snap = {
-        "tables": {t: sorted(fs) for t, fs in base_tables.items() if fs},
-        "stats": {t: s for t, s in base_stats.items() if s},
-    }
-    _cache_put((root, version), snap)
+def _table_names(snap) -> list[str]:
+    import pyarrow.compute as pc
+
+    return pc.unique(snap["table"]).to_pylist()
+
+
+def _live_files(out_dir: str, version: int, table: str) -> list[str]:
+    """``table``'s live files at ``version``, sorted — the one Python
+    list a reader builds, for the table whose paths Spark needs."""
+    return _table_rows(_snapshot(out_dir, version), table)["file"].to_pylist()
+
+
+def _file_stats(rows) -> dict[str, dict]:
+    """``{file: {col: [min, max]}}`` of one table's snapshot rows (files
+    without stats are absent)."""
     return {
-        "version": version,
-        "tables": dict(snap["tables"]),
-        "stats": dict(snap["stats"]),
+        rel: json.loads(s)
+        for rel, s in zip(rows["file"].to_pylist(), rows["stats"].to_pylist())
+        if s
     }
-
-
-def _snapshot_files(out_dir: str, version: int) -> dict[str, list]:
-    """The snapshot's FILE SETS only — the column-pruned read path for
-    consumers that never touch stats (vacuum's live-set sweep,
-    pin_version's readability probe): the shared walk with
-    ``with_stats=False`` reads checkpoint sidecars without their stats
-    column (the dominant bytes).  Shares the resolved-snapshot cache on
-    hit; on miss it deliberately does NOT populate it (a stats-less
-    entry would poison full resolves)."""
-    root = os.path.abspath(out_dir)
-    hit = _SNAP_CACHE.get((root, version))
-    if hit is not None:
-        return {t: list(fs) for t, fs in hit["tables"].items()}
-    base, _ = _walk_snapshot(out_dir, version, with_stats=False)
-    return {t: sorted(fs) for t, fs in base.items() if fs}
 
 
 def read_manifest(out_dir: str, version: int | None = None) -> dict:
@@ -735,15 +671,60 @@ def read_manifest(out_dir: str, version: int | None = None) -> dict:
     "tables": {name: [relative files]}, "stats": {name: {file: {col:
     [min, max]}}}}`` — or an empty v0 when nothing is published.  Any
     retained version time-travels (data-file survival is bounded by
-    :func:`vacuum`)."""
+    :func:`vacuum`).  The one place the snapshot becomes Python dicts."""
     latest = _latest_version(out_dir)
     if version is None:
         version = latest
-    if version == 0:
-        return {"version": 0, "tables": {}, "stats": {}}
     if version > latest:
         raise ValueError(f"version {version} > latest committed {latest}")
-    return _resolve(out_dir, version)
+    snap = _snapshot(out_dir, version)
+    tables: dict[str, list] = {}
+    stats: dict[str, dict] = {}
+    for t in _table_names(snap):
+        rows = _table_rows(snap, t)
+        tables[t] = rows["file"].to_pylist()
+        per = _file_stats(rows)
+        if per:
+            stats[t] = per
+    return {"version": version, "tables": tables, "stats": stats}
+
+
+def _disk_files(out_dir: str, table: str):
+    """The data files under ``table``'s directory as an Arrow string
+    array of paths relative to it (hidden and ``_``-prefixed names
+    skipped): one walk through the log seam."""
+    import pyarrow as pa
+
+    tdir = os.path.join(out_dir, f"{table}.parquet")
+    rels: list[str] = []
+    if LOG_STORE.isdir(tdir):
+        for root, _dirs, files in LOG_STORE.walk(tdir):
+            sub = os.path.relpath(root, tdir)
+            pre = "" if sub == "." else sub + os.sep
+            rels.extend(
+                pre + f for f in files if not f.startswith(("_", "."))
+            )
+    return pa.array(rels, pa.string())
+
+
+def _missing(snap, on_disk: dict) -> tuple[str, str, int] | None:
+    """The one "snapshot files missing on disk" check, shared by
+    pin_version's re-readability probe and vacuum's hollow-lease
+    detection: ``(table, file, n)`` naming the first file of ``snap``
+    that no ``on_disk[table]`` listing (:func:`_disk_files`) holds and
+    counting the misses across every table; None when all are there."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    first, n = None, 0
+    for t in _table_names(snap):
+        files = _table_rows(snap, t)["file"]
+        disk = on_disk.get(t, pa.array([], pa.string()))
+        gone = files.filter(pc.invert(pc.is_in(files, value_set=disk)))
+        if len(gone):
+            first = first or (t, gone[0].as_py())
+            n += len(gone)
+    return None if first is None else (*first, n)
 
 
 def _fold_checkpoint_pins(
@@ -1016,8 +997,9 @@ def pin_version(out_dir: str, version: int, name: str | None = None) -> dict:
     impossible).  Returns the pin COMMIT RECORD ({version, op, pin} —
     an O(1) delta commit off checkpoint boundaries), not a snapshot;
     callers that want the snapshot read it (``read_manifest`` /
-    ``read_published``).  The re-readability probe checks the
-    snapshot's file set (stats column-pruned) through the log seam.
+    ``read_published``).  The re-readability probe lists each of the
+    snapshot's table directories once through the log seam and checks
+    the stats-less snapshot against the listings (:func:`_missing`).
 
     Concurrency: a vacuum IN FLIGHT while this commits may have read the
     pin set before the pin landed.  The files are re-verified AFTER the
@@ -1036,12 +1018,11 @@ def pin_version(out_dir: str, version: int, name: str | None = None) -> dict:
         )
 
     def _missing_file() -> str | None:
-        for t, fs in _snapshot_files(out_dir, version).items():  # no stats
-            tdir = os.path.join(out_dir, f"{t}.parquet")
-            for rel in fs:
-                if not LOG_STORE.exists(os.path.join(tdir, rel)):
-                    return f"{t}/{rel}"
-        return None
+        snap = _snapshot(out_dir, version, stats=False)
+        miss = _missing(
+            snap, {t: _disk_files(out_dir, t) for t in _table_names(snap)}
+        )
+        return None if miss is None else f"{miss[0]}/{miss[1]}"
 
     gone = _missing_file()
     if gone is not None:
@@ -1185,11 +1166,10 @@ def read_published(
     non-matching rows (callers apply the row filter; this prunes I/O,
     like Delta data skipping, it does not implement the predicate).
 
-    Resolution is PER-TABLE (r10): the checkpoint sidecar is read
-    filtered to ``table`` and column-pruned (stats bytes only when a
-    ``where`` needs them), so reading one table of an N-table store
-    costs O(that table's files), not O(all live files).  Planning the
-    read runs no Spark job: the data schema comes from the files' footers
+    The file list is ``table``'s slice of the one cached snapshot
+    (:func:`_snapshot`); only that table's paths (and, for a ``where``,
+    its stats) become Python objects.  Planning the read runs no Spark
+    job: the data schema comes from the files' footers
     (:func:`_read_files`), the way Delta keeps the schema beside the file
     list so a read never opens data to plan."""
     latest = _latest_version(out_dir)
@@ -1199,14 +1179,14 @@ def read_published(
         raise ValueError(f"version {version} > latest committed {latest}")
     if version == 0:
         return None
-    all_files, per_file = _table_files(
-        out_dir, version, table, with_stats=bool(where)
-    )
+    rows = _table_rows(_snapshot(out_dir, version), table)
+    all_files = rows["file"].to_pylist()
     if not all_files:
         return None
     tdir = os.path.join(out_dir, f"{table}.parquet")
     files = all_files
     if where:
+        per_file = _file_stats(rows)
         files = [f for f in files if _file_may_match(per_file.get(f), where)]
         if not files:
             # every file pruned: empty result with the table's full schema
@@ -1464,10 +1444,17 @@ def _probe_plan(
     cached = None
     existing = read_published(spark, out_dir, table)
     if existing is not None and bucket_col is not None:
-        # a no-op projection is its own cache entry: releasing it never
-        # drops a cache the caller holds on ``df``.  Bounds over the input
-        # cover the deduplicated batch's buckets.
-        df = cached = df.select("*").cache()
+        from pyspark.sql import functions as F
+
+        # a no-op projection behind an always-true filter on a fresh token
+        # is its own cache entry: releasing it never drops a cache the
+        # caller holds on ``df``, nor the copy a concurrent stage made of
+        # an identical plan (equal plans share one cache entry, so the
+        # first release would pull the blocks from under the other's
+        # write).  The optimizer folds the filter away.  Bounds over the
+        # input cover the deduplicated batch's buckets.
+        token = F.lit(uuid.uuid4().hex).isNotNull()
+        df = cached = df.select("*").where(token).cache()
         existing = prune_existing_to_batch(
             existing, bucket_col, batch_buckets(df, bucket_col)
         )
@@ -1545,25 +1532,6 @@ def _stage_table(
     # 0-row files (an unpartitioned write of zero survivors still emits
     # one) stay behind and go with the staging directory
     return _land_staged(staging, tdir, drop_empty=True)
-
-
-def _added_between(out_dir: str, old_v: int, new_v: int) -> dict[str, list]:
-    """Files ADDED by commits ``old_v+1 .. new_v`` — what the racing
-    writer(s) published while our batch was staging.  Every commit
-    states its own delta (checkpoints too), so this is O(delta).
-    Conflict detection itself uses the cheaper
-    :func:`_added_dirs_between` (spilled mega-deltas answer from JSON
-    metadata); this file-level fold remains for introspection and as the
-    reference semantics the dirs fold is tested against."""
-    added: dict[str, list] = {}
-    for v in range(old_v + 1, new_v + 1):
-        c = _hydrate_delta(
-            out_dir, _load_commit(out_dir, v), with_stats=False
-        )
-        for t, rels in c.get("add", {}).items():
-            if rels:
-                added.setdefault(t, []).extend(rels)
-    return added
 
 
 def _added_dirs_between(
@@ -1771,16 +1739,15 @@ def compact_published(
     together (footer schema, :func:`_read_files`), shuffled by the bucket
     column and written ``partitionBy`` it, which lands one file per
     bucket, each sorted on ``sort_within``; a flat table is coalesced to
-    one file.  Resolution and commit are PER-TABLE and delta-form (r11):
-    the input file list comes from the filtered sidecar read (never
-    O(all live files)), and the swap commits exactly {remove: replaced,
-    add: rewritten}."""
+    one file.  The input file list is the table's slice of the cached
+    snapshot, and the swap commits delta-form: exactly {remove:
+    replaced, add: rewritten}."""
     from collections import Counter, defaultdict
 
     latest = _latest_version(out_dir)
     if latest == 0:
         return {}
-    files, _ = _table_files(out_dir, latest, table, with_stats=False)
+    files = _live_files(out_dir, latest, table)
     by_part: dict[str, list[str]] = defaultdict(list)
     for rel in files:
         by_part[os.path.dirname(rel)].append(rel)
@@ -1823,8 +1790,7 @@ def compact_published(
             if rebase:
                 raise
             latest = _latest_version(out_dir)
-            live, _ = _table_files(out_dir, latest, table, with_stats=False)
-            if not gone <= set(live):
+            if not gone <= set(_live_files(out_dir, latest, table)):
                 # a racing commit already dropped some input file — the
                 # rewrite no longer describes the live table; abandon it
                 vacuum(out_dir, keep_versions=keep_versions, min_age_s=VACUUM_GRACE_S)
@@ -1873,8 +1839,7 @@ def rewrite_published_many(
     Same single-writer contract as ``rewrite_published``.
 
     Commits DELTA-form (r11): remove = each rewritten table's old live
-    list (resolved per-table from the filtered sidecar), add = the
-    staged files — never a full-snapshot hydration.  Returns the commit
+    list (its slice of the cached snapshot), add = the staged files.  Returns the commit
     record ``{"version": N, "op": op, "add": {table: n_files}}``."""
     latest = _latest_version(out_dir)
     version = latest + 1
@@ -1900,11 +1865,7 @@ def rewrite_published_many(
 
     for table, df in tables.items():
         moved, new_stats = _stage_rewrite(table, df)
-        old = (
-            _table_files(out_dir, latest, table, with_stats=False)[0]
-            if latest
-            else []
-        )
+        old = _live_files(out_dir, latest, table)
         if old:
             remove[table] = old
         add[table] = moved
@@ -1948,15 +1909,20 @@ def vacuum(
 
     A directory with NO commit log yet is left untouched: an empty live
     set there means "nothing published", not "everything is garbage".
-    Only the log's namespace is swept — top-level ``<table>.parquet``
-    directories, the tables the retained snapshots name, ``_staging``
+    Only the log's namespace is swept — ``<table>.parquet`` directories
+    at any depth outside ``_``/``.``-prefixed directories (table names
+    may be nested), the tables the retained snapshots name, ``_staging``
     and ``_manifest`` — so other directories in the store (a stream's
     ``_checkpoint``) are never touched.
 
-    The sweep runs on the driver: it resolves each retained snapshot's
-    file set (stats column-pruned), walks the table directories once
-    through the log seam, and deletes what no retained snapshot names.
-    The same walk finds hollow leases for free (see below)."""
+    The sweep runs on the driver over Arrow arrays: it resolves each
+    retained snapshot stats-less (:func:`_snapshot`), lists each table
+    directory once through the log seam, and deletes the listed files
+    that no retained or pinned snapshot names (``~is_in(disk, live)``).
+    The same listings find hollow leases (see below)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     latest = _latest_version(out_dir)
     removed: list[str] = []
     if latest == 0:
@@ -2052,77 +2018,88 @@ def vacuum(
     late = set(pinned_versions(out_dir)) - retained
     pins |= late
     retained |= late
-    live: dict[str, set] = {}
-    pin_files: dict[int, dict[str, set]] = {}
-    for v in sorted(retained):
-        snap_fs = {t: set(fs) for t, fs in _snapshot_files(out_dir, v).items()}
-        if v in pins:
-            pin_files[v] = snap_fs
-        for t, fs in snap_fs.items():
-            live.setdefault(t, set()).update(fs)
-    # candidate tables: top-level <table>.parquet dirs PLUS every name the
-    # retained snapshots reference — manifest table names may be nested
-    # ("dedup_index/minhash_bands", the curation sink's unified commit),
-    # which a flat listdir would never visit, leaving compacted-away index
-    # files unreclaimable forever
-    candidates = {
-        entry[: -len(".parquet")]
-        for entry in store.listdir(out_dir)
-        if entry.endswith(".parquet")
-    }
-    candidates |= set(live)
-    seen: dict[str, set] = {}
+    snaps = {v: _snapshot(out_dir, v, stats=False) for v in sorted(retained)}
+    # candidate tables: every <table>.parquet dir, nested ones included —
+    # table names may be nested ("dedup_index/minhash_bands", the curation
+    # sink's unified commit), and a nested table no retained snapshot
+    # names any more (every file removed) must still be swept — PLUS
+    # every name the retained snapshots reference
+    candidates = _table_dirs(out_dir)
+    for snap in snaps.values():
+        candidates.update(_table_names(snap))
+    on_disk: dict = {}
     for table in sorted(candidates):
         entry = f"{table}.parquet"
-        keep = live.get(table, set())
         tdir = os.path.join(out_dir, entry)
         if not store.isdir(tdir):
             continue
-        t_seen = seen.setdefault(table, set())
-        for root, _dirs, files in store.walk(tdir):
-            for fname in files:
-                if fname.startswith(("_", ".")):
-                    continue
-                full = os.path.join(root, fname)
-                rel = os.path.relpath(full, tdir)
-                t_seen.add(rel)
-                if rel not in keep and _old_enough(full):
-                    try:
-                        store.remove(full)
-                    except OSError:
-                        continue  # vanished concurrently
-                    removed.append(os.path.join(entry, rel))
+        disk = on_disk[table] = _disk_files(out_dir, table)
+        live = pa.chunked_array(
+            [c for snap in snaps.values()
+             for c in _table_rows(snap, table)["file"].chunks],
+            pa.string(),
+        )
+        dead = disk.filter(pc.invert(pc.is_in(disk, value_set=live)))
+        for rel in dead.to_pylist():
+            full = os.path.join(tdir, rel)
+            if _old_enough(full):
+                try:
+                    store.remove(full)
+                except OSError:
+                    continue  # vanished concurrently
+                removed.append(os.path.join(entry, rel))
     # HOLLOW-LEASE detection (r9 advice): pin_version's loud-failure
     # guarantee needs the pinning process to survive to its post-commit
     # re-verify — a crash in that window (or a lost unpin race in its
     # cleanup) leaves a lease whose data files are already reclaimed, and
-    # nothing would ever notice.  The sweep above just enumerated every
-    # on-disk file, so the probe is free set algebra: any pinned snapshot
-    # referencing a file the walk never saw is no longer re-readable.
+    # nothing would ever notice.  The sweep above just listed every
+    # on-disk file, so the probe is the shared missing-files check
+    # against those listings: any pinned snapshot referencing a file the
+    # listing lacks is no longer re-readable.
     # Warn rather than auto-release: vacuum is a reader of the pin
     # registry, and silently unpinning would erase the provenance evidence
     # the operator needs to investigate the loss.
     # One warning per lease: it names the first lost file and counts the
     # losses across every table.
-    for v in sorted(pin_files):
-        lost = [
-            (t, sorted(fs - seen.get(t, set())))
-            for t, fs in sorted(pin_files[v].items())
-        ]
-        lost = [(t, gone) for t, gone in lost if gone]
-        if lost:
-            t, gone = lost[0]
-            n_lost = sum(len(g) for _, g in lost)
-            _warn_hollow(out_dir, v, t, gone[0], n_lost - 1)
+    for v in sorted(pins):
+        miss = _missing(snaps[v], on_disk)
+        if miss is not None:
+            _warn_hollow(out_dir, v, *miss)
     return sorted(removed)
 
 
+def _table_dirs(out_dir: str) -> set[str]:
+    """The table name of every ``<name>.parquet`` directory under
+    ``out_dir``, nested names included, found with one ``listdir`` per
+    directory above the tables; ``_``- and ``.``-prefixed directories
+    (the log, staging, a stream's checkpoint) are never entered, and a
+    directory holding its own ``_manifest`` is another store whose
+    tables this log never names."""
+    store = LOG_STORE
+    names: set[str] = set()
+    stack = [""]
+    while stack:
+        rel = stack.pop()
+        entries = store.listdir(os.path.join(out_dir, rel) if rel else out_dir)
+        if rel and _MANIFEST_DIR in entries:
+            continue
+        for entry in entries:
+            sub = os.path.join(rel, entry)
+            if entry.endswith(".parquet"):
+                names.add(sub[: -len(".parquet")])
+            elif not entry.startswith(("_", ".")) and store.isdir(
+                os.path.join(out_dir, sub)
+            ):
+                stack.append(sub)
+    return names
+
+
 def _warn_hollow(
-    out_dir: str, version: int, table: str, rel: str, n_more: int
+    out_dir: str, version: int, table: str, rel: str, n_lost: int
 ) -> None:
     import warnings
 
-    more = f" (and {n_more} more)" if n_more > 0 else ""
+    more = f" (and {n_lost - 1} more)" if n_lost > 1 else ""
     warnings.warn(
         f"vacuum: pinned version {version} in {out_dir!r} is HOLLOW —"
         f" {table}/{rel}{more} no longer exist on disk; the lease"

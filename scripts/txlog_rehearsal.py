@@ -21,14 +21,19 @@ Other modes:
       v1 checkpoint names ``n_files`` live files (default 1M), with real
       orphans planted on disk.  Reports the cold and steady vacuum walls
       with driver RSS growth (both sweeps must reclaim exactly the
-      planted orphans), the ``_snapshot_files`` resolve wall, and the
-      wall and driver RSS growth of the next checkpoint commit (the
-      Arrow fold of the v1 sidecar).  Metadata only, no Spark.
+      planted orphans), the cold resolve wall of the one resolver
+      (``_snapshot``, the Arrow snapshot read from the sidecar), the
+      wall and driver RSS growth of the next checkpoint commit (that
+      snapshot plus the deltas since, written out), and the wall and
+      driver RSS growth of ``pin_version`` on a second store of
+      ``PIN_FILES`` (10^6) live files, every one materialized as an
+      empty file so the re-readability probe passes.  Metadata only,
+      no Spark.
 
   --megarewrite [n_files]   The spilled-delta row: a whole-table rewrite
       committed at ``n_files`` live files, inline vs spilled sidecar
-      form on twin stores — commit JSON bytes, commit/resolve/race-fold
-      walls, identical results required.
+      form on twin stores — commit JSON bytes, commit/resolve/conflict-
+      fold walls, identical results required.
 
   --race [rounds]        Two genuinely interleaved writers (threads,
       shared session) publishing to the same table for ``rounds``
@@ -178,10 +183,41 @@ def _vm_rss_mb() -> float:
     return -1.0
 
 
+#: live files of the --bigsweep pin_version store (all materialized on disk)
+PIN_FILES = 1_000_000
+
+
+def run_pin(base: str, n_files: int) -> dict:
+    """``pin_version`` on a v1 store of ``n_files`` live files, each an
+    empty file on disk: the probe runs before and after the pin commit."""
+    tables = _seed_snapshot(n_files)
+    out = os.path.join(base, "pinstore")
+    _seed(out, tables)
+    for t, rels in tables.items():
+        tdir = os.path.join(out, f"{t}.parquet")
+        for d in {os.path.dirname(r) for r in rels}:
+            os.makedirs(os.path.join(tdir, d), exist_ok=True)
+        for rel in rels:
+            os.close(os.open(os.path.join(tdir, rel), os.O_CREAT | os.O_WRONLY))
+    pub._SNAP_CACHE.clear()
+    rss0 = _vm_rss_mb()
+    t0 = time.perf_counter()
+    rec = pub.pin_version(out, 1, name="bigsweep")
+    wall = time.perf_counter() - t0
+    rss1 = _vm_rss_mb()
+    assert rec["version"] == 2 and pub.pinned_versions(out) == {1: "bigsweep"}
+    return {
+        "live_files": sum(len(v) for v in tables.values()),
+        "wall_s": round(wall, 3),
+        "driver_rss_growth_mb": round(rss1 - rss0, 1),
+    }
+
+
 def run_bigsweep(n_files: int) -> dict:
     """Maintenance at ``n_files`` live files: vacuum (cold, then steady)
-    with planted orphans, the file-set resolve, and the next checkpoint
-    commit — the one driver path, metadata only."""
+    with planted orphans, the cold resolve, the next checkpoint commit,
+    and pin_version at ``PIN_FILES`` — the one driver path, metadata
+    only."""
     tables = _seed_snapshot(n_files)
     n_orphans = 512
     report: dict = {"live_files": sum(len(v) for v in tables.values()),
@@ -236,7 +272,7 @@ def run_bigsweep(n_files: int) -> dict:
         }
         pub._SNAP_CACHE.clear()
         t0 = time.perf_counter()
-        n = sum(len(v) for v in pub._snapshot_files(out, 1).values())
+        n = pub._snapshot(out, 1).num_rows
         report["resolve_s"] = round(time.perf_counter() - t0, 3)
         assert n == report["live_files"]
 
@@ -267,6 +303,9 @@ def run_bigsweep(n_files: int) -> dict:
             "driver_rss_growth_mb": round(rss1 - rss0, 1),
             "n_files": c["n_files"],
         }
+        shutil.rmtree(out, ignore_errors=True)
+        pub._SNAP_CACHE.clear()
+        report["pin_version"] = run_pin(base, PIN_FILES)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return report
@@ -519,7 +558,7 @@ def run_race_maintenance(rounds: int) -> dict:
         # next vacuum MUST warn (and name the loss count)
         v_pin = pub10._latest_version(out)
         pub10.pin_version(out, v_pin, name="doomed")
-        victim = pub10._snapshot_files(out, v_pin)["t"][0]
+        victim = pub10._live_files(out, v_pin, "t")[0]
         os.remove(os.path.join(out, "t.parquet", victim))
         with warnings.catch_warnings(record=True) as w:
             warnings.simplefilter("always")
@@ -550,9 +589,9 @@ def run_megarewrite(n_files: int) -> dict:
     migration) committed against a store with ``n_files`` live files,
     spilled vs the pre-r12 inline form, on twin stores.  Reports commit
     JSON bytes (the number every subsequent resolve re-parses), commit
-    wall, the race-window fold wall (``_added_between`` across the
-    rewrite), and the post-rewrite resolve wall — identical results
-    required both ways.  Metadata-only, like the base rehearsal: the
+    wall, the race-window conflict fold wall (``_added_dirs_between``
+    across the rewrite), and the post-rewrite resolve wall — identical
+    results required both ways.  Metadata-only, like the base rehearsal: the
     cost under test is JSON/parquet bytes + fsync."""
     tables = _seed_snapshot(n_files)
     rw_table = TABLES[0]
@@ -583,7 +622,7 @@ def run_megarewrite(n_files: int) -> dict:
                     {rw_table: [f"pre-{i}.parquet"]}, {}, {}, op="publish",
                 )
             pub._SNAP_CACHE.clear()
-            old_live = pub._table_files(out, 3, rw_table, with_stats=False)[0]
+            old_live = pub._live_files(out, 3, rw_table)
             rss0 = _vm_rss_mb()
             t0 = time.perf_counter()
             pub._commit_delta(
@@ -599,29 +638,23 @@ def run_megarewrite(n_files: int) -> dict:
                 if "delta" in c
                 else 0
             )
-            # the race-window fold across the rewrite: what a concurrent
-            # writer's conflict detection pays
-            t0 = time.perf_counter()
-            added = pub._added_between(out, 2, 4)
-            race_wall = time.perf_counter() - t0
-            assert len(added[rw_table]) == len(new_files) + 1
-            # what a racing writer ACTUALLY pays (r12): conflict
-            # detection folds partition DIRS from JSON metadata — the
-            # spilled form answers without opening the sidecar
+            # what a racing writer pays (r12): conflict detection folds
+            # partition DIRS from JSON metadata — the spilled form
+            # answers without opening the sidecar
             t0 = time.perf_counter()
             rd = pub._added_dirs_between(out, 2, 4)
             conflict_wall = time.perf_counter() - t0
             assert rd[rw_table] and len(rd[rw_table]) <= 65  # 64 buckets + flat pre-file
             pub._SNAP_CACHE.clear()
             t0 = time.perf_counter()
-            snap = pub._snapshot_files(out, 4)
+            snap = pub._snapshot(out, 4, stats=False)
             resolve_wall = time.perf_counter() - t0
-            assert sorted(snap[rw_table]) == sorted(new_files)
+            live = pub._table_rows(snap, rw_table)["file"].to_pylist()
+            assert live == sorted(new_files)
             report[f"{mode}"] = {
                 "commit_json_bytes": json_bytes,
                 "sidecar_bytes": side_bytes,
                 "commit_wall_s": round(commit_wall, 3),
-                "race_fold_wall_s": round(race_wall, 3),
                 "conflict_fold_wall_s": round(conflict_wall, 3),
                 "resolve_wall_s": round(resolve_wall, 3),
                 "driver_rss_growth_mb": round(_vm_rss_mb() - rss0, 1),

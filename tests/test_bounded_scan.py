@@ -10,7 +10,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from chainweb_data_spark.operators.cursor import CursorSpec
-from chainweb_data_spark.plans.bounded_scan import bounded_scan, bounded_scan_all
+from chainweb_data_spark.plans.bounded_scan import bounded_scan
+
+
+def bounded_scan_all(df, predicate, spec, **kw) -> list:
+    """Drain the governor to exhaustion: the total result must equal the
+    un-governed query — the reference's invariant that repeated bounded
+    requests enumerate the full set."""
+    rows: list = []
+    cursor = None
+    while True:
+        res = bounded_scan(df, predicate, spec, cursor=cursor, **kw)
+        rows.extend(res.rows)
+        if res.next_cursor is None:
+            return rows
+        cursor = res.next_cursor
 
 SPEC = CursorSpec(cols=("height", "rk"), descs=(True, False))
 

@@ -6,6 +6,7 @@ union corpus."""
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from chainweb_data_spark.operators import dedup as dd
 from chainweb_data_spark.streaming.dedup_index import (
@@ -143,6 +144,17 @@ def test_corpus_stats_count_each_doc_once_after_compaction(spark, tmp_path):
     assert got == [("en", 6, 9, 36)]
 
 
+def _batch_pairs(df, id_col, text_col, min_jaccard, k=3, num_hashes=16, bands=4):
+    """The batch MinHash LSH reference the incremental index is checked
+    against: shingle → signature → banded candidates, verified with
+    exact Jaccard on the candidates only."""
+    sets_ = dd.shingle_set_arrays(df, id_col, text_col, k).cache()
+    sig = dd.minhash_signatures_sets(sets_, id_col, num_hashes)
+    cand = dd.lsh_candidate_pairs(sig, id_col, num_hashes, bands)
+    jac = dd.jaccard_for_pairs_sets(sets_, cand, id_col)
+    return jac.filter(F.col("jaccard") >= min_jaccard)
+
+
 @pytest.mark.heavy
 def test_matches_batch_operator_on_union(spark, tmp_path):
     """Feeding the corpus in two batches flags exactly the pairs the batch
@@ -160,9 +172,7 @@ def test_matches_batch_operator_on_union(spark, tmp_path):
     inc_flags = _flags(update_dedup_index(spark, _docs(spark, b1), out, batch_id=1))
 
     batch_pairs = (
-        dd.minhash_dedup_pairs(
-            _docs(spark, rows), "doc_id", "text", min_jaccard=0.2
-        )
+        _batch_pairs(_docs(spark, rows), "doc_id", "text", min_jaccard=0.2)
         .select("id_a", "id_b")
         .collect()
     )

@@ -6,9 +6,10 @@ stays O(1) bytes + O(#tables) counts — a format migration at the
 a v<N>.json that every subsequent resolve re-parses.
 
 The load-bearing property: a SPILLED store is value-identical to an
-INLINE twin with the same commit history, on every consumer — driver
-resolve, per-table read, the checkpoint built across the spill,
-history, race-window conflict detection."""
+INLINE twin with the same commit history, on every consumer — the
+checkpoint built across the spill, history, race-window conflict
+detection.  (Resolving spilled deltas against a reference model is
+tests/test_snapshot_model.py.)"""
 
 import json
 import os
@@ -17,6 +18,41 @@ import time
 import pytest
 
 import chainweb_data_spark.streaming.publish as pub
+
+
+def _added_between(out_dir, old_v, new_v):
+    """Files ADDED by commits ``old_v+1 .. new_v``, per table: the
+    file-level reference semantics that the production race fold,
+    ``_added_dirs_between`` (partition directories only, spilled deltas
+    answered from their JSON), is checked against.  Reads each commit
+    JSON and, for a spilled delta, its sidecar's add rows."""
+    added = {}
+    for v in range(old_v + 1, new_v + 1):
+        c = pub._load_commit(out_dir, v)
+        adds = c.get("add", {})
+        if "delta" in c:
+            rows = pub.LOG_STORE.read_parquet(
+                os.path.join(out_dir, pub._MANIFEST_DIR, c["delta"]),
+                columns=["action", "table", "file"],
+            ).to_pylist()
+            adds = {}
+            for r in rows:
+                if r["action"] == "add":
+                    adds.setdefault(r["table"], []).append(r["file"])
+        for t, rels in adds.items():
+            added.setdefault(t, []).extend(rels)
+    return added
+
+
+def _dirs(added):
+    return {t: {os.path.dirname(f) for f in fs} for t, fs in added.items()}
+
+
+def _no_snapshot(monkeypatch):
+    def boom(*a, **k):
+        raise AssertionError("race detection resolved a full snapshot")
+
+    monkeypatch.setattr(pub, "_snapshot", boom)
 
 
 def _grow_twin(out, spill):
@@ -36,7 +72,7 @@ def _grow_twin(out, spill):
             op="publish",
         )
     pub._SNAP_CACHE.clear()
-    livet = pub._snapshot_files(out, pub._latest_version(out))["t"]
+    livet = pub._live_files(out, pub._latest_version(out), "t")
     pub._commit_delta(
         out, pub._latest_version(out) + 1,
         {"t": [f"b=9/r{k}.parquet" for k in range(8)]},
@@ -79,47 +115,21 @@ def test_mega_delta_commit_json_is_o1_bytes(twins):
     assert len(ci["add"]["t"]) == 8 and len(ci["remove"]["t"]) == 7
 
 
-def test_spilled_store_resolves_identically_to_inline_twin(twins):
-    latest = pub._latest_version(twins["spill"])
-    for v in range(1, latest + 1):
-        pub._SNAP_CACHE.clear()
-        a = pub._snapshot_files(twins["inline"], v)
-        b = pub._snapshot_files(twins["spill"], v)
-        assert {t: sorted(f) for t, f in a.items()} == {
-            t: sorted(f) for t, f in b.items()
-        }, v
-    # stats fold through the spill (stats ride the sidecar's add rows)
-    pub._SNAP_CACHE.clear()
-    assert (
-        pub._resolve(twins["inline"], latest)["stats"]
-        == pub._resolve(twins["spill"], latest)["stats"]
-    )
-    # per-table read hydrates only that table (parquet predicate)
-    assert pub._table_files(
-        twins["inline"], latest, "t", with_stats=True
-    ) == pub._table_files(twins["spill"], latest, "t", with_stats=True)
-
-
-def test_spilled_store_history_and_race_detection(twins):
+def test_spilled_store_history_and_race_detection(twins, monkeypatch):
     ha, hb = pub.history(twins["inline"]), pub.history(twins["spill"])
     assert [(e["added"], e["removed"], e["kind"]) for e in ha] == [
         (e["added"], e["removed"], e["kind"]) for e in hb
     ]
-    # race-window adds fold from the sidecar, never a snapshot diff
-    def boom(*a, **k):
-        raise AssertionError("race detection resolved a full snapshot")
-
-    orig = pub._snapshot_files
-    pub._snapshot_files = boom
-    try:
-        a = pub._added_between(twins["inline"], 3, 6)
-        b = pub._added_between(twins["spill"], 3, 6)
-    finally:
-        pub._snapshot_files = orig
+    a = _added_between(twins["inline"], 3, 6)
+    b = _added_between(twins["spill"], 3, 6)
     assert {t: sorted(f) for t, f in a.items()} == {
         t: sorted(f) for t, f in b.items()
     }
     assert set(a["t"]) >= {f"b=9/r{k}.parquet" for k in range(8)}
+    # race-window adds fold from the commits, never a snapshot diff
+    _no_snapshot(monkeypatch)
+    for out in twins.values():
+        assert pub._added_dirs_between(out, 3, 6) == _dirs(a)
 
 
 def test_checkpoint_crosses_spilled_delta(twins):
@@ -150,9 +160,9 @@ def test_checkpoint_crosses_spilled_delta(twins):
     assert rows["inline"] == rows["spill"]
     assert set(rows["spill"]["file"]) >= {f"b=9/r{k}.parquet" for k in range(8)}
     pub._SNAP_CACHE.clear()
-    assert pub._snapshot_files(
-        twins["inline"], pub.CHECKPOINT_EVERY
-    ) == pub._snapshot_files(twins["spill"], pub.CHECKPOINT_EVERY)
+    assert pub._snapshot(twins["inline"], pub.CHECKPOINT_EVERY).equals(
+        pub._snapshot(twins["spill"], pub.CHECKPOINT_EVERY)
+    )
 
 
 def test_mega_delta_on_checkpoint_boundary_spills(tmp_path, monkeypatch):
@@ -172,7 +182,7 @@ def test_mega_delta_on_checkpoint_boundary_spills(tmp_path, monkeypatch):
             out, i + 1, {"u": [f"u{i}.parquet"]}, {}, {}, op="publish"
         )
     pub._SNAP_CACHE.clear()
-    livet = pub._snapshot_files(out, pub._latest_version(out))["t"]
+    livet = pub._live_files(out, pub._latest_version(out), "t")
     pub._commit_delta(
         out, pub.CHECKPOINT_EVERY,
         {"t": [f"b=9/r{k}.parquet" for k in range(8)]},
@@ -182,19 +192,11 @@ def test_mega_delta_on_checkpoint_boundary_spills(tmp_path, monkeypatch):
     assert "ckpt" in c and "delta" in c and "add" not in c
     assert c["n_add_by_table"] == {"t": 8}
     assert c["n_remove_by_table"] == {"t": 6}
-
-    def boom(*a, **k):
-        raise AssertionError("race detection resolved a full snapshot")
-
-    orig = pub._snapshot_files
-    pub._snapshot_files = boom
-    try:
-        added = pub._added_between(
-            out, pub.CHECKPOINT_EVERY - 2, pub.CHECKPOINT_EVERY
-        )
-    finally:
-        pub._snapshot_files = orig
+    window = (pub.CHECKPOINT_EVERY - 2, pub.CHECKPOINT_EVERY)
+    added = _added_between(out, *window)
     assert added["t"] == sorted(f"b=9/r{k}.parquet" for k in range(8))
+    _no_snapshot(monkeypatch)
+    assert pub._added_dirs_between(out, *window) == _dirs(added)
 
 
 def test_vacuum_reclaims_orphan_delta_spills_keeps_referenced(
@@ -225,14 +227,13 @@ def test_vacuum_reclaims_orphan_delta_spills_keeps_referenced(
     assert os.path.exists(ahead), "in-flight delta spill reclaimed"
     # time-travel still replays the spilled rewrite after the vacuum
     pub._SNAP_CACHE.clear()
-    snap = pub._snapshot_files(out, 5)
-    assert snap["t"] == sorted(f"b=9/r{k}.parquet" for k in range(8))
+    assert pub._live_files(out, 5, "t") == sorted(
+        f"b=9/r{k}.parquet" for k in range(8)
+    )
 
 
-def test_hydrate_delta_prunes_stats_for_setonly_consumers(
-    twins, monkeypatch
-):
-    """r12 review: file-set folds (with_stats=False) must never
+def test_stats_less_snapshot_prunes_spill_stats(twins, monkeypatch):
+    """A stats-less resolve (vacuum, the pin probe) must never
     deserialize the spill sidecar's stats column — the dominant
     payload."""
     calls = []
@@ -244,15 +245,14 @@ def test_hydrate_delta_prunes_stats_for_setonly_consumers(
 
     monkeypatch.setattr(pub.LOG_STORE, "read_parquet", spy)
     pub._SNAP_CACHE.clear()
-    pub._snapshot_files(twins["spill"], 6)  # set-only resolve
-    pub._added_between(twins["spill"], 4, 6)
+    pub._snapshot(twins["spill"], 6, stats=False)
     spill_reads = [c for c in calls if c[0].startswith("delta-v")]
     assert spill_reads, "spill sidecar never read"
     assert all("stats" not in cols for _n, cols in spill_reads), spill_reads
     # the stats-bearing resolve still fetches them
     calls.clear()
     pub._SNAP_CACHE.clear()
-    pub._resolve(twins["spill"], 6)
+    pub._snapshot(twins["spill"], 6)
     assert any(
         "stats" in cols
         for n, cols in calls
@@ -338,11 +338,7 @@ def test_conflict_detection_never_opens_spill_sidecar(twins, monkeypatch):
     monkeypatch.setattr(pub.LOG_STORE, "read_parquet", boom)
     dirs = pub._added_dirs_between(twins["spill"], 3, 6)
     monkeypatch.undo()
-    ref = {
-        t: {os.path.dirname(f) for f in fs}
-        for t, fs in pub._added_between(twins["inline"], 3, 6).items()
-    }
-    assert {t: d for t, d in dirs.items()} == ref
+    assert dirs == _dirs(_added_between(twins["inline"], 3, 6))
     # staged work colliding / not colliding with the rewrite's buckets
     hit = pub._conflicting_tables(
         twins["spill"], 3, 6, {"t": (["b=9/mine.parquet"], {})}

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from chainweb_data_spark.sources.layout import (
     HEIGHT_BUCKET_SIZE,
     height_range_pred,
-    read_indexed,
     write_indexed,
 )
 
@@ -78,7 +77,7 @@ def _scan_files_read(df) -> int:
 
 
 def test_height_range_prunes_partitions(spark, indexed_path):
-    df = read_indexed(spark, indexed_path)
+    df = spark.read.parquet(indexed_path)
     n_total_files = len(df.inputFiles())
     page = df.filter(height_range_pred(23_000, 41_000, bucket_size=10_000))
     plan = spark._jvm.PythonSQLUtils.explainString(
@@ -98,7 +97,7 @@ def test_height_range_prunes_partitions(spark, indexed_path):
 def test_files_sorted_in_cursor_order(spark, indexed_path):
     # within any single file, height must be non-increasing (DESC sort) —
     # this is what makes parquet row-group min/max stats tight/disjoint
-    files = read_indexed(spark, indexed_path).inputFiles()
+    files = spark.read.parquet(indexed_path).inputFiles()
     one = [f for f in files if "height_bucket=5" in f][0]
     rows = spark.read.parquet(one).select("height").collect()
     hs = [r.height for r in rows]
@@ -106,7 +105,7 @@ def test_files_sorted_in_cursor_order(spark, indexed_path):
 
 
 def test_open_ended_range(spark, indexed_path):
-    df = read_indexed(spark, indexed_path)
+    df = spark.read.parquet(indexed_path)
     n_total_files = len(df.inputFiles())
     lo_only = df.filter(height_range_pred(95_000, None, bucket_size=10_000))
     assert lo_only.count() == 5_000

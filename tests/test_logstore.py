@@ -17,6 +17,7 @@ from chainweb_data_spark.streaming.logstore import (
     InMemoryLogStore,
     PosixLogStore,
 )
+from tests.test_delta_spill import _added_between
 
 
 @pytest.fixture
@@ -53,7 +54,7 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
     # through read_parquet with the per-table predicate)
     monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 2)
     pub._SNAP_CACHE.clear()
-    live = pub._snapshot_files(out, 4)["t"]
+    live = pub._live_files(out, 4, "t")
     pub._commit_delta(
         out, 5, {"t": [f"b=9/r{k}.parquet" for k in range(4)]},
         {"t": live}, {}, op="rewrite",
@@ -72,21 +73,20 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
     assert "ckpt" in ck and ck["n_files_by_table"]["t"] == 4
     # every metadata consumer agrees with the resolve
     pub._SNAP_CACHE.clear()
-    snap = pub._snapshot_files(out, pub.CHECKPOINT_EVERY)
-    assert sorted(snap["t"]) == sorted(f"b=9/r{k}.parquet" for k in range(4))
+    snap = pub.read_manifest(out, pub.CHECKPOINT_EVERY)["tables"]
+    assert snap["t"] == sorted(f"b=9/r{k}.parquet" for k in range(4))
     assert sum(len(fs) for fs in snap.values()) == ck["n_files"]
-    assert pub._table_files(
-        out, pub.CHECKPOINT_EVERY, "t", with_stats=False
-    )[0] == sorted(snap["t"])
-    assert pub._added_between(out, 4, 5)["t"] == sorted(
+    assert pub._live_files(out, pub.CHECKPOINT_EVERY, "t") == snap["t"]
+    assert _added_between(out, 4, 5)["t"] == sorted(
         f"b=9/r{k}.parquet" for k in range(4)
     )
+    assert pub._added_dirs_between(out, 4, 5) == {"t": {"b=9"}}
     assert len(pub.history(out)) == pub.CHECKPOINT_EVERY
     # pins: materialize the snapshot's data files IN the fake, then
     # lease, vacuum, and release — probe + sweep all through the seam
     latest = pub._latest_version(out)
     pub._SNAP_CACHE.clear()
-    for t, fs in pub._snapshot_files(out, latest).items():
+    for t, fs in pub.read_manifest(out, latest)["tables"].items():
         for rel in fs:
             store.write_atomic(
                 os.path.join(out, f"{t}.parquet", rel), b"d"
@@ -114,7 +114,7 @@ def test_lifecycle_runs_entirely_through_the_seam(memstore, monkeypatch):
     assert any("delta-v2-feedface0000" in r for r in removed)
     # the pinned snapshot survived in full and reads back
     pub._SNAP_CACHE.clear()
-    for t, fs in pub._snapshot_files(out, latest).items():
+    for t, fs in pub.read_manifest(out, latest)["tables"].items():
         for rel in fs:
             assert store.exists(os.path.join(out, f"{t}.parquet", rel))
     pub.unpin_version(out, latest)

@@ -73,7 +73,7 @@ def test_unpin_releases_files_for_reclamation(spark, tmp_path):
     pin_version(out, v_pin)
     _churn(spark, out, rounds=2, start=10)
     pinned_files = set(
-        pub._resolve(out, v_pin)["tables"]["t"]
+        read_manifest(out, v_pin)["tables"]["t"]
     )  # still on disk under the lease
     tdir = os.path.join(out, "t.parquet")
     assert all(os.path.exists(os.path.join(tdir, f)) for f in pinned_files)
@@ -251,7 +251,7 @@ def test_vacuum_detects_hollow_lease(spark, tmp_path):
         vacuum(out, keep_versions=0)
 
     # simulate the crash window: a pinned data file reclaimed out-of-band
-    victim = pub._snapshot_files(out, v_pin)["t"][0]
+    victim = read_manifest(out, v_pin)["tables"]["t"][0]
     os.remove(os.path.join(out, "t.parquet", victim))
     with pytest.warns(RuntimeWarning, match="HOLLOW"):
         vacuum(out, keep_versions=0)

@@ -3,6 +3,8 @@ contracts: WAV encode/decode, y4m encode/decode + seek-sampling, and the
 parquet checkpoint sidecar's (tables, stats) hydration.  All pure driver
 code — no Spark session."""
 
+import json
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -112,35 +114,38 @@ def _snapshot(draw):
 @given(_snapshot())
 def test_checkpoint_sidecar_roundtrip(tmp_path_factory, snap):
     """Whatever (tables, stats) shape staging produces — nested table
-    names, partition-dir paths, heterogeneous / missing stats — the
-    parquet sidecar must hydrate back EXACTLY (empty stats dicts are
-    normalized away, matching the inline form's `if s` filter)."""
-    from chainweb_data_spark.streaming.publish import (
-        _read_checkpoint_sidecar,
-        _write_checkpoint,
-    )
+    names, partition-dir paths, heterogeneous / missing stats — a v1
+    checkpoint's parquet sidecar must resolve back EXACTLY through the
+    one resolver (``_snapshot``, read cold from the sidecar) and
+    ``read_manifest`` (empty stats dicts are normalized away, matching
+    the inline form's `if s` filter)."""
+    import chainweb_data_spark.streaming.publish as pub
 
     tables, stats = snap
     d = str(tmp_path_factory.mktemp("sidecar"))
-    ck = _write_checkpoint(d, 1, tables, {}, stats)
-    name = ck["ckpt"]
+    pub._commit_delta(d, 1, tables, {}, stats, op="seed")
+    ck = pub._load_commit(d, 1)
     assert ck["n_files"] == sum(len(fs) for fs in tables.values())
     assert ck["n_files_by_table"] == {
         t: len(fs) for t, fs in sorted(tables.items())
     }
-    got_tables, got_stats = _read_checkpoint_sidecar(
-        d, {"ckpt": name}, with_stats=True
-    )
-    got_tables = {t: sorted(fs) for t, fs in got_tables.items()}
     want_stats = {
         t: {f: s for f, s in per.items() if s}
         for t, per in stats.items()
         if any(per.values())
     }
-    assert got_tables == tables
-    assert got_stats == want_stats
-    files_only, empty = _read_checkpoint_sidecar(
-        d, {"ckpt": name}, with_stats=False
-    )
-    assert {t: sorted(fs) for t, fs in files_only.items()} == tables
-    assert empty == {}
+    pub._SNAP_CACHE.clear()
+    got = pub._snapshot(d, 1).to_pydict()
+    assert list(zip(got["table"], got["file"])) == [
+        (t, f) for t in sorted(tables) for f in tables[t]
+    ]
+    assert [json.loads(s) if s else None for s in got["stats"]] == [
+        want_stats.get(t, {}).get(f) for t in sorted(tables) for f in tables[t]
+    ]
+    pub._SNAP_CACHE.clear()
+    files_only = pub._snapshot(d, 1, stats=False)
+    assert files_only.column_names == ["table", "file"]
+    assert files_only.to_pydict() == {"table": got["table"], "file": got["file"]}
+    pub._SNAP_CACHE.clear()
+    m = pub.read_manifest(d, 1)
+    assert m["tables"] == tables and m["stats"] == want_stats

@@ -45,9 +45,7 @@ def _layouts(spark):
 def _inferred(spark, out, table):
     """Spark's inferred read of the snapshot's file list."""
     tdir = os.path.join(out, f"{table}.parquet")
-    files = pub._table_files(
-        out, pub._latest_version(out), table, with_stats=False
-    )[0]
+    files = pub._live_files(out, pub._latest_version(out), table)
     return spark.read.option("basePath", tdir).parquet(
         *[os.path.join(tdir, f) for f in files]
     )
@@ -129,6 +127,6 @@ def test_disagreeing_footers_fall_back_to_inference(spark, tmp_path):
     wider = _rows(spark, 50, 100).select("hash", "height", "amount")
     publish_batch(spark, {"t": wider}, out, pks=pks)
     tdir = os.path.join(out, "t.parquet")
-    files = pub._table_files(out, pub._latest_version(out), "t", with_stats=False)[0]
+    files = pub._live_files(out, pub._latest_version(out), "t")
     assert pub._data_schema([os.path.join(tdir, f) for f in files]) is None
     _assert_same(read_published(spark, out, "t"), _inferred(spark, out, "t"))

@@ -630,7 +630,7 @@ def test_scorer_model_caches_release(spark):
         "doc_id long, text string",
     )
     spark.catalog.clearCache()
-    tx.release_scorer_model_caches()  # drain any prior registrations
+    tx.release_scorer_model_caches(spark)  # drain any prior registrations
 
     def catalog_cache_empty():
         # the catalog-level CacheManager is exactly the pool .cache()
@@ -642,10 +642,40 @@ def test_scorer_model_caches_release(spark):
     first = tx.bigram_backoff_scores(docs, "doc_id", "text").collect()
     tx.trigram_kn_scores(docs, "doc_id", "text").collect()
     assert not catalog_cache_empty()  # models really were persisted
-    released = tx.release_scorer_model_caches()
+    released = tx.release_scorer_model_caches(spark)
     assert released >= 1  # the invariant is the empty catalog below
     assert catalog_cache_empty()  # no net storage-pool growth
     # releasing is result-neutral: a re-run recomputes the same scores
     again = tx.bigram_backoff_scores(docs, "doc_id", "text").collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, again))
-    tx.release_scorer_model_caches()
+    tx.release_scorer_model_caches(spark)
+
+
+def test_scorer_model_caches_are_per_session(spark):
+    """Two SparkSessions share one CacheManager: releasing one session's
+    scorer models must leave the other session's model relations
+    cached, and the other session's own release then drops them."""
+    other = spark.newSession()
+    spark.catalog.clearCache()
+    for s in (spark, other):
+        tx.release_scorer_model_caches(s)
+    mine = spark.createDataFrame(
+        [(1, "a b a c a b"), (2, "b c b d")], "doc_id long, text string"
+    )
+    theirs = other.createDataFrame(
+        [(7, "x y x z"), (8, "y z y w x")], "doc_id long, text string"
+    )
+    tx.bigram_backoff_scores(mine, "doc_id", "text").collect()
+    tx.bigram_backoff_scores(theirs, "doc_id", "text").collect()
+    kept = list(tx._SCORER_MODEL_CACHES[other])
+    assert kept
+
+    def cached(df):
+        level = df.storageLevel
+        return level.useMemory or level.useDisk
+
+    assert tx.release_scorer_model_caches(spark) >= 1
+    assert all(cached(df) for df in kept)
+    assert tx.release_scorer_model_caches(other) == len(kept)
+    assert not any(cached(df) for df in kept)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -416,14 +416,3 @@ def test_asof_composite_key(spark):
     }
     # composite keys match on BOTH columns; (2,"x") finds nothing
     assert out == {"a": 10.0, "b": 20.0, "c": None}
-
-
-def test_suggest_bin_width(spark):
-    from chainweb_data_spark.operators.timeseries import suggest_bin_width
-
-    ivals = spark.createDataFrame(
-        [(1, _ts(0), _ts(10)), (2, _ts(0), _ts(20)), (3, _ts(0), _ts(30))],
-        "iid long, istart timestamp, iend timestamp",
-    )
-    w = suggest_bin_width(ivals, "istart", "iend")
-    assert w == 20 * 60 * 1_000_000  # the median span (20 min) in µs

@@ -794,37 +794,22 @@ def test_publish_after_zorder_keeps_every_row(spark, tmp_path):
     assert sorted(r["id"] for r in got.collect()) == list(range(30))
 
 
-def test_table_files_matches_full_resolve(spark, tmp_path):
-    """read_published's per-table filtered resolve (files AND stats) must
-    equal the corresponding slice of the full-manifest resolve."""
-    from pyspark.sql import functions as F
+def test_identical_batches_staged_together_keep_separate_caches(spark, tmp_path):
+    """publish_batch stages its tables in parallel threads, and two
+    tables may receive equal DataFrame plans.  Each stage's cached copy
+    must be its own cache entry: releasing one stage's copy must not
+    drop the blocks another stage's write is still reading."""
+    out = str(tmp_path / "twin")
 
-    def bucketed(lo, hi):
-        return (
-            spark.range(lo, hi)
-            .select(
-                F.col("id"),
-                (F.col("id") * 2).alias("val"),
-                (F.col("id") % 4).alias("height_bucket"),
-            )
-            .coalesce(1)
-        )
+    def batch():
+        return spark.range(0, 10).selectExpr("id", "id % 4 as height_bucket")
 
-    out = str(tmp_path / "tf")
-    for i in range(CHECKPOINT_EVERY + 2):
-        lo = i * 10
-        publish_batch(
-            spark,
-            {"t": bucketed(lo, lo + 10), "u": bucketed(lo, lo + 5)},
-            out,
-            pks={"t": ("id",), "u": ("id",)},
-        )
-    latest = read_manifest(out)["version"]
-    for v in (1, CHECKPOINT_EVERY, latest):
-        for table in ("t", "u", "never_written"):
-            pub._SNAP_CACHE.clear()
-            files, stats = pub._table_files(out, v, table, with_stats=True)
-            pub._SNAP_CACHE.clear()
-            full = pub._resolve(out, v)
-            assert files == full["tables"].get(table, [])
-            assert stats == full["stats"].get(table, {})
+    pks = {"t": ("id",), "u": ("id",)}
+    publish_batch(spark, {"t": batch(), "u": batch()}, out, pks=pks)
+    _b, _c, mine = pub._probe_plan(spark, batch(), out, "t", pks["t"])
+    _b, _c, theirs = pub._probe_plan(spark, batch(), out, "u", pks["u"])
+    assert mine is not None and theirs is not None
+    mine.unpersist()
+    level = theirs.storageLevel
+    assert level.useMemory or level.useDisk
+    theirs.unpersist()

@@ -1,8 +1,9 @@
 """Checkpoint commits and the maintenance path of the transaction log
-(streaming/publish.py): every checkpoint sidecar is one Arrow fold of the
-parent sidecar with the deltas since (`_write_checkpoint`), every writer
-commits delta-form (`_commit_delta`), and vacuum / pin_version /
-unpin_version run on the driver without a Spark job.
+(streaming/publish.py): every checkpoint sidecar is the parent snapshot
+folded with the commit's own delta (`_write_checkpoint` over the one
+resolver, `_snapshot`), every writer commits delta-form
+(`_commit_delta`), and vacuum / pin_version / unpin_version run on the
+driver without a Spark job.
 
 The load-bearing property: a checkpoint's sidecar holds exactly the
 parent snapshot folded with the checkpoint's own delta (same rows, same
@@ -16,6 +17,7 @@ import warnings
 import pytest
 
 import chainweb_data_spark.streaming.publish as pub
+from tests.test_delta_spill import _added_between
 from chainweb_data_spark.streaming.publish import (
     pin_version,
     publish_batch,
@@ -45,7 +47,7 @@ def _meta_commit(out):
     mine = _HELPER_U.setdefault(out, [])
     if v % 5 == 0 and mine:
         victim = mine.pop(0)
-        live_u = pub._table_files(out, v - 1, "u", with_stats=False)[0]
+        live_u = pub._live_files(out, v - 1, "u")
         assert victim in live_u, f"v{v}: {victim} is not live"
         remove = {"u": [victim]}
     pub._commit_delta(out, v, add, remove, stats_add, op="publish")
@@ -73,7 +75,7 @@ def _grow_meta(out, n, seed_files=0):
 def _materialize(out, version):
     """Write a placeholder data file for every file of ``version`` (the
     stores here are metadata-only; pin_version probes the files)."""
-    for t, fs in pub._snapshot_files(out, version).items():
+    for t, fs in read_manifest(out, version)["tables"].items():
         for rel in fs:
             p = os.path.join(out, f"{t}.parquet", rel)
             os.makedirs(os.path.dirname(p), exist_ok=True)
@@ -90,18 +92,18 @@ def test_checkpoint_sidecar_is_parent_resolve_folded_with_its_delta(
     spark, tmp_path, monkeypatch
 ):
     """Each checkpoint sidecar (v1, v16, v32) holds exactly the rows of a
-    cache-cleared ``_resolve(v - 1)`` folded with that commit's delta, in
-    (table, file) order — over removes, stats, a pin and an unpin, a
-    spilled delta inside the v16 window and a spilled delta ON v32.  The
-    builder never resolves Python snapshots, and a job group set around
-    the checkpoint commits, vacuum, pin_version and unpin_version records
-    no Spark job."""
+    cache-cleared ``read_manifest(v - 1)`` folded with that commit's
+    delta, in (table, file) order — over removes, stats, a pin and an
+    unpin, a spilled delta inside the v16 window and a spilled delta ON
+    v32.  The builder never builds the dict snapshot, and a job group
+    set around the checkpoint commits, vacuum, pin_version and
+    unpin_version records no Spark job."""
     import pyarrow.parquet as pq
 
     out = str(tmp_path / "fold")
     own = {}
     real_build = pub._write_checkpoint
-    real_resolve = pub._resolve
+    real_manifest = pub.read_manifest
 
     def spy(out_dir, version, add, remove, stats_add):
         own[version] = (
@@ -112,10 +114,10 @@ def test_checkpoint_sidecar_is_parent_resolve_folded_with_its_delta(
         return real_build(out_dir, version, add, remove, stats_add)
 
     def boom(*a, **k):
-        raise AssertionError("the checkpoint path resolved a snapshot")
+        raise AssertionError("the checkpoint path built the dict snapshot")
 
     def spilled_rewrite(version):
-        live = pub._table_files(out, version - 1, "t", with_stats=False)[0]
+        live = pub._live_files(out, version - 1, "t")
         new = [f"height_bucket=9/rw-{version}-{k}.parquet" for k in range(6)]
         monkeypatch.setattr(pub, "DELTA_SIDECAR_MIN_FILES", 4)
         pub._commit_delta(
@@ -127,7 +129,7 @@ def test_checkpoint_sidecar_is_parent_resolve_folded_with_its_delta(
         assert "delta" in pub._load_commit(out, version)
 
     monkeypatch.setattr(pub, "_write_checkpoint", spy)
-    monkeypatch.setattr(pub, "_resolve", boom)
+    monkeypatch.setattr(pub, "read_manifest", boom)
     pub._SNAP_CACHE.clear()
     sc = spark.sparkContext
     sc.setJobGroup("txlog-one-path", "checkpoints and maintenance")
@@ -153,8 +155,7 @@ def test_checkpoint_sidecar_is_parent_resolve_folded_with_its_delta(
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup("txlog-one-path") == []
-    assert pub._SNAP_CACHE == {}
-    monkeypatch.setattr(pub, "_resolve", real_resolve)
+    monkeypatch.setattr(pub, "read_manifest", real_manifest)
 
     c16 = pub._load_commit(out, pub.CHECKPOINT_EVERY)
     c32 = pub._load_commit(out, 2 * pub.CHECKPOINT_EVERY)
@@ -162,11 +163,7 @@ def test_checkpoint_sidecar_is_parent_resolve_folded_with_its_delta(
     assert "delta" in c32 and c32["pins"] == {}
     for v in (1, pub.CHECKPOINT_EVERY, 2 * pub.CHECKPOINT_EVERY):
         pub._SNAP_CACHE.clear()
-        parent = (
-            real_resolve(out, v - 1)
-            if v > 1
-            else {"tables": {}, "stats": {}}
-        )
+        parent = real_manifest(out, v - 1)
         add, remove, stats_add = own[v]
         rows = {
             (t, f): _stats_json(parent["stats"].get(t, {}).get(f))
@@ -193,10 +190,12 @@ def test_checkpoint_sidecar_is_parent_resolve_folded_with_its_delta(
         assert c["table_names"] == sorted(counts)
 
 
-def test_checkpoints_carry_their_delta_for_race_detection(tmp_path):
+def test_checkpoints_carry_their_delta_for_race_detection(
+    tmp_path, monkeypatch
+):
     """Checkpoint commits record their own add/remove in the O(1) JSON,
-    so _added_between never resolves full snapshots when a checkpoint
-    lands inside a race window."""
+    so race detection (_added_dirs_between) never resolves a snapshot
+    when a checkpoint lands inside a race window."""
     out = str(tmp_path / "rd")
     _grow_meta(out, pub.CHECKPOINT_EVERY)
     c = pub._load_commit(out, pub.CHECKPOINT_EVERY)
@@ -208,17 +207,15 @@ def test_checkpoints_carry_their_delta_for_race_detection(tmp_path):
             "checkpoint carrying its delta"
         )
 
-    orig = pub._snapshot_files
-    pub._snapshot_files = boom
-    try:
-        added = pub._added_between(
-            out, pub.CHECKPOINT_EVERY - 2, pub.CHECKPOINT_EVERY + 1
-        )
-    finally:
-        pub._snapshot_files = orig
-    # the window spans two deltas + the checkpoint: adds fold from the
-    # commit JSONs alone
-    assert any(fs for fs in added.values())
+    window = (pub.CHECKPOINT_EVERY - 2, pub.CHECKPOINT_EVERY)
+    monkeypatch.setattr(pub, "_snapshot", boom)
+    dirs = pub._added_dirs_between(out, *window)
+    monkeypatch.undo()
+    # the window spans a delta + the checkpoint: adds fold from the
+    # commit JSONs alone, and agree with the file-level reference
+    ref = _added_between(out, *window)
+    assert ref["t"] and ref["u"]
+    assert dirs == {t: {os.path.dirname(f) for f in fs} for t, fs in ref.items()}
 
 
 def test_maintenance_ops_commit_delta_form(spark, tmp_path):
@@ -297,7 +294,7 @@ def test_hollow_warning_reports_full_count_across_tables(spark, tmp_path):
         )
     v_pin = read_manifest(out)["version"]
     pin_version(out, v_pin, name="prov")
-    snap = pub._snapshot_files(out, v_pin)
+    snap = read_manifest(out, v_pin)["tables"]
     for t, n in (("t", 3), ("u", 2)):
         for rel in snap[t][:n]:
             os.remove(os.path.join(out, f"{t}.parquet", rel))
@@ -333,7 +330,7 @@ def test_read_published_schema_probe_error_names_the_snapshot(
     )
     # a where that prunes EVERY file forces the schema probe; deleting
     # the probe file first simulates a vacuum racing the read
-    files = pub._snapshot_files(out, read_manifest(out)["version"])["t"]
+    files = read_manifest(out)["tables"]["t"]
     for rel in files:
         os.remove(os.path.join(out, "t.parquet", rel))
     with pytest.raises(RuntimeError, match="schema probe"):
