@@ -146,24 +146,24 @@ def bm25_update_index(
             F.lit(source_version).cast("long").alias("source_version"),
         )
     )
-    # file shape is pinned AT THE STAGING WRITE (publish layouts=), not by
-    # pre-shaping here: the publish path's PK dropDuplicates/anti-join
-    # shuffle would destroy any upstream repartition/sort.  One file per
-    # touched bucket per batch (repartition key_bucket — without it every
-    # shuffle task writes into every bucket dir and the probe pays the
-    # parquet-open term ~32×), rows term-sorted so parquet row-group
-    # min/max prunes a probe's terms WITHIN the bucket file: probe bytes
-    # track O(postings(query)) instead of O(bucket) — the r8 rehearsal's
-    # residual probe growth (doc_id secondary keeps files deterministic
-    # for the bitwise stream-vs-oneshot tests).
+    # file order is pinned AT THE STAGING WRITE (publish sort_within=), not
+    # by pre-shaping here: the publish path's PK dropDuplicates/anti-join
+    # shuffle would destroy any upstream repartition/sort.  A sorted table
+    # is staged one file per touched bucket per batch (repartitioned on
+    # key_bucket — without it every shuffle task writes into every bucket
+    # dir and the probe pays the parquet-open term ~32×), rows term-sorted
+    # so parquet row-group min/max prunes a probe's terms WITHIN the bucket
+    # file: probe bytes track O(postings(query)) instead of O(bucket) — the
+    # r8 rehearsal's residual probe growth (doc_id secondary keeps files
+    # deterministic for the bitwise stream-vs-oneshot tests).
     snap = publish_batch(
         spark,
         {"bm25_postings": postings, "bm25_df": df_rows, "bm25_meta": meta},
         out_dir,
         pks=BM25_PKS,
-        layouts={
-            "bm25_postings": (("key_bucket",), POSTINGS_SORT),
-            "bm25_df": (("key_bucket",), ("term", "batch_id")),
+        sort_within={
+            "bm25_postings": POSTINGS_SORT,
+            "bm25_df": ("term", "batch_id"),
         },
     )
     if compact_every and batch_id > 0 and batch_id % compact_every == 0:
@@ -217,7 +217,8 @@ def bm25_index_sink(
     batch.  ``compact_every`` defaults ON (every 16th batch) because a
     long-lived stream is exactly the accretion case the bound exists for;
     pass None to disable.  Returns the StreamingQuery (caller awaits /
-    stops)."""
+    stops).  The streaming entry point of README row "Persisted BM25
+    index"; no library code calls it."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         bm25_update_index(

@@ -496,27 +496,6 @@ def lsh_candidate_pairs(
     )
 
 
-def _jaccard_for_pairs(shingled: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """Exact Jaccard for an explicit candidate-pair list.
-
-    Shape: fold each doc's (already-distinct) shingle rows into ONE array
-    row, equi-join the pair list against it twice, and take
-    ``size(array_intersect(a, b))`` inside codegen.  Versus the previous
-    expand-and-count plan (pairs × shingles row explosion through a
-    groupBy), this ships the same bytes (each doc's shingles once per pair
-    it appears in) but as Tungsten-packed arrays with no 10⁶-row hash
-    aggregate.  Work remains O(candidate pairs × doc size); the LSH caps
-    bound how often one hot doc's array is replicated.
-
-    Callers that still hold the source documents should prefer
-    :func:`jaccard_for_pairs_sets` with :func:`shingle_set_arrays` — same
-    join shape without this fold-back groupBy."""
-    sets_ = shingled.groupBy(id_col).agg(
-        F.collect_list("shingle").alias("_sh")
-    )
-    return jaccard_for_pairs_sets(sets_, pairs, id_col)
-
-
 def jaccard_for_pairs_sets(
     sets_: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:

@@ -71,6 +71,9 @@ def register_codec(
 
 
 def unregister_codec(media_type: str, magic: bytes) -> None:
+    """Drop the decoder :func:`register_codec` routed for (``media_type``,
+    ``magic``); a pair with none is a no-op.  The registry's other half,
+    so no library code calls it."""
     _CODECS.pop((media_type, magic), None)
 
 

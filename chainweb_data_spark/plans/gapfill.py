@@ -63,7 +63,9 @@ def fill_gaps(
     """Detect, fetch, and ingest every interior gap in the store as ONE
     ``publish_batch`` commit.  Returns the fetch report (failed ranges
     stay missing and will be found again by the next run — the
-    reference's behavior on fetch errors, Gaps.hs:112-127)."""
+    reference's behavior on fetch errors, Gaps.hs:112-127).  The
+    operator entry point of README's gap-fill example; no library code
+    calls it."""
     plan = find_gap_plan(spark, store_dir, chunk)
     report = run_fetch_plan(transport, plan, policy)
     if report.rows:

@@ -1,14 +1,16 @@
 """Layout maintenance for log-published tables (streaming/publish.py):
 Z-order rewrites and metadata-only TTL expiry.  Both resolve their input
 from the transaction log and swap the result in as ONE commit, so a
-reader sees the old layout or the new one, never a mix.  Compaction of
-a log-published table is ``publish.compact_published``.
+reader sees the old layout or the new one, never a mix.  Z-order stages
+and commits through the same two helpers as compaction
+(``publish._stage``, ``publish._swap``); expiry stages nothing and
+recomputes its drop set on a race.  Compaction of a log-published table
+is ``publish.compact_published``.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -68,7 +70,6 @@ def rewrite_zordered(
     cols: list[str],
     target_files: int = 16,
     bits: int = 16,
-    keep_versions: int | None = None,
 ) -> dict:
     """OPTIMIZE ZORDER for a log-published table: read the live snapshot,
     range-partition + sort by the Z-key of ``cols``, and swap the layout in
@@ -82,38 +83,31 @@ def rewrite_zordered(
     behind the ingest watermark.
 
     A table with a bucket column (height_bucket/key_bucket) keeps its
-    bucket directories, like every other writer, so later publishes and
-    merge probes keep directory pruning (a flat file beside bucket
-    directories would drop rows from snapshot reads).  Each range task
-    then writes one z-sorted file per bucket it spans: ``target_files``
-    bounds the range tasks, not the files.
+    bucket directories, like every other writer (:func:`publish._stage`),
+    so later publishes and merge probes keep directory pruning (a flat
+    file beside bucket directories would drop rows from snapshot reads).
+    Each range task then writes one z-sorted file per bucket it spans:
+    ``target_files`` bounds the range tasks, not the files.
 
     All-NULL Z columns are DROPPED from the key (a NULL-bounded dimension
     cannot rank-scale and would poison the whole key; the dropped names
     come back under ``"skipped_cols"``); if every requested column is
-    all-NULL the rewrite is skipped.  ``keep_versions`` is the post-commit
-    vacuum retention horizon (default :data:`publish.MAINT_KEEP_VERSIONS`
-    — never 0, which would break pinned readers and time travel).  On a
-    version race with a concurrent writer the swap REBASES when the fresh
-    snapshot still lists exactly the input files for this table (only
-    other tables changed), else ABANDONS — the rewrite no longer describes
-    the live table (a racing publish added or dropped files); the staged
-    z-files are uncommitted orphans and the vacuum reclaims them.  Same
-    rebase-or-abandon stance as :func:`publish.compact_published`."""
+    all-NULL the rewrite is skipped.  The swap is compaction's
+    (:func:`publish._swap`): on a version race it REBASES when every
+    input file is still live (a racer's appends survive beside the new
+    layout) and ABANDONS, returning {}, when a racer removed one; the
+    auto-vacuum keeps :data:`publish.MAINT_KEEP_VERSIONS` snapshots."""
     from pyspark.sql import functions as F
 
     from ..streaming import publish as pub
 
-    if keep_versions is None:
-        keep_versions = pub.MAINT_KEEP_VERSIONS
     latest = pub._latest_version(out_dir)
     if latest == 0:
         return {}
     files = pub._live_files(out_dir, latest, table)
     if not files:
         return {}
-    tdir = os.path.join(out_dir, f"{table}.parquet")
-    df = pub._read_files(spark, tdir, files)
+    df = pub._read_files(spark, os.path.join(out_dir, f"{table}.parquet"), files)
     bounds = df.agg(
         *[F.min(c).alias(f"_lo_{c}") for c in cols],
         *[F.max(c).alias(f"_hi_{c}") for c in cols],
@@ -126,56 +120,20 @@ def rewrite_zordered(
     if not ranges:
         return {"files": 0, "ranges": {}, "skipped_cols": skipped}
     z = zorder_expr(ranges, bits)
-
-    staging = os.path.join(out_dir, "_staging", f"zorder-{table}-{uuid.uuid4().hex}")
-    bucket_col = next(
-        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
+    staged = pub._stage(
+        df.repartitionByRange(target_files, z), out_dir, table, "zorder", sort=(z,)
     )
-    part = [bucket_col] if bucket_col is not None else []
-    # the sort key leads with the partition column, or the planned write's
-    # own Sort(partition) replaces it (see publish._stage_table)
-    writer = (
-        df.withColumn("_z", z)
-        .repartitionByRange(target_files, "_z")
-        .sortWithinPartitions(*part, "_z")
-        .drop("_z")
-        .write.mode("overwrite")
-    )
-    if part:
-        writer = writer.partitionBy(*part)
-    writer.parquet(staging)
-    moved, stats = pub._land_staged(staging, tdir)
+    if not pub._swap(out_dir, table, latest, files, staged, "zorder"):
+        return {}
+    out = {"files": len(staged[0]), "ranges": ranges}
+    if skipped:
+        out["skipped_cols"] = skipped
+    return out
 
-    input_files = set(files)
-    for rebase in (False, True):
-        try:
-            # delta-form swap (r11): exactly {remove: the old layout,
-            # add: the z-files} — no full-snapshot hydration
-            pub._commit_delta(
-                out_dir,
-                latest + 1,
-                add={table: moved},
-                remove={table: sorted(input_files)},
-                stats_add={table: stats},
-                op="zorder",
-            )
-            pub.vacuum(out_dir, keep_versions=keep_versions, min_age_s=pub.VACUUM_GRACE_S)
-            out = {"files": len(moved), "ranges": ranges}
-            if skipped:
-                out["skipped_cols"] = skipped
-            return out
-        except pub.ConcurrentWriteError:
-            if rebase:
-                raise
-            latest = pub._latest_version(out_dir)
-            fresh = pub._live_files(out_dir, latest, table)
-            if set(fresh) != input_files:
-                # the racing commit changed THIS table — the z-layout's
-                # file list would drop (or resurrect) rows; abandon and
-                # reclaim the staged files
-                pub.vacuum(out_dir, keep_versions=keep_versions, min_age_s=pub.VACUUM_GRACE_S)
-                return {}
-    raise AssertionError("unreachable")
+
+#: how many times :func:`expire_files` recomputes its drop set after
+#: losing a version race before it gives up.
+_EXPIRE_RETRIES = 3
 
 
 def expire_files(
@@ -184,8 +142,6 @@ def expire_files(
     table: str,
     col: str,
     cutoff,
-    keep_versions: int | None = None,
-    max_retries: int = 3,
 ) -> dict:
     """Metadata-only retention (TTL): drop every live file whose footer
     ``max(col)`` is strictly below ``cutoff`` — one transaction-log commit,
@@ -197,17 +153,15 @@ def expire_files(
     Files with no recorded stats for ``col`` are never dropped.  Returns
     {"removed": n, "kept": n}.
 
-    ``keep_versions`` is the post-commit vacuum retention horizon (default
-    :data:`publish.MAINT_KEEP_VERSIONS` — expired files' BYTES survive
-    that many snapshots for pinned readers and time travel; the live
-    snapshot stops listing them immediately).  On a version race with a
-    concurrent writer the whole decision is REBASED — re-read the fresh
-    snapshot, recompute the drop set, retry (cheap: no data was staged)."""
+    The post-commit vacuum keeps :data:`publish.MAINT_KEEP_VERSIONS`
+    snapshots: expired files' BYTES survive that long for pinned readers
+    and time travel; the live snapshot stops listing them immediately.
+    On a version race with a concurrent writer the whole decision is
+    REBASED — re-read the fresh snapshot, recompute the drop set, retry
+    (cheap: no data was staged), at most :data:`_EXPIRE_RETRIES` times."""
     from ..streaming import publish as pub
 
-    if keep_versions is None:
-        keep_versions = pub.MAINT_KEEP_VERSIONS
-    for attempt in range(max_retries + 1):
+    for attempt in range(_EXPIRE_RETRIES + 1):
         latest = pub._latest_version(out_dir)
         if latest == 0:
             return {"removed": 0, "kept": 0}
@@ -242,9 +196,11 @@ def expire_files(
                 op="expire",
             )
         except pub.ConcurrentWriteError:
-            if attempt == max_retries:
+            if attempt == _EXPIRE_RETRIES:
                 raise
             continue
-        pub.vacuum(out_dir, keep_versions=keep_versions, min_age_s=pub.VACUUM_GRACE_S)
+        pub.vacuum(
+            out_dir, keep_versions=pub.MAINT_KEEP_VERSIONS, min_age_s=pub.VACUUM_GRACE_S
+        )
         return {"removed": len(drop), "kept": len(files) - len(drop)}
     raise AssertionError("unreachable")

@@ -104,7 +104,9 @@ def check_curation_store(
     """The same refuse-to-run guard over the curation sink's store: the
     five out_dir tables plus the dedup index's three (schemas/curation.py)
     — run it before resuming ``curation_sink`` against an existing
-    directory, exactly as ``check_store`` runs before the listen path."""
+    directory, exactly as ``check_store`` runs before the listen path.
+    An operator's check, named in README row "Streaming curation sink";
+    no library code calls it."""
     from ..schemas.curation import CURATION_SCHEMAS, DEDUP_INDEX_SCHEMAS
 
     reports = {}

@@ -104,7 +104,8 @@ def richlist_from_sqlite(
     latest balance per (chain, account), sum across chains, top N.
     ``out_csv`` additionally writes the result as a single CSV file — the
     reference's richlist.csv sink (S9, RichList.hs:95-103).  top-N is tiny,
-    so the write is a driver-side pandas dump, not a distributed write."""
+    so the write is a driver-side pandas dump, not a distributed write.
+    The entry point of README row S9; no library code calls it."""
     rows = read_sqlite_table(
         spark, db_paths, "coin_coin-table", ["rowkey", "txid", "rowdata"]
     )

@@ -64,7 +64,10 @@ def update_corpus_stats(
     lang_col: str = "lang",
     text_col: str = "text",
 ) -> None:
-    """Commit one batch's per-language stats into the delta table."""
+    """Commit one batch's per-language stats into the delta table — the
+    standalone writer of README row "Incremental corpus stats" (the
+    curation sink stages :func:`stats_delta` in its own commit instead),
+    so no library code calls it."""
     publish_batch(
         spark,
         {STATS_TABLE: stats_delta(docs, batch_id, lang_col, text_col)},

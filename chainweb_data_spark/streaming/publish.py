@@ -64,6 +64,10 @@ Scale properties:
   files it changed, no parent hydration or set-diff between
   checkpoints; the checkpoint every ``CHECKPOINT_EVERY``-th commit
   amortizes the O(live files) snapshot.
+- **One staging path.**  Every writer that adds data files (publish,
+  compact, z-order, rewrite) stages them through :func:`_stage`: the
+  bucket-partitioned write, the optional sort led by the bucket column,
+  the ``_staging`` directory and the move into the table directory.
 - **No directory listings, no schema inference.**  Readers get explicit
   file lists from the snapshot (``basePath`` preserves bucket-partition
   columns), so the object-store LIST that dominates partitioned-table
@@ -96,6 +100,11 @@ staging is vacuumed as an orphan), disjoint tables rebase verbatim.
 Partition values are deterministic functions of row content
 (height/key buckets), so directory disjointness implies PK disjointness;
 unpartitioned tables conservatively re-stage on any same-table race.
+The maintenance rewrites stage nothing a racer could duplicate, so their
+stance is simpler: compaction and z-order commit through one swap
+(:func:`_swap`) that rebases once if every file it removes is still live
+and abandons otherwise (Delta's OPTIMIZE rule); expiry recomputes its
+drop set; a whole-table rewrite (:func:`rewrite_published_many`) raises.
 
 The STORAGE SEAM (Delta's LogStore move): every durability- or
 atomicity-bearing call on the LOG surface — the put-if-absent commit
@@ -106,8 +115,8 @@ default), so an object-store backend (conditional PUT) slots in without
 touching protocol code; URL-scheme ``out_dir``s are refused by the POSIX
 backend.  DATA files stay on the data plane: Spark writes staged parquet
 and ``read_published`` scans by path; every staging move
-(:func:`_land_staged`) is a same-filesystem rename of Spark-written
-files.
+(:func:`_land_staged`, called only by :func:`_stage`) is a
+same-filesystem rename of Spark-written files.
 
 With Delta/Iceberg available this module disappears into their
 transaction log — same protocol (stage files, commit one metadata delta,
@@ -153,10 +162,11 @@ CHECKPOINT_EVERY = 16
 _MAX_STATS_COLUMNS = 24
 
 #: how many snapshots BEFORE the newest the maintenance ops
-#: (compact_published, rewrite_zordered, expire_files) retain when they
-#: auto-vacuum after their commit.  0 would delete the previous snapshot's
-#: replaced files the instant the swap commits — destroying time travel
-#: and breaking any reader still scanning a DataFrame pinned to it
+#: (compact_published, rewrite_zordered, rewrite_published_many,
+#: expire_files) retain when they auto-vacuum after their commit, read at
+#: call time.  0 would delete the previous snapshot's replaced files the
+#: instant the swap commits — destroying time travel and breaking any
+#: reader still scanning a DataFrame pinned to it
 #: (read_published hands out explicit file lists, so the scan runs
 #: arbitrarily later).  Delta solves this with a time-based retention
 #: horizon (default 7 days); version-count retention is the analog a
@@ -1373,6 +1383,45 @@ def _land_staged(
     return sorted(moved), stats
 
 
+def _bucket_col(df: DataFrame) -> str | None:
+    """The table's bucket partition column: ``height_bucket`` or
+    ``key_bucket``, whichever ``df`` carries, None for a flat table."""
+    return next(
+        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
+    )
+
+
+def _stage(
+    df: DataFrame,
+    out_dir: str,
+    table: str,
+    kind: str,
+    sort: tuple = (),
+    drop_empty: bool = False,
+) -> tuple[list[str], dict[str, dict]]:
+    """Write ``df`` into ``table``'s directory and return the new files'
+    relative paths and footer stats — on disk, in no commit.  The one
+    place data files are staged and moved (publish, compaction, Z-order,
+    rewrite).  The caller shapes the partitions; the write is laid out
+    ``partitionBy`` the bucket column, and ``sort`` sorts each partition
+    on (bucket, ``*sort``).  The sort must lead with the partition
+    column: the V1 planned-write rule inserts its own Sort(partition),
+    and EliminateSorts drops whichever sort is subsumed — a bare
+    ``sortWithinPartitions(sort)`` would be the one silently dropped.
+    Spark writes into ``_staging/<kind>-<table>-<uuid>`` (a nested
+    table's ``os.sep`` flattened, so landing leaves no parent directory
+    behind), then :func:`_land_staged` moves the files."""
+    bucket = _bucket_col(df)
+    part = [bucket] if bucket is not None else []
+    if sort:
+        df = df.sortWithinPartitions(*part, *sort)
+    name = f"{kind}-{table.replace(os.sep, '_')}-{uuid.uuid4().hex}"
+    staging = os.path.join(out_dir, "_staging", name)
+    df.write.mode("overwrite").partitionBy(*part).parquet(staging)
+    tdir = os.path.join(out_dir, f"{table}.parquet")
+    return _land_staged(staging, tdir, drop_empty=drop_empty)
+
+
 def batch_buckets(
     batch: DataFrame, bucket_col: str | None
 ) -> tuple | list | None:
@@ -1438,9 +1487,7 @@ def _probe_plan(
     carry nullable components (a continuation row's code), and plain
     equality (NULL != NULL) would re-append every NULL-keyed row on each
     crash replay — the duplication the probe exists to prevent."""
-    bucket_col = next(
-        (c for c in ("height_bucket", "key_bucket") if c in df.columns), None
-    )
+    bucket_col = _bucket_col(df)
     cached = None
     existing = read_published(spark, out_dir, table)
     if existing is not None and bucket_col is not None:
@@ -1475,12 +1522,12 @@ def _stage_table(
     out_dir: str,
     table: str,
     pk: tuple[str, ...],
-    layout: tuple[tuple[str, ...], tuple[str, ...]] | None = None,
+    sort: tuple[str, ...] = (),
 ) -> tuple[list[str], dict[str, dict]]:
     """Anti-join ``df`` against the PUBLISHED rows (:func:`_probe_plan`),
-    write the survivors partition-laid-out into the table directory, and
-    return the new files' relative paths and footer stats — on disk but
-    in no commit until the caller commits.
+    stage the survivors (:func:`_stage`), and return the new files'
+    relative paths and footer stats — on disk but in no commit until the
+    caller commits.
 
     Actions per table: the write alone when the table has no published
     rows or no bucket column; else the probe-bounds action, which fills a
@@ -1494,44 +1541,20 @@ def _stage_table(
     footers are opened for stats anyway), which are dropped — no 0-row
     file lands and, with no table staged, publish_batch burns no version.
 
-    ``layout`` = (cluster_cols, sort_cols): applied AFTER the PK
+    ``sort`` pins the file order: applied AFTER the PK
     dropDuplicates/anti-join (which shuffle, so any shaping the CALLER did
     upstream is destroyed by the time rows reach the writer — r9 find: the
     BM25 postings' term order only survived by accident of the dedup
-    aggregate's internal ordering).  ``repartition(cluster) →
-    sortWithinPartitions(sort)`` here is the only placement that actually
-    reaches the files."""
+    aggregate's internal ordering).  A sorted table is repartitioned on
+    its bucket column first, one file per touched bucket."""
     batch, bucket_col, cached = _probe_plan(spark, df, out_dir, table, pk)
-
-    if layout is not None:
-        cluster, sort = layout
-        if cluster:
-            batch = batch.repartition(*cluster)
-        if sort:
-            # the sort KEY must lead with the cluster/partition columns:
-            # the V1 planned-write rule inserts its own Sort(partitionCols)
-            # above the query, and EliminateSorts drops whichever sort is
-            # subsumed — a bare sortWithinPartitions(sort) is the one
-            # eliminated (silently, leaving files in writer-sort order).
-            # With the partition cols prefixed, OUR ordering satisfies the
-            # writer's requirement and the planner's sort is the one
-            # removed, so the caller's file order actually lands on disk.
-            lead = [c for c in cluster if c not in sort]
-            batch = batch.sortWithinPartitions(*lead, *sort)
-    staging = os.path.join(out_dir, "_staging", f"{table}-{uuid.uuid4().hex}")
-    tdir = os.path.join(out_dir, f"{table}.parquet")
-    writer = batch.write.mode("overwrite")
-    if bucket_col is not None:
-        writer = writer.partitionBy(bucket_col)
+    if sort and bucket_col is not None:
+        batch = batch.repartition(bucket_col)
     try:
-        writer.parquet(staging)
+        return _stage(batch, out_dir, table, "publish", sort=sort, drop_empty=True)
     finally:
         if cached is not None:
             cached.unpersist()
-
-    # 0-row files (an unpartitioned write of zero survivors still emits
-    # one) stay behind and go with the staging directory
-    return _land_staged(staging, tdir, drop_empty=True)
 
 
 def _added_dirs_between(
@@ -1603,7 +1626,7 @@ def publish_batch(
     out_dir: str,
     pks: dict[str, tuple[str, ...]] | None = None,
     max_retries: int = 3,
-    layouts: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] | None = None,
+    sort_within: dict[str, tuple[str, ...]] | None = None,
 ) -> dict:
     """Stage every table's merge, then commit ONE log entry covering all of
     them — the Worker.hs:50-82 transaction boundary.  On a version race
@@ -1616,9 +1639,9 @@ def publish_batch(
     fast path — the reference's disjoint-chain-range workers never
     re-stage).  Detection is sound because every partition value here is
     a deterministic function of the row's content (height/key buckets);
-    flat tables are always conservatively re-staged.  ``layouts``
-    optionally pins a table's physical file shape as ``{table:
-    (cluster_cols, sort_cols)}`` — see ``_stage_table``.
+    flat tables are always conservatively re-staged.  ``sort_within``
+    optionally pins a table's file order as ``{table: sort_cols}`` — see
+    ``_stage_table``.
 
     Returns the COMMIT RECORD ``{"version": N, "op": "publish"|"noop",
     "add": {table: n_files}}`` — version metadata only (r10): the hot
@@ -1627,6 +1650,7 @@ def publish_batch(
     returning one would cost more than the commit; callers that want the
     snapshot read it (``read_manifest`` / ``read_published``)."""
     pks = pks or TABLE_PKS
+    sort_within = sort_within or {}
     # commit the empty v1 before staging — see ensure_manifest for why
     # this must precede the first staged file (one-time path; the hot
     # loop skips the full-snapshot resolve)
@@ -1654,7 +1678,7 @@ def publish_batch(
                     out_dir,
                     name,
                     pks[name],
-                    (layouts or {}).get(name),
+                    sort_within.get(name, ()),
                 ),
             )
             for name, df in tables.items()
@@ -1701,7 +1725,7 @@ def publish_batch(
                     out_dir,
                     name,
                     pks[name],
-                    (layouts or {}).get(name),
+                    sort_within.get(name, ()),
                 )
                 if nf:
                     staged[name] = (nf, ns)
@@ -1712,36 +1736,73 @@ def publish_batch(
     raise AssertionError("unreachable")
 
 
+def _swap(
+    out_dir: str,
+    table: str,
+    version: int,
+    inputs: list[str],
+    staged: tuple[list[str], dict[str, dict]],
+    op: str,
+) -> bool:
+    """Commit a rewrite of ``table`` read at ``version`` as ONE delta
+    {remove: ``inputs``, add: the ``staged`` files} — compaction's and
+    Z-order's swap, with Delta's OPTIMIZE conflict rule: on a version
+    race it rebases once if every input is still live (the delta removes
+    only the inputs, so a racer's appends survive), else abandons,
+    leaving the staged files as orphans.  Either way it then
+    auto-vacuums (:data:`MAINT_KEEP_VERSIONS`, :data:`VACUUM_GRACE_S`).
+    Returns whether the swap committed."""
+    added, stats = staged
+    committed = False
+    for rebase in (False, True):
+        try:
+            _commit_delta(
+                out_dir,
+                version + 1,
+                add={table: added},
+                remove={table: inputs},
+                stats_add={table: stats},
+                op=op,
+            )
+            committed = True
+            break
+        except ConcurrentWriteError:
+            if rebase:
+                raise
+            version = _latest_version(out_dir)
+            if not set(inputs) <= set(_live_files(out_dir, version, table)):
+                break
+    vacuum(out_dir, keep_versions=MAINT_KEEP_VERSIONS, min_age_s=VACUUM_GRACE_S)
+    return committed
+
+
 def compact_published(
     spark: SparkSession,
     out_dir: str,
     table: str,
     min_files: int = 2,
-    keep_versions: int = MAINT_KEEP_VERSIONS,
     sort_within: tuple[str, ...] | None = None,
 ) -> dict[str, tuple[int, int]]:
     """Log-aware compaction: rewrite every partition holding more than
     ``min_files`` LIVE files (the snapshot's list, not the directory's)
-    into one file, then commit the swap as ONE log entry — a reader sees
-    the old snapshot or the compacted one, never a mix; rows are
-    preserved exactly.  The replaced files fall out of the snapshot and
-    are reclaimed by :func:`vacuum` (called here with ``keep_versions`` —
-    the retention horizon that keeps recent snapshots' files readable for
-    pinned readers and time travel).  This is the append-only sink's
+    into one file, then swap it in as ONE log entry (:func:`_swap`) — a
+    reader sees the old snapshot or the compacted one, never a mix; rows
+    are preserved exactly.  The replaced files fall out of the snapshot
+    and are reclaimed by the swap's vacuum once they are
+    :data:`MAINT_KEEP_VERSIONS` snapshots old (pinned readers and time
+    travel keep the recent ones).  This is the append-only sink's
     autovacuum: cumulative file growth is O(batches) and probe cost is
     O(live files) at the parquet-open layer — periodic compaction is the
-    long-run bound.  On a version race the swap is rebased if every
-    replaced file is still live in the fresh snapshot, else abandoned
-    (compaction is an optimization; the orphaned rewrite is vacuumed).
-    Returns {partition: (files_before, files_after)}.
+    long-run bound.  A version race rebases or abandons as :func:`_swap`
+    says (compaction is an optimization; an abandoned rewrite is
+    vacuumed).  Returns {partition: (files_before, files_after)}, {} when
+    nothing was compacted.
 
     The whole table is ONE rewrite: all compactable buckets are read
     together (footer schema, :func:`_read_files`), shuffled by the bucket
-    column and written ``partitionBy`` it, which lands one file per
-    bucket, each sorted on ``sort_within``; a flat table is coalesced to
-    one file.  The input file list is the table's slice of the cached
-    snapshot, and the swap commits delta-form: exactly {remove:
-    replaced, add: rewritten}."""
+    column and staged (:func:`_stage`), which lands one file per bucket,
+    each sorted on ``sort_within``; a flat table is coalesced to one
+    file."""
     from collections import Counter, defaultdict
 
     latest = _latest_version(out_dir)
@@ -1757,125 +1818,66 @@ def compact_published(
     if not todo:
         return {}
     replaced = sorted(r for rels in todo.values() for r in rels)
-    tdir = os.path.join(out_dir, f"{table}.parquet")
-    df = _read_files(spark, tdir, replaced)
-    bucket = [c for c in ("height_bucket", "key_bucket") if c in df.columns][:1]
+    df = _read_files(spark, os.path.join(out_dir, f"{table}.parquet"), replaced)
+    bucket = _bucket_col(df)
     # tables whose probes rely on row-group min/max pruning (e.g. the BM25
-    # postings' term order) must keep that order through compaction; the
-    # sort key leads with the partition column (see _stage_table)
-    out_df = df.repartition(*bucket) if bucket else df.coalesce(1)
-    if bucket or sort_within:
-        out_df = out_df.sortWithinPartitions(*bucket, *(sort_within or ()))
-    staging = os.path.join(
-        out_dir, "_staging", f"compact-{table}-{uuid.uuid4().hex}"
-    )
-    out_df.write.mode("overwrite").partitionBy(*bucket).parquet(staging)
-    added, added_stats = _land_staged(staging, tdir)
-    landed = Counter(os.path.dirname(rel) for rel in added)
-    done = {p or ".": (len(todo[p]), landed[p]) for p in sorted(todo)}
-    gone = set(replaced)
-    for rebase in (False, True):
-        try:
-            _commit_delta(
-                out_dir,
-                latest + 1,
-                add={table: added},
-                remove={table: replaced},
-                stats_add={table: added_stats},
-                op="compact",
-            )
-            vacuum(out_dir, keep_versions=keep_versions, min_age_s=VACUUM_GRACE_S)
-            return done
-        except ConcurrentWriteError:
-            if rebase:
-                raise
-            latest = _latest_version(out_dir)
-            if not gone <= set(_live_files(out_dir, latest, table)):
-                # a racing commit already dropped some input file — the
-                # rewrite no longer describes the live table; abandon it
-                vacuum(out_dir, keep_versions=keep_versions, min_age_s=VACUUM_GRACE_S)
-                return {}
-    raise AssertionError("unreachable")
-
-
-def rewrite_published(
-    spark: SparkSession,
-    out_dir: str,
-    table: str,
-    df: DataFrame,
-    keep_versions: int = MAINT_KEEP_VERSIONS,
-) -> dict:
-    """Replace ``table``'s ENTIRE live file list with a rewrite of ``df``
-    in ONE commit — the format-migration primitive.  ``compact_published``
-    deliberately keeps partition directory names, so it cannot express a
-    key_bucket FORMAT change (new partition values need new directories);
-    this op stages the rewrite partition-laid-out, then commits a manifest
-    whose file list for ``table`` is exactly the staged files.  A reader
-    sees the pre-migration snapshot or the migrated one, never a mix; the
-    replaced files stay readable for pinned readers / time travel until
-    the ``keep_versions`` vacuum horizon passes.  Migrations are
-    administrative single-writer operations: a version race raises
-    ``ConcurrentWriteError`` rather than rebasing (a rebase could silently
-    drop rows a racing publish added to the old format)."""
-    return rewrite_published_many(
-        spark, out_dir, {table: df}, keep_versions=keep_versions
-    )
+    # postings' term order) keep that order through compaction
+    df = df.repartition(bucket) if bucket is not None else df.coalesce(1)
+    staged = _stage(df, out_dir, table, "compact", sort=sort_within or ())
+    if not _swap(out_dir, table, latest, replaced, staged, "compact"):
+        return {}
+    landed = Counter(os.path.dirname(rel) for rel in staged[0])
+    return {p or ".": (len(todo[p]), landed[p]) for p in sorted(todo)}
 
 
 def rewrite_published_many(
     spark: SparkSession,
     out_dir: str,
     tables: dict[str, DataFrame],
-    keep_versions: int = MAINT_KEEP_VERSIONS,
     op: str = "rewrite",
     extra_appends: dict[str, DataFrame] | None = None,
 ) -> dict:
-    """:func:`rewrite_published` over SEVERAL tables in ONE commit — the
+    """Replace each table's ENTIRE live file list with a rewrite of its
+    DataFrame, all in ONE commit — the format-migration primitive and the
     multi-table swap an index REBUILD needs (members re-encoded under a
     new quantizer + its stats/meta tables must flip together, or a reader
-    could pair new codes with old metadata).  ``extra_appends`` stages
-    additional tables whose staged files are APPENDED to (not replacing)
-    their live lists in the same commit — the rebuild's meta-epoch row.
-    Same single-writer contract as ``rewrite_published``.
+    could pair new codes with old metadata).  ``compact_published``
+    deliberately keeps partition directory names, so it cannot express a
+    key_bucket FORMAT change (new partition values need new directories);
+    this op stages the rewrite partition-laid-out (:func:`_stage`).
+    ``extra_appends`` stages additional tables whose staged files are
+    APPENDED to (not replacing) their live lists in the same commit — the
+    rebuild's meta-epoch row.
+
+    A reader sees the old snapshot or the rewritten one, never a mix; the
+    replaced files stay readable for pinned readers / time travel until
+    they are :data:`MAINT_KEEP_VERSIONS` snapshots old.  Rewrites are
+    administrative single-writer operations: a version race raises
+    ``ConcurrentWriteError`` rather than rebasing — the rewrite replaces
+    the whole table, so a rebase would keep a racer's old-format rows.
 
     Commits DELTA-form (r11): remove = each rewritten table's old live
-    list (its slice of the cached snapshot), add = the staged files.  Returns the commit
-    record ``{"version": N, "op": op, "add": {table: n_files}}``."""
+    list (its slice of the cached snapshot), add = the staged files.
+    Returns the commit record ``{"version": N, "op": op, "add": {table:
+    n_files}}``."""
     latest = _latest_version(out_dir)
     version = latest + 1
     add: dict[str, list[str]] = {}
     remove: dict[str, list[str]] = {}
     stats_add: dict[str, dict] = {}
-
-    def _stage_rewrite(table: str, df: DataFrame) -> tuple[list[str], dict]:
-        tdir = os.path.join(out_dir, f"{table}.parquet")
-        bucket_col = next(
-            (c for c in ("height_bucket", "key_bucket") if c in df.columns),
-            None,
-        )
-        staging = os.path.join(
-            out_dir, "_staging", f"rewrite-{table.replace(os.sep, '_')}-"
-            f"{uuid.uuid4().hex}"
-        )
-        writer = df.write.mode("overwrite")
-        if bucket_col is not None:
-            writer = writer.partitionBy(bucket_col)
-        writer.parquet(staging)
-        return _land_staged(staging, tdir)
-
     for table, df in tables.items():
-        moved, new_stats = _stage_rewrite(table, df)
+        moved, new_stats = _stage(df, out_dir, table, op)
         old = _live_files(out_dir, latest, table)
         if old:
             remove[table] = old
         add[table] = moved
         stats_add[table] = new_stats
     for table, df in (extra_appends or {}).items():
-        moved, new_stats = _stage_rewrite(table, df)
+        moved, new_stats = _stage(df, out_dir, table, op)
         add[table] = sorted(add.get(table, []) + moved)
         stats_add.setdefault(table, {}).update(new_stats)
     _commit_delta(out_dir, version, add, remove, stats_add, op=op)
-    vacuum(out_dir, keep_versions=keep_versions, min_age_s=VACUUM_GRACE_S)
+    vacuum(out_dir, keep_versions=MAINT_KEEP_VERSIONS, min_age_s=VACUUM_GRACE_S)
     return {
         "version": version,
         "op": op,

@@ -112,3 +112,20 @@ def test_compaction_rewrites_a_table_in_one_job(spark, tmp_path_factory, jobs_of
         )["height"].to_pylist()
         assert heights == sorted(heights), part
     assert sorted(read_published(spark, out, "t").collect()) == rows_before
+
+
+def test_nested_table_staging_leaves_no_debris(spark, tmp_path):
+    """A nested table name (``dedup_index/…``, the curation sink's
+    tables) is staged under one flat ``_staging`` entry, so landing its
+    files leaves nothing behind: after a publish and a compaction of a
+    nested table, ``_staging`` holds no entry."""
+    out = str(tmp_path / "nested")
+    name = "idx/t"
+    for i in (0, 1):  # two files in each of six height buckets
+        publish_batch(spark, {name: _mk(spark, 0, 600).filter(F.col("height") % 2 == i)},
+                      out, pks={name: ("hash",)})
+    staging = os.path.join(out, "_staging")
+    assert os.listdir(staging) == []
+    assert compact_published(spark, out, name, min_files=1)
+    assert os.listdir(staging) == []
+    assert read_published(spark, out, name).count() == 600

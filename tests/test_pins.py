@@ -40,11 +40,13 @@ def _churn(spark, out, rounds, start):
     """Publish + compact + aggressive vacuum ``rounds`` times — each
     cycle rewrites the live file set, so any unpinned old snapshot's
     files fall outside retention immediately."""
-    for i in range(rounds):
-        lo = start + i * 10
-        publish_batch(spark, {"t": _batch(spark, lo, lo + 10)}, out, pks=PK)
-        compact_published(spark, out, "t", keep_versions=0)
-        vacuum(out, keep_versions=0)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pub, "MAINT_KEEP_VERSIONS", 0)
+        for i in range(rounds):
+            lo = start + i * 10
+            publish_batch(spark, {"t": _batch(spark, lo, lo + 10)}, out, pks=PK)
+            compact_published(spark, out, "t")
+            vacuum(out, keep_versions=0)
 
 
 def test_pin_survives_compaction_and_vacuum_cycles(spark, tmp_path):
@@ -208,7 +210,8 @@ def test_pin_lost_race_with_vacuum_fails_loudly(spark, tmp_path, monkeypatch):
     publish_batch(spark, {"t": _batch(spark, 0, 10)}, out, pks=PK)
     v_old = read_manifest(out)["version"]
     publish_batch(spark, {"t": _batch(spark, 10, 20)}, out, pks=PK)
-    compact_published(spark, out, "t", keep_versions=0)
+    monkeypatch.setattr(pub, "MAINT_KEEP_VERSIONS", 0)
+    compact_published(spark, out, "t")
     old_files = read_manifest(out, v_old)["tables"]["t"]
 
     orig = pub._write_manifest

@@ -19,7 +19,6 @@ from chainweb_data_spark.streaming.publish import (
     publish_batch,
     read_manifest,
     read_published,
-    rewrite_published,
     rewrite_published_many,
     unpin_version,
     vacuum,
@@ -48,7 +47,6 @@ def test_every_writer_stamps_format_1(spark, tmp_path, monkeypatch):
     publish_batch(spark, {"t": _batch(spark, 0, 20)}, out, pks=PK)
     publish_batch(spark, {"t": _batch(spark, 20, 40)}, out, pks=PK)
     compact_published(spark, out, "t", min_files=1)
-    rewrite_published(spark, out, "t", _batch(spark, 0, 40))
     rewrite_published_many(
         spark, out, {"t": _batch(spark, 0, 40)},
         extra_appends={"u": _batch(spark, 0, 3)},

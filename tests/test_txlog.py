@@ -506,49 +506,57 @@ def test_zorder_all_null_column_is_skipped(spark, tmp_path):
 
 
 def test_maintenance_ops_survive_version_races(spark, tmp_path, monkeypatch):
-    """A concurrent publish between a maintenance op's snapshot read and
+    """A concurrent commit between a maintenance op's snapshot read and
     its commit must not crash the job: expire_files REBASES (recomputes on
-    the fresh snapshot), rewrite_zordered ABANDONS when the race touched
-    its table (the rewrite no longer describes the live file set) and its
-    staged files are vacuumed as orphans."""
+    the fresh snapshot); compaction and rewrite_zordered share one swap,
+    which REBASES when every input file is still live (a racer's append
+    survives beside the new layout) and ABANDONS when a racer removed an
+    input (a racing compaction) — its staged files are vacuumed as
+    orphans."""
     from chainweb_data_spark.sources.maintenance import (
         expire_files,
         rewrite_zordered,
     )
+    from chainweb_data_spark.streaming.publish import compact_published
 
     out = str(tmp_path / "mrace")
     for lo in (0, 100, 200):
         publish_batch(spark, {"t": _batch(spark, lo, lo + 100)}, out, pks=PK)
 
     real_write = pub._write_manifest
-    state = {"pending": None}
+    state = {"racer": None}
 
     def race_once(out_dir, manifest):
-        lohi = state["pending"]
-        if lohi is not None:
-            state["pending"] = None
-            # interloper publishes NEW rows to the same table first
-            publish_batch(spark, {"t": _batch(spark, *lohi)}, out, pks=PK)
+        racer = state["racer"]
+        if racer is not None:
+            state["racer"] = None
+            racer()  # the interloper commits first
         return real_write(out_dir, manifest)
 
+    def append(lo, hi):
+        return lambda: publish_batch(
+            spark, {"t": _batch(spark, lo, hi)}, out, pks=PK
+        )
+
+    def ids():
+        return sorted(r["id"] for r in read_published(spark, out, "t").collect())
+
     monkeypatch.setattr(pub, "_write_manifest", race_once)
-    state["pending"] = (300, 400)
+    state["racer"] = append(300, 400)
     res = expire_files(spark, out, "t", "id", 150)
     # rebased: the drop decision re-ran on the fresh snapshot
     assert res == {"removed": 1, "kept": 3}
     assert read_published(spark, out, "t").count() == 300  # 100..399
 
-    state["pending"] = (400, 500)
+    state["racer"] = append(400, 500)
     res_z = rewrite_zordered(spark, out, "t", ["id"], target_files=2)
-    monkeypatch.setattr(pub, "_write_manifest", real_write)
-    # the race added a file to this table → abandoned, table intact
-    # (rows 100..499 after the expire + both interlopers)
-    assert res_z == {}
-    assert read_published(spark, out, "t").count() == 400
-    # the abandoned rewrite's staged files are referenced by NO snapshot;
-    # the auto-vacuum's concurrency grace spares them while young, and an
-    # explicit quiesced vacuum (grace 0) reclaims them completely
-    m = read_manifest(out)
+    # the racer only added a file: every input is still live, so the
+    # swap rebased — the z-files are live beside the racer's file and
+    # rows 100..499 (the expire + both interlopers) are intact
+    assert res_z["files"] >= 1
+    assert pub._load_commit(out, pub._latest_version(out))["op"] == "zorder"
+    assert ids() == list(range(100, 500))
+
     tdir = os.path.join(out, "t.parquet")
 
     def _on_disk():
@@ -559,15 +567,30 @@ def test_maintenance_ops_survive_version_races(spark, tmp_path, monkeypatch):
             if not f.startswith(("_", "."))
         }
 
-    all_versions_live = set()
-    for v in range(1, m["version"] + 1):
-        all_versions_live |= set(
-            read_manifest(out, version=v)["tables"].get("t", [])
+    # a racing compaction removes every input file: both callers of the
+    # swap abandon, and their staged files are orphans
+    for n, op in enumerate((
+        lambda: compact_published(spark, out, "t", min_files=1),
+        lambda: rewrite_zordered(spark, out, "t", ["id"], target_files=2),
+    )):
+        publish_batch(
+            spark, {"t": _batch(spark, 500 + n * 10, 510 + n * 10)}, out, pks=PK
         )
-    orphans = _on_disk() - all_versions_live
-    assert orphans, "expected the abandoned z-files to linger under grace"
-    vacuum(out)  # quiesced cleanup: grace 0, live snapshot only
-    assert _on_disk() == set(m["tables"]["t"])
+        before = ids()
+        state["racer"] = lambda: compact_published(spark, out, "t", min_files=1)
+        assert op() == {}
+        assert pub._load_commit(out, pub._latest_version(out))["op"] == "compact"
+        assert ids() == before
+        # the abandoned rewrite's staged files are referenced by NO
+        # snapshot; the auto-vacuum's concurrency grace spares them while
+        # young, and an explicit quiesced vacuum (grace 0) reclaims them
+        m = read_manifest(out)
+        referenced = set()
+        for v in range(1, m["version"] + 1):
+            referenced |= set(read_manifest(out, version=v)["tables"].get("t", []))
+        assert _on_disk() - referenced, "expected the staged files to linger"
+        vacuum(out)  # quiesced cleanup: grace 0, live snapshot only
+        assert _on_disk() == set(m["tables"]["t"])
 
 
 def test_race_with_pk_overlap_restages_and_dedups(spark, tmp_path):

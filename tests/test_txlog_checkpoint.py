@@ -218,7 +218,7 @@ def test_checkpoints_carry_their_delta_for_race_detection(
     assert dirs == {t: {os.path.dirname(f) for f in fs} for t, fs in ref.items()}
 
 
-def test_maintenance_ops_commit_delta_form(spark, tmp_path):
+def test_maintenance_ops_commit_delta_form(spark, tmp_path, monkeypatch):
     """compact / z-order / expire must write delta commits (add/remove,
     no full snapshot) off checkpoint boundaries — the form that keeps
     every maintenance commit O(changed files)."""
@@ -227,6 +227,7 @@ def test_maintenance_ops_commit_delta_form(spark, tmp_path):
         rewrite_zordered,
     )
 
+    monkeypatch.setattr(pub, "MAINT_KEEP_VERSIONS", 99)
     out = str(tmp_path / "mf")
     for i in range(3):
         publish_batch(
@@ -236,19 +237,18 @@ def test_maintenance_ops_commit_delta_form(spark, tmp_path):
             out,
             pks=PK,
         )
-    pub.compact_published(spark, out, "t", keep_versions=99)
+    pub.compact_published(spark, out, "t")
     v = pub._latest_version(out)
     c = pub._load_commit(out, v)
     assert c["op"] == "compact" and "tables" not in c and "ckpt" not in c
     assert c["add"] and c["remove"]
 
-    rewrite_zordered(spark, out, "t", ["id"], target_files=2,
-                     keep_versions=99)
+    rewrite_zordered(spark, out, "t", ["id"], target_files=2)
     c = pub._load_commit(out, pub._latest_version(out))
     assert c["op"] == "zorder" and "tables" not in c
     assert c["add"]["t"] and c["remove"]["t"]
 
-    res = expire_files(spark, out, "t", "id", 10**9, keep_versions=99)
+    res = expire_files(spark, out, "t", "id", 10**9)
     assert res["removed"] > 0
     c = pub._load_commit(out, pub._latest_version(out))
     assert c["op"] == "expire" and "tables" not in c
