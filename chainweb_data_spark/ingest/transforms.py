@@ -68,8 +68,8 @@ def _with_parsed(raw: DataFrame) -> DataFrame:
 
 
 def decode_le_b64_to_decimal_strings(df: DataFrame, cols: list[str]) -> DataFrame:
-    """256-bit little-endian base64url → decimal string (+ Decimal(38,0)
-    ordering companion scaled down by 10^42).
+    """256-bit little-endian base64url → decimal string: adds ``<c>_raw``
+    for each column ``c`` in ``cols``.
 
     The one Python step in ingest (pandas UDF, Arrow-batched): Spark has no
     256-bit integer.  Mirrors the reference's ``leToInteger`` decode whose
@@ -91,11 +91,17 @@ def decode_le_b64_to_decimal_strings(df: DataFrame, cols: list[str]) -> DataFram
 
     for c in cols:
         df = df.withColumn(f"{c}_raw", _dec(F.col(c)))
-        df = df.withColumn(
-            c,
-            (F.col(f"{c}_raw").cast("decimal(38,0)")).alias(c),
-        )
     return df
+
+
+def _top_digits(raw: str) -> Column:
+    """Ordering companion of a 256-bit decimal string: its value floor-
+    divided by 10^42 (the leading digits), which fits Decimal(38,0)."""
+    return F.expr(
+        f"CAST(CASE WHEN length({raw}) > 42 "
+        f"THEN substring({raw}, 1, length({raw})-42) "
+        "ELSE '0' END AS DECIMAL(38,0))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -134,18 +140,9 @@ def blocks_from_raw(raw: DataFrame) -> DataFrame:
         "epoch",
         "nonce",
         "flags",
-        # ordering companion: top digits (monotone floor-div by 10^42)
-        F.expr(
-            "CAST(CASE WHEN length(target_b64_raw) > 42 "
-            "THEN substring(target_b64_raw, 1, length(target_b64_raw)-42) "
-            "ELSE '0' END AS DECIMAL(38,0))"
-        ).alias("target"),
+        _top_digits("target_b64_raw").alias("target"),
         F.col("target_b64_raw").alias("target_raw"),
-        F.expr(
-            "CAST(CASE WHEN length(weight_b64_raw) > 42 "
-            "THEN substring(weight_b64_raw, 1, length(weight_b64_raw)-42) "
-            "ELSE '0' END AS DECIMAL(38,0))"
-        ).alias("weight"),
+        _top_digits("weight_b64_raw").alias("weight"),
         F.col("weight_b64_raw").alias("weight_raw"),
         "miner",
         "predicate",

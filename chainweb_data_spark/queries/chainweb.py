@@ -20,10 +20,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..fixtures.generate import fixture_dir, write_chainweb_fixture
 from ..operators.cursor import CursorSpec, keyset_page
+from ..operators.gaps import detect_gaps
+from ..schemas.chainweb import CONTINUATION_MAX_DEPTH
 from .registry import register
 
 FIX = fixture_dir()  # /root/repo/.fixtures/chainweb
@@ -142,76 +143,60 @@ def cw_search_txs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def continuation_histories(tx: DataFrame, max_depth: int = 16) -> DataFrame:
+def continuation_histories(tx: DataFrame) -> DataFrame:
     """(start_rk, initial_code, n_steps, steps_csv): the defpact history
-    behind each continuation tx.
+    behind each continuation tx of ``tx``, walked by Spark's native
+    recursive CTE — the reference's own construct (Queries.hs:112-137).
 
-    The reference walks per-request with a recursive CTE
-    (Queries.hs:112-137).  Spark has no recursive CTE → iterative frontier
-    self-join to fixpoint (chains are short: cross-chain = 2 steps, defpacts
-    ≤ ~10; SURVEY §2.3 J4 option a).  Orphan-twin dedup: the walk table is
-    DISTINCT (requestkey, pactid, code), so branch duplicates collapse
-    before the join — the analog of the CTE's DISTINCT ON (depth)
-    (Queries.hs:126-130).
+    Spark's recursive CTE supports only UNION ALL (UNION_NOT_SUPPORTED_IN_
+    RECURSIVE_CTE), so dedup happens in one DISTINCT after the recursion —
+    equivalent to the oracle's UNION set semantics because every walk row
+    carries its depth (a duplicate can only coincide with its orphan twin
+    at the same depth, the analog of the CTE's DISTINCT ON (depth),
+    Queries.hs:126-130).  The recursive step stops at
+    ``CONTINUATION_MAX_DEPTH``, the bound the silver ingest walk shares, so
+    a pactid cycle in a corrupt feed ends there instead of at Spark's
+    recursion-level limit.
 
-    Scale: each iteration is one broadcast-able equi-join of the (small)
-    frontier against the dedup'd tx projection; at 100 TB precompute this
-    incrementally at ingest (new step's history = parent's + parent,
-    SURVEY §2.3 J4 option b) and this function becomes the backfill job.
+    ``dtx`` is CACHED before the recursion instead of being a CTE: Spark's
+    UnionLoop re-plans the recursive step per iteration, and as a plain
+    CTE the DISTINCT-aggregate over the transactions scan re-ran in EVERY
+    iteration.  Cached, the per-iteration plan is a scan of the in-memory
+    relation, whose size statistics also let the per-step join broadcast.
+    The inputs reach the SQL as temp views: passed as ``spark.sql``
+    DataFrame arguments the same walk runs two more jobs.
+
+    Scale: a walk over every start is bounded by Spark's recursive-CTE row
+    limit (``spark.sql.cteRecursionRowLimit``, 1,000,000 rows by default),
+    which fails the query loudly rather than truncating it.  The ingest
+    path keeps its own per-batch walk (streaming/silver.py), which probes
+    only the batch's parents.
     """
-    dtx = (
-        tx.select(
-            F.col("requestkey").alias("d_rk"),
-            F.col("pactid").alias("d_pactid"),
-            F.col("code").alias("d_code"),
-        )
-        .distinct()
-        .cache()
-    )
-    starts = (
-        dtx.filter(F.col("d_pactid").isNotNull())
-        .select(F.col("d_rk").alias("start_rk"), F.col("d_pactid").alias("_next"))
-        .distinct()
-    )
-    frontier = starts
-    acc: DataFrame | None = None
-    for depth in range(max_depth):
-        step = (
-            frontier.join(dtx, F.col("_next") == F.col("d_rk"), "inner")
-            .select(
-                "start_rk",
-                F.lit(depth).alias("depth"),
-                F.col("d_rk").alias("rk"),
-                F.col("d_pactid").alias("parent_pactid"),
-                F.col("d_code").alias("code"),
-            )
-            .distinct()  # recursive-UNION row dedup: orphan-twin fan-in collapses
-        )
-        step = step.localCheckpoint(eager=True)  # cut the growing lineage
-        if step.isEmpty():
-            break
-        acc = step if acc is None else acc.unionAll(step)
-        frontier = (
-            step.filter(F.col("parent_pactid").isNotNull())
-            .select("start_rk", F.col("parent_pactid").alias("_next"))
-            .distinct()
-        )
-    if acc is None:
-        return tx.sparkSession.createDataFrame(
-            [], "start_rk string, initial_code string, n_steps long, steps_csv string"
-        )
-    return acc.groupBy("start_rk").agg(
-        F.max(F.when(F.col("code").isNotNull(), F.col("code"))).alias("initial_code"),
-        F.count("*").alias("n_steps"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("depth"), F.col("rk")))
-                ),
-                lambda s: s["rk"],
-            ),
-            ",",
-        ).alias("steps_csv"),
+    dtx = tx.select("requestkey", "pactid", "code").distinct().cache()
+    dtx.createOrReplaceTempView("_cw_dtx")
+    tx.createOrReplaceTempView("_cw_tx")
+    return tx.sparkSession.sql(
+        f"""
+        WITH RECURSIVE
+        starts AS (SELECT DISTINCT requestkey AS start_rk, pactid
+                   FROM _cw_tx WHERE pactid IS NOT NULL),
+        walk AS (
+          SELECT s.start_rk, 0 AS depth, d.requestkey AS rk, d.pactid, d.code
+          FROM starts s JOIN _cw_dtx d ON d.requestkey = s.pactid
+          UNION ALL
+          SELECT w.start_rk, w.depth + 1, d.requestkey, d.pactid, d.code
+          FROM walk w JOIN _cw_dtx d ON d.requestkey = w.pactid
+          WHERE w.depth + 1 < {CONTINUATION_MAX_DEPTH}
+        ),
+        dwalk AS (SELECT DISTINCT start_rk, depth, rk, code FROM walk)
+        SELECT start_rk,
+               max(CASE WHEN code IS NOT NULL THEN code END) AS initial_code,
+               COUNT(*) AS n_steps,
+               array_join(
+                 transform(array_sort(collect_list(struct(depth, rk))),
+                           s -> s.rk), ',') AS steps_csv
+        FROM dwalk GROUP BY start_rk
+        """
     )
 
 
@@ -229,8 +214,7 @@ def continuation_histories(tx: DataFrame, max_depth: int = 16) -> DataFrame:
 def cw_continuation_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 end-to-end: every continuation tx's full backward walk, checked
     against DuckDB's native WITH RECURSIVE."""
-    tx = _cw(spark, "transactions")
-    return continuation_histories(tx).orderBy("start_rk")
+    return continuation_histories(_cw(spark, "transactions")).orderBy("start_rk")
 
 
 # ---------------------------------------------------------------------------
@@ -602,20 +586,8 @@ def cw_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """getBlockGaps (Gaps.hs:156-188): lead-window hole detection over
     distinct (chain, height) — orphan twins collapse first, exactly like the
     reference's DISTINCT."""
-    bl = _cw(spark, "blocks")
-    w = Window.partitionBy("chainid").orderBy("height")
-    return (
-        bl.select("chainid", "height")
-        .distinct()
-        .withColumn("next_h", F.lead("height").over(w))
-        .filter((F.col("next_h") - F.col("height")) > 1)
-        .select(
-            "chainid",
-            (F.col("height") + 1).alias("gap_start"),
-            (F.col("next_h") - 1).alias("gap_end"),
-            (F.col("next_h") - F.col("height") - 1).alias("gap_len"),
-        )
-        .orderBy("chainid", "gap_start")
+    return detect_gaps(_cw(spark, "blocks"), "chainid", "height").orderBy(
+        "chainid", "gap_start"
     )
 
 
@@ -667,6 +639,17 @@ def cw_richlist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded scan — O6 governor (BoundedScan.hs:90-254)
 # ---------------------------------------------------------------------------
 
+# The event cursor (Server.hs:557-566 EventCursor) extended with the block
+# hash as the final tie-break: orphan twins share (height, requestkey, idx),
+# so the reference's 3-column cursor is ambiguous at a page boundary that
+# splits a twin group — the 4th column makes the order total and the resume
+# exact (ADVICE r01).  The leading height conjunct still drives row-group
+# pruning; the extra column only refines equality ties.
+EVENTS_CURSOR = CursorSpec(
+    cols=("height", "requestkey", "idx", "block"),
+    descs=(True, True, False, False),
+)
+
 
 @register(
     "cw_bounded_search",
@@ -687,15 +670,10 @@ def cw_bounded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract declaratively."""
     from ..plans.bounded_scan import bounded_scan
 
-    ev = _cw(spark, "events")
-    spec = CursorSpec(
-        cols=("height", "requestkey", "idx", "block"),
-        descs=(True, True, False, False),
-    )
     res = bounded_scan(
-        ev,
+        _cw(spark, "events"),
         F.col("paramtext").contains("alice"),
-        spec,
+        EVENTS_CURSOR,
         limit=20,
         slice_width=60,
         budget_slices=2,
@@ -760,18 +738,6 @@ def cw_coins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # keyset pagination over the domain cursor — O5 (BoundedScan.hs:256-266)
 # ---------------------------------------------------------------------------
-
-
-# The event cursor (Server.hs:557-566 EventCursor) extended with the block
-# hash as the final tie-break: orphan twins share (height, requestkey, idx),
-# so the reference's 3-column cursor is ambiguous at a page boundary that
-# splits a twin group — the 4th column makes the order total and the resume
-# exact (ADVICE r01).  The leading height conjunct still drives row-group
-# pruning; the extra column only refines equality ties.
-EVENTS_CURSOR = CursorSpec(
-    cols=("height", "requestkey", "idx", "block"),
-    descs=(True, True, False, False),
-)
 
 _EVENTS_PAGE_COLS = ("requestkey", "block", "chainid", "height", "idx", "name")
 
@@ -842,7 +808,7 @@ def cw_events_page_after(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J4 via Spark 4 native recursive CTE — the 1:1 mapping of Queries.hs:112-137
+# J4 under its second registered name (bench.py HEADLINE, perfbench)
 # ---------------------------------------------------------------------------
 
 
@@ -858,50 +824,8 @@ def cw_events_page_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cw_continuation_history_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 as a NATIVE Spark recursive CTE (Spark 4's WITH RECURSIVE) — the
-    literal re-statement of the reference's SQL (Queries.hs:112-137),
-    hash-checked against the same DuckDB oracle as the iterative
-    ``cw_continuation_history``, which remains the pre-Spark-4 fallback and
-    the plan whose per-iteration localCheckpoint bounds lineage.
-
-    Spark's recursive CTE supports only UNION ALL (UNION_NOT_SUPPORTED_IN_
-    RECURSIVE_CTE), so dedup happens in one DISTINCT after the recursion —
-    equivalent to the oracle's UNION set semantics here because every walk
-    row carries its depth (a duplicate can only coincide with its twin at
-    the same depth; chains are acyclic so the recursion terminates
-    regardless).
-
-    r12: ``dtx`` is CACHED before the recursion instead of being a CTE —
-    Spark's UnionLoop re-plans the recursive step per iteration, and as a
-    plain CTE the DISTINCT-aggregate over the transactions scan re-ran in
-    EVERY iteration (plan: ``Aggregate ← LogicalRelation`` under the loop
-    body; measured 22 jobs / 718 tasks for a 530-row result).  Cached, the
-    per-iteration plan is a scan of the in-memory relation — whose size
-    statistics also let the per-step join broadcast instead of shuffling.
-    Same rows, same recursion, one distinct instead of one per depth."""
-    tx_df = _cw(spark, "transactions")
-    tx_df.select("requestkey", "pactid", "code").distinct().cache(
-    ).createOrReplaceTempView("_cw_dtx_rcte")
-    tx_df.createOrReplaceTempView("_cw_tx_for_rcte")
-    return spark.sql(
-        """
-        WITH RECURSIVE
-        starts AS (SELECT DISTINCT requestkey AS start_rk, pactid
-                   FROM _cw_tx_for_rcte WHERE pactid IS NOT NULL),
-        walk AS (
-          SELECT s.start_rk, 0 AS depth, d.requestkey AS rk, d.pactid, d.code
-          FROM starts s JOIN _cw_dtx_rcte d ON d.requestkey = s.pactid
-          UNION ALL
-          SELECT w.start_rk, w.depth + 1, d.requestkey, d.pactid, d.code
-          FROM walk w JOIN _cw_dtx_rcte d ON d.requestkey = w.pactid
-        ),
-        dwalk AS (SELECT DISTINCT start_rk, depth, rk, code FROM walk)
-        SELECT start_rk,
-               max(CASE WHEN code IS NOT NULL THEN code END) AS initial_code,
-               COUNT(*) AS n_steps,
-               array_join(
-                 transform(array_sort(collect_list(struct(depth, rk))),
-                           s -> s.rk), ',') AS steps_csv
-        FROM dwalk GROUP BY start_rk ORDER BY start_rk
-        """
-    )
+    """The same walk as ``cw_continuation_history`` — both run
+    :func:`continuation_histories`, Spark's native WITH RECURSIVE.  The
+    name stays registered because the bench headliners and the workload
+    benchmark time it under this name."""
+    return cw_continuation_history(spark, sf_dir)

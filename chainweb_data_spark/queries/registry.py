@@ -108,13 +108,10 @@ def _table_bytes(sf_dir: str, name: str) -> int | None:
 # under the flat core-count rail) plus this round's interleaved sweep over
 # {cores, 32Ki, 64Ki, 128Ki, 256Ki} at c32 (totals 7.9/7.6 → 7.3-7.6 →
 # 6.6-6.9 → 6.4-6.7 → 6.1 s for the 7 spread consumers; see
-# OPTIMIZATION_r13.md).  Override per deployment with
-# SPARK_GRAFT_SPREAD_TARGET_BYTES.  On production multi-split inputs the
-# rail stays plan-identical to not calling it (scan partitions already
-# exceed the derived target).
-_SPREAD_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", str(256 * 1024))
-)
+# OPTIMIZATION_r13.md).  On production multi-split inputs the rail stays
+# plan-identical to not calling it (scan partitions already exceed the
+# derived target).
+_SPREAD_TARGET_BYTES = 256 * 1024
 
 
 def _spread(
@@ -188,8 +185,9 @@ def register(name: str, oracle: str | None = None):
 #    slots of five redundant §2 analogs: filtered_count (A3 — the filter+
 #    count shape is inside cw_stats and cw_search_*), agg_ordered_string
 #    (A5 — ordered array_agg is load-bearing inside gated
-#    cw_continuation_history), coalesce_fallback (F2 — COALESCE is
-#    load-bearing inside gated cw_account_transfers' x-chain legs),
+#    cw_continuation_history's recursive walk), coalesce_fallback (F2 —
+#    COALESCE is load-bearing inside gated cw_account_transfers' x-chain
+#    legs),
 #    anti_join (P9 — existence probes stay gated via semi_join_exists),
 #    and groupby_minmax (A1 — gated via cw_chain_minmax and
 #    pricing_summary).
@@ -208,8 +206,9 @@ def register(name: str, oracle: str | None = None):
 # twin of gated doc_features, which owns the rolling64 production
 # configuration), Spark-4-native twins of
 # gated queries (json_variant_extract — VariantType parse-once
-# extraction; cw_continuation_history_rcte and embed_dedup_clusters_ann
-# were promoted INTO the gate r12), and the
+# extraction; embed_dedup_clusters_ann and cw_continuation_history_rcte,
+# the recursive CTE of cw_continuation_history under a second name, were
+# promoted INTO the gate r12), and the
 # multimodal resize/frame-sample legs (the binary pipeline's gate slots
 # are the REAL-codec queries: multimodal_png_features,
 # multimodal_wav_features, multimodal_y4m_frames).
@@ -375,10 +374,9 @@ GATE_PRIORITY: tuple[str, ...] = (
     # candidates → exact-cosine verify → convergence-checked label
     # propagation — gating it covers candidate generation, verification,
     # clustering, and keeper selection END-TO-END on the scale path) and
-    # the Spark-4 NATIVE WITH RECURSIVE continuation walk (the 1:1
-    # restatement of the reference's recursive SQL — gating it guards
-    # the native-engine path against Spark drift, not just the
-    # iterative fallback gated as cw_continuation_history)
+    # the Spark-4 NATIVE WITH RECURSIVE continuation walk under its
+    # second name (the same recursive CTE cw_continuation_history runs;
+    # the bench headliners time it under this name)
     "embed_dedup_clusters_ann",
     "cw_continuation_history_rcte",
 )

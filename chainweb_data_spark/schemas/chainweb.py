@@ -23,6 +23,14 @@ from pyspark.sql import types as T
 
 HEIGHT_BUCKET_SIZE = 10_000  # blocks per partition bucket (SURVEY §4 X1)
 
+# Steps either continuation walk (the query-time recursive CTE in
+# queries/chainweb.py, the ingest-time silver walk in streaming/silver.py)
+# takes back from a continuation tx.  A causal chain ends at its origin
+# exec tx long before this (cross-chain = 2 steps, defpacts ≲ 10); the
+# bound only stops a pactid cycle in a corrupt feed, at the same depth in
+# both walks.
+CONTINUATION_MAX_DEPTH = 64
+
 
 def _f(name, dtype, nullable=True):
     return T.StructField(name, dtype, nullable)

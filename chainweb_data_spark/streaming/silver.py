@@ -33,9 +33,10 @@ The walk needs only the batch and the published lineage, so
 ``listen_stream`` stages both frames in the same ``publish_batch`` as the
 six tables: bronze and silver land in one version or not at all.
 
-This module serves micro-batches.  At 100 TB the query-time walk
-(queries/chainweb.py ``continuation_histories``) remains the
-backfill/bootstrap job.
+This module serves micro-batches: each update probes only its own
+batch's parents, where the query-time walk (queries/chainweb.py
+``continuation_histories``, a recursive CTE) scans every transaction it
+is given.  Both walks stop at ``CONTINUATION_MAX_DEPTH``.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest.transforms import _key_bucket
+from ..schemas.chainweb import CONTINUATION_MAX_DEPTH
 from .publish import (
     StoreFormatError,
     _first_data_file,
@@ -63,10 +65,6 @@ SILVER_PKS: dict[str, tuple[str, ...]] = {
     "tx_lineage": ("requestkey", "pactid", "code"),
     "cont_history": ("start_rk", "depth", "rk", "code"),
 }
-
-# the walk terminates on its own (frontier empties at each chain's origin
-# exec tx); the cap only bounds a pathological/corrupt feed
-MAX_DEPTH = 64
 
 
 def continuation_tables(
@@ -104,7 +102,7 @@ def continuation_tables(
     looked_up: set[str] = set()
     history = []
     depth = 0
-    while frontier and depth < MAX_DEPTH:
+    while frontier and depth < CONTINUATION_MAX_DEPTH:
         need = sorted({parent for _, parent in frontier} - looked_up)
         looked_up.update(need)
         if stored is not None and need:

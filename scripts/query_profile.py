@@ -6,11 +6,15 @@ For each requested query this captures, into the ``--out`` directory:
   profile_<tag>.json  — every query's row, MERGED into an existing capture
 and prints one JSON line per query with:
   wall seconds (same warm/min-of-N protocol as bench.py), #jobs, #stages,
-  #tasks, shuffle read/write bytes, plan-feature counts (Exchange,
-  BatchEvalPython/ArrowEvalPython/MapInPandas, join strategies, scans).
+  #tasks, shuffle MB (read + written), spill MB (memory + disk), plan-
+  feature counts (Exchange, BatchEvalPython/ArrowEvalPython/MapInPandas,
+  join strategies, scans).
 
-Metrics come from the Spark UI REST API (spark.ui.enabled forced on in this
-session only; bench.py itself keeps the UI off).  Usage:
+Job metrics come from the session's Spark event log, read after the
+session stops with the workload benchmark's parser (perfbench/trace.py):
+each timed run is a span, and every job submitted inside it counts
+toward the run.  Input bytes are not reported: the event-log reader does
+not sum them.  Usage:
 
   python scripts/query_profile.py --out plans/<tag> [--tag before] [--runs 3] [q1 q2 ...]
 """
@@ -21,9 +25,10 @@ import argparse
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -62,78 +67,34 @@ def _explain_str(df) -> str:
     )
 
 
-def _rest(app_url: str, path: str):
-    with urllib.request.urlopen(app_url + path, timeout=10) as r:
-        return json.loads(r.read().decode())
-
-
-def _app_url(spark) -> str:
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    return f"{ui}/api/v1/applications/{app_id}"
-
-
-def job_metrics(spark, after_job_id: int) -> dict:
-    url = _app_url(spark)
-    jobs = [j for j in _rest(url, "/jobs") if j["jobId"] > after_job_id]
-    stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-    n_tasks = sum(j.get("numTasks", 0) for j in jobs)
-    sread = swrite = inbytes = 0
-    spill_mem = spill_disk = 0
-    for sid in stage_ids:
-        try:
-            stages = _rest(url, f"/stages/{sid}")
-        except Exception:
-            continue
-        for st in stages:
-            sread += st.get("shuffleReadBytes", 0)
-            swrite += st.get("shuffleWriteBytes", 0)
-            inbytes += st.get("inputBytes", 0)
-            spill_mem += st.get("memoryBytesSpilled", 0)
-            spill_disk += st.get("diskBytesSpilled", 0)
+def run_totals(jobs) -> dict:
     return {
         "jobs": len(jobs),
-        "stages": len(stage_ids),
-        "tasks": n_tasks,
-        "shuffle_read_mb": round(sread / 1e6, 3),
-        "shuffle_write_mb": round(swrite / 1e6, 3),
-        "input_mb": round(inbytes / 1e6, 3),
-        "spill_disk_mb": round(spill_disk / 1e6, 3),
+        "stages": len({st for j in jobs for st in j.stages}),
+        "tasks": sum(j.tasks for j in jobs),
+        "shuffle_mb": round(sum(j.shuffle_bytes for j in jobs) / 1e6, 3),
+        "spill_mb": round(sum(j.spill_bytes for j in jobs) / 1e6, 3),
     }
 
 
-def last_job_id(spark) -> int:
-    try:
-        jobs = _rest(_app_url(spark), "/jobs")
-        return max((j["jobId"] for j in jobs), default=-1)
-    except Exception:
-        return -1
-
-
-def main() -> None:
+def timed_runs(log_dir, names, runs, plans_dir, tag):
+    """Warm each query, write its plan, time ``runs`` runs in a session
+    logging events to ``log_dir``; returns ``{name: (seconds, span index,
+    plan features)}`` for each query's fastest run, and the spans."""
     from chainweb_data_spark.session import get_spark
     from chainweb_data_spark.queries import query_fns
+    from perfbench.trace import Tracer, event_log_conf
     import bench
 
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--out", required=True, help="capture dir, e.g. plans/r14")
-    ap.add_argument("--tag", default="before")
-    ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("names", nargs="*", help="queries (default: bench.HEADLINE)")
-    args = ap.parse_args()
-    tag, runs = args.tag, args.runs
-    names = args.names or bench.HEADLINE
-    plans_dir = os.path.join(ROOT, args.out)
-
-    os.makedirs(plans_dir, exist_ok=True)
-    spark = get_spark("cds-profile", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("cds-profile", extra_conf=event_log_conf(log_dir))
+    tracer = Tracer()
     fns = query_fns()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
         lambda it: it, "id long"
     ).collect()
 
-    results = {}
+    best_runs = {}
     for name in names:
         sc = spark.sparkContext
         sc.setJobDescription(f"{name}: warm")
@@ -142,27 +103,59 @@ def main() -> None:
         plan = _explain_str(df)
         with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
+        features = plan_features(plan)
 
-        best = float("inf")
-        best_metrics = None
         full_wall = name in bench.FULL_WALL
         for i in range(runs):
             sc.setJobDescription(f"{name}: timed run {i}")
-            j0 = last_job_id(spark)
-            if full_wall:
-                t0 = time.perf_counter()
-                fns[name](spark, SF_DIR).collect()
-            else:
-                df = fns[name](spark, SF_DIR)
-                t0 = time.perf_counter()
-                df.collect()
-            dt = time.perf_counter() - t0
-            if dt < best:
-                best = dt
-                best_metrics = job_metrics(spark, j0)
+            # the span holds construction too, so its jobs count to the run
+            with tracer.span(f"{name}: timed run {i}"):
+                if full_wall:
+                    t0 = time.perf_counter()
+                    fns[name](spark, SF_DIR).collect()
+                else:
+                    df = fns[name](spark, SF_DIR)
+                    t0 = time.perf_counter()
+                    df.collect()
+                dt = time.perf_counter() - t0
+            if name not in best_runs or dt < best_runs[name][0]:
+                best_runs[name] = (dt, len(tracer.spans) - 1, features)
         sc.setJobDescription(None)
         spark.catalog.clearCache()  # inter-query isolation, same as bench.py
-        row = {"s": round(best, 4), **(best_metrics or {}), **plan_features(plan)}
+    spark.stop()  # finishes the event log
+    return best_runs, tracer.spans
+
+
+def main() -> None:
+    from perfbench.trace import attribute, read_event_log
+    import bench
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--out", required=True, help="capture dir, e.g. plans/r14")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("names", nargs="*", help="queries (default: bench.HEADLINE)")
+    args = ap.parse_args()
+    tag = args.tag
+    plans_dir = os.path.join(ROOT, args.out)
+    os.makedirs(plans_dir, exist_ok=True)
+
+    log_dir = tempfile.mkdtemp(prefix="query_profile_events_")
+    try:
+        best_runs, spans = timed_runs(
+            log_dir, args.names or bench.HEADLINE, args.runs, plans_dir, tag
+        )
+        jobs = read_event_log(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    attribute(jobs, spans)
+    results = {}
+    for name, (best, span, features) in best_runs.items():
+        row = {
+            "s": round(best, 4),
+            **run_totals([j for j in jobs if j.span == span]),
+            **features,
+        }
         results[name] = row
         print(json.dumps({name: row}), flush=True)
 

@@ -196,9 +196,12 @@ def test_listen_crash_while_staging_silver_commits_nothing(
 
 def test_pactid_cycle_stops_at_max_depth(spark, tmp_path):
     """A corrupt feed whose pactids form a cycle (a -> b -> a) must not
-    walk forever: the walk stops after MAX_DEPTH levels.  The cycle closes
-    across two batches, so the stored-lineage lookup is on the path."""
-    from chainweb_data_spark.streaming.silver import MAX_DEPTH
+    walk forever: the walk stops after CONTINUATION_MAX_DEPTH levels.  The
+    cycle closes across two batches, so the stored-lineage lookup is on
+    the path."""
+    from chainweb_data_spark.schemas.chainweb import (
+        CONTINUATION_MAX_DEPTH as MAX_DEPTH,
+    )
 
     out = str(tmp_path)
     schema = "requestkey string, pactid string, code string"
@@ -207,6 +210,76 @@ def test_pactid_cycle_stops_at_max_depth(spark, tmp_path):
     rows = lookup_history(spark, out, "kb").collect()
     assert [r["depth"] for r in rows] == list(range(MAX_DEPTH))
     assert [r["rk"] for r in rows[:4]] == ["ka", "kb", "ka", "kb"]
+
+
+CHAIN_LEN = 20
+
+
+def _chain_rows():
+    """A causal CHAIN_LEN-step defpact chain c20 -> ... -> c00 in height
+    order, one step per height: each step's pactid names the step before
+    it, and only the origin exec tx c00 carries code."""
+    rks = [f"c{i:02d}" for i in range(CHAIN_LEN + 1)]
+    return [
+        (rk, rks[i - 1] if i else None, None if i else "chain-origin", i * 6)
+        for i, rk in enumerate(rks)
+    ]
+
+
+def _aggregate(history):
+    """Silver's (start_rk, depth, rk, code) rows folded into the query
+    walk's (start_rk, initial_code, n_steps, steps_csv)."""
+    by_start: dict[str, list] = {}
+    for start_rk, depth, rk, code in history:
+        by_start.setdefault(start_rk, []).append((depth, rk, code))
+    return {
+        (
+            start_rk,
+            max((c for _, _, c in steps if c is not None), default=None),
+            len(steps),
+            ",".join(rk for _, rk in sorted((d, rk) for d, rk, _ in steps)),
+        )
+        for start_rk, steps in by_start.items()
+    }
+
+
+def test_silver_walk_equals_query_walk(spark, tx, tmp_path):
+    """The ingest-time silver walk and the query-time recursive walk give
+    the same history for every continuation tx, a chain longer than a
+    short defpact included: its origin row, and so its initial code, must
+    survive the walk."""
+    from chainweb_data_spark.queries.chainweb import continuation_histories
+
+    rows = tx.select("requestkey", "pactid", "code", "height").unionByName(
+        spark.createDataFrame(
+            _chain_rows(), "requestkey string, pactid string, code string, height long"
+        )
+    )
+    out = str(tmp_path)
+    for lo, hi in ((0, 40), (40, 80), (80, 1_000_000)):
+        batch = rows.filter((F.col("height") >= lo) & (F.col("height") < hi))
+        update_continuation_history(spark, batch, out)
+    query = {tuple(r) for r in continuation_histories(rows).collect()}
+    chain = next(q for q in query if q[0] == f"c{CHAIN_LEN:02d}")
+    assert chain[1:3] == ("chain-origin", CHAIN_LEN)
+    assert _aggregate(_history(spark, out)) == query
+
+
+def test_query_walk_cycle_stops_at_the_shared_bound(spark):
+    """The query-time walk over a pactid cycle (ka -> kb -> ka) returns
+    exactly CONTINUATION_MAX_DEPTH steps per start, the bound the silver
+    walk stops at, and does not reach Spark's recursion-level limit."""
+    from chainweb_data_spark.queries.chainweb import continuation_histories
+    from chainweb_data_spark.schemas.chainweb import CONTINUATION_MAX_DEPTH
+
+    cycle = spark.createDataFrame(
+        [("ka", "kb", "code-a"), ("kb", "ka", "code-b")],
+        "requestkey string, pactid string, code string",
+    )
+    got = {r["start_rk"]: r for r in continuation_histories(cycle).collect()}
+    assert sorted(got) == ["ka", "kb"]
+    assert all(r["n_steps"] == CONTINUATION_MAX_DEPTH for r in got.values())
+    assert got["kb"]["steps_csv"].startswith("ka,kb,ka,kb,")
 
 
 def test_rounds_leave_no_persisted_copy(spark, tx, tmp_path):
